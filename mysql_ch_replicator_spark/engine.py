@@ -85,9 +85,9 @@ def _gen_manifest_path_of(root: str) -> str:
 
 
 def load_gen_manifest(root: str) -> dict:
-    """Generation manifest {current: dirname, retired: [dirname...]} of any
-    versioned data root; missing/unreadable → legacy layout (current =
-    "data")."""
+    """Generation manifest {current: dirname, retired: [{name, ts}...]}
+    of any versioned data root; missing/unreadable → a table never
+    rewritten since creation (current = "data")."""
     try:
         with open(_gen_manifest_path_of(root), encoding="utf-8") as fh:
             g = json.load(fh)
@@ -121,15 +121,9 @@ GENERATION_RETENTION_S = 60.0
 
 
 def _retired_entries(g: dict) -> list[dict]:
-    """Normalize manifest retired entries (legacy plain strings → ts 0,
-    i.e. immediately reclaimable)."""
-    out = []
-    for r in g["retired"]:
-        if isinstance(r, str):
-            out.append({"name": r, "ts": 0.0})
-        elif isinstance(r, dict) and "name" in r:
-            out.append({"name": r["name"], "ts": float(r.get("ts", 0.0))})
-    return out
+    """The manifest's retired generations as ``{name, ts}`` entries."""
+    return [{"name": r["name"], "ts": float(r.get("ts", 0.0))}
+            for r in g["retired"] if isinstance(r, dict) and "name" in r]
 
 
 def publish_generation(root: str, new_name: str,
@@ -540,26 +534,7 @@ class ReplicaEngine:
         for nm in rebuilt:
             self._rebuild_aggregate(db, table, nm)
 
-    def _recover_data_dir(self, db: str, table: str) -> None:
-        """Crash recovery for the LEGACY staging-rename publish protocol
-        (pre-manifest layouts only): between ``rename(data, old)`` and
-        ``rename(staging, data)`` the table briefly had no data dir — a
-        crash there must not silently empty the table. Leftover ``.old``
-        with no ``data`` → roll back; orphaned ``.staging`` or ``.old``
-        next to a live ``data`` → incomplete/superseded, drop them.
-        The manifest protocol needs no rollback (os.replace is atomic;
-        an unpublished generation dir is swept at the next publish)."""
-        data = self._data_dir(db, table)
-        old, staging = data + ".old", data + ".staging"
-        if not os.path.exists(data) and os.path.exists(old):
-            os.rename(old, data)
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        if os.path.exists(data) and os.path.exists(old):
-            shutil.rmtree(old)
-
     def _has_data(self, db: str, table: str) -> bool:
-        self._recover_data_dir(db, table)
         d = self._data_dir(db, table)
         if not os.path.isdir(d):
             return False
@@ -652,7 +627,6 @@ class ReplicaEngine:
 
     def _overwrite_data_locked(self, db: str, table: str,
                                df: DataFrame) -> None:
-        self._recover_data_dir(db, table)
         new_name = self._next_gen_name(db, table)
         new_dir = os.path.join(self._table_dir(db, table), new_name)
         writer = df.write.mode("overwrite")
@@ -866,7 +840,6 @@ class ReplicaEngine:
         # and the flip and be silently lost (review r5; _overwrite_data
         # holds the lock for exactly this window).
         with self.table_lock(db, table):
-            self._recover_data_dir(db, table)  # clears legacy .staging/.old
             new_name = self._next_gen_name(db, table)
             new_dir = os.path.join(self._table_dir(db, table), new_name)
             os.makedirs(new_dir)

@@ -236,6 +236,54 @@ def list_names(path: str, spark: SparkSession | None = None) -> list[str]:
     return sorted(st.getPath().getName() for st in fs.listStatus(p))
 
 
+def read_index_descriptor(path: str, name: str, keys, table: str,
+                          manifests: dict, rebuild: str,
+                          spark: SparkSession | None = None) -> dict:
+    """The JSON descriptor ``name`` of the index at ``path``, checked
+    against the one layout today's writers produce: the descriptor
+    carries every key in ``keys``, the ``table`` membership directory
+    exists, and every pending intent manifest present (``manifests``
+    maps its file name to the live-name lists its commit promotes)
+    references a complete staged snapshot (``staging: true``). An index
+    any older writer left behind fails here with a ValueError naming
+    ``rebuild`` — it is never migrated in place."""
+    import json as _json
+
+    def reject(why: str):
+        raise ValueError(
+            f"index at {path} {why}: not the current on-disk format — "
+            f"rebuild it with {rebuild} over the replica's final state")
+
+    try:
+        meta = _json.loads(read_text(os.path.join(path, name), spark=spark))
+    except Exception as e:                   # noqa: BLE001
+        if not _is_not_found(e):
+            raise
+        meta = None
+    if meta is None:
+        reject(f"has no {name} descriptor")
+    missing = [k for k in keys if k not in meta]
+    if missing:
+        reject(f"has a descriptor without {missing}")
+    names = set(list_names(path, spark=spark))
+    if table not in names:
+        reject(f"has no {table}/ membership table")
+    for manifest, lists in manifests.items():
+        if manifest not in names:
+            continue
+        try:
+            doc = _json.loads(read_text(os.path.join(path, manifest),
+                                        spark=spark, retries=0))
+        except Exception as e:               # noqa: BLE001
+            if not _is_not_found(e):
+                raise
+            continue                         # committed since the listing
+        if doc.get("staging") is not True or any(k not in doc
+                                                 for k in lists):
+            reject(f"has a pending {manifest} without a staged snapshot")
+    return meta
+
+
 def read_parquet_or_empty(spark: SparkSession, root: str,
                           schema_json: str | None,
                           pin: bool = True):
@@ -245,9 +293,9 @@ def read_parquet_or_empty(spark: SparkSession, root: str,
     dies on the bare root ('Unable to infer schema'), permanently
     wedging every later upsert and probe. When no partition subdir
     remains, the table reads as an EMPTY frame with the schema the index
-    descriptor captured at build time; a pre-r10 descriptor that carries
-    no schema raises a named rebuild error instead of the inference
-    crash."""
+    descriptor captured at build time (``read_index_descriptor`` rejects
+    a descriptor without one); with no schema to fall back on it raises
+    a named rebuild error instead of the inference crash."""
     import json as _json
 
     # readable content = partition subdirs or plain data files; metadata
@@ -257,7 +305,7 @@ def read_parquet_or_empty(spark: SparkSession, root: str,
         if schema_json and pin:
             # schema-pinned read: the descriptor's captured schema is
             # maintained at every schema-changing event (build, the
-            # positions twin appearing, the pre-r10 back-fill), so
+            # positions twin appearing), so
             # re-inferring it here costs a footer-read Spark job per
             # call for an answer that cannot differ — O(files)
             # driver+task work on EVERY descriptor-table read at scale
@@ -280,9 +328,8 @@ def read_parquet_or_empty(spark: SparkSession, root: str,
     if not schema_json:
         raise ValueError(
             f"read_parquet_or_empty: {root} has no partition directories "
-            f"left (every row was removed) and its descriptor predates "
-            f"the r10 schema capture — rebuild the index from the "
-            f"replica's final state")
+            f"left (every row was removed) and no captured schema to read "
+            f"it by — rebuild the index from the replica's final state")
     from pyspark.sql.types import StructType
     return spark.createDataFrame(
         [], StructType.fromJson(_json.loads(schema_json)))

@@ -258,21 +258,16 @@ class MaintainedIndex:
         """Geometry-drift accounting (r11 verdict #6): dead slots and
         split/merge chain length — the two signals the retrain trigger
         thresholds on and an operator watches. Descriptor-only reads."""
-        spark = self.engine.spark
         if self.kind == "ivf":
             from .operators.similarity import read_ivf_meta
-            imeta = read_ivf_meta(self.index_path) or {}
+            imeta = read_ivf_meta(self.index_path)
             return {
                 "n_dead_cells": len(imeta.get("dead", [])),
                 "chain_length": int(imeta.get("geometry_actions", 0)),
                 "retrains": int(imeta.get("retrains", 0)),
             }
-        from .operators.retrieval import _live_shards
-        lex = os.path.join(self.index_path, "_lex_meta.json")
-        if not fsutil.exists(lex, spark=spark):
-            return {"n_dead_cells": 0, "chain_length": 0,
-                    "compactions": 0}
-        lmeta = json.loads(fsutil.read_text(lex, spark=spark))
+        from .operators.retrieval import _live_shards, read_lex_meta
+        lmeta = read_lex_meta(self.index_path, self.engine.spark)
         chain = lmeta.get("splits", [])
         live = _live_shards(int(lmeta["shards"]), chain)
         splits = sum(1 for e in chain if e.get("salt") is not None)
@@ -373,18 +368,17 @@ class MaintainedIndex:
         remove-everything window cannot wedge on schema inference)."""
         spark = self.engine.spark
         if self.kind == "lexical":
-            meta = json.loads(fsutil.read_text(
-                os.path.join(self.index_path, "_lex_meta.json"),
-                spark=spark))
+            from .operators.retrieval import read_lex_meta
+            meta = read_lex_meta(self.index_path, spark)
             return (fsutil.read_parquet_or_empty(
                 spark, os.path.join(self.index_path, "docmeta"),
-                meta.get("schemas", {}).get("docmeta"))
+                meta["schemas"].get("docmeta"))
                 .select(F.col("doc_id").alias(self.id_col)))
         from .operators.similarity import _IVF_MEMBERS, read_ivf_meta
-        meta = read_ivf_meta(self.index_path) or {}
+        meta = read_ivf_meta(self.index_path)
         return (fsutil.read_parquet_or_empty(
             spark, os.path.join(self.index_path, _IVF_MEMBERS),
-            meta.get("schemas", {}).get("members"))
+            meta["schemas"].get("members"))
             .select(F.col("vec_id").alias(self.id_col)))
 
     # -- IVF load-factor policy (r9 verdict #6) ---------------------------
@@ -454,7 +448,7 @@ class MaintainedIndex:
 
             if pending_retrain(self.index_path) is not None:
                 return f"retrain:{retrain_ivf_index(spark, self.index_path)}"
-            imeta = read_ivf_meta(self.index_path) or {}
+            imeta = read_ivf_meta(self.index_path)
             if self.retrain_after is not None \
                     and int(imeta.get("geometry_actions", 0)) \
                     >= int(self.retrain_after):
@@ -469,12 +463,12 @@ class MaintainedIndex:
                 return f"retrain:{k}"
             return None
         from .operators.retrieval import (compact_lexical_index,
-                                          pending_lexical_compact)
+                                          pending_lexical_compact,
+                                          read_lex_meta)
 
         if pending_lexical_compact(self.index_path) is not None:
             return f"compact:{compact_lexical_index(spark, self.index_path)}"
-        lex = os.path.join(self.index_path, "_lex_meta.json")
-        lmeta = json.loads(fsutil.read_text(lex, spark=spark))
+        lmeta = read_lex_meta(self.index_path, spark)
         if self.retrain_after is not None \
                 and len(lmeta.get("splits", [])) >= int(self.retrain_after):
             k = compact_lexical_index(spark, self.index_path,
@@ -603,16 +597,12 @@ class MaintainedIndex:
 
         spark = self.engine.spark
         meta = read_ivf_meta(self.index_path)
-        if meta is None:
-            raise ValueError(
-                f"MaintainedIndex: no _ivf_meta.json at "
-                f"{self.index_path} — not a write_ivf_index table")
         dead = {int(c) for c in meta.get("dead", [])}
         counts = {c: 0 for c in range(1, int(meta["n_cells"]) + 1)
                   if c not in dead}
         for r in (fsutil.read_parquet_or_empty(
                 spark, os.path.join(self.index_path, _IVF_MEMBERS),
-                meta.get("schemas", {}).get("members"))
+                meta["schemas"].get("members"))
                 .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
                 .collect()):     # bounded: one row per cell
             if int(r.cell) in counts:
@@ -620,31 +610,18 @@ class MaintainedIndex:
         return counts
 
     def _lexical_load(self) -> dict[int, int]:
-        """Posting rows per LIVE shard. Descriptor-only when the index
-        carries ``shard_rows`` (maintained incrementally by
-        upsert/split/merge — ADVICE r10: the old per-poll postings
-        groupBy was O(index rows)); one bounded postings aggregate for
-        a pre-r11 index that has never been upserted since."""
-        from .operators.retrieval import _live_shards
+        """Posting rows per LIVE shard, descriptor-only: ``shard_rows``
+        is maintained incrementally by upsert/split/merge (ADVICE r10:
+        the old per-poll postings groupBy was O(index rows))."""
+        from .operators.retrieval import _live_shards, read_lex_meta
 
-        spark = self.engine.spark
-        meta = json.loads(fsutil.read_text(
-            os.path.join(self.index_path, "_lex_meta.json"), spark=spark))
+        meta = read_lex_meta(self.index_path, self.engine.spark)
         live = _live_shards(int(meta["shards"]),
                             meta.get("splits", []))
         counts = {c: 0 for c in sorted(live)}
-        if "shard_rows" in meta:
-            for k, v in meta["shard_rows"].items():
-                if int(k) in counts:
-                    counts[int(k)] = int(v)
-            return counts
-        for r in (fsutil.read_parquet_or_empty(
-                spark, os.path.join(self.index_path, "postings"),
-                meta.get("schemas", {}).get("postings"))
-                .groupBy("shard").agg(F.count(F.lit(1)).alias("n"))
-                .collect()):     # bounded: one row per shard
-            if int(r.shard) in counts:
-                counts[int(r.shard)] = int(r.n)
+        for k, v in meta["shard_rows"].items():
+            if int(k) in counts:
+                counts[int(k)] = int(v)
         return counts
 
     def maybe_merge(self) -> tuple[int, int] | None:

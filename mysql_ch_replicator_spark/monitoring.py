@@ -10,10 +10,6 @@ producer and consumer). Spark-first equivalents:
 - ``event_log_lag`` — producer/consumer lag measured on the event-log
   directory: highest file number written vs highest fully-processed seq
   (the reference's binlog-file delta, monitoring.py:27–56).
-- ``attach_streaming_metrics`` — a ``StreamingQueryListener`` exposing
-  Structured Streaming's own progress (input rate, batch duration) in the
-  same counter shape; Spark's listener replaces the reference's hand-rolled
-  /proc sampling.
 """
 
 from __future__ import annotations
@@ -117,34 +113,6 @@ def index_freshness(indexes) -> list[dict]:
     ``max_lag_seconds``/``max_versions_behind`` thresholds. Metadata
     reads only (state file + table meta); safe on any poll cadence."""
     return [ix.status() for ix in indexes]
-
-
-def attach_streaming_metrics(spark, stats: ApplyStats):
-    """Register a StreamingQueryListener feeding Spark's own progress events
-    into ``stats`` (the reference's monitoring loop, monitoring.py:27–56;
-    Spark's listener is the built-in replacement for /proc sampling)."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Listener(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            stats.batches_count += 1
-            stats.last_batch_duration = (
-                p.durationMs.get("triggerExecution", 0) / 1000.0
-                if p.durationMs else 0.0)
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    listener = _Listener()
-    spark.streams.addListener(listener)
-    return listener
 
 
 def dead_letter_count(event_root: str) -> int:

@@ -112,55 +112,63 @@ def pagerank(edges: DataFrame, iterations: int = 3,
 
     ranks = nodes.select("node", F.lit(SCALE).cast(_DEC).alias("rank"))
     prev_ranks = None
-    for it in range(iterations):
-        acc = (contrib_edges
-               .join(ranks, contrib_edges["s"] == ranks["node"])
-               .select(F.col("t"),
-                       (F.col("wt").cast(_DEC)
-                        * _idiv(F.col("rank"), F.col("ow"))).alias("c"))
-               .groupBy("t")
-               .agg(F.sum("c").cast(_DEC).alias("acc")))
-        joined = (nodes.join(acc, nodes["node"] == acc["t"], "left")
-                  .select("node",
-                          F.coalesce("acc", F.lit(0).cast(_DEC))
-                          .alias("acc")))
-        if redistribute:
-            dang = (ranks.join(out_w.select(F.col("s").alias("node")),
-                               "node", "left_anti")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0))
-                         .cast(_DEC).alias("dang"))
-                    .crossJoin(nodes.agg(
-                        F.count(F.lit(1)).cast(_DEC).alias("n_nodes"))))
-            joined = (joined.crossJoin(F.broadcast(dang))
+    try:
+        for it in range(iterations):
+            acc = (contrib_edges
+                   .join(ranks, contrib_edges["s"] == ranks["node"])
+                   .select(F.col("t"),
+                           (F.col("wt").cast(_DEC)
+                            * _idiv(F.col("rank"), F.col("ow"))).alias("c"))
+                   .groupBy("t")
+                   .agg(F.sum("c").cast(_DEC).alias("acc")))
+            joined = (nodes.join(acc, nodes["node"] == acc["t"], "left")
                       .select("node",
-                              (F.col("acc")
-                               + _idiv(F.col("dang"), F.col("n_nodes")))
+                              F.coalesce("acc", F.lit(0).cast(_DEC))
                               .alias("acc")))
-        ranks = joined.select(
-            "node",
-            (F.lit(_BASE).cast(_DEC)
-             + _idiv(F.lit(85).cast(_DEC) * F.col("acc"),
-                     F.lit(100).cast(_DEC))).cast(_DEC).alias("rank"))
-        # each intermediate rank table is consumed 2–3x by the NEXT
-        # iteration (contrib join, dangling anti-join) on concurrent
-        # broadcast threads — same stampede as the edges above, and the
-        # un-cached lineage branches compound per iteration. The FINAL
-        # iteration stays lazy: it has exactly one consumer (the
-        # caller's action) and keeps the full plan visible.
-        # Iteration-local cache lifecycle (ADVICE r13): routing every
-        # intermediate through the shared FIFO meant iterations >= ~14
-        # evicted their own edges/early-rank caches mid-computation.
-        # Instead each intermediate is unpersisted HERE once the next
-        # one materializes; only the LAST intermediate (which the
-        # returned lazy final iteration still reads) enters the bounded
-        # registry, so the FIFO holds <= 3 entries per call at any
-        # iteration count.
-        if it < iterations - 1:
-            ranks = ranks.persist()
-            ranks.count()
-            if prev_ranks is not None:
-                prev_ranks.unpersist()
-            prev_ranks = ranks
+            if redistribute:
+                dang = (ranks.join(out_w.select(F.col("s").alias("node")),
+                                   "node", "left_anti")
+                        .agg(F.coalesce(F.sum("rank"), F.lit(0))
+                             .cast(_DEC).alias("dang"))
+                        .crossJoin(nodes.agg(
+                            F.count(F.lit(1)).cast(_DEC).alias("n_nodes"))))
+                joined = (joined.crossJoin(F.broadcast(dang))
+                          .select("node",
+                                  (F.col("acc")
+                                   + _idiv(F.col("dang"), F.col("n_nodes")))
+                                  .alias("acc")))
+            ranks = joined.select(
+                "node",
+                (F.lit(_BASE).cast(_DEC)
+                 + _idiv(F.lit(85).cast(_DEC) * F.col("acc"),
+                         F.lit(100).cast(_DEC))).cast(_DEC).alias("rank"))
+            # each intermediate rank table is consumed 2–3x by the NEXT
+            # iteration (contrib join, dangling anti-join) on concurrent
+            # broadcast threads — same stampede as the edges above, and the
+            # un-cached lineage branches compound per iteration. The FINAL
+            # iteration stays lazy: it has exactly one consumer (the
+            # caller's action) and keeps the full plan visible.
+            # Iteration-local cache lifecycle (ADVICE r13): routing every
+            # intermediate through the shared FIFO meant iterations >= ~14
+            # evicted their own edges/early-rank caches mid-computation.
+            # Instead each intermediate is unpersisted HERE once the next
+            # one materializes; only the LAST intermediate (which the
+            # returned lazy final iteration still reads) enters the bounded
+            # registry, so the FIFO holds <= 3 entries per call at any
+            # iteration count.
+            if it < iterations - 1:
+                ranks = ranks.persist()
+                ranks.count()
+                if prev_ranks is not None:
+                    prev_ranks.unpersist()
+                prev_ranks = ranks
+    except BaseException:
+        # an iteration that raised must not leak the intermediates it
+        # holds: the last materialized one and a just-persisted one
+        ranks.unpersist()
+        if prev_ranks is not None:
+            prev_ranks.unpersist()
+        raise
     if prev_ranks is not None:
         # already persisted+materialized; register for bounded lifetime
         transient_persist(prev_ranks)

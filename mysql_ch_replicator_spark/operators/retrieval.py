@@ -467,10 +467,9 @@ def _live_shards(shards: int, splits: list[dict]) -> set[int]:
 
 
 def _lex_meta_doc(spans_map: dict[str, list[int]], shards: int,
-                  span_width: int, positions: bool = False,
-                  splits: list[dict] | None = None,
-                  schemas: dict[str, str] | None = None,
-                  shard_rows: dict | None = None) -> dict:
+                  span_width: int, *, schemas: dict[str, str],
+                  shard_rows: dict, positions: bool = False,
+                  splits: list[dict] | None = None) -> dict:
     """The descriptor document: (n, tl) are DERIVED as sums over the
     per-span stats, so the two representations can never disagree.
     ``positions`` records whether the index carries the positional
@@ -483,21 +482,39 @@ def _lex_meta_doc(spans_map: dict[str, list[int]], shards: int,
            "shards": int(shards), "dspan": int(span_width),
            "positions": bool(positions),
            "splits": list(splits or []),
-           "spans": spans_map}
-    if shard_rows is not None:
-        # per-shard posting-row counts, maintained INCREMENTALLY by the
-        # upsert/split/merge (each already aggregates the touched
-        # shards' merged rows) — what lets the load-factor poll read
-        # the descriptor instead of a full postings groupBy per window
-        # (ADVICE r10)
-        doc["shard_rows"] = {str(int(k)): int(v)
-                             for k, v in shard_rows.items() if int(v) > 0}
-    if schemas:
-        # read-back schemas captured at build: what lets a table whose
-        # every partition was removed read as an EMPTY frame instead of
-        # dying in parquet schema inference (fsutil.read_parquet_or_empty)
-        doc["schemas"] = dict(schemas)
+           "spans": spans_map,
+           # per-shard posting-row counts, maintained INCREMENTALLY by
+           # the upsert/split/merge (each already aggregates the touched
+           # shards' merged rows) — what lets the load-factor poll read
+           # the descriptor instead of a full postings groupBy per
+           # window (ADVICE r10)
+           "shard_rows": {str(int(k)): int(v)
+                          for k, v in shard_rows.items() if int(v) > 0},
+           # read-back schemas captured at build: what lets a table
+           # whose every partition was removed read as an EMPTY frame
+           # instead of dying in parquet schema inference
+           # (fsutil.read_parquet_or_empty)
+           "schemas": dict(schemas)}
     return doc
+
+
+def read_lex_meta(path: str, spark) -> dict:
+    """The persisted lexical index descriptor, after
+    ``fsutil.read_index_descriptor`` checked the index against the one
+    layout today's writers produce (descriptor with ``schemas``,
+    ``spans`` and ``shard_rows``, a ``docmeta/`` table, staged pending
+    manifests). Any other index raises a ValueError naming the rebuild
+    call."""
+    return fsutil.read_index_descriptor(
+        path, _LEX_META, ("schemas", "spans", "shard_rows"), "docmeta",
+        {_LEX_PENDING: ("live_positions", "live_docmeta"),
+         _LEX_SPLIT_PENDING: ("live_postings", "live_positions",
+                              "live_docmeta"),
+         _LEX_MERGE_PENDING: ("live_postings", "live_positions",
+                              "live_docmeta"),
+         _LEX_COMPACT_PENDING: ("live_shards", "live_pos_shards",
+                                "live_spans")},
+        "write_lexical_index", spark=spark)
 
 
 def bm25_indexed_topk(spark, path: str, query_terms: list[str],
@@ -512,7 +529,7 @@ def bm25_indexed_topk(spark, path: str, query_terms: list[str],
     rationals, decimal(38,0) products) — so indexed and corpus-scan
     retrieval are bit-identical, which the equivalence test pins. The
     doc-length join leaves the strategy to AQE: for selective terms the
-    (df-bounded) posting side auto-broadcasts and the full doclen table
+    (df-bounded) posting side auto-broadcasts and the full docmeta table
     streams through unshuffled; for a stopword-scale probe Spark falls
     back to a shuffle join instead of force-broadcasting a corpus-sized
     side into the driver.
@@ -530,11 +547,9 @@ def bm25_indexed_topk(spark, path: str, query_terms: list[str],
     selective). AQE broadcasts the allowed side when it is small; a
     corpus-scale allow-list degrades to one shuffle of the df-bounded
     posting rows, never of the corpus."""
-    import json
     import os
 
-    meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                       spark=spark))
+    meta = read_lex_meta(path, spark)
     n, tl, shards = meta["n"], meta["tl"], meta["shards"]
     splits = meta.get("splits", [])
     terms = sorted({t.lower() for t in query_terms})
@@ -542,25 +557,17 @@ def bm25_indexed_topk(spark, path: str, query_terms: list[str],
 
     idx = (fsutil.read_parquet_or_empty(
                spark, os.path.join(path, "postings"),
-               meta.get("schemas", {}).get("postings"))
+               meta["schemas"].get("postings"))
            .where(F.col("shard").isin(shard_ids))
            .where(F.col("term").isin(terms))
            .select("term", "doc_id", "tf", "df"))
     if doc_filter is not None:
         idx = idx.join(doc_filter.select("doc_id").distinct(),
                        "doc_id", "left_semi")
-    # column pruning keeps the shards membership array out of this scan;
-    # a pre-r8 index that has never been upserted still carries the old
-    # doclen/ layout — read that rather than fail (ADVICE r8: migration
-    # happens on first UPSERT, probes must work either way)
-    docmeta_path = os.path.join(path, "docmeta")
-    if fsutil.exists(docmeta_path, spark=spark):
-        dl = fsutil.read_parquet_or_empty(
-            spark, docmeta_path,
-            meta.get("schemas", {}).get("docmeta")).select("doc_id", "dl")
-    else:
-        dl = spark.read.parquet(os.path.join(path, "doclen")) \
-            .select("doc_id", "dl")
+    # column pruning keeps the shards membership array out of this scan
+    dl = fsutil.read_parquet_or_empty(
+        spark, os.path.join(path, "docmeta"),
+        meta["schemas"].get("docmeta")).select("doc_id", "dl")
 
     dec = "decimal(38,0)"
     idf6 = F.expr(
@@ -591,158 +598,87 @@ _LEX_MERGE_STAGING = "_merge_staging"     # staged merge snapshot
 
 
 def _lex_commit_staged(spark, path: str, staging: str, touched_shards,
-                       spans, schemas: dict, has_positions: bool,
-                       derive_df: bool = False, data_empty: bool = False,
-                       delete_empty_spans: bool = False,
+                       spans, has_positions: bool, live_pos_names,
+                       live_span_names, live_post_names=None,
+                       schemas: dict | None = None,
                        live: set[int] | None = None,
-                       live_spans: set[int] | None = None,
-                       live_post_names=None, live_pos_names=None,
-                       live_span_names=None) -> set[int]:
+                       delete_empty_spans: bool = False) -> None:
     """The destructive phase every staged lexical action shares
     (upsert / split / merge — the compaction has its own
-    descriptor-swapping flow): rewrite the touched postings shards,
-    the positions twin, and the touched docmeta spans FROM the staged
-    snapshot, never from live directories a torn per-partition dynamic
-    overwrite may have holed (ADVICE r12 — the per-partition
-    delete-then-rename commit loop; the IVF family's
-    ``_ivf_commit_staged`` twin). The snapshot is immutable until the
-    caller's cleanup, so a crash anywhere in this phase re-runs it
-    idempotently. ``derive_df``: the upsert stages its merged postings
-    WITHOUT the df column (df is a pure function of the snapshot —
-    deriving it here saves a second materialization on the CDC hot
-    path); split/merge staged rows carry df through unchanged (terms
-    move wholesale). Touched dirs absent from the staged content (an
-    emptied shard, a merge's src) are deleted explicitly — the
-    postings live set IS the positions live set (a (term, doc) has a
-    posting iff it has >= 1 position), so one sweep covers both
-    tables. ``live`` / ``live_spans``: callers that already know the
-    staged live sets (from the counts/stats they compute for the
-    descriptor anyway) pass them in and skip the probe jobs — the
-    upsert runs at a 1 s CDC cadence where jobs, not data, are the
-    budget; the rare restore path leaves them None and probes.
-    ``live_post_names`` / ``live_pos_names`` / ``live_span_names``
-    (r13b): per-table PARTITIONED snapshots commit by pure directory
-    promotion (``fsutil.promote_dirs`` — no second write, no parquet
-    decode) with those manifest-recorded dir-name lists; a table whose
-    list is None keeps the flat read-and-overwrite path (the upsert's
-    postings stay flat because df is derived here). Returns the staged
-    postings' live shard set."""
+    descriptor-swapping flow): commit the touched postings shards, the
+    positions twin, and the touched docmeta spans FROM the staged
+    snapshot, never from live directories a torn commit may have holed
+    (ADVICE r12; the IVF family's ``_ivf_commit_staged`` twin). The
+    snapshot is immutable until the caller's cleanup, so a crash
+    anywhere in this phase re-runs it idempotently. Positions and
+    docmeta — and the split/merge postings, named by
+    ``live_post_names`` — are staged PARTITIONED and commit by pure
+    directory promotion (``fsutil.promote_dirs`` with the
+    manifest-recorded dir-name lists; no second write, no parquet
+    decode). With ``live_post_names`` None the postings are the
+    upsert's: staged WITHOUT the df column (df is a pure function of the
+    snapshot — deriving it here saves a second materialization on the
+    CDC hot path), so they are read back under the df-less projection
+    of ``schemas['postings']``, df is derived, and the touched shards
+    are dynamic-overwritten; ``live`` is the staged live shard set the
+    caller already counted for the descriptor, and touched shards
+    outside it are deleted (dynamic overwrite never clears a partition
+    it writes no rows for)."""
     import os
-    from concurrent.futures import ThreadPoolExecutor
 
     postings_path = os.path.join(path, "postings")
-    positions_path = os.path.join(path, "positions")
-    docmeta_path = os.path.join(path, "docmeta")
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        probe_live = live is None
-        if probe_live:
-            live = set()
-        if live_post_names is not None:
-            fsutil.promote_dirs(os.path.join(staging, "postings"),
-                                postings_path, "shard", touched_shards,
-                                live_post_names, spark=spark)
-            live = {int(n.split("=", 1)[1]) for n in live_post_names}
-        elif touched_shards and not data_empty:
-            # the upsert's staged postings are df-LESS (df is derived
-            # just below) — the full captured schema would fabricate a
-            # NULL df that collides with the derived one, so pin its
-            # df-less projection (zero inference jobs either way).
-            # Split/merge/compact stagings carry df and stay pinned at
-            # their own read sites.
+    if live_post_names is not None:
+        fsutil.promote_dirs(os.path.join(staging, "postings"),
+                            postings_path, "shard", touched_shards,
+                            live_post_names, spark=spark)
+    else:
+        if touched_shards:
+            # the full captured schema would fabricate a NULL df that
+            # collides with the derived one, so pin its df-less
+            # projection (zero inference jobs either way)
             post = fsutil.read_parquet_or_empty(
                 spark, os.path.join(staging, "postings"),
-                _schema_without(schemas.get("postings"), "df")
-                if derive_df else schemas.get("postings"))
-            if derive_df:
-                dfreq = post.groupBy("term").agg(
-                    F.count(F.lit(1)).cast("long").alias("df"))
-                post = (post.join(dfreq, "term")
-                        .select("shard", "term", "doc_id", "tf", "df"))
-            live_f = None
-            if probe_live:
-                live_f = pool.submit(
-                    lambda: {int(r.shard) for r in
-                             post.select("shard").distinct().collect()})
-            (fsutil.cluster_by_dir(post, "shard", "doc_id",
-                                   len(touched_shards) or None)
+                _schema_without(schemas.get("postings"), "df"))
+            dfreq = post.groupBy("term").agg(
+                F.count(F.lit(1)).cast("long").alias("df"))
+            (fsutil.cluster_by_dir(
+                post.join(dfreq, "term")
+                .select("shard", "term", "doc_id", "tf", "df"),
+                "shard", "doc_id", len(touched_shards))
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("shard").parquet(postings_path))
-            if live_f is not None:
-                live = live_f.result()
-        if has_positions and live_pos_names is not None:
-            fsutil.promote_dirs(os.path.join(staging, "positions"),
-                                positions_path, "shard", touched_shards,
-                                live_pos_names, spark=spark)
-        elif has_positions and touched_shards and not data_empty:
-            pos = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "positions"),
-                schemas.get("positions"))
-            (pos.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("shard").parquet(positions_path))
-        if live_post_names is None:
-            # flat-postings sweep (promotion sweeps inside promote_dirs)
-            for s in set(touched_shards) - live:
-                fsutil.delete(os.path.join(postings_path, f"shard={s}"),
-                              spark=spark)
-                if has_positions and live_pos_names is None:
-                    fsutil.delete(
-                        os.path.join(positions_path, f"shard={s}"),
-                        spark=spark)
-        if spans and live_span_names is not None:
-            fsutil.promote_dirs(os.path.join(staging, "docmeta"),
-                                docmeta_path, "dspan",
-                                spans if delete_empty_spans else [],
-                                live_span_names, spark=spark)
-        elif spans:
-            dm = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "docmeta"),
-                schemas.get("docmeta"))
-            live_s_f = None
-            if delete_empty_spans and live_spans is None:
-                live_s_f = pool.submit(
-                    lambda: {int(r.dspan) for r in
-                             dm.select("dspan").distinct().collect()})
-            (dm.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("dspan").parquet(docmeta_path))
-            if live_s_f is not None:
-                live_spans = live_s_f.result()
-            if delete_empty_spans:
-                for s in set(spans) - (live_spans or set()):
-                    fsutil.delete(
-                        os.path.join(docmeta_path, f"dspan={s}"),
-                        spark=spark)
-    except BaseException:
-        pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    pool.shutdown(wait=True)
-    return live
+        for s in set(touched_shards) - live:
+            fsutil.delete(os.path.join(postings_path, f"shard={s}"),
+                          spark=spark)
+    if has_positions:
+        fsutil.promote_dirs(os.path.join(staging, "positions"),
+                            os.path.join(path, "positions"), "shard",
+                            touched_shards, live_pos_names, spark=spark)
+    if spans:
+        fsutil.promote_dirs(os.path.join(staging, "docmeta"),
+                            os.path.join(path, "docmeta"), "dspan",
+                            spans if delete_empty_spans else [],
+                            live_span_names, spark=spark)
 
 
 def _resume_lexical_upsert(spark, path: str) -> bool:
-    """Finish the destructive phase of a torn STAGED upsert batch from
+    """Finish the destructive phase of a torn staged upsert batch from
     its snapshot — called at entry by every lexical action before
-    reading shard/span directories a torn overwrite may have holed
-    (r13; the IVF family's ``_resume_ivf_upsert`` twin). The descriptor
-    refresh replays from the snapshot too: touched shards' counts and
-    touched spans' stats are pure functions of the staged content. A
-    legacy (pre-r13, no ``staging`` flag) manifest is left alone — its
-    contract is re-running the same batch. Returns True on restore."""
+    reading shard/span directories a torn commit may have holed (the
+    IVF family's ``_resume_ivf_upsert`` twin). The descriptor refresh
+    replays from the snapshot too: touched shards' counts and touched
+    spans' stats are pure functions of the staged content. Returns True
+    on restore."""
     import json
     import os
 
     pend = os.path.join(path, _LEX_PENDING)
     if not fsutil.exists(pend, spark=spark):
         return False
+    meta = read_lex_meta(path, spark)
     doc = json.loads(fsutil.read_text(pend, spark=spark))
-    if not doc.get("staging"):
-        return False
-    meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                       spark=spark))
-    schemas = meta.get("schemas", {})
+    schemas = meta["schemas"]
     has_positions = bool(meta.get("positions", False))
     staging = os.path.join(path, _LEX_UPSERT_STAGING)
     shards_t = [int(s) for s in doc.get("shards", [])]
@@ -752,12 +688,12 @@ def _resume_lexical_upsert(spark, path: str) -> bool:
     # the crashed batch's touched sets either way)
     fresh: dict = {}
     counts: dict[int, int] = {}
-    if spans_t and "spans" in meta:
+    if spans_t:
         fresh = _span_stats_map(
             fsutil.read_parquet_or_empty(
                 spark, os.path.join(staging, "docmeta"),
                 schemas.get("docmeta")).select("dl", "dspan"))
-    if shards_t and "shard_rows" in meta:
+    if shards_t:
         # the upsert's df-less staged postings (see _lex_commit_staged)
         # — pin the honest df-less projection of the captured schema:
         # zero inference jobs, no fabricated NULL df
@@ -767,49 +703,30 @@ def _resume_lexical_upsert(spark, path: str) -> bool:
                       _schema_without(schemas.get("postings"), "df"))
                   .groupBy("shard")
                   .agg(F.count(F.lit(1)).alias("n")).collect()}
-    _lex_commit_staged(spark, path, staging, shards_t, spans_t, schemas,
-                       has_positions, derive_df=True,
-                       delete_empty_spans=True,
-                       live_pos_names=doc.get("live_positions"),
-                       live_span_names=doc.get("live_docmeta"))
-    # descriptor refresh, state-based from the snapshot; a pre-r9/r11
-    # descriptor that never carried the maps re-seeds them from the
-    # committed tables — the same one-time full pass its next upsert
-    # would have paid anyway
-    dspan_w = int(meta.get("dspan", _LEX_DSPAN))
-    if "spans" in meta:
-        spans_map = {k: [int(v[0]), int(v[1])]
-                     for k, v in meta["spans"].items()}
-        for s in spans_t:
-            key = str(int(s))
-            if key in fresh:
-                spans_map[key] = fresh[key]
-            else:
-                spans_map.pop(key, None)
-    else:
-        spans_map = _span_stats_map(
-            fsutil.read_parquet_or_empty(
-                spark, os.path.join(path, "docmeta"),
-                schemas.get("docmeta")).select("dl", "dspan"))
-    if "shard_rows" in meta:
-        shard_rows = {int(k): int(v)
-                      for k, v in meta["shard_rows"].items()}
-        for s in shards_t:
-            if counts.get(s):
-                shard_rows[s] = counts[s]
-            else:
-                shard_rows.pop(s, None)
-    else:
-        shard_rows = {int(r.shard): int(r.n) for r in
-                      fsutil.read_parquet_or_empty(
-                          spark, os.path.join(path, "postings"),
-                          schemas.get("postings"))
-                      .groupBy("shard")
-                      .agg(F.count(F.lit(1)).alias("n")).collect()}
+    _lex_commit_staged(spark, path, staging, shards_t, spans_t,
+                       has_positions, doc["live_positions"],
+                       doc["live_docmeta"], schemas=schemas,
+                       live=set(counts), delete_empty_spans=True)
+    # descriptor refresh, state-based from the snapshot
+    spans_map = {k: [int(v[0]), int(v[1])]
+                 for k, v in meta["spans"].items()}
+    for s in spans_t:
+        key = str(int(s))
+        if key in fresh:
+            spans_map[key] = fresh[key]
+        else:
+            spans_map.pop(key, None)
+    shard_rows = {int(k): int(v) for k, v in meta["shard_rows"].items()}
+    for s in shards_t:
+        if counts.get(s):
+            shard_rows[s] = counts[s]
+        else:
+            shard_rows.pop(s, None)
     fsutil.write_text(
         os.path.join(path, _LEX_META),
         json.dumps(_lex_meta_doc(
-            spans_map, int(meta["shards"]), dspan_w,
+            spans_map, int(meta["shards"]),
+            int(meta.get("dspan", _LEX_DSPAN)),
             positions=has_positions,
             splits=list(meta.get("splits", [])),
             schemas=schemas, shard_rows=shard_rows)),
@@ -839,7 +756,7 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
                          text_col: str = "text") -> dict:
     """Incremental maintenance of a ``write_lexical_index`` table — the
     lexical twin of ``similarity.upsert_ivf_index``: a CDC batch of new
-    and deleted documents rewrites ONLY the term shards and doclen spans
+    and deleted documents rewrites ONLY the term shards and docmeta spans
     it touches, never the whole index.
 
     Semantics: removes win inside a batch; re-adding a doc_id replaces
@@ -877,10 +794,7 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
     ``_lex_upsert_pending.json`` makes the torn window detectable, same
     contract as the IVF index). All side-files and directory deletes go
     through the Hadoop FS (fsutil) so the index may live on any scheme
-    Spark can write. A pre-r8 index (separate ``doclen/``, no
-    membership) migrates on first upsert with one final full-postings
-    scan; a pre-r9 descriptor (no ``spans`` map) migrates with one
-    final full-docmeta aggregate. An index built with positional
+    Spark can write. An index built with positional
     postings (descriptor ``positions: true``) maintains ``positions/``
     in the same batch: identical touched-shard set (a doc's positions
     live in exactly the shards its terms hash to), identical merge
@@ -914,22 +828,18 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
     incremental actions in r13). Now any lexical action restores the
     snapshot at entry (``_resume_lexical_upsert`` — descriptor refresh
     included, replayed state-based from the staged content), and
-    re-running the same batch stays equally safe (idempotent algebra).
-    A legacy pre-r13 manifest (no staging flag) keeps the old re-run
-    contract (jobs-per-upsert pinned by test_round10_properties)."""
+    re-running the same batch stays equally safe (idempotent algebra)."""
     import json
     import os
     from functools import reduce
 
-    meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                       spark=spark))
-    # a torn STAGED upsert is restored FIRST: its snapshot is the only
+    meta = read_lex_meta(path, spark)
+    # a torn staged upsert is restored FIRST: its snapshot is the only
     # trustworthy image of the shards/spans a torn per-partition
     # overwrite may have holed, and every read below (postings, docmeta)
-    # would otherwise see the hole (r13)
+    # would otherwise see the hole
     if _resume_lexical_upsert(spark, path):
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
     if fsutil.exists(os.path.join(path, _LEX_SPLIT_PENDING), spark=spark):
         # a torn shard split leaves term placement ambiguous between the
         # descriptor (old) and the data (partially moved); the resume is
@@ -937,16 +847,14 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
         # unattended CDC pipeline — the same contract as the IVF upsert's
         # split auto-resume
         split_lexical_shard(spark, path)
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
     if fsutil.exists(os.path.join(path, _LEX_MERGE_PENDING), spark=spark):
         # same reasoning for a torn MERGE: the descriptor still routes
         # the moved terms to the deleted src shard, so a batch applied
         # now would rewrite (and dynamically resurrect) the wrong
         # directory. O(2 shards), idempotent.
         merge_lexical_shards(spark, path)
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
     if fsutil.exists(os.path.join(path, _LEX_COMPACT_PENDING),
                      spark=spark):
         # a torn chain COMPACTION left the whole placement ambiguous
@@ -954,82 +862,18 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
         # directories) — finish it (pure-function placement, idempotent
         # re-run) before applying anything
         compact_lexical_index(spark, path)
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
     shards = meta["shards"]
     splits = meta.get("splits", [])
-    schemas = meta.get("schemas", {})
+    schemas = meta["schemas"]
     dspan_w = int(meta.get("dspan", _LEX_DSPAN))
-    postings_path = os.path.join(path, "postings")
-    docmeta_path = os.path.join(path, "docmeta")
-    postings = fsutil.read_parquet_or_empty(spark, postings_path,
-                                            schemas.get("postings"))
-    if not fsutil.exists(docmeta_path, spark=spark):
-        # pre-r8 layout (doclen only): fuse length + membership once
-        # from the full postings — the LAST full-index scan this index
-        # pays for discovery
-        old_dl = spark.read.parquet(os.path.join(path, "doclen"))
-        memb = (postings
-                .select("doc_id", F.col("shard").cast("int").alias("s"))
-                .groupBy("doc_id").agg(F.collect_set("s").alias("shards")))
-        (old_dl.select("doc_id", "dl").join(memb, "doc_id", "left")
-         .select("doc_id", "dl",
-                 F.coalesce("shards", F.array().cast("array<int>"))
-                  .alias("shards"))
-         .withColumn("dspan", F.expr(f"doc_id div {dspan_w}"))
-         .write.mode("overwrite").partitionBy("dspan")
-         .parquet(docmeta_path))
-    # the old doclen dir is deleted only AFTER docmeta exists — and
-    # re-checked here so a crash between the migration write and this
-    # delete can't leave it behind forever
-    if fsutil.exists(os.path.join(path, "doclen"), spark=spark):
-        fsutil.delete(os.path.join(path, "doclen"), spark=spark)
-    docmeta = fsutil.read_parquet_or_empty(spark, docmeta_path,
-                                           schemas.get("docmeta"))
-    if not schemas:
-        # pre-r10 descriptor: capture the schemas NOW, from the frames
-        # already loaded (and a one-time positions footer read) — the
-        # end of the batch is too late, because a remove-everything
-        # batch sweeps every partition dir first and a post-sweep
-        # read-back would crash in schema inference with the pending
-        # manifest still on disk (r10 review)
-        schemas = {"postings": postings.schema.json(),
-                   "docmeta": docmeta.schema.json()}
-        if meta.get("positions", False):
-            schemas["positions"] = spark.read.parquet(
-                os.path.join(path, "positions")).schema.json()
-        # ...and PERSIST the back-fill immediately (atomic, purely
-        # additive), mirroring upsert_ivf_index: deferring it to the
-        # final descriptor write left a crash window — after a
-        # remove-everything batch's emptied-shard sweep but before the
-        # descriptor commit — where a schema-less _lex_meta.json sat
-        # over fully-swept postings dirs and the documented re-run
-        # recovery died in read_parquet_or_empty instead of converging
-        # (ADVICE r10)
-        meta = dict(meta)
-        meta["schemas"] = schemas
-        fsutil.write_text(os.path.join(path, _LEX_META),
-                          json.dumps(meta), spark=spark)
-    if "spans" in meta:
-        spans_map = {k: [int(v[0]), int(v[1])]
-                     for k, v in meta["spans"].items()}
-    else:
-        # pre-r9 descriptor: one-time full-docmeta aggregate seeds the
-        # per-span stats map — the LAST O(corpus) read this index pays
-        # for scalar maintenance (bounded: two longs per doc, once)
-        spans_map = _span_stats_map(docmeta.select("dl", "dspan"))
-    if "shard_rows" in meta:
-        shard_rows = {int(k): int(v)
-                      for k, v in meta["shard_rows"].items()}
-    else:
-        # pre-r11 descriptor: seed the per-shard posting counts once
-        # from the full postings — the LAST O(index) scan the
-        # load-factor poll ever pays (ADVICE r10; afterwards the counts
-        # ride the descriptor and this upsert maintains them from the
-        # touched shards' merged rows it aggregates anyway)
-        shard_rows = {int(r.shard): int(r.n) for r in
-                      postings.groupBy("shard")
-                      .agg(F.count(F.lit(1)).alias("n")).collect()}
+    postings = fsutil.read_parquet_or_empty(
+        spark, os.path.join(path, "postings"), schemas.get("postings"))
+    docmeta = fsutil.read_parquet_or_empty(
+        spark, os.path.join(path, "docmeta"), schemas.get("docmeta"))
+    spans_map = {k: [int(v[0]), int(v[1])]
+                 for k, v in meta["spans"].items()}
+    shard_rows = {int(k): int(v) for k, v in meta["shard_rows"].items()}
 
     id_frames = []
     if adds is not None:
@@ -1101,18 +945,6 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
             # postings scan
             shard_set |= {int(r.v) for r in _membership_shard_frame(
                 docmeta, changed, touched_spans).distinct().collect()}
-        # a surviving pending manifest means THIS batch already half-ran:
-        # its data phase may have committed (membership included), so
-        # discovery-from-membership can MISS shards that only held this
-        # batch's removed docs — harmless for the data (the merge algebra
-        # is idempotent) but their descriptor shard_rows entries would
-        # keep pre-batch counts forever. Folding the manifest's shard
-        # list back in makes the re-run recompute those counts from the
-        # final state (bounded: the crashed batch's own touched set).
-        if fsutil.exists(os.path.join(path, _LEX_PENDING), spark=spark):
-            prev = json.loads(fsutil.read_text(
-                os.path.join(path, _LEX_PENDING), spark=spark))
-            shard_set |= {int(s) for s in prev.get("shards", [])}
         touched_shards = sorted(shard_set)
 
         pending = os.path.join(path, _LEX_PENDING)
@@ -1255,12 +1087,9 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
         if counts_f is not None:
             counts = counts_f.result()
         _lex_commit_staged(spark, path, staging, touched_shards,
-                           touched_spans, schemas, has_positions,
-                           derive_df=True, delete_empty_spans=True,
-                           live=set(counts),
-                           live_pos_names=live_pos_names
-                           if has_positions else None,
-                           live_span_names=live_span_names)
+                           touched_spans, has_positions, live_pos_names,
+                           live_span_names, schemas=schemas,
+                           live=set(counts), delete_empty_spans=True)
         # descriptor bookkeeping from the staged finals: emptied spans
         # drop out, untouched entries carry verbatim, (n, tl) re-derive
         # as sums
@@ -1350,7 +1179,7 @@ def split_lexical_shard(spark, path: str,
     (``_term_shard_py``) and upserts evaluate scan-side
     (``_shard_expr``); splitting an already-split shard composes.
 
-    Cost: O(shard) — the source (∪ torn-destination) directory rewrite,
+    Cost: O(shard) — the source directory rewrite,
     the positions twin when present, plus a membership rewrite of ONLY
     the spans holding the shard's documents (their ``shards`` arrays are
     recomputed state-based from the reassignment: old entries for
@@ -1369,9 +1198,7 @@ def split_lexical_shard(spark, path: str,
     — until the idempotent resume, which rewrites FROM the snapshot:
     never from shard dirs a torn per-partition overwrite may have
     holed, and never by re-deriving placement over them (ADVICE r12's
-    window, closed for the incremental actions in r13; a LEGACY
-    pre-r13 manifest still resumes through the old
-    union-of-both-dirs-deduped path, then upgrades itself).
+    window, closed for the incremental actions in r13).
     ``upsert_lexical_index`` auto-resumes a pending split before
     applying a batch, so CDC traffic cannot apply against ambiguous
     placement. Salt selection walks a deterministic ladder in ONE
@@ -1383,13 +1210,11 @@ def split_lexical_shard(spark, path: str,
     import json
     import os
 
-    meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                       spark=spark))
+    meta = read_lex_meta(path, spark)
     # restore a torn STAGED upsert before reading any shard/span
     # directory a torn per-partition overwrite may have holed (r13)
     if _resume_lexical_upsert(spark, path):
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
     shards = int(meta["shards"])
     splits = list(meta.get("splits", []))
     has_positions = bool(meta.get("positions", False))
@@ -1407,8 +1232,7 @@ def split_lexical_shard(spark, path: str,
         # exist at a time — each action resumes the other before writing
         # its own — so this cannot recurse back here)
         merge_lexical_shards(spark, path)
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
         shards = int(meta["shards"])
         splits = list(meta.get("splits", []))
         has_positions = bool(meta.get("positions", False))
@@ -1419,14 +1243,14 @@ def split_lexical_shard(spark, path: str,
         # finish it (pure-function placement, idempotent) before
         # splitting anything
         compact_lexical_index(spark, path)
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
         shards = int(meta["shards"])
         splits = list(meta.get("splits", []))
         has_positions = bool(meta.get("positions", False))
         dspan_w = int(meta.get("dspan", _LEX_DSPAN))
+    schemas = meta["schemas"]
     postings = fsutil.read_parquet_or_empty(
-        spark, postings_path, meta.get("schemas", {}).get("postings"))
+        spark, postings_path, schemas.get("postings"))
     if pending is not None:
         if shard is not None and shard != int(pending["src"]):
             raise ValueError(
@@ -1460,62 +1284,53 @@ def split_lexical_shard(spark, path: str,
         salt = None                   # chosen below, before the manifest
 
     staging = os.path.join(path, _LEX_SPLIT_STAGING)
-    schemas = meta.get("schemas", {})
-    if pending is not None and pending.get("staging"):
+    if pending is not None:
         # the manifest references a COMPLETE staged snapshot: resume by
         # rewriting from it — never from shard dirs a torn
         # per-partition overwrite may have holed, and never by
-        # re-deriving the re-placement over them (r13)
+        # re-deriving the re-placement over them
         counts = {int(k): int(v) for k, v in pending["counts"].items()}
         touched_spans = [int(s) for s in pending["spans"]]
-        live_post_names = pending.get("live_postings")
-        live_pos_names = pending.get("live_positions")
-        live_span_names = pending.get("live_docmeta")
+        live_post_names = pending["live_postings"]
+        live_pos_names = pending["live_positions"]
+        live_span_names = pending["live_docmeta"]
     else:
-        # union of both split directories: a fresh split sees the empty
-        # new side, a LEGACY (pre-r13 manifest) resume whatever the
-        # torn rewrite left — only THAT resume can hold a (term, doc)
-        # in both dirs, so only it pays the dedup shuffle; the fresh
-        # path (no manifest ⇒ every prior action fully committed ⇒ one
-        # row per (term, doc_id) by the placement invariant) skips it
-        # outright, removing a full exchange from every split-input
-        # consumer below (salt stat, staging write). df rides along
-        # unchanged: terms move wholesale, so every term's posting
-        # count is placement-independent.
+        # no manifest ⇒ every prior action fully committed ⇒ one row per
+        # (term, doc_id) by the placement invariant, so the split input
+        # needs no dedup. df rides along unchanged: terms move
+        # wholesale, so every term's posting count is
+        # placement-independent.
         rows = postings.where(F.col("shard").isin([src, dst]))
-        if pending is not None:
-            rows = rows.dropDuplicates(["term", "doc_id"])
+        # salt selection, ONE bounded aggregate: a shard holding
+        # few terms can land them all on one side of a given salted
+        # hash — a committed no-op split the load-factor policy
+        # would then stack forever. Try a deterministic salt ladder
+        # and take the first that actually separates; only a shard
+        # whose terms NEVER separate (single hot term) raises —
+        # before the manifest exists, so nothing is committed.
+        candidates = [f"lexsplit{dst}"] + [f"lexsplit{dst}#{i}"
+                                           for i in range(1, 8)]
+        movers = [F.sum((h60(F.concat(F.lit(c + "|"), F.col("term")))
+                         % 2).cast("long")).alias(f"m{i}")
+                  for i, c in enumerate(candidates)]
+        stat = (rows.select("term").distinct()
+                .agg(F.count(F.lit(1)).alias("nt"), *movers).first())
+        if int(stat.nt) == 0:
+            raise UnsplittablePartition(
+                f"split_lexical_shard: shard {src} holds no "
+                f"postings — nothing to split")
+        for i, c in enumerate(candidates):
+            if 0 < int(stat[f"m{i}"]) < int(stat.nt):
+                salt = c
+                break
         if salt is None:
-            # salt selection, ONE bounded aggregate: a shard holding
-            # few terms can land them all on one side of a given salted
-            # hash — a committed no-op split the load-factor policy
-            # would then stack forever. Try a deterministic salt ladder
-            # and take the first that actually separates; only a shard
-            # whose terms NEVER separate (single hot term) raises —
-            # before the manifest exists, so nothing is committed.
-            candidates = [f"lexsplit{dst}"] + [f"lexsplit{dst}#{i}"
-                                               for i in range(1, 8)]
-            movers = [F.sum((h60(F.concat(F.lit(c + "|"), F.col("term")))
-                             % 2).cast("long")).alias(f"m{i}")
-                      for i, c in enumerate(candidates)]
-            stat = (rows.select("term").distinct()
-                    .agg(F.count(F.lit(1)).alias("nt"), *movers).first())
-            if int(stat.nt) == 0:
-                raise UnsplittablePartition(
-                    f"split_lexical_shard: shard {src} holds no "
-                    f"postings — nothing to split")
-            for i, c in enumerate(candidates):
-                if 0 < int(stat[f"m{i}"]) < int(stat.nt):
-                    salt = c
-                    break
-            if salt is None:
-                raise UnsplittablePartition(
-                    f"split_lexical_shard: no salt separates the terms "
-                    f"of shard {src} — every candidate moved them all "
-                    f"to one side (a single hot term cannot be "
-                    f"rebalanced by term movement; posting mass per "
-                    f"TERM cannot be split without breaking the "
-                    f"one-shard-per-term df invariant)")
+            raise UnsplittablePartition(
+                f"split_lexical_shard: no salt separates the terms "
+                f"of shard {src} — every candidate moved them all "
+                f"to one side (a single hot term cannot be "
+                f"rebalanced by term movement; posting mass per "
+                f"TERM cannot be split without breaking the "
+                f"one-shard-per-term df invariant)")
         moved = h60(F.concat(F.lit(salt + "|"), F.col("term"))) % 2 == 1
         reassigned = fsutil.cluster_by_dir(
             rows.withColumn(
@@ -1530,7 +1345,6 @@ def split_lexical_shard(spark, path: str,
         # (the split's data is written exactly once — df rides in the
         # staged rows, terms move wholesale), and the staged writes
         # double as the old localCheckpoints' materialization barriers.
-        # A legacy manifest upgrades itself here.
         (reassigned.write.mode("overwrite").partitionBy("shard")
          .parquet(os.path.join(staging, "postings")))
         # schema-pinned read-back (staged == live schema by the rename
@@ -1555,8 +1369,6 @@ def split_lexical_shard(spark, path: str,
                 spark, os.path.join(path, "positions"),
                 schemas.get("positions"))
                 .where(F.col("shard").isin([src, dst])))
-            if pending is not None:   # legacy torn-resume input only
-                pos_in = pos_in.dropDuplicates(["term", "doc_id", "pos"])
             (fsutil.cluster_by_dir(
                 pos_in.withColumn(
                     "shard",
@@ -1619,11 +1431,8 @@ def split_lexical_shard(spark, path: str,
     # membership strictly after — the split never empties a span, so
     # no span sweep
     _lex_commit_staged(spark, path, staging, [src, dst], touched_spans,
-                       schemas, has_positions, live=set(counts),
-                       live_post_names=live_post_names,
-                       live_pos_names=live_pos_names
-                       if has_positions else None,
-                       live_span_names=live_span_names)
+                       has_positions, live_pos_names, live_span_names,
+                       live_post_names=live_post_names)
 
     # descriptor last; dl/span stats are untouched by design, so the
     # whole meta carries over with just the split appended (idempotent:
@@ -1632,13 +1441,12 @@ def split_lexical_shard(spark, path: str,
     if sp not in splits:
         splits.append(sp)
     meta["splits"] = splits
-    if "shard_rows" in meta:
-        # state-based refresh of the two rewritten shards' counts
-        for s in (src, dst):
-            if counts.get(s):
-                meta["shard_rows"][str(s)] = counts[s]
-            else:
-                meta["shard_rows"].pop(str(s), None)
+    # state-based refresh of the two rewritten shards' counts
+    for s in (src, dst):
+        if counts.get(s):
+            meta["shard_rows"][str(s)] = counts[s]
+        else:
+            meta["shard_rows"].pop(str(s), None)
     fsutil.write_text(os.path.join(path, _LEX_META), json.dumps(meta),
                       spark=spark)
     fsutil.delete(pend_path, spark=spark)
@@ -1696,16 +1504,12 @@ def compact_lexical_index(spark, path: str,
     crash between one shard's delete and rename would otherwise drop
     its postings permanently and the union-of-dirs resume would re-home
     WITHOUT them (ADVICE r12); the staged snapshot is what the resume
-    rewrites from instead. Data first (postings, then positions, both
-    from the staging read), membership next, descriptor last, manifest
-    then staging deleted after. A resume of a run torn AFTER the
-    descriptor commit redoes the data writes but does NOT re-bump the
-    ``compactions`` counter (descriptor already reflects the target). A
-    legacy manifest without the staging flag resumes through the old
-    union-of-shard-dirs path — placement is a PURE function of (term,
-    n_live), so that re-run is still deterministic — then upgrades
-    itself to the staged protocol before rewriting. An orphaned staging
-    dir is inert (overwritten by the next compaction).
+    promotes from instead. Data first (postings, then positions),
+    membership next, descriptor last, manifest then staging deleted
+    after. A resume of a run torn AFTER the descriptor commit redoes the
+    promotions but does NOT re-bump the ``compactions`` counter
+    (descriptor already reflects the target). An orphaned staging dir is
+    inert (overwritten by the next compaction).
     ``upsert_lexical_index`` / ``split_lexical_shard`` /
     ``merge_lexical_shards`` auto-resume a pending compaction before
     mutating (the descriptor still routes terms through the old chain
@@ -1714,8 +1518,7 @@ def compact_lexical_index(spark, path: str,
     import json
     import os
 
-    meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                       spark=spark))
+    meta = read_lex_meta(path, spark)
     pend_path = os.path.join(path, _LEX_COMPACT_PENDING)
     pending = None
     if fsutil.exists(pend_path, spark=spark):
@@ -1728,18 +1531,15 @@ def compact_lexical_index(spark, path: str,
         # shard directory, and a torn upsert overwrite may have holed
         # one (r13).
         if _resume_lexical_upsert(spark, path):
-            meta = json.loads(fsutil.read_text(
-                os.path.join(path, _LEX_META), spark=spark))
+            meta = read_lex_meta(path, spark)
         if fsutil.exists(os.path.join(path, _LEX_SPLIT_PENDING),
                          spark=spark):
             split_lexical_shard(spark, path)
-            meta = json.loads(fsutil.read_text(
-                os.path.join(path, _LEX_META), spark=spark))
+            meta = read_lex_meta(path, spark)
         if fsutil.exists(os.path.join(path, _LEX_MERGE_PENDING),
                          spark=spark):
             merge_lexical_shards(spark, path)
-            meta = json.loads(fsutil.read_text(
-                os.path.join(path, _LEX_META), spark=spark))
+            meta = read_lex_meta(path, spark)
     cur_shards = int(meta["shards"])
     splits = list(meta.get("splits", []))
     if pending is None and not splits and shards is None:
@@ -1770,49 +1570,25 @@ def compact_lexical_index(spark, path: str,
     else:
         k = len(_live_shards(cur_shards, splits))
     has_positions = bool(meta.get("positions", False))
-    schemas = meta.get("schemas", {})
+    schemas = meta["schemas"]
     postings_path = os.path.join(path, "postings")
     docmeta_path = os.path.join(path, "docmeta")
 
     old_live = _live_shards(cur_shards, splits) | set(range(k))
     staging = os.path.join(path, _LEX_COMPACT_STAGING)
-    live_shards = live_pos_shards = live_spans = None
-    counts: dict[int, int] | None = None
-    reassigned = pos_rows = None
-    if pending is not None and pending.get("staging"):
+    if pending is not None:
         # the manifest references COMPLETE staged snapshots: resume by
-        # rewriting from them — never from shard dirs a torn
-        # per-partition overwrite may have holed (ADVICE r12). A
-        # partitioned (r13b) snapshot resumes by directory promotion
-        # with the manifest's counts; a flat (r13a) one re-reads and
-        # dynamic-overwrites.
-        live_shards = pending.get("live_shards")
-        live_pos_shards = pending.get("live_pos_shards")
-        live_spans = pending.get("live_spans")
-        if live_shards is not None:
-            counts = {int(kk): int(v)
-                      for kk, v in pending.get("counts", {}).items()}
-        else:
-            reassigned = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "postings"),
-                schemas.get("postings"))
-            pos_rows = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "positions"),
-                schemas.get("positions")) \
-                if has_positions else None
+        # promoting them — never from shard dirs a torn commit may have
+        # holed (ADVICE r12) — with the manifest's counts
+        live_shards = pending["live_shards"]
+        live_pos_shards = pending["live_pos_shards"]
+        live_spans = pending["live_spans"]
+        counts = {int(kk): int(v) for kk, v in pending["counts"].items()}
     else:
-        # union of every shard directory: a fresh compaction sees the
-        # clean index (no manifest ⇒ every action fully committed ⇒ one
-        # row per (term, doc_id) by the placement invariant — no dedup
-        # shuffle); a LEGACY (pre-staging manifest) resume sees
-        # whatever a torn rewrite left (a term's rows possibly in two
-        # dirs — identical rows, only the shard differs; placement is a
-        # pure function, so the legacy re-run stays deterministic) and
-        # only THAT path pays the dedup exchange
+        # no manifest ⇒ every action fully committed ⇒ one row per
+        # (term, doc_id) by the placement invariant — no dedup shuffle
         rows = fsutil.read_parquet_or_empty(spark, postings_path,
                                             schemas.get("postings"))
-        if pending is not None:
-            rows = rows.dropDuplicates(["term", "doc_id"])
         # stage the re-homed snapshots BEFORE any destructive mutation
         # (also the materialization barrier the old localCheckpoint
         # provided); the manifest is written strictly AFTER every
@@ -1827,15 +1603,11 @@ def compact_lexical_index(spark, path: str,
         def _stage_positions():
             if not has_positions:
                 return
-            pos_in = fsutil.read_parquet_or_empty(
-                spark, os.path.join(path, "positions"),
-                schemas.get("positions"))
-            if pending is not None:   # legacy torn-resume input only
-                pos_in = pos_in.dropDuplicates(
-                    ["term", "doc_id", "pos"])
             (fsutil.cluster_by_dir(
-                pos_in.withColumn("shard",
-                                  (h60(F.col("term")) % k).cast("int")),
+                fsutil.read_parquet_or_empty(
+                    spark, os.path.join(path, "positions"),
+                    schemas.get("positions"))
+                .withColumn("shard", (h60(F.col("term")) % k).cast("int")),
                 "shard", "doc_id", k)
              .write.mode("overwrite").partitionBy("shard")
              .parquet(os.path.join(staging, "positions")))
@@ -1899,64 +1671,18 @@ def compact_lexical_index(spark, path: str,
                         "live_spans": live_spans}),
             spark=spark)
 
-    if live_shards is not None:
-        # destructive phase by pure directory promotion (r13b): the
-        # re-homed index is written exactly once; every pre-compaction
-        # shard dir not promoted disappears. The docmeta snapshot
-        # covers every doc, so all its spans promote with no deletes.
-        fsutil.promote_dirs(os.path.join(staging, "postings"),
-                             postings_path, "shard", old_live,
-                             live_shards, spark=spark)
-        if has_positions:
-            fsutil.promote_dirs(os.path.join(staging, "positions"),
-                os.path.join(path, "positions"), "shard", old_live,
-                live_pos_shards or [], spark=spark)
-        fsutil.promote_dirs(os.path.join(staging, "docmeta"),
-                             docmeta_path, "dspan", [], live_spans or [], spark=spark)
-    else:
-        # flat r13a snapshot: re-read and dynamic-overwrite
-        (reassigned.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("shard").parquet(postings_path))
-        counts = {int(r.shard): int(r.n) for r in
-                  reassigned.groupBy("shard")
-                  .agg(F.count(F.lit(1)).alias("n")).collect()}
-        for s in old_live - set(counts):
-            fsutil.delete(os.path.join(postings_path, f"shard={s}"),
-                          spark=spark)
-        if has_positions:
-            positions_path = os.path.join(path, "positions")
-            (pos_rows.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("shard").parquet(positions_path))
-            pos_live = {int(r.shard) for r in
-                        pos_rows.select("shard").distinct().collect()}
-            for s in old_live - pos_live:
-                fsutil.delete(
-                    os.path.join(positions_path, f"shard={s}"),
-                    spark=spark)
-        # membership AFTER the data commits, FROM the staged snapshot
-        # when present, else the pre-docmeta-staging recompute
-        if fsutil.exists(os.path.join(staging, "docmeta"), spark=spark):
-            merged_meta = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "docmeta"),
-                schemas.get("docmeta"))
-        else:
-            docmeta = fsutil.read_parquet_or_empty(
-                spark, docmeta_path, schemas.get("docmeta"))
-            doc_sets = (reassigned.groupBy("doc_id")
-                        .agg(F.collect_set("shard").alias("fresh")))
-            merged_meta = (docmeta.join(doc_sets, "doc_id", "left")
-                           .select("doc_id", "dl",
-                                   F.coalesce(
-                                       "fresh",
-                                       F.array().cast("array<int>"))
-                                    .alias("shards"),
-                                   "dspan")
-                           .localCheckpoint(eager=True))
-        (merged_meta.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("dspan").parquet(docmeta_path))
+    # destructive phase by pure directory promotion: the re-homed index
+    # is written exactly once; every pre-compaction shard dir not
+    # promoted disappears. The docmeta snapshot covers every doc, so
+    # all its spans promote with no deletes.
+    fsutil.promote_dirs(os.path.join(staging, "postings"), postings_path,
+                        "shard", old_live, live_shards, spark=spark)
+    if has_positions:
+        fsutil.promote_dirs(os.path.join(staging, "positions"),
+                            os.path.join(path, "positions"), "shard",
+                            old_live, live_pos_shards, spark=spark)
+    fsutil.promote_dirs(os.path.join(staging, "docmeta"), docmeta_path,
+                        "dspan", [], live_spans, spark=spark)
 
     # descriptor last: fresh geometry, empty chain, reseeded shard_rows.
     # A resume of a run torn AFTER the descriptor commit must not
@@ -2023,9 +1749,8 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
     exactly ONE shard.
 
     With no arguments, merges the two COLDEST live shards (fewest
-    posting rows — from the descriptor's ``shard_rows`` map when
-    present, one bounded postings aggregate otherwise; ties to the
-    lower id); the fuller one becomes ``dst``. Refuses to drop the live
+    posting rows — from the descriptor's ``shard_rows`` map; ties to
+    the lower id); the fuller one becomes ``dst``. Refuses to drop the live
     count below 2 (a 1-shard index defeats every probe's pruning).
     Cost: O(two shard directories) — rewrite + positions twin + a
     membership rewrite of only the spans holding the merged docs.
@@ -2040,34 +1765,28 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
     staging deleted after. The resume rewrites FROM the snapshot —
     never from shard dirs a torn per-partition overwrite may have
     holed (ADVICE r12's window, closed for the incremental actions in
-    r13; a LEGACY pre-r13 manifest still resumes through the old
-    union-deduped path, then upgrades itself); ``upsert_lexical_index``
-    auto-resumes a pending merge before applying a batch. Returns
-    ``(src, dst)``."""
+    r13); ``upsert_lexical_index`` auto-resumes a pending merge before
+    applying a batch. Returns ``(src, dst)``."""
     import json
     import os
 
-    meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                       spark=spark))
+    meta = read_lex_meta(path, spark)
     # restore a torn STAGED upsert before reading any shard/span
     # directory a torn per-partition overwrite may have holed (r13)
     if _resume_lexical_upsert(spark, path):
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
     if fsutil.exists(os.path.join(path, _LEX_SPLIT_PENDING), spark=spark):
         # ambiguous placement: finish the torn split first (idempotent,
         # O(shard)); only one manifest can exist at a time, so this
         # cannot recurse
         split_lexical_shard(spark, path)
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
     if fsutil.exists(os.path.join(path, _LEX_COMPACT_PENDING),
                      spark=spark):
         # a torn chain compaction leaves the whole placement ambiguous —
         # finish it (pure-function placement, idempotent) before merging
         compact_lexical_index(spark, path)
-        meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                           spark=spark))
+        meta = read_lex_meta(path, spark)
     shards = int(meta["shards"])
     splits = list(meta.get("splits", []))
     has_positions = bool(meta.get("positions", False))
@@ -2076,8 +1795,7 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
     docmeta_path = os.path.join(path, "docmeta")
     pend_path = os.path.join(path, _LEX_MERGE_PENDING)
 
-    postings = fsutil.read_parquet_or_empty(
-        spark, postings_path, meta.get("schemas", {}).get("postings"))
+    schemas = meta["schemas"]
     pending = None
     if fsutil.exists(pend_path, spark=spark):
         pending = json.loads(fsutil.read_text(pend_path, spark=spark))
@@ -2095,17 +1813,10 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
                 f"merge_lexical_shards: index at {path} has {len(live)} "
                 f"live shards — merging would leave fewer than 2")
         if src is None:
-            if "shard_rows" in meta:
-                counts = {c: 0 for c in live}
-                counts.update({int(k): int(v)
-                               for k, v in meta["shard_rows"].items()
-                               if int(k) in live})
-            else:
-                counts = {c: 0 for c in live}
-                for r in (postings.groupBy("shard")
-                          .agg(F.count(F.lit(1)).alias("n")).collect()):
-                    if int(r.shard) in counts:
-                        counts[int(r.shard)] = int(r.n)
+            counts = {c: 0 for c in live}
+            counts.update({int(k): int(v)
+                           for k, v in meta["shard_rows"].items()
+                           if int(k) in live})
             a, b = sorted(live, key=lambda c: (counts[c], c))[:2]
             if (counts[a], -a) >= (counts[b], -b):
                 src, dst = b, a
@@ -2124,53 +1835,47 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
                 raise ValueError("merge_lexical_shards: src == dst")
 
     staging = os.path.join(path, _LEX_MERGE_STAGING)
-    schemas = meta.get("schemas", {})
-    if pending is not None and pending.get("staging"):
+    if pending is not None:
         # the manifest references a COMPLETE staged snapshot: resume by
         # rewriting from it — never from shard dirs a torn
-        # per-partition overwrite may have holed (r13)
+        # per-partition overwrite may have holed
         touched_spans = [int(s) for s in pending["spans"]]
-        data_empty = bool(pending.get("empty"))
         total = int(pending.get("total", 0))
-        live_post_names = pending.get("live_postings")
-        live_pos_names = pending.get("live_positions")
-        live_span_names = pending.get("live_docmeta")
+        live_post_names = pending["live_postings"]
+        live_pos_names = pending["live_positions"]
+        live_span_names = pending["live_docmeta"]
     else:
         # fresh merge: src/dst are distinct shards of a fully committed
         # index, so (term, doc_id) is already unique across their union
-        # — only a LEGACY (pre-r13 manifest) resume can see a torn
-        # rewrite's duplicates and pays the dedup exchange
-        rows = postings.where(F.col("shard").isin([src, dst]))
-        if pending is not None:
-            rows = rows.dropDuplicates(["term", "doc_id"])
-        rows = rows.withColumn("shard", F.lit(int(dst)).cast("int"))
+        rows = (fsutil.read_parquet_or_empty(
+                    spark, postings_path, schemas.get("postings"))
+                .where(F.col("shard").isin([src, dst]))
+                .withColumn("shard", F.lit(int(dst)).cast("int")))
         # stage the snapshot (postings + positions twin + merged
         # membership spans) BEFORE the manifest, the manifest BEFORE
         # any destructive mutation — the retrain's protocol (ADVICE
         # r12, extended to the incremental actions in r13); staged
         # PARTITIONED so the commit promotes by rename (ONE evaluation
-        # of the union-dedup plan, one write — no isEmpty pre-pass),
-        # doubling as the old localCheckpoints' barriers. Both shards
-        # empty (a delete wave swept them) falls out of the staged
-        # listing: no shard dir written ⇒ descriptor-only merge. A
-        # legacy manifest upgrades itself here.
+        # of the union plan, one write — no isEmpty pre-pass), doubling
+        # as the old localCheckpoints' barriers. Both shards empty (a
+        # delete wave swept them) falls out of the staged listing: no
+        # shard dir written ⇒ descriptor-only merge.
         (fsutil.cluster_by_dir(rows, "shard", "doc_id", 2)
          .write.mode("overwrite").partitionBy("shard")
          .parquet(os.path.join(staging, "postings")))
         live_post_names = [n for n in fsutil.list_names(
             os.path.join(staging, "postings"), spark=spark)
             if n.startswith("shard=")]
-        data_empty = not live_post_names
         total = 0
         touched_spans: list[int] = []
         live_pos_names: list = []
         live_span_names: list = []
-        if not data_empty:
+        if live_post_names:
             rows = fsutil.read_parquet_or_empty(
                 spark, os.path.join(staging, "postings"),
                 schemas.get("postings"))
             # ONE bounded aggregate over the staged blocks feeds BOTH
-            # descriptor inputs: the authoritative union-dedup total for
+            # descriptor inputs: the authoritative union total for
             # shard_rows (resume-proof, unlike summing pre-merge
             # descriptor counts) AND the touched doc-span set — the two
             # separate jobs (count + distinct-spans collect) scanned the
@@ -2185,9 +1890,6 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
                     spark, os.path.join(path, "positions"),
                     schemas.get("positions"))
                     .where(F.col("shard").isin([src, dst])))
-                if pending is not None:   # legacy torn-resume only
-                    pos_in = pos_in.dropDuplicates(
-                        ["term", "doc_id", "pos"])
                 (fsutil.cluster_by_dir(
                     pos_in.withColumn("shard",
                                       F.lit(int(dst)).cast("int")),
@@ -2230,8 +1932,7 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
         fsutil.write_text(
             pend_path,
             json.dumps({"src": src, "dst": dst, "spans": touched_spans,
-                        "empty": data_empty, "total": total,
-                        "staging": True,
+                        "total": total, "staging": True,
                         "live_postings": live_post_names,
                         "live_positions": live_pos_names,
                         "live_docmeta": live_span_names}),
@@ -2241,23 +1942,18 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
     # touched-minus-live sweep deletes src always and dst when the
     # merge was empty; membership strictly after the data
     _lex_commit_staged(spark, path, staging, [src, dst], touched_spans,
-                       schemas, has_positions, data_empty=data_empty,
-                       live=set() if data_empty else {int(dst)},
-                       live_post_names=live_post_names,
-                       live_pos_names=live_pos_names
-                       if has_positions else None,
-                       live_span_names=live_span_names)
+                       has_positions, live_pos_names, live_span_names,
+                       live_post_names=live_post_names)
 
     # descriptor last (idempotent on resume: set/chain semantics)
     entry = {"src": int(src), "dst": int(dst), "salt": None}
     if entry not in splits:
         splits.append(entry)
     meta["splits"] = splits
-    if "shard_rows" in meta:
-        meta["shard_rows"].pop(str(src), None)
-        meta["shard_rows"].pop(str(dst), None)
-        if total:
-            meta["shard_rows"][str(dst)] = int(total)
+    meta["shard_rows"].pop(str(src), None)
+    meta["shard_rows"].pop(str(dst), None)
+    if total:
+        meta["shard_rows"][str(dst)] = int(total)
     fsutil.write_text(os.path.join(path, _LEX_META), json.dumps(meta),
                       spark=spark)
     fsutil.delete(pend_path, spark=spark)
@@ -2334,13 +2030,11 @@ def phrase_match_indexed(spark, path: str, phrase: list[str],
     reason reference users push ``position``/``hasSubsequence`` to the
     ClickHouse server instead of streaming rows out
     (reference clickhouse_api.py query passthrough)."""
-    import json
     import os
 
     if len(phrase) < 2:
         raise ValueError("phrase needs at least 2 terms")
-    meta = json.loads(fsutil.read_text(os.path.join(path, _LEX_META),
-                                       spark=spark))
+    meta = read_lex_meta(path, spark)
     if not meta.get("positions", False):
         raise ValueError(
             f"phrase_match_indexed: index at {path} was written without "
@@ -2356,7 +2050,7 @@ def phrase_match_indexed(spark, path: str, phrase: list[str],
     # the same few directories either way; plan-pinned)
     pos = (fsutil.read_parquet_or_empty(
                spark, os.path.join(path, "positions"),
-               meta.get("schemas", {}).get("positions"))
+               meta["schemas"].get("positions"))
            .where(F.col("shard").isin(shard_ids))
            .select("term", "doc_id", "pos"))
     matched = (pos.where(F.col("term") == wanted[0])

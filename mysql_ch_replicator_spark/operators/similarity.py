@@ -1052,90 +1052,39 @@ _IVF_MERGE_STAGING = "_merge_staging"     # staged merge snapshot
 
 
 def _ivf_commit_staged(spark, path: str, staging: str, cells, spans,
-                       schemas: dict, delete_empty_spans: bool = False,
-                       data_empty: bool = False,
-                       live_names=None, live_span_names=None) -> set[int]:
+                       live_names, live_span_names,
+                       delete_empty_spans: bool = False) -> None:
     """The destructive phase every staged IVF action shares (upsert /
-    split / merge — the retrain has its own descriptor-swapping twin):
-    rewrite the touched cell directories and membership spans FROM the
-    staged snapshot, never from live directories a torn per-partition
-    dynamic overwrite may have holed (ADVICE r12 — Spark commits the
-    overwrite per-partition as delete-then-rename in a driver loop, so a
-    crash between one directory's delete and rename drops its rows; the
-    staged snapshot is the recovery source a tear can never touch).
-    Because the snapshot is immutable until the caller's cleanup, a
-    crash ANYWHERE in this phase re-runs it idempotently. Touched dirs
+    split / merge — the retrain promotes its own snapshot): commit the
+    touched cell directories and membership spans FROM the staged
+    snapshot, never from live directories a torn commit may have holed
+    (ADVICE r12 — Spark's dynamic overwrite commits per-partition as
+    delete-then-rename in a driver loop, so a crash between one
+    directory's delete and rename drops its rows; the staged snapshot is
+    the recovery source a tear can never touch). The snapshot was staged
+    PARTITIONED, so the commit is pure-metadata directory promotion
+    (``fsutil.promote_dirs`` with the manifest's ``live_names`` /
+    ``live_span_names`` — no second write, no parquet decode, no probe
+    jobs) and a crash ANYWHERE in it re-runs idempotently. Touched dirs
     absent from the staged content (an emptied cell, a merge's src) are
-    deleted explicitly — dynamic overwrite never clears a partition it
-    writes no rows for. Two wire protocols: when the manifest carries
-    ``live_names``/``live_span_names`` (r13b), the snapshot was staged
-    PARTITIONED and commits by pure-metadata directory promotion
-    (``fsutil.promote_dirs`` — no second write, no parquet decode, no
-    probe jobs: the live lists came from a driver-side listing of the
-    staged dirs); without them (flat r13a snapshots) it falls back to
-    re-reading the snapshot and dynamic-overwriting, with the
-    emptied-dir probe overlapping the write on a scheduler thread.
-    Returns the staged data's live cell set."""
+    deleted."""
     import os
-    from concurrent.futures import ThreadPoolExecutor
 
-    if live_names is not None:
-        fsutil.promote_dirs(os.path.join(staging, "data"), path,
-                             "cell", cells, live_names, spark=spark)
-        if spans:
-            fsutil.promote_dirs(os.path.join(staging, "members"),
-                os.path.join(path, _IVF_MEMBERS), "vspan",
-                spans if delete_empty_spans else [],
-                live_span_names or [], spark=spark)
-        return {int(n.split("=", 1)[1]) for n in live_names}
-
-    data = fsutil.read_parquet_or_empty(
-        spark, os.path.join(staging, "data"), schemas.get("index")) \
-        if not data_empty else None
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        live: set[int] = set()
-        if data is not None:
-            live_f = pool.submit(
-                lambda: {int(r.cell) for r in
-                         data.select("cell").distinct().collect()})
-            (data.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("cell").parquet(path))
-            live = live_f.result()
-        for c in set(cells) - live:
-            fsutil.delete(os.path.join(path, f"cell={c}"), spark=spark)
-        if spans:
-            members_path = os.path.join(path, _IVF_MEMBERS)
-            memb = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "members"),
-                schemas.get("members"))
-            live_s_f = pool.submit(
-                lambda: {int(r.vspan) for r in
-                         memb.select("vspan").distinct().collect()})
-            (memb.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("vspan").parquet(members_path))
-            live_spans = live_s_f.result()
-            if delete_empty_spans:
-                for s in set(spans) - live_spans:
-                    fsutil.delete(
-                        os.path.join(members_path, f"vspan={s}"),
-                        spark=spark)
-    except BaseException:
-        pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    pool.shutdown(wait=True)
-    return live
+    fsutil.promote_dirs(os.path.join(staging, "data"), path, "cell",
+                        cells, live_names, spark=spark)
+    if spans:
+        fsutil.promote_dirs(os.path.join(staging, "members"),
+                            os.path.join(path, _IVF_MEMBERS), "vspan",
+                            spans if delete_empty_spans else [],
+                            live_span_names, spark=spark)
 
 
 def _resume_ivf_upsert(spark, path: str) -> bool:
-    """Finish the destructive phase of a torn STAGED upsert batch from
+    """Finish the destructive phase of a torn staged upsert batch from
     its snapshot — called at entry by every IVF action (upsert itself,
     split, merge, retrain) before reading or mutating cell directories a
-    torn overwrite may have holed. A legacy (pre-r13, no ``staging``
-    flag) manifest is left alone: its documented recovery contract is
-    re-running the same batch. Returns True when a restore ran."""
+    torn commit may have holed, after its ``read_ivf_meta`` checked the
+    manifest. Returns True when a restore ran."""
     import json
     import os
 
@@ -1143,16 +1092,12 @@ def _resume_ivf_upsert(spark, path: str) -> bool:
     if not fsutil.exists(pend, spark=spark):
         return False
     doc = json.loads(fsutil.read_text(pend, spark=spark))
-    if not doc.get("staging"):
-        return False
-    meta = read_ivf_meta(path) or {}
     staging = os.path.join(path, _IVF_UPSERT_STAGING)
     _ivf_commit_staged(spark, path, staging,
                        [int(c) for c in doc.get("cells", [])],
                        [int(s) for s in doc.get("vspans", [])],
-                       meta.get("schemas", {}), delete_empty_spans=True,
-                       live_names=doc.get("live_cells"),
-                       live_span_names=doc.get("live_spans"))
+                       doc["live_cells"], doc["live_spans"],
+                       delete_empty_spans=True)
     fsutil.delete(pend, spark=spark)
     fsutil.delete(staging, spark=spark)
     return True
@@ -1339,13 +1284,9 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
     writes, while the CRASH ORDER is unchanged. The membership
     spans rewrite AFTER the cells commit, so a torn batch leaves
     membership a SUPERSET of the real state and recovery re-discovers
-    at worst a few already-clean cells. A pre-r8 index (no ``_vecmeta``)
-    migrates on first upsert with one final full-index scan. The
-    merged affected-cell rows are localCheckpointed (so the plan no
-    longer reads the target path — Spark refuses to overwrite a path it
-    is reading) and written with DYNAMIC partition overwrite, leaving
-    every untouched cell directory byte-identical. Returns the affected
-    cell ids.
+    at worst a few already-clean cells. Only the affected cells'
+    directories are replaced, leaving every untouched cell directory
+    byte-identical. Returns the affected cell ids.
 
     Crash contract (the retrain's staged protocol, r13): the merged
     final content of the affected cells AND their membership spans is
@@ -1366,8 +1307,7 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
     construction: every term of ``(current ∖ add_ids ∖ removes) ∪
     (adds ∖ removes)`` is insensitive to whether a cell already
     absorbed the batch (pinned by the partial-failure test in
-    tests/test_ann_recall.py). A legacy (pre-r13) manifest without the
-    staging flag keeps its old contract: re-run the same batch.
+    tests/test_ann_recall.py).
     ``pending_upsert_cells`` still returns the cell ids a crashed batch
     may have half-applied. Replica tables, which need readers isolated
     during rewrite, use the generation-manifest protocol instead
@@ -1383,10 +1323,6 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
     from ..cache import transient_persist
 
     meta = read_ivf_meta(path)
-    if meta is None:
-        raise ValueError(
-            f"upsert_ivf_index: no _ivf_meta.json descriptor at {path} — "
-            f"only write_ivf_index tables (r6+) support incremental upsert")
     cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
                             meta["dims"])
     # a torn STAGED upsert is restored FIRST: its snapshot is the only
@@ -1423,30 +1359,10 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
         meta = read_ivf_meta(path)   # the descriptor gained a dead cell
         cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
                                 meta["dims"])
-    schemas = meta.get("schemas", {})
+    schemas = meta["schemas"]
     idx = fsutil.read_parquet_or_empty(spark, path, schemas.get("index"))
-    members_path = os.path.join(path, _IVF_MEMBERS)
-    if not fsutil.exists(members_path, spark=spark):
-        # pre-r8 index: derive the membership table once from the full
-        # index — the LAST full-index scan this index pays for discovery
-        (idx.select("vec_id", F.col("cell").cast("int").alias("cell"))
-         .withColumn("vspan", F.expr(f"vec_id div {_IVF_VSPAN}"))
-         .write.mode("overwrite").partitionBy("vspan")
-         .parquet(members_path))
-    members = fsutil.read_parquet_or_empty(spark, members_path,
-                                           schemas.get("members"))
-    if not schemas:
-        # pre-r10 descriptor: back-fill the schemas NOW from the loaded
-        # frames (the lexical upsert's migration moment) — captured at
-        # entry while the tables are still non-empty, committed before
-        # any mutation (the write is atomic and purely additive), so a
-        # later remove-everything window cannot wedge this index either
-        schemas = {"index": idx.schema.json(),
-                   "members": members.schema.json()}
-        meta = dict(meta)
-        meta["schemas"] = schemas
-        fsutil.write_text(os.path.join(path, _IVF_META),
-                          json.dumps(meta), spark=spark)
+    members = fsutil.read_parquet_or_empty(
+        spark, os.path.join(path, _IVF_MEMBERS), schemas.get("members"))
     meta_cols = list(meta.get("meta_cols", []))
     dead = [int(c) for c in meta.get("dead", [])]
     assigned = None
@@ -1616,9 +1532,8 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
                                       "live_spans": live_span_names}),
                           spark=spark)
         _ivf_commit_staged(spark, path, staging, cells, spans,
-                           schemas, delete_empty_spans=True,
-                           live_names=live_names,
-                           live_span_names=live_span_names)
+                           live_names, live_span_names,
+                           delete_empty_spans=True)
     except BaseException:
         pool.shutdown(wait=True, cancel_futures=True)
         raise
@@ -1689,9 +1604,7 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
     the snapshot, with the manifest's sub-codebook, never by
     re-training over cell directories a torn per-partition overwrite
     may have holed (ADVICE r12's window, closed for the incremental
-    actions in r13; a LEGACY pre-r13 manifest still resumes through the
-    old union-of-both-dirs-deduped path, then upgrades itself to the
-    staged protocol before rewriting). Data commits before the
+    actions in r13). Data commits before the
     descriptor: a crash in between leaves moved vectors invisible to
     probes (bounded recall loss, never wrong results) until the resume.
     Returns ``(split_cell, new_cell)``."""
@@ -1699,9 +1612,6 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
     import os
 
     meta = read_ivf_meta(path)
-    if meta is None:
-        raise ValueError(
-            f"split_ivf_cell: no _ivf_meta.json descriptor at {path}")
     # restore a torn STAGED upsert before reading any cell directory a
     # torn per-partition overwrite may have holed (r13)
     _resume_ivf_upsert(spark, path)
@@ -1731,7 +1641,7 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
         cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
                                 meta["dims"])
     staging = os.path.join(path, _IVF_SPLIT_STAGING)
-    schemas = meta.get("schemas", {})
+    schemas = meta["schemas"]
     if pending is not None:
         if cell is not None and cell != pending["cell"]:
             raise ValueError(
@@ -1742,7 +1652,7 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
     else:
         if cell is None:
             members = fsutil.read_parquet_or_empty(
-                spark, members_path, meta.get("schemas", {}).get("members"))
+                spark, members_path, schemas.get("members"))
             top = (members.groupBy("cell")
                    .agg(F.count(F.lit(1)).alias("n"))
                    .orderBy(F.col("n").desc(), F.col("cell")).first())
@@ -1765,31 +1675,22 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
                 f"not a live cell of the index at {path}")
         new_cell = n_cells + 1
 
-    if pending is not None and pending.get("staging"):
+    if pending is not None:
         # the manifest references a COMPLETE staged snapshot: resume by
-        # rewriting from it — never from cell dirs a torn per-partition
-        # overwrite may have holed, and never by re-training over them
-        # (the manifest carries the sub-codebook the torn run trained)
+        # promoting it — never from cell dirs a torn commit may have
+        # holed, and never by re-training over them (the manifest
+        # carries the sub-codebook the torn run trained)
         sub = [[float(x) for x in c] for c in pending["sub"]]
         spans = [int(s) for s in pending["spans"]]
-        live_names = pending.get("live_cells")
-        live_span_names = pending.get("live_spans")
+        live_names = pending["live_cells"]
+        live_span_names = pending["live_spans"]
     else:
         idx = fsutil.read_parquet_or_empty(spark, path,
                                            schemas.get("index"))
-        # union of both split directories. A fresh split (no manifest ⇒
-        # every prior action fully committed ⇒ vec_id unique across
-        # cells) sees the empty new side and needs no dedup — skipping
-        # it removes a full exchange from every consumer (seeding,
-        # training passes, staging write). Only a LEGACY (pre-r13
-        # manifest) resume can see a torn two-directory commit's
-        # duplicate members (identical rows, only the cell differs) and
-        # pays the vec_id dedup that makes the TRAINING INPUT SET
-        # invariant under any partial commit.
+        # no manifest ⇒ every prior action fully committed ⇒ vec_id
+        # unique across cells, so the split input needs no dedup
         cellrows = idx.where(F.col("cell").isin([cell, new_cell]))
-        if pending is not None:
-            cellrows = cellrows.dropDuplicates(["vec_id"])
-        if pending is None and cellrows.isEmpty():
+        if cellrows.isEmpty():
             raise UnsplittablePartition(
                 f"split_ivf_cell: cell {cell} holds no vectors — "
                 f"splitting it would replace its centroid with the "
@@ -1801,11 +1702,10 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
         # no rebalance, and a load-factor policy would re-split the same
         # mass every poll. Seeds: the min-id member, then the member
         # farthest from it (exact quantized distances, ties to the lower
-        # id) — deterministic, resume-invariant (computed over the same
-        # union-deduped input), and still two SQL rows, so the split
+        # id) — deterministic, and still two SQL rows, so the split
         # oracle follows. O(cell) like the trainer itself.
         seeds, max_d = _split_seed_centroids(cellrows, "embedding")
-        if pending is None and max_d == 0.0:
+        if max_d == 0.0:
             raise UnsplittablePartition(
                 f"split_ivf_cell: every member of cell {cell} is "
                 f"identical — a split cannot rebalance it")
@@ -1826,8 +1726,7 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
         # actions in r13). Staged PARTITIONED: the commit promotes the
         # directories by rename, so the split's data is written exactly
         # once (the staged write also doubles as the materialization
-        # barrier the old localCheckpoint provided). A legacy manifest
-        # upgrades itself to the staged protocol here.
+        # barrier the old localCheckpoint provided).
         (fsutil.cluster_by_dir(reassigned, "cell", "vec_id", 2)
          .write.mode("overwrite").partitionBy("cell")
          .parquet(os.path.join(staging, "data")))
@@ -1873,9 +1772,7 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
     # promotion + emptied-dir sweep first, membership next — the split
     # never empties a span, so no span sweep
     _ivf_commit_staged(spark, path, staging, [cell, new_cell], spans,
-                       schemas, delete_empty_spans=False,
-                       live_names=live_names,
-                       live_span_names=live_span_names)
+                       live_names, live_span_names)
 
     cents2 = [list(c) for c in cents]
     cents2[cell - 1] = [float(x) for x in sub[0]]
@@ -1940,10 +1837,9 @@ def merge_ivf_cells(spark, path: str, src: int | None = None,
     membership next, descriptor last, manifest then staging deleted
     after. A torn merge can leave a moved vector visible in BOTH
     directories (the rows are identical — only the cell changes), a
-    bounded probe anomaly until the idempotent resume — which rewrites
-    from the snapshot, never from directories a torn per-partition
-    overwrite may have holed (a LEGACY pre-r13 manifest still resumes
-    through the old union-deduped path, then upgrades itself).
+    bounded probe anomaly until the idempotent resume — which promotes
+    the snapshot, never reading directories a torn commit may have
+    holed.
     ``upsert_ivf_index`` and ``split_ivf_cell`` auto-resume a pending
     merge before mutating — a torn merge's membership still maps moved
     ids to the deleted src directory, and an upsert trusting it would
@@ -1952,9 +1848,6 @@ def merge_ivf_cells(spark, path: str, src: int | None = None,
     import os
 
     meta = read_ivf_meta(path)
-    if meta is None:
-        raise ValueError(
-            f"merge_ivf_cells: no _ivf_meta.json descriptor at {path}")
     # restore a torn STAGED upsert before reading any cell directory a
     # torn per-partition overwrite may have holed (r13)
     _resume_ivf_upsert(spark, path)
@@ -1992,8 +1885,7 @@ def merge_ivf_cells(spark, path: str, src: int | None = None,
         if src is None:
             counts = {c: 0 for c in live}
             for r in (fsutil.read_parquet_or_empty(
-                    spark, members_path,
-                    meta.get("schemas", {}).get("members"))
+                    spark, members_path, meta["schemas"].get("members"))
                     .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
                     .collect()):         # bounded: one row per cell
                 if int(r.cell) in counts:
@@ -2017,39 +1909,30 @@ def merge_ivf_cells(spark, path: str, src: int | None = None,
                 raise ValueError("merge_ivf_cells: src == dst")
 
     staging = os.path.join(path, _IVF_MERGE_STAGING)
-    schemas = meta.get("schemas", {})
-    if pending is not None and pending.get("staging"):
+    schemas = meta["schemas"]
+    if pending is not None:
         # the manifest references a COMPLETE staged snapshot: resume by
-        # rewriting from it — never from cell dirs a torn per-partition
-        # overwrite may have holed (r13)
+        # promoting it — never from cell dirs a torn commit may have
+        # holed
         spans = [int(s) for s in pending["spans"]]
-        data_empty = bool(pending.get("empty"))
-        live_names = pending.get("live_cells")
-        live_span_names = pending.get("live_spans")
+        live_names = pending["live_cells"]
+        live_span_names = pending["live_spans"]
     else:
-        idx = fsutil.read_parquet_or_empty(
-            spark, path, schemas.get("index"))
-        # union of both directories: a fresh merge (no manifest ⇒ every
-        # prior action fully committed ⇒ vec_id unique across cells)
-        # sees src+dst and needs no dedup exchange; a LEGACY (pre-r13
-        # manifest) resume sees whatever a torn run left (possibly a
-        # vector in both dirs — identical rows, only cell differs) and
-        # pays the vec_id dedup that makes the rewrite input invariant
-        # under any partial commit
-        merged = idx.where(F.col("cell").isin([src, dst]))
-        if pending is not None:
-            merged = merged.dropDuplicates(["vec_id"])
-        merged = merged.withColumn("cell", F.lit(dst))
+        # union of both directories: no manifest ⇒ every prior action
+        # fully committed ⇒ vec_id unique across cells, no dedup
+        merged = (fsutil.read_parquet_or_empty(
+                      spark, path, schemas.get("index"))
+                  .where(F.col("cell").isin([src, dst]))
+                  .withColumn("cell", F.lit(dst)))
         # stage the snapshot BEFORE the manifest, the manifest BEFORE
         # any destructive mutation — the retrain's protocol (ADVICE
         # r12, extended to the incremental actions in r13); staged
         # PARTITIONED so the commit promotes by rename (ONE evaluation
-        # of the union-dedup plan and one write of the merged data,
-        # total — the staged write doubles as the materialization
-        # barrier the old localCheckpoint provided). Both cells empty
-        # (a delete wave swept them) falls out of the staged listing:
-        # no cell directory written ⇒ descriptor-only merge. A legacy
-        # manifest upgrades itself to the staged protocol here.
+        # of the union plan and one write of the merged data, total —
+        # the staged write doubles as the materialization barrier the
+        # old localCheckpoint provided). Both cells empty (a delete wave
+        # swept them) falls out of the staged listing: no cell
+        # directory written ⇒ descriptor-only merge.
         (fsutil.cluster_by_dir(merged, "cell", "vec_id", 2)
          .write.mode("overwrite").partitionBy("cell")
          .parquet(os.path.join(staging, "data")))
@@ -2088,7 +1971,7 @@ def merge_ivf_cells(spark, path: str, src: int | None = None,
         fsutil.write_text(
             pend_path,
             json.dumps({"src": src, "dst": dst, "spans": spans,
-                        "empty": data_empty, "staging": True,
+                        "staging": True,
                         "live_cells": live_names,
                         "live_spans": live_span_names}),
             spark=spark)
@@ -2097,10 +1980,7 @@ def merge_ivf_cells(spark, path: str, src: int | None = None,
     # touched-minus-live sweep deletes src always and dst when the
     # merge was empty — the merge never empties a span, so no span sweep
     _ivf_commit_staged(spark, path, staging, [src, dst], spans,
-                       schemas, delete_empty_spans=False,
-                       data_empty=data_empty,
-                       live_names=live_names,
-                       live_span_names=live_span_names)
+                       live_names, live_span_names)
 
     # descriptor last; idempotent on resume (set semantics; the chain
     # counter is NOT re-bumped when the dead set already contains src)
@@ -2176,40 +2056,33 @@ def retrain_ivf_index(spark, path: str, iters: int = 2,
     ``train_pq=True`` implies intent and overrides the no-op guard.
 
     Crash contract (the split's, escalated): the re-assigned snapshot is
-    STAGED (``_retrain_staging/`` parquet, complete re-assigned rows)
-    and only then referenced by the intent manifest
-    (``_ivf_retrain_pending.json`` — trained centroids + staging flag)
-    BEFORE any destructive mutation. The dynamic cell overwrite commits
-    per-partition (delete old dir, then rename staged dir, in a driver
-    loop) — a crash between one cell's delete and rename would
-    otherwise drop that cell's rows permanently, and a union-of-dirs
-    resume would retrain/re-home WITHOUT them (ADVICE r12); with the
-    staging snapshot the resume rewrites from the manifest-referenced
-    staging dir, which a torn overwrite can never have touched. Data
-    first (dynamic cell overwrite + stale-directory deletes, all from
-    the staging read), membership next, descriptor last, manifest then
-    staging deleted after. A crash between data and descriptor leaves
-    probes on the OLD geometry over partially moved rows — bounded
-    recall loss, never wrong results (membership, not global
-    consistency, defines candidates — ``ivf_index_topk``'s standing
-    contract) — until the idempotent resume. A resume of a run torn
-    AFTER the descriptor commit redoes the data writes but does NOT
+    STAGED (``_retrain_staging/{data,members}``, complete re-assigned
+    rows and their membership, partitioned) and only then referenced by
+    the intent manifest (``_ivf_retrain_pending.json`` — trained
+    centroids, staging flag, staged dir names) BEFORE any destructive
+    mutation. A commit that rewrote cells in place would drop a cell's
+    rows if it crashed between the cell's delete and rename, and a
+    union-of-dirs resume would retrain/re-home WITHOUT them (ADVICE
+    r12); the resume instead promotes the manifest-referenced staging
+    dirs, which a torn commit can never have touched. Data first (cell
+    promotion + stale-directory deletes), membership next, descriptor
+    last, manifest then staging deleted after. A crash between data
+    and descriptor leaves probes on the OLD geometry over partially
+    moved rows — bounded recall loss, never wrong results (membership,
+    not global consistency, defines candidates — ``ivf_index_topk``'s
+    standing contract) — until the idempotent resume. A resume of a run
+    torn AFTER the descriptor commit redoes the promotions but does NOT
     re-bump the ``retrains`` counter (the descriptor already reflects
-    the target — the split's 'already grown' guard). A legacy manifest
-    without the staging flag resumes through the old
-    union-of-cell-dirs-deduped-on-vec_id path, then upgrades itself to
-    the staged protocol before rewriting. An orphaned staging dir (crash
-    between manifest delete and staging delete) is inert — the next
-    retrain overwrites it. ``upsert_ivf_index`` / ``split_ivf_cell`` /
-    ``merge_ivf_cells`` auto-resume a pending retrain before mutating.
-    Returns the new live-cell count, or None for the no-op."""
+    the target — the split's 'already grown' guard). An orphaned
+    staging dir (crash between manifest delete and staging delete) is
+    inert — the next retrain overwrites it. ``upsert_ivf_index`` /
+    ``split_ivf_cell`` / ``merge_ivf_cells`` auto-resume a pending
+    retrain before mutating. Returns the new live-cell count, or None
+    for the no-op."""
     import json
     import os
 
     meta = read_ivf_meta(path)
-    if meta is None:
-        raise ValueError(
-            f"retrain_ivf_index: no _ivf_meta.json descriptor at {path}")
     pend_path = os.path.join(path, _IVF_RETRAIN_PENDING)
     pending = None
     if fsutil.exists(pend_path, spark=spark):
@@ -2266,64 +2139,46 @@ def retrain_ivf_index(spark, path: str, iters: int = 2,
         if pending.get("pq_books") is not None:
             books_new = [[[float(x) for x in cent] for cent in book]
                          for book in pending["pq_books"]]
-    live_names = live_span_names = None
-    if pending is not None and pending.get("staging"):
         # the manifest references a COMPLETE staged snapshot: resume by
-        # rewriting from it — never from cell dirs a torn per-partition
-        # overwrite may have holed (ADVICE r12); codes in the snapshot
-        # were already encoded with the manifest's books. A partitioned
-        # (r13b) snapshot resumes by pure directory promotion; a flat
-        # (r13a) one re-reads and dynamic-overwrites.
-        live_names = pending.get("live_cells")
-        live_span_names = pending.get("live_spans")
-        reassigned = spark.read.parquet(staging) \
-            if live_names is None else None
+        # promoting it — never from cell dirs a torn commit may have
+        # holed (ADVICE r12); codes in the snapshot were already encoded
+        # with the manifest's books
+        live_names = pending["live_cells"]
+        live_span_names = pending["live_spans"]
     else:
-        idx = fsutil.read_parquet_or_empty(
-            spark, path, meta.get("schemas", {}).get("index"))
-        # union of every cell directory: a fresh retrain (no manifest ⇒
-        # every prior action fully committed ⇒ vec_id unique across
-        # cells) sees the clean index and needs no dedup — skipping it
-        # removes a full exchange from every training pass and the
-        # re-assignment scan; a LEGACY (pre-staging manifest) resume
-        # sees whatever a torn rewrite left (a vector possibly in two
-        # dirs — identical rows, only the cell differs) and pays the
-        # vec_id dedup
-        rows = idx
-        if pending is not None:
-            rows = rows.dropDuplicates(["vec_id"])
-        if pending is None:
-            if n_cells is not None:
-                if int(n_cells) < 1:
-                    raise ValueError(
-                        "retrain_ivf_index: n_cells must be >= 1")
-                k = int(n_cells)
-            else:
-                k = cur_cells - len(dead)
-            if k < 1:
+        # every cell directory: no manifest ⇒ every prior action fully
+        # committed ⇒ vec_id unique across cells, so no dedup
+        rows = fsutil.read_parquet_or_empty(
+            spark, path, meta["schemas"].get("index"))
+        if n_cells is not None:
+            if int(n_cells) < 1:
                 raise ValueError(
-                    f"retrain_ivf_index: index at {path} has no live "
-                    f"cells")
-            if rows.isEmpty():
-                raise ValueError(
-                    f"retrain_ivf_index: index at {path} holds no "
-                    f"vectors — nothing to train on")
-            cents_new = train_ivf_centroids(
-                rows, "embedding", k, dims, iters=iters,
+                    "retrain_ivf_index: n_cells must be >= 1")
+            k = int(n_cells)
+        else:
+            k = cur_cells - len(dead)
+        if k < 1:
+            raise ValueError(
+                f"retrain_ivf_index: index at {path} has no live "
+                f"cells")
+        if rows.isEmpty():
+            raise ValueError(
+                f"retrain_ivf_index: index at {path} holds no "
+                f"vectors — nothing to train on")
+        cents_new = train_ivf_centroids(
+            rows, "embedding", k, dims, iters=iters,
+            sample_fraction=sample_fraction,
+            id_col="vec_id" if sample_fraction is not None else None,
+            salt=salt)
+        if train_pq:
+            books_new = train_pq_codebooks(
+                rows, m=int(pqm["m"]), n_codes=int(pqm["n_codes"]),
+                vec_col="embedding", dims=dims, iters=iters,
                 sample_fraction=sample_fraction,
-                id_col="vec_id" if sample_fraction is not None else None,
-                salt=salt)
-            if train_pq:
-                books_new = train_pq_codebooks(
-                    rows, m=int(pqm["m"]), n_codes=int(pqm["n_codes"]),
-                    vec_col="embedding", dims=dims, iters=iters,
-                    sample_fraction=sample_fraction,
-                    salt=f"{salt}|pq")
-        # snapshot the re-assigned rows BEFORE any destructive mutation
-        # (this write is also the materialization barrier the old
-        # localCheckpoint provided — the overwrite below must not scan
-        # the dirs it rewrites); the manifest is written strictly AFTER
-        # the staging write returns, so manifest ⇒ staging complete
+                salt=f"{salt}|pq")
+        # snapshot the re-assigned rows BEFORE any destructive
+        # mutation; the manifest is written strictly AFTER the staging
+        # write returns, so manifest ⇒ staging complete
         reassigned = (ivf_assign(rows.drop("cell"), "embedding", k, dims,
                                  probes=1, centroids=cents_new)
                       .withColumn("cell", F.element_at("cells", 1))
@@ -2353,7 +2208,7 @@ def retrain_ivf_index(spark, path: str, iters: int = 2,
         (fsutil.cluster_by_dir(
             fsutil.read_parquet_or_empty(
                 spark, os.path.join(staging, "data"),
-                meta.get("schemas", {}).get("index"))
+                meta["schemas"].get("index"))
             .select("vec_id", F.col("cell").cast("int").alias("cell"))
             .withColumn("vspan", F.expr(f"vec_id div {_IVF_VSPAN}")),
             "vspan", "vec_id")
@@ -2371,33 +2226,15 @@ def retrain_ivf_index(spark, path: str, iters: int = 2,
         if books_new is not None:
             manifest["pq_books"] = books_new
         fsutil.write_text(pend_path, json.dumps(manifest), spark=spark)
-        reassigned = None
-    members_path = os.path.join(path, _IVF_MEMBERS)
-    if live_names is not None:
-        # compact: every pre-retrain directory not promoted disappears —
-        # dead slots' dirs (already gone), renumbered tails, emptied
-        # cells; ids unchanged → same span set, no span deletes
-        fsutil.promote_dirs(os.path.join(staging, "data"), path,
-                             "cell", range(1, max(cur_cells, k) + 1),
-                             live_names, spark=spark)
-        fsutil.promote_dirs(os.path.join(staging, "members"),
-                             members_path, "vspan", [],
-                             live_span_names or [], spark=spark)
-    else:
-        # flat r13a snapshot: re-read and dynamic-overwrite
-        (reassigned.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("cell").parquet(path))
-        live = {int(r.cell) for r in
-                reassigned.select("cell").distinct().collect()}
-        for c in set(range(1, max(cur_cells, k) + 1)) - live:
-            fsutil.delete(os.path.join(path, f"cell={c}"), spark=spark)
-        (reassigned.select("vec_id",
-                           F.col("cell").cast("int").alias("cell"))
-         .withColumn("vspan", F.expr(f"vec_id div {_IVF_VSPAN}"))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("vspan").parquet(members_path))
+    # compact: every pre-retrain directory not promoted disappears —
+    # dead slots' dirs (already gone), renumbered tails, emptied cells;
+    # ids unchanged → same span set, no span deletes
+    fsutil.promote_dirs(os.path.join(staging, "data"), path, "cell",
+                        range(1, max(cur_cells, k) + 1), live_names,
+                        spark=spark)
+    fsutil.promote_dirs(os.path.join(staging, "members"),
+                        os.path.join(path, _IVF_MEMBERS), "vspan", [],
+                        live_span_names, spark=spark)
 
     # descriptor last: compacted geometry, chain reset. A resume of a
     # run torn AFTER the descriptor commit must not re-bump the
@@ -2480,7 +2317,7 @@ def pending_upsert_cells(path: str) -> list[int] | None:
     last upsert committed cleanly. Recovery: any IVF action restores the
     staged snapshot at entry (``_resume_ivf_upsert``), and re-running
     the same upsert is also always safe (idempotent; see the crash
-    contract above — legacy pre-r13 manifests have only the re-run)."""
+    contract above)."""
     import json
     import os
 
@@ -2490,15 +2327,18 @@ def pending_upsert_cells(path: str) -> list[int] | None:
     return json.loads(fsutil.read_text(pending))["cells"]
 
 
-def read_ivf_meta(path: str) -> dict | None:
-    """The persisted index descriptor, or None for a pre-r6 index dir."""
-    import json
-    import os
-
-    meta = os.path.join(path, _IVF_META)
-    if not fsutil.exists(meta):
-        return None
-    return json.loads(fsutil.read_text(meta))
+def read_ivf_meta(path: str) -> dict:
+    """The persisted IVF index descriptor, after
+    ``fsutil.read_index_descriptor`` checked the index against the one
+    layout today's writers produce (descriptor with ``schemas``, a
+    ``_vecmeta/`` membership table, staged pending manifests). Any
+    other index raises a ValueError naming the rebuild call."""
+    live = ("live_cells", "live_spans")
+    return fsutil.read_index_descriptor(
+        path, _IVF_META, ("schemas",), _IVF_MEMBERS,
+        {_IVF_PENDING: live, _IVF_SPLIT_PENDING: live,
+         _IVF_MERGE_PENDING: live, _IVF_RETRAIN_PENDING: live},
+        "write_ivf_index")
 
 
 def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
@@ -2574,36 +2414,32 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
     Raises on an index without a ``pq`` block (codes are a build-time
     layout choice — rebuild or retrain into one)."""
     meta = read_ivf_meta(path)
-    if meta is not None:
-        if centroids is not None and \
-                [[float(x) for x in c] for c in centroids] \
-                != meta["centroids"]:
+    if centroids is not None and \
+            [[float(x) for x in c] for c in centroids] \
+            != meta["centroids"]:
+        raise ValueError(
+            f"ivf_index_topk: supplied centroids differ from the ones "
+            f"persisted with the index at {path}; probing with them "
+            f"would search the wrong cells")
+    for name, given, stored in (("n_cells", n_cells, meta["n_cells"]),
+                                ("dims", dims, meta["dims"])):
+        if given is not None and given != stored:
             raise ValueError(
-                f"ivf_index_topk: supplied centroids differ from the ones "
-                f"persisted with the index at {path}; probing with them "
-                f"would search the wrong cells")
-        for name, given, stored in (("n_cells", n_cells, meta["n_cells"]),
-                                    ("dims", dims, meta["dims"])):
-            if given is not None and given != stored:
-                raise ValueError(
-                    f"ivf_index_topk: {name}={given} contradicts the "
-                    f"index descriptor ({name}={stored}) at {path}")
-        centroids = meta["centroids"]
-        n_cells, dims = meta["n_cells"], meta["dims"]
-    # pre-r6 index dirs have no descriptor: keep the historical defaults
-    n_cells = 8 if n_cells is None else n_cells
-    dims = 64 if dims is None else dims
+                f"ivf_index_topk: {name}={given} contradicts the "
+                f"index descriptor ({name}={stored}) at {path}")
+    centroids = meta["centroids"]
+    n_cells, dims = meta["n_cells"], meta["dims"]
     filter_cols = list(filter_cols or [])
-    carried = (meta or {}).get("meta_cols", [])
+    carried = meta.get("meta_cols", [])
     missing = [c for c in filter_cols if c not in carried]
     if missing:
         raise ValueError(
             f"ivf_index_topk: filter_cols {missing} are not carried in "
             f"the index at {path} (meta_cols={carried}) — rebuild with "
             f"write_ivf_index(meta_cols=...) to filter on them")
-    dead = [int(c) for c in (meta or {}).get("dead", [])]
+    dead = [int(c) for c in meta.get("dead", [])]
     live_count = n_cells - len(dead)
-    pqm = (meta or {}).get("pq")
+    pqm = meta.get("pq")
     if pq_shortlist is not None and pqm is None:
         raise ValueError(
             f"ivf_index_topk: pq_shortlist requires an index that "
@@ -2646,8 +2482,7 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
         probe_cells = sorted({r.cell for r in
                               qcells.select("cell").distinct().collect()})
         index = fsutil.read_parquet_or_empty(
-            spark, path,
-            (meta or {}).get("schemas", {}).get("index")) \
+            spark, path, meta["schemas"].get("index")) \
             .where(F.col("cell").isin(probe_cells))
         cond = F.col("vec_id") != F.col("query_id")
         for c in filter_cols:

@@ -5751,7 +5751,7 @@ def ann_ivf_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import read_ivf_meta
 
     path = _ivf8_full_fixture(spark, sf_dir)
-    meta = read_ivf_meta(path) or {}
+    meta = read_ivf_meta(path)
     idx = spark.read.parquet(path).select("cell")
     per_cell = idx.groupBy("cell").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"))

@@ -428,34 +428,53 @@ def test_ivf_index_upsert_readd_moves_cell(spark, tmp_path, corpus):
 
 def test_ivf_index_upsert_pending_manifest(spark, tmp_path, corpus):
     """Torn-batch detectability: the upsert writes an intent manifest
-    with the affected cells before the overwrite and removes it after
-    commit — a crash in between leaves the manifest for
-    pending_upsert_cells to report."""
-    import json
-    import os
+    with the affected cells before the destructive commit and removes it
+    after — a crash in between leaves the manifest for
+    pending_upsert_cells to report, and re-running the same upsert
+    clears it and converges to the rebuild."""
+    import pytest as _pytest
 
+    from mysql_ch_replicator_spark import fsutil
     from mysql_ch_replicator_spark.operators.similarity import (
-        _IVF_PENDING, pending_upsert_cells, upsert_ivf_index,
-        write_ivf_index,
+        pending_upsert_cells, upsert_ivf_index, write_ivf_index,
     )
 
     path = str(tmp_path / "idx")
-    write_ivf_index(corpus.where(F.col("vec_id") % 2 == 0), path, n_cells=8)
+    write_ivf_index(corpus.where(F.col("vec_id") % 4 == 0), path, n_cells=8)
     assert pending_upsert_cells(path) is None
     touched = upsert_ivf_index(
-        spark, path, adds=corpus.where(F.col("vec_id") % 2 == 1))
+        spark, path, adds=corpus.where(F.col("vec_id") % 4 == 1))
     assert touched
     assert pending_upsert_cells(path) is None   # committed → manifest gone
 
-    # simulate the crash window: manifest present
-    with open(os.path.join(path, _IVF_PENDING), "w", encoding="utf-8") as fh:
-        json.dump({"cells": touched}, fh)
-    assert pending_upsert_cells(path) == touched
-    # recovery is re-running the same upsert; it rewrites the manifest
-    # and clears it on commit
-    upsert_ivf_index(spark, path,
-                     adds=corpus.where(F.col("vec_id") % 2 == 1))
+    # tear the next batch strictly after its manifest is durable
+    adds = corpus.where(F.col("vec_id") % 4 >= 2)
+    real_write = fsutil.write_text
+
+    def crashing(p, text, spark=None):
+        real_write(p, text, spark=spark)
+        if p.endswith("_ivf_upsert_pending.json"):
+            raise RuntimeError("injected crash after manifest")
+
+    fsutil.write_text = crashing
+    try:
+        with _pytest.raises(RuntimeError, match="injected crash"):
+            upsert_ivf_index(spark, path, adds=adds)
+    finally:
+        fsutil.write_text = real_write
+    pend = pending_upsert_cells(path)
+    assert pend and set(pend) <= set(range(1, 9))
+    # recovery is re-running the same upsert; it restores the staged
+    # batch, rewrites the manifest and clears it on commit
+    upsert_ivf_index(spark, path, adds=adds)
     assert pending_upsert_cells(path) is None
+    full = str(tmp_path / "full")
+    write_ivf_index(corpus, full, n_cells=8)
+    assert sorted((r.vec_id, r.cell) for r in
+                  spark.read.parquet(path).select("vec_id", "cell")
+                  .collect()) == \
+        sorted((r.vec_id, r.cell) for r in
+               spark.read.parquet(full).select("vec_id", "cell").collect())
 
 
 def test_ivf_index_upsert_clears_emptied_cell(spark, tmp_path, corpus):
@@ -591,14 +610,12 @@ def test_split_ivf_cell_crash_resume(spark, tmp_path, corpus):
 
 def test_split_ivf_cell_resume_after_torn_data_commit(spark, tmp_path,
                                                       corpus):
-    """The nastier torn state: the data commit created the NEW cell dir
-    while the old cell dir still holds the same members (a crash between
-    the dynamic overwrite and the emptied-dir delete, or mid-commit) —
-    every split member is present in BOTH directories. The resume must
-    dedup the union, never write duplicate vec_ids, and still converge
-    to the clean split's state. Bogus cell ids are refused BEFORE the
-    manifest exists."""
-    import json
+    """The nastier torn state: a split crashed after its manifest landed
+    and its commit left every split member in BOTH cell directories (the
+    new cell dir written while the old one still holds the same rows).
+    The resume promotes the staged snapshot over both, never writes
+    duplicate vec_ids, and converges to the clean split's state. Bogus
+    cell ids are refused BEFORE the manifest exists."""
     import os
     import shutil
 
@@ -606,7 +623,7 @@ def test_split_ivf_cell_resume_after_torn_data_commit(spark, tmp_path,
 
     from mysql_ch_replicator_spark import fsutil
     from mysql_ch_replicator_spark.operators.similarity import (
-        split_ivf_cell, write_ivf_index,
+        pending_split, split_ivf_cell, write_ivf_index,
     )
 
     want_path = str(tmp_path / "want")
@@ -618,14 +635,25 @@ def test_split_ivf_cell_resume_after_torn_data_commit(spark, tmp_path,
     write_ivf_index(corpus, torn, n_cells=8)
     with _pytest.raises(ValueError, match="not in"):
         split_ivf_cell(spark, torn, cell=99)
-    # forge the duplicate torn state: copy the hot cell dir to the new
-    # cell id wholesale (both dirs now hold every member), plus the
-    # pending manifest a crashed run would leave
+    assert pending_split(torn) is None
+    real_write = fsutil.write_text
+
+    def crashing(p, text, spark=None):
+        real_write(p, text, spark=spark)
+        if p.endswith("_ivf_split_pending.json"):
+            raise RuntimeError("injected crash after manifest")
+
+    fsutil.write_text = crashing
+    try:
+        with _pytest.raises(RuntimeError, match="injected crash"):
+            split_ivf_cell(spark, torn, cell=hot, iters=2)
+    finally:
+        fsutil.write_text = real_write
+    assert pending_split(torn) == {"cell": hot, "new_cell": new}
+    # the duplicate torn state: the hot cell dir copied to the new cell
+    # id wholesale, so both dirs hold every member
     shutil.copytree(os.path.join(torn, f"cell={hot}"),
                     os.path.join(torn, f"cell={new}"))
-    fsutil.write_text(os.path.join(torn, "_ivf_split_pending.json"),
-                      json.dumps({"cell": hot, "new_cell": new}),
-                      spark=spark)
     split_ivf_cell(spark, torn)            # resume
     got = _split_state(spark, torn)
     assert got == want

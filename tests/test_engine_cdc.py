@@ -356,30 +356,6 @@ def test_streaming_restart_from_checkpoint(engine, spark, tmp_path):
         == version_after_first + 1
 
 
-def test_overwrite_crash_window_recovery(engine, spark, tmp_path):
-    """A crash between rename(data, old) and rename(staging, data) leaves
-    the table with no data dir — the next open must roll .old back instead
-    of silently serving an empty table (ADVICE r1 low)."""
-    import shutil as sh
-    log = EventLogWriter(str(tmp_path / "log"))
-    engine.create_table(DB, USERS_DDL)
-    log.add(DB, "users", [(1, "A", 1), (2, "B", 2)])
-    engine.apply_batch(read_event_log(spark, str(tmp_path / "log")))
-
-    data = engine._data_dir(DB, "users")
-    os.rename(data, data + ".old")              # simulated crash window
-    os.makedirs(data + ".staging")              # plus an orphaned staging
-    assert _final_rows(engine) == {(1, "A", 1), (2, "B", 2)}
-    assert os.path.isdir(data)
-    assert not os.path.exists(data + ".old")
-    assert not os.path.exists(data + ".staging")
-
-    # crash AFTER publish but before .old cleanup: data wins, .old dropped
-    sh.copytree(data, data + ".old")
-    assert _final_rows(engine) == {(1, "A", 1), (2, "B", 2)}
-    assert not os.path.exists(data + ".old")
-
-
 def test_live_writer_files_complete_at_first_visibility(spark, tmp_path):
     """live=True: nothing is visible until rotate(), and a published file
     never grows — the contract Spark's streaming file source requires."""

@@ -82,12 +82,14 @@ def test_split_ivf_cell_empty_index_raises(spark, tmp_path):
 
     path = str(tmp_path / "idx")
     os.makedirs(path)
+    members = spark.createDataFrame([], "vec_id long, cell int, vspan long")
+    members.write.parquet(os.path.join(path, _IVF_MEMBERS))
     fsutil.write_text(os.path.join(path, "_ivf_meta.json"),
                       json.dumps({"n_cells": 4, "dims": 2,
-                                  "centroids": [[0.0, 0.0]] * 4}),
+                                  "centroids": [[0.0, 0.0]] * 4,
+                                  "schemas": {
+                                      "members": members.schema.json()}}),
                       spark=spark)
-    spark.createDataFrame([], "vec_id long, cell int, vspan long") \
-        .write.parquet(os.path.join(path, _IVF_MEMBERS))
     with pytest.raises(ValueError, match="nothing to split"):
         split_ivf_cell(spark, path)
 
@@ -703,46 +705,3 @@ def test_ivf_index_survives_remove_everything(spark, tmp_path, corpus):
         os.path.join(path, _IVF_MEMBERS)).select("vec_id").collect())
     assert got == sorted(int(r.vec_id) for r in
                          re_adds.select("vec_id").collect())
-
-
-def test_pre_r10_descriptor_survives_remove_everything(spark, tmp_path):
-    """The migration-order bug class (r10 review #2): a pre-r10
-    descriptor (no schemas key) must capture its schemas AT ENTRY of the
-    first upsert — capturing after the sweep crashes a remove-everything
-    batch post-commit and leaves the pending manifest behind. Both
-    families."""
-    from mysql_ch_replicator_spark import fsutil
-    from mysql_ch_replicator_spark.operators.retrieval import (
-        bm25_indexed_topk, pending_lexical_upsert, upsert_lexical_index,
-        write_lexical_index)
-    from mysql_ch_replicator_spark.operators.similarity import (
-        upsert_ivf_index, write_ivf_index)
-
-    docs = _split_docs(spark)
-    lex = str(tmp_path / "lex")
-    write_lexical_index(docs, lex, shards=4, span_width=8)
-    mp = os.path.join(lex, "_lex_meta.json")
-    m = json.loads(fsutil.read_text(mp))
-    del m["schemas"]
-    fsutil.write_text(mp, json.dumps(m), spark=spark)
-
-    upsert_lexical_index(spark, lex, removes=docs.select("doc_id"))
-    assert pending_lexical_upsert(lex) is None          # batch committed
-    assert bm25_indexed_topk(spark, lex, ["alpha"], k=5).count() == 0
-    assert "schemas" in json.loads(fsutil.read_text(mp))
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3), 1.0]) for i in range(30)],
-        "vec_id long, embedding array<float>")
-    ivf = str(tmp_path / "ivf")
-    write_ivf_index(emb, ivf, n_cells=4)
-    ip = os.path.join(ivf, "_ivf_meta.json")
-    m = json.loads(fsutil.read_text(ip))
-    del m["schemas"]
-    fsutil.write_text(ip, json.dumps(m), spark=spark)
-
-    # first upsert on r10 code back-fills the schemas before mutating
-    upsert_ivf_index(spark, ivf, removes=emb.select("vec_id"))
-    assert "schemas" in json.loads(fsutil.read_text(ip))
-    upsert_ivf_index(spark, ivf, adds=emb.limit(5))
-    assert spark.read.parquet(ivf).count() == 5

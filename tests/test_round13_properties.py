@@ -51,30 +51,22 @@ def _drifted_ivf(spark, corpus, path: str) -> None:
     merge_ivf_cells(spark, path, src=live[0], dst=live[1])
 
 
-
-_TMPL_CACHE: dict = {}
-
-
-def _ivf4_tmpl(corpus) -> str:
-    """Lazy per-run 4-cell IVF template (r14, VERDICT #1): the torn-
-    resume matrix rebuilt this identical index ~11x per run; each test
-    now takes a hardlink copy (_link_copy safety contract)."""
-    import tempfile
-    if "ivf4" not in _TMPL_CACHE:
-        d = os.path.join(tempfile.mkdtemp(prefix="r13tmpl_"), "ivf4")
-        write_ivf_index(corpus, d, n_cells=4)
-        _TMPL_CACHE["ivf4"] = d
-    return _TMPL_CACHE["ivf4"]
+@pytest.fixture(scope="module")
+def ivf4_template(corpus, tmp_path_factory):
+    """Module-built 4-cell IVF template (r14, VERDICT #1: the torn-
+    resume matrix rebuilt this identical index ~11x per run); each test
+    takes a hardlink copy (_link_copy safety contract)."""
+    p = str(tmp_path_factory.mktemp("ivf_tmpl") / "ivf4")
+    write_ivf_index(corpus, p, n_cells=4)
+    return p
 
 
-def _drifted_tmpl(spark, corpus) -> str:
-    """4-cell template with one merge on the chain (see _ivf4_tmpl)."""
-    import tempfile
-    if "drift" not in _TMPL_CACHE:
-        d = os.path.join(tempfile.mkdtemp(prefix="r13tmpl_"), "drift")
-        _drifted_ivf(spark, corpus, d)
-        _TMPL_CACHE["drift"] = d
-    return _TMPL_CACHE["drift"]
+@pytest.fixture(scope="module")
+def drifted_template(spark, corpus, tmp_path_factory):
+    """4-cell template with one merge on the chain (see ivf4_template)."""
+    p = str(tmp_path_factory.mktemp("ivf_tmpl_drift") / "drift")
+    _drifted_ivf(spark, corpus, p)
+    return p
 
 
 def _crash_after_write(suffix: str):
@@ -90,7 +82,8 @@ def _crash_after_write(suffix: str):
 
 
 def test_retrain_torn_overwrite_resumes_from_staging(spark, corpus,
-                                                     tmp_path):
+                                                     tmp_path,
+                                                     drifted_template):
     """THE ADVICE-r12 scenario: retrain crashes with the manifest
     durable but the destructive rewrite not yet run, and the torn
     per-partition overwrite is simulated by deleting one committed cell
@@ -98,9 +91,9 @@ def test_retrain_torn_overwrite_resumes_from_staging(spark, corpus,
     staged snapshot — the old union-of-cell-dirs input would have
     retrained over the holed data and lost that cell forever."""
     path = str(tmp_path / "torn")
-    _link_copy(_drifted_tmpl(spark, corpus), path)
+    _link_copy(drifted_template, path)
     clean = str(tmp_path / "clean")
-    _link_copy(_drifted_tmpl(spark, corpus), clean)
+    _link_copy(drifted_template, clean)
     retrain_ivf_index(spark, clean, iters=2)
 
     real_write, crashing = _crash_after_write("_ivf_retrain_pending.json")
@@ -137,13 +130,13 @@ def test_retrain_torn_overwrite_resumes_from_staging(spark, corpus,
 
 
 def test_retrain_resume_after_descriptor_commit_no_double_bump(
-        spark, corpus, tmp_path):
+        spark, corpus, tmp_path, drifted_template):
     """A crash between the descriptor commit and the manifest delete
     must not double-count the rebuild on resume (ADVICE r12): the
     descriptor already reflects the pending target, so the counter
     stays at 1 — mirroring the split's 'already grown' guard."""
     path = str(tmp_path / "bump")
-    _link_copy(_drifted_tmpl(spark, corpus), path)
+    _link_copy(drifted_template, path)
 
     real_delete = fsutil.delete
 
@@ -168,33 +161,6 @@ def test_retrain_resume_after_descriptor_commit_no_double_bump(
                                           "_ivf_retrain_pending.json"))
     idx = spark.read.parquet(path)
     assert idx.count() == corpus.count()
-
-
-def test_retrain_legacy_manifest_resumes_and_upgrades(spark, corpus,
-                                                      tmp_path):
-    """A pre-r13 manifest (no staging flag) still resumes — through the
-    old union-of-dirs path — and converges to the clean-retrain state;
-    placement comes from the MANIFEST's codebook, never a re-train."""
-    clean = str(tmp_path / "clean")
-    _link_copy(_drifted_tmpl(spark, corpus), clean)
-    retrain_ivf_index(spark, clean, iters=2)
-    cents = read_ivf_meta(clean)["centroids"]
-
-    path = str(tmp_path / "legacy")
-    _link_copy(_drifted_tmpl(spark, corpus), path)
-    fsutil.write_text(os.path.join(path, "_ivf_retrain_pending.json"),
-                      json.dumps({"centroids": cents}))
-
-    assert retrain_ivf_index(spark, path) is not None
-    got_meta = read_ivf_meta(path)
-    assert got_meta["centroids"] == cents
-    assert got_meta["dead"] == [] and got_meta["geometry_actions"] == 0
-    assert sorted(map(tuple,
-                      spark.read.parquet(path)
-                      .select("vec_id", "cell").collect())) == \
-        sorted(map(tuple, spark.read.parquet(clean)
-                   .select("vec_id", "cell").collect()))
-    assert not fsutil.exists(os.path.join(path, "_retrain_staging"))
 
 
 # -- lexical compaction: the same contract --------------------------------
@@ -1096,12 +1062,13 @@ def test_pq_shortlist_below_k_rejected(spark, emb, pq_index):
                        pq_shortlist=5)
 
 
-def test_retrain_noop_reaps_orphaned_staging(spark, corpus, tmp_path):
+def test_retrain_noop_reaps_orphaned_staging(spark, corpus, tmp_path,
+                                             ivf4_template):
     """A crash between the manifest delete and the staging delete leaves
     an orphaned full-index-size snapshot; the next (no-op) retrain must
     reap it instead of leaking it forever."""
     path = str(tmp_path / "idx")
-    _link_copy(_ivf4_tmpl(corpus), path)
+    _link_copy(ivf4_template, path)
     orphan = os.path.join(path, "_retrain_staging")
     spark.createDataFrame([(1,)], "x int").write.parquet(orphan)
     assert retrain_ivf_index(spark, path) is None
@@ -1136,14 +1103,15 @@ def _idx_state(spark, path):
                 .select("vec_id", "cell").collect())))
 
 
-def test_upsert_torn_overwrite_restored_on_rerun(spark, corpus, tmp_path):
+def test_upsert_torn_overwrite_restored_on_rerun(spark, corpus, tmp_path,
+                                                 ivf4_template):
     """An upsert crash with the manifest durable + one touched cell dir
     holed (the torn per-partition overwrite) must lose NOTHING: the
     re-run restores from the staged snapshot at entry, then re-applies
     the idempotent batch — final state equal to a never-crashed twin."""
     path, clean = str(tmp_path / "torn"), str(tmp_path / "clean")
-    _link_copy(_ivf4_tmpl(corpus), path)
-    _link_copy(_ivf4_tmpl(corpus), clean)
+    _link_copy(ivf4_template, path)
+    _link_copy(ivf4_template, clean)
     adds, removes = _batch(spark)
     upsert_ivf_index(spark, clean, adds=adds, removes=removes)
 
@@ -1168,12 +1136,12 @@ def test_upsert_torn_overwrite_restored_on_rerun(spark, corpus, tmp_path):
 
 
 def test_other_actions_restore_torn_upsert_first(spark, corpus,
-                                                 tmp_path):
+                                                 tmp_path, ivf4_template):
     """split/merge/retrain read cell directories at entry — a torn
     upsert's hole would flow straight into their rewrite input. Each
     must restore the staged upsert FIRST (here: the split path)."""
     path = str(tmp_path / "torn")
-    _link_copy(_ivf4_tmpl(corpus), path)
+    _link_copy(ivf4_template, path)
     adds, removes = _batch(spark)
 
     real_write, crashing = _crash_after_write("_ivf_upsert_pending.json")
@@ -1197,14 +1165,14 @@ def test_other_actions_restore_torn_upsert_first(spark, corpus,
 
 
 def test_split_torn_overwrite_resumes_from_staging(spark, corpus,
-                                                   tmp_path):
+                                                   tmp_path, ivf4_template):
     """Split crash with manifest durable + the split cell's dir holed:
     the resume must rewrite from staging with the MANIFEST's trained
     sub-codebook (never re-train over the holed union) — equal to a
     never-crashed twin."""
     path, clean = str(tmp_path / "torn"), str(tmp_path / "clean")
-    _link_copy(_ivf4_tmpl(corpus), path)
-    _link_copy(_ivf4_tmpl(corpus), clean)
+    _link_copy(ivf4_template, path)
+    _link_copy(ivf4_template, clean)
     split_ivf_cell(spark, clean)
 
     real_write, crashing = _crash_after_write("_ivf_split_pending.json")
@@ -1229,13 +1197,13 @@ def test_split_torn_overwrite_resumes_from_staging(spark, corpus,
 
 
 def test_merge_torn_overwrite_resumes_from_staging(spark, corpus,
-                                                   tmp_path):
+                                                   tmp_path, ivf4_template):
     """Merge crash with manifest durable + the dst dir holed: the
     resume must rewrite dst from staging — the old union-of-dirs input
     would have seen only src's rows and silently dropped dst's."""
     path, clean = str(tmp_path / "torn"), str(tmp_path / "clean")
-    _link_copy(_ivf4_tmpl(corpus), path)
-    _link_copy(_ivf4_tmpl(corpus), clean)
+    _link_copy(ivf4_template, path)
+    _link_copy(ivf4_template, clean)
     # merge two POPULATED cells (the no-arg coldest pick can select an
     # empty pair on this tiny corpus, where the hole has nothing to eat)
     pop = sorted(int(r.cell) for r in spark.read.parquet(path)
@@ -1586,15 +1554,16 @@ def test_promote_dirs_idempotence_matrix(spark, tmp_path):
         assert (live / f"cell={c}" / "part-0").read_text() == f"new{c}"
 
 
-def test_upsert_torn_mid_promotion_restored(spark, corpus, tmp_path):
+def test_upsert_torn_mid_promotion_restored(spark, corpus, tmp_path,
+                                            ivf4_template):
     """A crash INSIDE the promotion loop (one cell already renamed into
     place, another's live dir deleted but its rename not run) restores
     to exactly the never-crashed state on re-run."""
     import shutil
 
     path, clean = str(tmp_path / "torn"), str(tmp_path / "clean")
-    _link_copy(_ivf4_tmpl(corpus), path)
-    _link_copy(_ivf4_tmpl(corpus), clean)
+    _link_copy(ivf4_template, path)
+    _link_copy(ivf4_template, clean)
     # a batch spread across the vector space so several cells stage
     adds = _vc(spark, [(100 + i, _vec(i)) for i in range(12)])
     removes = spark.createDataFrame([(3,), (7,), (11,), (20,)],
@@ -1627,7 +1596,7 @@ def test_upsert_torn_mid_promotion_restored(spark, corpus, tmp_path):
 
 
 def test_rebuild_noop_reaps_incremental_orphans(spark, corpus, docs,
-                                                tmp_path):
+                                                tmp_path, ivf4_template):
     """The rebuilds' no-op paths reap orphaned incremental stagings
     (crash between manifest delete and staging delete) — the rebuild is
     the natural GC point; nothing references the dirs by then."""
@@ -1636,7 +1605,7 @@ def test_rebuild_noop_reaps_incremental_orphans(spark, corpus, docs,
     )
 
     path = str(tmp_path / "ivf")
-    _link_copy(_ivf4_tmpl(corpus), path)
+    _link_copy(ivf4_template, path)
     for d in ("_upsert_staging", "_split_staging", "_merge_staging"):
         os.makedirs(os.path.join(path, d, "data"))
     assert retrain_ivf_index(spark, path) is None

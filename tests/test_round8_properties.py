@@ -111,45 +111,6 @@ def test_lexical_upsert_maintains_membership(spark, tmp_path):
     assert {r.doc_id: r.dl for r in meta_rows} == {1: 2, 2: 2, 4: 1}
 
 
-def test_lexical_upsert_migrates_pre_membership_index(spark, tmp_path):
-    """An index written with the pre-r8 layout (separate doclen/, no
-    membership) upserts correctly: the first upsert fuses doclen +
-    postings membership into docmeta once, then proceeds
-    O(changed docs)."""
-    import shutil
-
-    from pyspark.sql import functions as SF
-
-    from mysql_ch_replicator_spark.operators.retrieval import (
-        _LEX_DSPAN, bm25_indexed_topk, upsert_lexical_index,
-        write_lexical_index)
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string")
-    path = str(tmp_path / "lex")
-    write_lexical_index(docs, path, shards=4)
-    # reconstruct the pre-r8 layout: doclen dir from docmeta, no docmeta
-    (spark.read.parquet(path + "/docmeta").select("doc_id", "dl")
-     .withColumn("dspan", SF.expr(f"doc_id div {_LEX_DSPAN}"))
-     .write.mode("overwrite").partitionBy("dspan")
-     .parquet(path + "/doclen"))
-    shutil.rmtree(path + "/docmeta")
-
-    adds = spark.createDataFrame([(1, "gamma gamma")],
-                                 "doc_id long, text string")
-    upsert_lexical_index(spark, path, adds=adds)
-
-    # doc 1's old alpha/beta postings must be gone, gamma present
-    post = {(r.term, r.doc_id) for r in
-            spark.read.parquet(path + "/postings")
-            .select("term", "doc_id").collect()}
-    assert post == {("beta", 2), ("gamma", 2), ("gamma", 1)}
-    got = bm25_indexed_topk(spark, path, ["gamma"], k=2).collect()
-    assert [r.doc_id for r in got]
-    import os
-    assert not os.path.exists(path + "/doclen")   # migrated away
-
-
 @pytest.mark.heavy
 def test_image_dhash_dedup_matches_brute_force(spark):
     """Banded dHash dedup finds EXACTLY the Hamming-≤3 pairs a brute-
@@ -528,35 +489,6 @@ def test_ivf_upsert_maintains_membership(spark, tmp_path):
                  spark.read.parquet(path + "/" + _IVF_MEMBERS)
                  .select("vec_id", "cell").collect()}
     assert mem_pairs == idx_pairs and idx_pairs
-
-
-def test_ivf_upsert_migrates_pre_membership_index(spark, tmp_path):
-    """A pre-r8 index (no _vecmeta) upserts correctly: the first upsert
-    derives the membership once from the index, then proceeds O(batch)."""
-    import shutil
-
-    from pyspark.sql import functions as SF
-
-    from mysql_ch_replicator_spark.operators.similarity import (
-        _IVF_MEMBERS, upsert_ivf_index, write_ivf_index)
-
-    corpus = _ivf_corpus(spark)
-    path = str(tmp_path / "idx")
-    write_ivf_index(corpus.where(SF.col("vec_id") < 40), path, n_cells=4)
-    shutil.rmtree(path + "/" + _IVF_MEMBERS)   # simulate pre-r8
-
-    upsert_ivf_index(spark, path,
-                     adds=corpus.where(SF.col("vec_id") >= 40),
-                     removes=corpus.where(SF.col("vec_id") < 5)
-                     .select("vec_id"))
-    idx_pairs = {(r.vec_id, int(r.cell)) for r in
-                 spark.read.parquet(path).select("vec_id", "cell")
-                 .collect()}
-    assert {v for v, _ in idx_pairs} == set(range(5, 60))
-    mem_pairs = {(r.vec_id, int(r.cell)) for r in
-                 spark.read.parquet(path + "/" + _IVF_MEMBERS)
-                 .select("vec_id", "cell").collect()}
-    assert mem_pairs == idx_pairs
 
 
 @pytest.mark.heavy

@@ -92,61 +92,6 @@ def test_lex_upsert_no_postwrite_docmeta_read(spark, tmp_path):
     assert len(docmeta_reads) == 1
 
 
-def test_lex_pre_r9_descriptor_migrates(spark, tmp_path):
-    """A pre-r9 descriptor ({n, tl, shards} only — no spans map, no
-    dspan width) migrates on first upsert: one full-docmeta aggregate
-    seeds the map, and the resulting index equals a rebuild."""
-    from mysql_ch_replicator_spark.operators.retrieval import (
-        _LEX_DSPAN, upsert_lexical_index, write_lexical_index)
-
-    docs = _lex_docs(spark, 20)
-    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
-    write_lexical_index(docs, inc, shards=4)
-    meta_path = os.path.join(inc, "_lex_meta.json")
-    old = json.load(open(meta_path))
-    # rewrite THROUGH fsutil: the local Hadoop FS keeps .crc sidecars,
-    # so an out-of-band python write would poison the next Hadoop read
-    from mysql_ch_replicator_spark import fsutil
-    fsutil.write_text(meta_path,
-                      json.dumps({k: old[k] for k in ("n", "tl", "shards")}),
-                      spark=spark)
-
-    adds = spark.createDataFrame([(20, "nu xi omicron")],
-                                 "doc_id long, text string")
-    removes = spark.createDataFrame([(5,)], "doc_id long")
-    upsert_lexical_index(spark, inc, adds=adds, removes=removes)
-
-    write_lexical_index(
-        docs.where(F.col("doc_id") != 5).unionByName(adds), full,
-        shards=4, span_width=_LEX_DSPAN)
-    assert (json.load(open(meta_path))
-            == json.load(open(os.path.join(full, "_lex_meta.json"))))
-
-
-def test_bm25_probe_pre_r8_doclen_layout(spark, tmp_path):
-    """Probing a pre-r8 index (doclen/, no docmeta/) WITHOUT upserting
-    first must work — migration happens on first upsert, not first read
-    (r8 ADVICE: the probe previously raised path-not-found)."""
-    from mysql_ch_replicator_spark.operators.retrieval import (
-        _LEX_DSPAN, bm25_indexed_topk, write_lexical_index)
-
-    docs = _lex_docs(spark, 20)
-    path = str(tmp_path / "lex")
-    write_lexical_index(docs, path, shards=4)
-    want = [tuple(r) for r in
-            bm25_indexed_topk(spark, path, ["gamma", "beta1"], k=5)
-            .collect()]
-    (spark.read.parquet(path + "/docmeta").select("doc_id", "dl")
-     .withColumn("dspan", F.expr(f"doc_id div {_LEX_DSPAN}"))
-     .write.mode("overwrite").partitionBy("dspan")
-     .parquet(path + "/doclen"))
-    shutil.rmtree(path + "/docmeta")
-    got = [tuple(r) for r in
-           bm25_indexed_topk(spark, path, ["gamma", "beta1"], k=5)
-           .collect()]
-    assert got == want and got
-
-
 def test_write_text_atomic_no_tmp_residue(spark, tmp_path):
     """write_text goes temp-then-rename on both the Hadoop and the
     local path: the target is either the old or the new full payload
@@ -177,9 +122,9 @@ def test_ivf_recovery_helpers_sessionless(spark, tmp_path):
     from mysql_ch_replicator_spark.operators import similarity
 
     path = str(tmp_path / "ivf")
-    os.makedirs(path)
+    os.makedirs(os.path.join(path, "_vecmeta"))
     fname = os.path.join(path, "_ivf_meta.json")
-    json.dump({"n_cells": 4, "dims": 2}, open(fname, "w"))
+    json.dump({"n_cells": 4, "dims": 2, "schemas": {}}, open(fname, "w"))
 
     out: dict = {}
 
@@ -197,7 +142,7 @@ def test_ivf_recovery_helpers_sessionless(spark, tmp_path):
     t.join()
     assert "err" not in out, out.get("err")
     assert out["active"] is None        # genuinely sessionless
-    assert out["meta"] == {"n_cells": 4, "dims": 2}
+    assert out["meta"] == {"n_cells": 4, "dims": 2, "schemas": {}}
     assert out["pending"] is None
 
 
