@@ -38,13 +38,13 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.conversions import convert_payload, default_for
+from .functions.conversions import default_for, payload_exprs
 from .operators.replica import (
     OP_ADD, OP_REMOVE, VERSION_COL,
-    collapse_batch, dedup_final_ops,
+    collapse_exprs, dedup_final_ops,
 )
 from .schema.ddl_parser import (
     parse_alter_table,
@@ -163,6 +163,26 @@ def publish_generation(root: str, new_name: str,
     os.replace(tmp, _gen_manifest_path_of(root))
 
 
+@dataclasses.dataclass(frozen=True)
+class _ApplyPlan:
+    """One table's CDC apply expressions. They depend only on the table's
+    structure (``token``, its ``meta["structure"]`` JSON) and the engine's
+    settings, so each is built once per structure and every batch reuses
+    it, adding only its literals (the replay watermark and the new
+    ``_version``). Rebuilt for every batch, they cost about three times
+    the py4j round trips of the rest of the apply."""
+    token: str
+    pks: list[str]
+    typed: list[Column]      # seq, idx, event_type + one column per field
+    winner: Column           # the collapse's max_by(…, (seq, idx)) as __w
+    final_ops: list[Column]  # __w unpacked: pks, seq, idx, event_type, …
+    stats: list[Column]      # n, n_add, mx (newest seq) over __w
+    fields_out: list[Column]  # __w's fields, tombstone-nulled, physical names
+    op_out: Column
+    options: dict[str, str]  # writer options (bloom filters)
+    parts: list[str]         # physical partition columns
+
+
 class ReplicaEngine:
     def __init__(self, spark: SparkSession, root: str,
                  mysql_timezone: str = "UTC",
@@ -213,6 +233,8 @@ class ReplicaEngine:
         # live-read schema cache: (db, table) -> (validity token, schema).
         # See _live_read_frame for the invalidation contract.
         self._read_schema_cache: dict[tuple, tuple] = {}
+        # (db, table) -> _ApplyPlan; replaced when the structure changes
+        self._apply_plans: dict[tuple[str, str], _ApplyPlan] = {}
         self._stats_guard = threading.Lock()
         os.makedirs(root, exist_ok=True)
         self.recover_databases()  # finish any interrupted db-level publish
@@ -599,7 +621,13 @@ class ReplicaEngine:
         every column already (the minmax index is free); the bloom_filter
         becomes a per-column parquet bloom filter via the writer option
         ``parquet.bloom.filter.enabled#<col>`` — point-lookup row-group
-        skipping on the replica scans."""
+        skipping on the replica scans.
+
+        Any bloom column also turns on ``parquet.bloom.filter.adaptive.
+        enabled`` (global: the per-column ``#col`` form has no effect), so
+        each filter is sized to the distinct values its file holds rather
+        than parquet's 1M-NDV default: an 1800-row CDC append otherwise
+        carries a ~1 MB filter beside ~80 KB of data."""
         cols = []
         if len(st.primary_keys) == 1:
             cols.append(st.primary_keys[0])
@@ -610,9 +638,12 @@ class ReplicaEngine:
         # membership check keeps options honest either way (a frame mid-
         # normalizing rewrite carries logical names and simply skips).
         phys_of = {f.name: (f.physical or f.name) for f in st.fields}
-        return {f"parquet.bloom.filter.enabled#{phys_of.get(c, c)}": "true"
+        opts = {f"parquet.bloom.filter.enabled#{phys_of.get(c, c)}": "true"
                 for c in dict.fromkeys(cols)
                 if phys_of.get(c, c) in set(df_cols)}
+        if opts:
+            opts["parquet.bloom.filter.adaptive.enabled"] = "true"
+        return opts
 
     def _overwrite_data(self, db: str, table: str, df: DataFrame) -> None:
         """Rewrite by publishing a NEW data generation (D14 — readers never
@@ -1150,21 +1181,27 @@ class ReplicaEngine:
         in-batch collapse; QUERY events form barriers: rows before a DDL are
         flushed first (reference db_replicator_realtime.py:179–196).
 
-        Fixed cost per micro-batch is what bounds streaming throughput
-        (the data volume is small by construction — flush cadence), so the
+        Fixed cost per micro-batch is what bounds streaming latency (the
+        data volume is small by construction — flush cadence), so the
         driver work is budgeted in Spark JOBS: one combined metadata
         aggregate (DDL list + touched tables), then ONE write action per
-        (table, segment) with the batch stats attached via ``observe`` —
-        no separate stats collect, no persist/unpersist churn for the
-        common DDL-free batch."""
+        (table, segment) with the batch stats attached via ``observe``.
+        A DDL-free batch to one table is therefore two jobs.
+
+        A batch whose input fits one task (``_fits_one_task``) runs the
+        metadata aggregate and the collapse over ``coalesce(1)``, so
+        neither plans a shuffle, and is cached only when it feeds more
+        than one write. A larger batch (catch-up, a backfill) is cached up
+        front and keeps the shuffled collapse."""
         import time as _time
         t0 = _time.monotonic()
         self._batch_inserts = 0
         self._batch_erases = 0
+        small = self._fits_one_task(events)
         # a micro-batch is bounded by the flush cadence (reference: 1 s /
         # 100k rows), so caching it is safe at any table scale — the
         # metadata pass + per-table writes then cost ONE source scan
-        events = events.persist()
+        events = events.coalesce(1) if small else events.persist()
         try:
             # ONE job finds every (db, table) touched AND every DDL with
             # its seq/query (collect_list skips the NULL the `when` yields
@@ -1202,19 +1239,20 @@ class ReplicaEngine:
                 if bounds_by_table[(db, table)][1] > self.load_meta(
                         tdb, ttable)["last_seq"]:
                     pairs.append((db, table))
+            bounds = [-1] + [d[0] for d in ddls] + [None]
+            segments = [(lo, hi, [p for p in pairs
+                                  if bounds_by_table[p][1] > lo
+                                  and (hi is None
+                                       or bounds_by_table[p][0] < hi)])
+                        for lo, hi in zip(bounds, bounds[1:])]
+            if small and sum(len(sp) for _, _, sp in segments) > 1:
+                # several writes would each re-scan the input: scan once
+                events = events.persist()
             rows = explode_row_events(events)
             if len(ddls) > 1:
                 rows = rows.persist()  # re-filtered once per segment
-            bounds = [-1] + [d[0] for d in ddls] + [None]
-            for i in range(len(bounds) - 1):
-                lo, hi = bounds[i], bounds[i + 1]
-                seg = rows.where(F.col("seq") > lo)
-                if hi is not None:
-                    seg = seg.where(F.col("seq") < hi)
-                seg_pairs = [p for p in pairs
-                             if bounds_by_table[p][1] > lo
-                             and (hi is None or bounds_by_table[p][0] < hi)]
-                self._apply_row_segment(seg, seg_pairs)
+            for i, (lo, hi, seg_pairs) in enumerate(segments):
+                self._apply_row_segment(rows, seg_pairs, lo, hi)
                 if hi is not None:
                     seq, db, query = ddls[i]
                     self.execute_ddl(db, query, seq=seq)
@@ -1226,11 +1264,32 @@ class ReplicaEngine:
         self.stats.record_batch(self._batch_inserts, self._batch_erases,
                                 len(ddls), _time.monotonic() - t0)
 
+    def _fits_one_task(self, events: DataFrame) -> bool:
+        """Whether a batch is small enough to apply in one task. The input
+        size is Catalyst's estimate (the listed input-file bytes for a
+        file scan; an unknown size reads as huge). The bound is
+        ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MB):
+        adaptive execution never gives a post-shuffle task less data than
+        that, so a shuffle of less input would be coalesced back into one
+        partition anyway. The collapse shuffles typed rows, no larger than
+        their event-log text, so below the bound a shuffle buys nothing
+        but its fixed cost. (``openCostInBytes``, 4 MB, counts compressed
+        bytes too loosely: a 100k-event parquet batch is 3.3 MB.)"""
+        size = events._jdf.queryExecution().optimizedPlan().stats() \
+            .sizeInBytes()
+        conf = self.spark._jsparkSession.sessionState().conf()
+        bound = conf.getConf(self.spark._jvm.org.apache.spark.sql.internal
+                             .SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
+        return int(size) <= int(bound)
+
     def _apply_row_segment(self, rows: DataFrame,
-                           pairs: list[tuple[str, str]] | None = None) -> None:
-        if pairs is None:
-            pairs = [(r.db, r.table) for r in
-                     rows.select("db", "table").distinct().collect()]
+                           pairs: list[tuple[str, str]],
+                           lo: int, hi: int | None) -> None:
+        """Apply the rows with ``lo < seq < hi`` (no upper bound when
+        ``hi`` is None) of each (db, table) in ``pairs``."""
+        in_segment = F.col("seq") > lo
+        if hi is not None:
+            in_segment = in_segment & (F.col("seq") < hi)
         work: list[tuple[str, str, DataFrame]] = []
         for db, table in pairs:
             if not self._replicates(db, table):
@@ -1239,7 +1298,7 @@ class ReplicaEngine:
             if not self.table_exists(tdb, ttable):
                 continue  # not replicated (no CREATE seen)
             work.append((tdb, ttable,
-                         rows.where((F.col("db") == db)
+                         rows.where(in_segment & (F.col("db") == db)
                                     & (F.col("table") == table))))
         n_workers = min(len(work), max(1, int(self.apply_parallelism)))
         if n_workers <= 1:
@@ -1265,32 +1324,74 @@ class ReplicaEngine:
         with self.table_lock(db, table):
             self._apply_table_rows_locked(db, table, rows)
 
+    def _apply_plan(self, db: str, table: str, meta: dict) -> _ApplyPlan:
+        """The table's cached ``_ApplyPlan``, rebuilt when
+        ``meta["structure"]`` differs from the one it was built for (any
+        DDL). The caller holds the table lock."""
+        token = json.dumps(meta["structure"], sort_keys=True)
+        plan = self._apply_plans.get((db, table))
+        if plan is not None and plan.token == token:
+            return plan
+        st = _structure_from_dict(meta["structure"])
+        pks = st.primary_keys
+        # REMOVE payloads are PK-only, packed in primary_keys order —
+        # payload_exprs reads them PK-relative (writer contract,
+        # sources/event_log.py remove())
+        typed = [F.col("seq"), F.col("idx"), F.col("event_type"),
+                 *payload_exprs(st, "record",
+                                mysql_timezone=self.mysql_timezone,
+                                types_mapping=self.types_mapping,
+                                remove_op_col="event_type",
+                                remove_op_value=OP_REMOVE)]
+        # K1/K2 — final op per key (ADD↔REMOVE annihilation)
+        winner, final_ops = collapse_exprs(
+            ["seq", "idx", "event_type", *st.field_names], pks,
+            seq_col=F.struct(F.col("seq"), F.col("idx")))
+        op = F.col("__w.event_type")
+        stats = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(op == OP_ADD, 1).otherwise(0)).alias("n_add"),
+            F.max("__w.seq").alias("mx")]
+        # REMOVE rows become PK-only tombstones (F5 — only PKs converted
+        # meaningfully; non-PK columns nulled). Column mapping: files carry
+        # PHYSICAL names (identical to logical unless a metadata-only
+        # rename happened); partition/bloom options are declared on
+        # logical names and translated here.
+        phys_of = {f.name: (f.physical or f.name) for f in st.fields}
+        fields_out = [
+            (F.col(f.name) if f.name in pks
+             else F.when(op == OP_REMOVE, F.lit(None))
+             .otherwise(F.col("__w").getField(f.name)))
+            .alias(phys_of[f.name]) for f in st.fields]
+        plan = _ApplyPlan(
+            token=token, pks=pks, typed=typed, winner=winner,
+            final_ops=final_ops, stats=stats, fields_out=fields_out,
+            op_out=op.cast("int").alias(OP_COL),
+            options=self._index_options(
+                table, st, [*phys_of.values(), VERSION_COL, OP_COL]),
+            parts=[phys_of[c] for c in self._partition_cols(table)
+                   if c in phys_of])
+        self._apply_plans[(db, table)] = plan
+        return plan
+
     def _apply_table_rows_locked(self, db: str, table: str,
                                  rows: DataFrame) -> None:
         meta = self.load_meta(db, table)
-        st = _structure_from_dict(meta["structure"])
-        pks = st.primary_keys
+        plan = self._apply_plan(db, table, meta)
 
-        # F3 — replay guard: drop already-committed events (idempotent
-        # restart, reference db_replicator_realtime.py:81–83)
-        rows = rows.where(F.col("seq") > meta["last_seq"])
         if self.ignore_deletes:
             rows = rows.where(F.col("event_type") != OP_REMOVE)
-
-        order = F.struct(F.col("seq"), F.col("idx"))
-        # REMOVE payloads are PK-only, packed in primary_keys order —
-        # convert_payload reads them PK-relative (writer contract,
-        # sources/event_log.py remove())
-        typed = convert_payload(
-            rows.select("seq", "idx", "event_type",
-                        F.col("record").alias("payload")),
-            st, mysql_timezone=self.mysql_timezone,
-            types_mapping=self.types_mapping,
-            remove_op_col="event_type", remove_op_value=OP_REMOVE)
-
-        # K1/K2 — final op per key (ADD↔REMOVE annihilation)
-        final_ops = collapse_batch(typed, pks, seq_col=order,
-                                   op_col="event_type")
+        # F3 — replay guard: drop already-committed events (idempotent
+        # restart, reference db_replicator_realtime.py:81–83). Applied to
+        # each key's winner, which equals dropping the events first: the
+        # winner is the key's newest event, so it is above the watermark
+        # iff some event is, and then it is the newest of those too. There
+        # the watermark literal changes only the small post-collapse code,
+        # and the scan/convert stage's generated code is reused by every
+        # batch instead of being compiled again.
+        collapsed = (rows.select(*plan.typed)
+                     .groupBy(*plan.pks).agg(plan.winner)
+                     .where(F.col("__w.seq") > meta["last_seq"]))
 
         # batch stats ride the write action via observe() — one Spark job
         # per (table, segment) instead of a separate stats collect over a
@@ -1299,18 +1400,13 @@ class ReplicaEngine:
         # action over the observed frame: with maintained aggregates the
         # delta staging writes are extra actions over the same frame and
         # the observation may capture whichever action's metrics event
-        # lands first (schemaless row race) — that path persists final_ops
+        # lands first (schemaless row race) — that path persists collapsed
         # anyway, so stats come from a direct cache-served aggregate below.
-        stats_cols = (
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("event_type") == OP_ADD, 1)
-                   .otherwise(0)).alias("n_add"),
-            F.max(F.struct("seq", "idx")).alias("mx"))
         obs = None
         if not (meta.get("aggregates") or {}):
             from pyspark.sql import Observation
             obs = Observation()
-            final_ops = final_ops.observe(obs, *stats_cols)
+            collapsed = collapsed.observe(obs, *plan.stats)
 
         # maintained aggregates: deltas must see the PRE-append state, so
         # they are materialized before the write — to a staging parquet
@@ -1325,7 +1421,9 @@ class ReplicaEngine:
         agg_deltas: dict[str, DataFrame] = {}
         if aggs:
             from .operators.incremental_agg import agg_delta
-            final_ops = final_ops.persist()
+            collapsed = collapsed.persist()
+            final_ops = collapsed.select(*plan.final_ops)
+            pks = plan.pks
             pre_seq = int(meta["last_seq"])
             for nm in aggs:
                 if self._agg_last_seq(db, table, nm) != pre_seq:
@@ -1360,46 +1458,24 @@ class ReplicaEngine:
         # driver-side counter (clickhouse_api.py:334–335). Deterministic
         # across retries by construction.
         new_version = int(meta["last_version"]) + 1
-        stamped = final_ops.withColumn(
-            VERSION_COL, F.lit(new_version).cast("long"))
-
-        # REMOVE rows become PK-only tombstones (F5 — only PKs converted
-        # meaningfully; non-PK columns nulled)
-        out_cols = []
-        for f in st.fields:
-            c = F.col(f.name)
-            if f.name not in pks:
-                c = F.when(F.col("event_type") == OP_REMOVE,
-                           F.lit(None)).otherwise(c)
-            out_cols.append(c.alias(f.name))
-        out = stamped.select(
-            *out_cols, F.col(VERSION_COL),
-            F.col("event_type").cast("int").alias(OP_COL))
+        out = collapsed.select(
+            *plan.fields_out,
+            F.lit(new_version).cast("long").alias(VERSION_COL),
+            plan.op_out)
 
         os.makedirs(self._data_dir(db, table), exist_ok=True)
-        # column mapping: files carry PHYSICAL names (identical to logical
-        # unless a metadata-only rename happened); partition/bloom options
-        # are declared on logical names and translated here
-        phys_of = {f.name: (f.physical or f.name) for f in st.fields}
-        out = out.select(
-            *[F.col(f.name).alias(phys_of[f.name]) for f in st.fields],
-            F.col(VERSION_COL), F.col(OP_COL))
-        writer = out.write.mode("append")
-        for k, v in self._index_options(table, st, out.columns).items():
-            writer = writer.option(k, v)
-        parts = [phys_of[c] for c in self._partition_cols(table)
-                 if c in phys_of]
-        if parts:
-            writer = writer.partitionBy(*parts)
+        writer = out.write.mode("append").options(**plan.options)
+        if plan.parts:
+            writer = writer.partitionBy(*plan.parts)
         writer.parquet(self._data_dir(db, table))
 
         if obs is not None:
             stats = obs.get
-        else:  # aggs path: final_ops is cached; one tiny extra job
-            stats = final_ops.agg(*stats_cols).collect()[0].asDict()
+        else:  # aggs path: collapsed is cached; one tiny extra job
+            stats = collapsed.agg(*plan.stats).collect()[0].asDict()
         if int(stats["n"]) == 0:
             if aggs:
-                final_ops.unpersist()
+                collapsed.unpersist()
             return  # nothing applied; keep watermarks unchanged
         with self._stats_guard:  # parallel table writers share the counters
             self._batch_inserts = getattr(self, "_batch_inserts", 0) \
@@ -1407,7 +1483,7 @@ class ReplicaEngine:
             self._batch_erases = getattr(self, "_batch_erases", 0) \
                 + int(stats["n"] - stats["n_add"])
         meta["last_version"] = new_version
-        meta["last_seq"] = int(stats["mx"].seq)
+        meta["last_seq"] = int(stats["mx"])
         self.save_meta(db, table, meta)
 
         if aggs:
@@ -1417,7 +1493,7 @@ class ReplicaEngine:
                                    agg_deltas[nm], spec["group"])
                 self._write_aggregate(db, table, nm, merged,
                                       int(meta["last_seq"]))
-            final_ops.unpersist()
+            collapsed.unpersist()
 
     # -- recovery / verification --------------------------------------------
 

@@ -253,7 +253,24 @@ def convert_payload(df, structure, payload_col: str = "payload",
                     remove_op_value: int = 2):
     """Project a positional string-array payload column into named, typed
     columns per the table structure (reference convert_records,
-    converter.py:575–671; F4/F5).
+    converter.py:575–671; F4/F5). The expressions are
+    ``payload_exprs``'s; every other column of ``df`` is kept."""
+    keep = [c for c in df.columns if c != payload_col]
+    return df.select(*keep, *payload_exprs(
+        structure, payload_col, mysql_timezone, types_mapping,
+        only_primary, remove_op_col, remove_op_value))
+
+
+def payload_exprs(structure, payload_col: str = "payload",
+                  mysql_timezone: str = "UTC",
+                  types_mapping: dict[str, str] | None = None,
+                  only_primary: bool = False,
+                  remove_op_col: str | None = None,
+                  remove_op_value: int = 2) -> list[Column]:
+    """One typed, named Column per structure field, read from the
+    positional string-array ``payload_col``. They depend on the structure
+    and the options only, never on a DataFrame, so a caller applying many
+    batches to one table can build them once and reuse them.
 
     ``only_primary`` converts just the PK columns — the delete path
     (reference converter.py:581–583); Catalyst then prunes everything else.
@@ -293,5 +310,4 @@ def convert_payload(df, structure, payload_col: str = "payload",
                 raw = F.when(is_remove,
                              F.lit(None).cast("string")).otherwise(raw)
         exprs.append(conversion_expr(f, raw, mysql_timezone, types_mapping))
-    keep = [c for c in df.columns if c != payload_col]
-    return df.select(*keep, *exprs)
+    return exprs

@@ -218,16 +218,22 @@ def collapse_batch(events: DataFrame, pk_cols: list[str],
     Returns a DataFrame with the original columns, one row per key, where
     ``op_col`` tells the sink which branch (upsert vs delete) the key takes.
     """
-    payload = [c for c in events.columns if c not in pk_cols]
-    winner = F.max_by(F.struct(*[F.col(c) for c in payload]), _as_col(seq_col))
-    agg = events.groupBy(*pk_cols).agg(winner.alias("__w"))
-    out_cols = []
-    for c in events.columns:
-        if c in pk_cols:
-            out_cols.append(F.col(c))
-        else:
-            out_cols.append(F.col("__w").getField(c).alias(c))
-    return agg.select(*out_cols)
+    winner, out_cols = collapse_exprs(events.columns, pk_cols, seq_col)
+    return events.groupBy(*pk_cols).agg(winner).select(*out_cols)
+
+
+def collapse_exprs(columns: list[str], pk_cols: list[str],
+                   seq_col=SEQ_COL) -> tuple[Column, list[Column]]:
+    """``collapse_batch``'s expressions for a frame with ``columns``: the
+    ``groupBy(pk_cols).agg`` winner and the projection back to
+    ``columns``. They depend on the column names only, so a caller
+    collapsing many batches of one shape can build them once."""
+    payload = [c for c in columns if c not in pk_cols]
+    winner = F.max_by(F.struct(*[F.col(c) for c in payload]),
+                      _as_col(seq_col)).alias("__w")
+    out_cols = [F.col(c) if c in pk_cols
+                else F.col("__w").getField(c).alias(c) for c in columns]
+    return winner, out_cols
 
 
 def apply_cdc_batch(replica: DataFrame, batch: DataFrame, pk_cols: list[str],

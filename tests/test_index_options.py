@@ -26,12 +26,15 @@ def test_index_option_mapping(spark, tmp_path):
     engine = ReplicaEngine(spark, str(tmp_path / "r"), settings=settings)
     st = engine.create_table("db", DDL)
     opts = engine._index_options("users", st, ["id", "name", "_version"])
-    # single PK → bloom on id by default (reference idx_id), plus override
+    # single PK → bloom on id by default (reference idx_id), plus override;
+    # any bloom column sizes its filter to the file (adaptive)
     assert opts == {"parquet.bloom.filter.enabled#id": "true",
-                    "parquet.bloom.filter.enabled#name": "true"}
+                    "parquet.bloom.filter.enabled#name": "true",
+                    "parquet.bloom.filter.adaptive.enabled": "true"}
     # columns absent from the frame are dropped (e.g. mid-rename rewrite)
     assert engine._index_options("users", st, ["name"]) == \
-        {"parquet.bloom.filter.enabled#name": "true"}
+        {"parquet.bloom.filter.enabled#name": "true",
+         "parquet.bloom.filter.adaptive.enabled": "true"}
 
 
 def test_composite_pk_gets_no_default_bloom(spark, tmp_path):
@@ -73,3 +76,24 @@ def test_bloom_filter_actually_written(spark, tmp_path):
 
     assert with_bloom > without_bloom
     assert engine.read_final("db", "users").count() == 5000
+
+
+def test_bloom_filter_sized_to_its_file(spark, tmp_path):
+    """A CDC append's PK bloom filter is sized to the rows in its file,
+    not to parquet's 1M-distinct-value default (~1 MB per file), and a
+    point read through it still finds its row."""
+    from pyspark.sql import functions as F
+
+    engine = ReplicaEngine(spark, str(tmp_path / "r"))
+    engine.create_table("db", DDL)
+    log = EventLogWriter(str(tmp_path / "log"))
+    log.add("db", "users", [(i, f"name{i}") for i in range(2000)])
+    engine.apply_batch(read_event_log(spark, str(tmp_path / "log")))
+    data = engine._data_dir("db", "users")
+    sizes = [os.path.getsize(os.path.join(data, f))
+             for f in os.listdir(data) if f.endswith(".parquet")]
+    assert sizes and all(s < 200_000 for s in sizes), sizes
+    final = engine.read_final("db", "users")
+    assert [r.name for r in final.where(F.col("id") == 1234).collect()] \
+        == ["name1234"]
+    assert final.where(F.col("id") == 5000).count() == 0
