@@ -61,6 +61,15 @@ from .sources.event_log import (
 
 OP_COL = "_op"
 
+# A CDC micro-batch whose input is at most this many bytes is applied in
+# one task with no shuffle; a larger one collapses through a PK shuffle,
+# which parses on every core. The bound is the measured crossover of the
+# two plans under streaming, which runs without adaptive execution
+# (README, "CDC apply: jobs per micro-batch"). Each input file also costs
+# the one-task plan time, but a streaming batch reaches apply_batch
+# without its file list, so the bound counts bytes only.
+_ONE_TASK_MAX_BYTES = 12 * 1024 * 1024
+
 
 def _structure_to_dict(st: TableStructure) -> dict:
     return {
@@ -1188,19 +1197,22 @@ class ReplicaEngine:
         (table, segment) with the batch stats attached via ``observe``.
         A DDL-free batch to one table is therefore two jobs.
 
-        A batch whose input fits one task (``_fits_one_task``) runs the
-        metadata aggregate and the collapse over ``coalesce(1)``, so
-        neither plans a shuffle, and is cached only when it feeds more
-        than one write. A larger batch (catch-up, a backfill) is cached up
-        front and keeps the shuffled collapse."""
+        A batch of at most ``_ONE_TASK_MAX_BYTES`` runs the metadata
+        aggregate and the collapse over ``coalesce(1)``, so neither plans
+        a shuffle, and is cached only when it feeds more than one write.
+        A larger batch (catch-up, a backfill) is cached up front and keeps
+        the shuffled collapse, which parses on every core."""
         import time as _time
         t0 = _time.monotonic()
         self._batch_inserts = 0
         self._batch_erases = 0
-        small = self._fits_one_task(events)
-        # a micro-batch is bounded by the flush cadence (reference: 1 s /
-        # 100k rows), so caching it is safe at any table scale — the
-        # metadata pass + per-table writes then cost ONE source scan
+        # Catalyst's size estimate is the listed input-file bytes for a
+        # file scan, and huge when unknown
+        size = int(events._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes())
+        small = size <= _ONE_TASK_MAX_BYTES
+        # a small batch is not cached, so its metadata job and its write
+        # each scan the input; a large one is cached before both
         events = events.coalesce(1) if small else events.persist()
         try:
             # ONE job finds every (db, table) touched AND every DDL with
@@ -1246,7 +1258,8 @@ class ReplicaEngine:
                                        or bounds_by_table[p][0] < hi)])
                         for lo, hi in zip(bounds, bounds[1:])]
             if small and sum(len(sp) for _, _, sp in segments) > 1:
-                # several writes would each re-scan the input: scan once
+                # several writes would each re-scan the input: the first
+                # fills the cache (the metadata job ran uncached)
                 events = events.persist()
             rows = explode_row_events(events)
             if len(ddls) > 1:
@@ -1263,24 +1276,6 @@ class ReplicaEngine:
         # A4 — throughput counters (reference db_replicator.py:21–30)
         self.stats.record_batch(self._batch_inserts, self._batch_erases,
                                 len(ddls), _time.monotonic() - t0)
-
-    def _fits_one_task(self, events: DataFrame) -> bool:
-        """Whether a batch is small enough to apply in one task. The input
-        size is Catalyst's estimate (the listed input-file bytes for a
-        file scan; an unknown size reads as huge). The bound is
-        ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MB):
-        adaptive execution never gives a post-shuffle task less data than
-        that, so a shuffle of less input would be coalesced back into one
-        partition anyway. The collapse shuffles typed rows, no larger than
-        their event-log text, so below the bound a shuffle buys nothing
-        but its fixed cost. (``openCostInBytes``, 4 MB, counts compressed
-        bytes too loosely: a 100k-event parquet batch is 3.3 MB.)"""
-        size = events._jdf.queryExecution().optimizedPlan().stats() \
-            .sizeInBytes()
-        conf = self.spark._jsparkSession.sessionState().conf()
-        bound = conf.getConf(self.spark._jvm.org.apache.spark.sql.internal
-                             .SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
-        return int(size) <= int(bound)
 
     def _apply_row_segment(self, rows: DataFrame,
                            pairs: list[tuple[str, str]],

@@ -5,6 +5,7 @@ its structure through DDL."""
 
 import pytest
 
+from mysql_ch_replicator_spark import engine as engine_mod
 from mysql_ch_replicator_spark.engine import ReplicaEngine
 from mysql_ch_replicator_spark.sources.event_log import (
     EventLogWriter, read_event_log,
@@ -13,7 +14,6 @@ from mysql_ch_replicator_spark.sources.event_log import (
 DB = "db"
 USERS_DDL = """CREATE TABLE users (
   id int NOT NULL, name varchar(64), age int, PRIMARY KEY (id))"""
-ONE_TASK_BYTES = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
 
 def _job_count(spark) -> int:
@@ -40,13 +40,10 @@ class _Log:
 
 
 @pytest.fixture
-def shuffled_plan(spark):
-    """Every batch counts as large: a one-byte bound puts any input
-    above one task's worth, so the apply takes the shuffled collapse."""
-    prev = spark.conf.get(ONE_TASK_BYTES)
-    spark.conf.set(ONE_TASK_BYTES, "1")
-    yield
-    spark.conf.set(ONE_TASK_BYTES, prev)
+def shuffled_plan(monkeypatch):
+    """Every batch counts as large, so the apply takes the shuffled
+    collapse."""
+    monkeypatch.setattr(engine_mod, "_ONE_TASK_MAX_BYTES", -1)
 
 
 def _state(engine, table="users"):
@@ -96,6 +93,29 @@ def test_ddl_batch_issues_no_more_jobs_than_the_shuffled_plan(spark,
     rows = {r.id: (r.name, r.extra)
             for r in engine.read_final(DB, "users").collect()}
     assert rows[1] == ("x", None) and rows[2] == ("y", 7)
+
+
+def test_one_task_bound_is_the_input_size_estimate(spark, tmp_path,
+                                                   monkeypatch):
+    """A batch whose size estimate is at the bound is applied in one task
+    (two jobs); one byte over it takes the shuffled plan."""
+    log = _Log(spark, tmp_path / "log")
+    rows = [(i, f"u{i}", i) for i in range(50)]
+    log.writer.add(DB, "users", rows)
+    batch = log.batch()
+    size = int(batch._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    jobs = []
+    for name, bound in (("at", size), ("over", size - 1)):
+        monkeypatch.setattr(engine_mod, "_ONE_TASK_MAX_BYTES", bound)
+        engine = ReplicaEngine(spark, str(tmp_path / name))
+        engine.create_table(DB, USERS_DDL)
+        j0 = _job_count(spark)
+        engine.apply_batch(batch)
+        jobs.append(_job_count(spark) - j0)
+        assert sorted(tuple(r)[:3] for r in engine.read_final(DB, "users")
+                      .collect()) == rows
+    assert jobs[0] == 2 and jobs[1] > 2
 
 
 def _replay_scenario(spark, path, ignore_deletes):
