@@ -16,7 +16,7 @@ Spark cluster can reach, at zero extra cost on ``file://``.
 Helpers take an explicit ``spark`` or fall back to the active session.
 A SCHEME-LESS path with NO active session falls back to plain python
 file IO (ADVICE r8: sessionless monitoring/recovery code probing a
-local index dir — ``read_ivf_meta``/``pending_upsert_cells`` — must not
+local index dir — ``read_ivf_meta``/``staged.pending`` — must not
 need a JVM); a schemed path without a session still raises, because
 only the JVM can reach it.
 
@@ -122,12 +122,12 @@ def read_text(path: str, spark: SparkSession | None = None,
             finally:
                 stream.close()
         except Exception as e:                   # noqa: BLE001
-            if attempt >= retries or not _is_not_found(e):
+            if attempt >= retries or not is_not_found(e):
                 raise
             time.sleep(retry_delay_s)
 
 
-def _is_not_found(e: Exception) -> bool:
+def is_not_found(e: Exception) -> bool:
     """True for a missing-file error from either IO stack: python's
     FileNotFoundError, or Hadoop's FileNotFoundException surfacing
     through py4j (whose message embeds the Java class name)."""
@@ -196,7 +196,8 @@ def promote_dirs(staged_root: str, live_root: str, key: str, touched,
                  live_names, spark: SparkSession | None = None) -> None:
     """Commit staged ``key=value`` partition directories into a live
     table by per-directory delete+rename — the cheap half of the staged
-    crash protocol the index operators share: the data was already
+    crash protocol the index operators share (``operators/staged.py``):
+    the data was already
     written ONCE (partitioned, into staging), so promotion is pure
     filesystem metadata, never a second write+decode pass. Idempotent
     against the manifest's ``live_names`` list: a named directory
@@ -236,54 +237,6 @@ def list_names(path: str, spark: SparkSession | None = None) -> list[str]:
     return sorted(st.getPath().getName() for st in fs.listStatus(p))
 
 
-def read_index_descriptor(path: str, name: str, keys, table: str,
-                          manifests: dict, rebuild: str,
-                          spark: SparkSession | None = None) -> dict:
-    """The JSON descriptor ``name`` of the index at ``path``, checked
-    against the one layout today's writers produce: the descriptor
-    carries every key in ``keys``, the ``table`` membership directory
-    exists, and every pending intent manifest present (``manifests``
-    maps its file name to the live-name lists its commit promotes)
-    references a complete staged snapshot (``staging: true``). An index
-    any older writer left behind fails here with a ValueError naming
-    ``rebuild`` — it is never migrated in place."""
-    import json as _json
-
-    def reject(why: str):
-        raise ValueError(
-            f"index at {path} {why}: not the current on-disk format — "
-            f"rebuild it with {rebuild} over the replica's final state")
-
-    try:
-        meta = _json.loads(read_text(os.path.join(path, name), spark=spark))
-    except Exception as e:                   # noqa: BLE001
-        if not _is_not_found(e):
-            raise
-        meta = None
-    if meta is None:
-        reject(f"has no {name} descriptor")
-    missing = [k for k in keys if k not in meta]
-    if missing:
-        reject(f"has a descriptor without {missing}")
-    names = set(list_names(path, spark=spark))
-    if table not in names:
-        reject(f"has no {table}/ membership table")
-    for manifest, lists in manifests.items():
-        if manifest not in names:
-            continue
-        try:
-            doc = _json.loads(read_text(os.path.join(path, manifest),
-                                        spark=spark, retries=0))
-        except Exception as e:               # noqa: BLE001
-            if not _is_not_found(e):
-                raise
-            continue                         # committed since the listing
-        if doc.get("staging") is not True or any(k not in doc
-                                                 for k in lists):
-            reject(f"has a pending {manifest} without a staged snapshot")
-    return meta
-
-
 def read_parquet_or_empty(spark: SparkSession, root: str,
                           schema_json: str | None,
                           pin: bool = True):
@@ -293,7 +246,7 @@ def read_parquet_or_empty(spark: SparkSession, root: str,
     dies on the bare root ('Unable to infer schema'), permanently
     wedging every later upsert and probe. When no partition subdir
     remains, the table reads as an EMPTY frame with the schema the index
-    descriptor captured at build time (``read_index_descriptor`` rejects
+    descriptor captured at build time (``staged.read_descriptor`` rejects
     a descriptor without one); with no schema to fall back on it raises
     a named rebuild error instead of the inference crash."""
     import json as _json
@@ -315,11 +268,11 @@ def read_parquet_or_empty(spark: SparkSession, root: str,
             # partition columns (declared at the end, exactly as the
             # build's read-back captured them) still resolve from the
             # directory names. ``pin=False`` is for tables whose FILES
-            # are a column subset of the captured schema (the upsert's
-            # df-less staged postings): pinning there would fabricate
-            # the missing column as NULL — bare inference is the only
-            # honest schema for those, and the captured schema still
-            # serves the all-partitions-deleted empty case below.
+            # are a column subset of the captured schema: pinning there
+            # would fabricate the missing column as NULL — bare
+            # inference is the only honest schema for those, and the
+            # captured schema still serves the all-partitions-deleted
+            # empty case below.
             from pyspark.sql.types import StructType
             return spark.read.schema(
                 StructType.fromJson(_json.loads(schema_json))) \

@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import fsutil
+from .operators import staged
 from .operators.replica import (OP_COL, OP_REMOVE, VERSION_COL,
                                 dedup_final_agg)
 
@@ -442,11 +443,12 @@ class MaintainedIndex:
             return None
         spark = self.engine.spark
         if self.kind == "ivf":
-            from .operators.similarity import (pending_retrain,
+            from .operators.similarity import (_IVF_RETRAIN_PENDING,
                                                read_ivf_meta,
                                                retrain_ivf_index)
 
-            if pending_retrain(self.index_path) is not None:
+            if staged.pending(self.index_path, _IVF_RETRAIN_PENDING,
+                              spark) is not None:
                 return f"retrain:{retrain_ivf_index(spark, self.index_path)}"
             imeta = read_ivf_meta(self.index_path)
             if self.retrain_after is not None \
@@ -462,11 +464,12 @@ class MaintainedIndex:
                                       train_pq=self.retrain_trains_pq)
                 return f"retrain:{k}"
             return None
-        from .operators.retrieval import (compact_lexical_index,
-                                          pending_lexical_compact,
+        from .operators.retrieval import (_LEX_COMPACT_PENDING,
+                                          compact_lexical_index,
                                           read_lex_meta)
 
-        if pending_lexical_compact(self.index_path) is not None:
+        if staged.pending(self.index_path, _LEX_COMPACT_PENDING,
+                          spark) is not None:
             return f"compact:{compact_lexical_index(spark, self.index_path)}"
         lmeta = read_lex_meta(self.index_path, spark)
         if self.retrain_after is not None \
@@ -548,9 +551,8 @@ class MaintainedIndex:
         if self.kind == "ivf":
             from .operators.similarity import (_IVF_SPLIT_PENDING,
                                                split_ivf_cell)
-            if fsutil.exists(
-                    os.path.join(self.index_path, _IVF_SPLIT_PENDING),
-                    spark=spark):
+            if staged.pending(self.index_path, _IVF_SPLIT_PENDING,
+                              spark) is not None:
                 return split_ivf_cell(spark, self.index_path)
             if self._split_checked_version == applied_v:
                 # nothing mutated the index since the last load check —
@@ -559,9 +561,10 @@ class MaintainedIndex:
             counts = self._ivf_load()
             action = split_ivf_cell
         else:
-            from .operators.retrieval import (pending_lexical_split,
+            from .operators.retrieval import (_LEX_SPLIT_PENDING,
                                               split_lexical_shard)
-            if pending_lexical_split(self.index_path) is not None:
+            if staged.pending(self.index_path, _LEX_SPLIT_PENDING,
+                              spark) is not None:
                 return split_lexical_shard(spark, self.index_path)
             if self._split_checked_version == applied_v:
                 return None
@@ -644,17 +647,19 @@ class MaintainedIndex:
         spark = self.engine.spark
         applied_v = int(self._state()["applied_version"])
         if self.kind == "ivf":
-            from .operators.similarity import merge_ivf_cells, \
-                pending_merge
-            if pending_merge(self.index_path) is not None:
+            from .operators.similarity import (_IVF_MERGE_PENDING,
+                                               merge_ivf_cells)
+            if staged.pending(self.index_path, _IVF_MERGE_PENDING,
+                              spark) is not None:
                 return merge_ivf_cells(spark, self.index_path)
             if self._merge_checked_version == applied_v:
                 return None
             counts, action = self._ivf_load(), merge_ivf_cells
         else:
-            from .operators.retrieval import merge_lexical_shards, \
-                pending_lexical_merge
-            if pending_lexical_merge(self.index_path) is not None:
+            from .operators.retrieval import (_LEX_MERGE_PENDING,
+                                              merge_lexical_shards)
+            if staged.pending(self.index_path, _LEX_MERGE_PENDING,
+                              spark) is not None:
                 return merge_lexical_shards(spark, self.index_path)
             if self._merge_checked_version == applied_v:
                 return None

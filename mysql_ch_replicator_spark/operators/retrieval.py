@@ -25,8 +25,8 @@ tokens, per-doc length dl and per-(doc,term) frequency tf:
 
 The products run in decimal(38,0) (HUGEINT on a DuckDB oracle): at a
 100 TB corpus TL ~ 1e13 pushes the tfn6 numerator past int64, and
-idf6*tfn6 past it again (the embedding_outlier_scores lesson — ADVICE
-r5).  Determinism note: this is a *variant* scoring (rational idf, not
+idf6*tfn6 past it again (the embedding_outlier_scores lesson).
+Determinism note: this is a *variant* scoring (rational idf, not
 ln-idf); it is documented as such and identical in both engines, which
 is the property the oracle gate checks.
 
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import fsutil
-from . import UnsplittablePartition
+from . import UnsplittablePartition, staged
 from ..cache import transient_persist
 from ..functions.hashing import h60, words
 from ..sources.snapshot import spread
@@ -155,7 +155,20 @@ def build_inverted_index(docs: DataFrame, span: int = 256,
 
 _LEX_META = "_lex_meta.json"
 _LEX_PENDING = "_lex_upsert_pending.json"
-_LEX_SPLIT_PENDING = "_lex_split_pending.json"   # shard-split intent manifest
+_LEX_SPLIT_PENDING = "_lex_split_pending.json"
+_LEX_MERGE_PENDING = "_lex_merge_pending.json"
+_LEX_COMPACT_PENDING = "_lex_compact_pending.json"
+_LEX_UPSERT_STAGING = "_upsert_staging"
+_LEX_SPLIT_STAGING = "_split_staging"
+_LEX_MERGE_STAGING = "_merge_staging"
+_LEX_COMPACT_STAGING = "_compact_staging"
+# each staged action's intent manifest and snapshot directory
+# (operators/staged.py — the protocol the IVF index shares)
+_LEX = staged.Family(_LEX_META, {
+    _LEX_PENDING: _LEX_UPSERT_STAGING,
+    _LEX_SPLIT_PENDING: _LEX_SPLIT_STAGING,
+    _LEX_MERGE_PENDING: _LEX_MERGE_STAGING,
+    _LEX_COMPACT_PENDING: _LEX_COMPACT_STAGING})
 # Default docmeta partition width (doc ids per dir). A layout knob, not
 # a constant of the format: the descriptor records the width the index
 # was built with, and it should be sized so the SPAN COUNT stays ~1e4
@@ -207,22 +220,6 @@ def _term_shard_py(term: str, shards: int, splits: list[dict]) -> int:
                 or h60_py(f"{sp['salt']}|{term}") % 2 == 1:
             s = int(sp["dst"])
     return s
-
-
-def _schema_without(schema_json: str | None, *cols: str) -> str | None:
-    """Drop named fields from a captured schema JSON — the honest pinned
-    schema for staged tables written as a column SUBSET of the live one
-    (the upsert's df-less staged postings): pinning the full schema
-    would fabricate the missing columns as all-NULL, bare inference
-    costs a footer-sweep job per read (ADVICE r13)."""
-    if not schema_json:
-        return None
-    import json as _json
-
-    doc = _json.loads(schema_json)
-    doc["fields"] = [f for f in doc.get("fields", [])
-                     if f.get("name") not in cols]
-    return _json.dumps(doc)
 
 
 def _tokenized_tf(docs: DataFrame, id_col: str,
@@ -278,8 +275,8 @@ def write_lexical_index(docs: DataFrame, path: str, shards: int = 16,
       posting table quoted-phrase retrieval probes
       (``phrase_match_indexed``), so a phrase query prunes to its own
       terms' shard directories at planning time instead of re-tokenizing
-      the corpus per query (the r9 verdict's last O(corpus)-per-query
-      retrieval shape). Token-stream-sized, hence opt-in; when enabled
+      the corpus per query (an O(corpus)-per-query retrieval shape).
+      Token-stream-sized, hence opt-in; when enabled
       the build derives tf from the SAME posexplode pass, so the corpus
       still tokenizes exactly once,
     - ``docmeta/`` — (doc_id, dl, shards) partitioned by doc-id span:
@@ -288,13 +285,13 @@ def write_lexical_index(docs: DataFrame, path: str, shards: int = 16,
       need. Doc ids spread across every term shard, so "which shards
       hold this doc's postings" is unanswerable from the postings
       layout without scanning ALL of them — O(index) IO per CDC batch,
-      the scale-killer the r7 verdict flagged. The membership column
+      a scale-killer. The membership column
       answers it with a directory-pruned read of only the changed docs'
       spans — O(changed docs) whatever the index size (the same reason
       the reference's realtime loop touches only buffered keys per
       flush, db_replicator_realtime.py:324–374) — and because it rides
-      the SAME table as dl, the upsert still pays only two
-      span-partitioned rewrites per batch (postings + docmeta), not
+      the SAME table as dl, the upsert still rewrites only two
+      span/shard-partitioned tables per batch (postings + docmeta), not
       three.
     - ``_lex_meta.json`` — {n, tl, shards, dspan, spans}: the corpus
       scalars BM25 needs, persisted WITH the index so probing never
@@ -302,9 +299,9 @@ def write_lexical_index(docs: DataFrame, path: str, shards: int = 16,
       index follows). ``spans`` maps each docmeta span to its own
       (doc count, token total): the incremental upsert refreshes ONLY
       the touched spans' entries and re-derives (n, tl) as sums — an
-      O(changed spans) refresh instead of the O(corpus-doc-count)
-      docmeta re-aggregate the r8 verdict flagged as the last full-
-      index read on the CDC hot path. Per-span values are functions of
+      O(changed spans) refresh instead of an O(corpus-doc-count)
+      docmeta re-aggregate, which would be a full-index read on the CDC
+      hot path. Per-span values are functions of
       the span's FINAL state (never deltas), so a crashed batch's
       re-run regenerates identical entries — the same idempotence the
       stateless full recount had, without its full scan. ``dspan`` is
@@ -401,7 +398,7 @@ def write_lexical_index(docs: DataFrame, path: str, shards: int = 16,
     # per-shard posting-row counts seed the descriptor (one bounded
     # aggregate over the already-persisted tokenize — postings rows ==
     # per rows, the df join never changes the count), so the load-factor
-    # poll starts descriptor-only from day one (ADVICE r10)
+    # poll starts descriptor-only from day one
     rows_f = lambda: {int(r.shard): int(r.n) for r in  # noqa: E731
                       per.groupBy((h60(F.col("term")) % shards)
                                   .cast("int").alias("shard"))
@@ -422,7 +419,7 @@ def write_lexical_index(docs: DataFrame, path: str, shards: int = 16,
                for t in (["postings", "docmeta"]
                          + (["positions"] if positions else []))}
     # descriptor rides the Hadoop FS like the parquet it describes —
-    # open() breaks on any non-local index path (ADVICE r7)
+    # open() breaks on any non-local index path
     fsutil.write_text(
         os.path.join(path, _LEX_META),
         json.dumps(_lex_meta_doc(spans_map, shards, span_width,
@@ -487,7 +484,7 @@ def _lex_meta_doc(spans_map: dict[str, list[int]], shards: int,
            # the upsert/split/merge (each already aggregates the touched
            # shards' merged rows) — what lets the load-factor poll read
            # the descriptor instead of a full postings groupBy per
-           # window (ADVICE r10)
+           # window
            "shard_rows": {str(int(k)): int(v)
                           for k, v in shard_rows.items() if int(v) > 0},
            # read-back schemas captured at build: what lets a table
@@ -500,20 +497,12 @@ def _lex_meta_doc(spans_map: dict[str, list[int]], shards: int,
 
 def read_lex_meta(path: str, spark) -> dict:
     """The persisted lexical index descriptor, after
-    ``fsutil.read_index_descriptor`` checked the index against the one
-    layout today's writers produce (descriptor with ``schemas``,
-    ``spans`` and ``shard_rows``, a ``docmeta/`` table, staged pending
-    manifests). Any other index raises a ValueError naming the rebuild
-    call."""
-    return fsutil.read_index_descriptor(
-        path, _LEX_META, ("schemas", "spans", "shard_rows"), "docmeta",
-        {_LEX_PENDING: ("live_positions", "live_docmeta"),
-         _LEX_SPLIT_PENDING: ("live_postings", "live_positions",
-                              "live_docmeta"),
-         _LEX_MERGE_PENDING: ("live_postings", "live_positions",
-                              "live_docmeta"),
-         _LEX_COMPACT_PENDING: ("live_shards", "live_pos_shards",
-                                "live_spans")},
+    ``staged.read_descriptor`` checked the index against the one layout
+    today's writers produce (descriptor with ``schemas``, ``spans`` and
+    ``shard_rows``, a ``docmeta/`` table, staged pending manifests). Any
+    other index raises a ValueError naming the rebuild call."""
+    return staged.read_descriptor(
+        path, _LEX, ("schemas", "spans", "shard_rows"), "docmeta",
         "write_lexical_index", spark=spark)
 
 
@@ -592,150 +581,6 @@ def bm25_indexed_topk(spark, path: str, query_terms: list[str],
             .select("doc_id", "score", "rank"))
 
 
-_LEX_UPSERT_STAGING = "_upsert_staging"   # staged batch snapshot
-_LEX_SPLIT_STAGING = "_split_staging"     # staged split snapshot
-_LEX_MERGE_STAGING = "_merge_staging"     # staged merge snapshot
-
-
-def _lex_commit_staged(spark, path: str, staging: str, touched_shards,
-                       spans, has_positions: bool, live_pos_names,
-                       live_span_names, live_post_names=None,
-                       schemas: dict | None = None,
-                       live: set[int] | None = None,
-                       delete_empty_spans: bool = False) -> None:
-    """The destructive phase every staged lexical action shares
-    (upsert / split / merge — the compaction has its own
-    descriptor-swapping flow): commit the touched postings shards, the
-    positions twin, and the touched docmeta spans FROM the staged
-    snapshot, never from live directories a torn commit may have holed
-    (ADVICE r12; the IVF family's ``_ivf_commit_staged`` twin). The
-    snapshot is immutable until the caller's cleanup, so a crash
-    anywhere in this phase re-runs it idempotently. Positions and
-    docmeta — and the split/merge postings, named by
-    ``live_post_names`` — are staged PARTITIONED and commit by pure
-    directory promotion (``fsutil.promote_dirs`` with the
-    manifest-recorded dir-name lists; no second write, no parquet
-    decode). With ``live_post_names`` None the postings are the
-    upsert's: staged WITHOUT the df column (df is a pure function of the
-    snapshot — deriving it here saves a second materialization on the
-    CDC hot path), so they are read back under the df-less projection
-    of ``schemas['postings']``, df is derived, and the touched shards
-    are dynamic-overwritten; ``live`` is the staged live shard set the
-    caller already counted for the descriptor, and touched shards
-    outside it are deleted (dynamic overwrite never clears a partition
-    it writes no rows for)."""
-    import os
-
-    postings_path = os.path.join(path, "postings")
-    if live_post_names is not None:
-        fsutil.promote_dirs(os.path.join(staging, "postings"),
-                            postings_path, "shard", touched_shards,
-                            live_post_names, spark=spark)
-    else:
-        if touched_shards:
-            # the full captured schema would fabricate a NULL df that
-            # collides with the derived one, so pin its df-less
-            # projection (zero inference jobs either way)
-            post = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "postings"),
-                _schema_without(schemas.get("postings"), "df"))
-            dfreq = post.groupBy("term").agg(
-                F.count(F.lit(1)).cast("long").alias("df"))
-            (fsutil.cluster_by_dir(
-                post.join(dfreq, "term")
-                .select("shard", "term", "doc_id", "tf", "df"),
-                "shard", "doc_id", len(touched_shards))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("shard").parquet(postings_path))
-        for s in set(touched_shards) - live:
-            fsutil.delete(os.path.join(postings_path, f"shard={s}"),
-                          spark=spark)
-    if has_positions:
-        fsutil.promote_dirs(os.path.join(staging, "positions"),
-                            os.path.join(path, "positions"), "shard",
-                            touched_shards, live_pos_names, spark=spark)
-    if spans:
-        fsutil.promote_dirs(os.path.join(staging, "docmeta"),
-                            os.path.join(path, "docmeta"), "dspan",
-                            spans if delete_empty_spans else [],
-                            live_span_names, spark=spark)
-
-
-def _resume_lexical_upsert(spark, path: str) -> bool:
-    """Finish the destructive phase of a torn staged upsert batch from
-    its snapshot — called at entry by every lexical action before
-    reading shard/span directories a torn commit may have holed (the
-    IVF family's ``_resume_ivf_upsert`` twin). The descriptor refresh
-    replays from the snapshot too: touched shards' counts and touched
-    spans' stats are pure functions of the staged content. Returns True
-    on restore."""
-    import json
-    import os
-
-    pend = os.path.join(path, _LEX_PENDING)
-    if not fsutil.exists(pend, spark=spark):
-        return False
-    meta = read_lex_meta(path, spark)
-    doc = json.loads(fsutil.read_text(pend, spark=spark))
-    schemas = meta["schemas"]
-    has_positions = bool(meta.get("positions", False))
-    staging = os.path.join(path, _LEX_UPSERT_STAGING)
-    shards_t = [int(s) for s in doc.get("shards", [])]
-    spans_t = [int(s) for s in doc.get("dspans", [])]
-    # the descriptor finals are read from the snapshot BEFORE the commit
-    # — the promotion renames consume the staged span dirs (bounded by
-    # the crashed batch's touched sets either way)
-    fresh: dict = {}
-    counts: dict[int, int] = {}
-    if spans_t:
-        fresh = _span_stats_map(
-            fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "docmeta"),
-                schemas.get("docmeta")).select("dl", "dspan"))
-    if shards_t:
-        # the upsert's df-less staged postings (see _lex_commit_staged)
-        # — pin the honest df-less projection of the captured schema:
-        # zero inference jobs, no fabricated NULL df
-        counts = {int(r.shard): int(r.n) for r in
-                  fsutil.read_parquet_or_empty(
-                      spark, os.path.join(staging, "postings"),
-                      _schema_without(schemas.get("postings"), "df"))
-                  .groupBy("shard")
-                  .agg(F.count(F.lit(1)).alias("n")).collect()}
-    _lex_commit_staged(spark, path, staging, shards_t, spans_t,
-                       has_positions, doc["live_positions"],
-                       doc["live_docmeta"], schemas=schemas,
-                       live=set(counts), delete_empty_spans=True)
-    # descriptor refresh, state-based from the snapshot
-    spans_map = {k: [int(v[0]), int(v[1])]
-                 for k, v in meta["spans"].items()}
-    for s in spans_t:
-        key = str(int(s))
-        if key in fresh:
-            spans_map[key] = fresh[key]
-        else:
-            spans_map.pop(key, None)
-    shard_rows = {int(k): int(v) for k, v in meta["shard_rows"].items()}
-    for s in shards_t:
-        if counts.get(s):
-            shard_rows[s] = counts[s]
-        else:
-            shard_rows.pop(s, None)
-    fsutil.write_text(
-        os.path.join(path, _LEX_META),
-        json.dumps(_lex_meta_doc(
-            spans_map, int(meta["shards"]),
-            int(meta.get("dspan", _LEX_DSPAN)),
-            positions=has_positions,
-            splits=list(meta.get("splits", [])),
-            schemas=schemas, shard_rows=shard_rows)),
-        spark=spark)
-    fsutil.delete(pend, spark=spark)
-    fsutil.delete(staging, spark=spark)
-    return True
-
-
 def _membership_shard_frame(docmeta: DataFrame, changed: DataFrame,
                             spans: list[int]) -> DataFrame:
     """Shards currently holding the changed docs' postings, from the
@@ -769,100 +614,61 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
     of the changed docs' CURRENT terms, answered by the span-partitioned
     ``docmeta`` membership column with a directory-pruned read of ONLY
     the changed docs' spans — O(changed docs) IO per batch, never
-    O(index) (the r7 verdict's scale note: a (shard, doc_id) scan of the
-    full postings per 1 s CDC batch would dominate the index's
-    incremental story at 100 TB), and (b) shards of the adds' new terms.
-    The batch then pays exactly TWO span/shard-partitioned dynamic
-    overwrites: the touched postings shards and the touched docmeta
-    spans (dl and membership ride the same table). Docmeta rewrites
-    AFTER the postings commit — a torn batch leaves its membership a
-    SUPERSET of the postings' real membership, so recovery re-discovers
-    at worst a few already-clean shards, never misses one. The corpus
-    scalars (n, tl) are then refreshed by replacing ONLY the touched
-    spans' entries in the descriptor's per-span stats map and summing —
-    O(changed spans) per batch, never O(corpus) (the r8 verdict's last
-    hot-path flag: the previous stateless full-docmeta recount read two
-    longs per CORPUS doc on every 1 s CDC batch; at 1e10 docs that scan,
-    not the batch, dominates the apply loop). The refreshed entries come
-    from one bounded aggregate over the SAME checkpointed frame the
-    docmeta rewrite commits — no post-write docmeta read at all (IO-
-    pinned by test_round9_properties) — and they are functions of each
-    span's FINAL state, not deltas, so a crashed batch's recovery is
-    still simply re-running the same upsert: an interrupted run's
-    half-applied docmeta regenerates the identical merged span state,
-    hence identical entries (the intent manifest
-    ``_lex_upsert_pending.json`` makes the torn window detectable, same
-    contract as the IVF index). All side-files and directory deletes go
-    through the Hadoop FS (fsutil) so the index may live on any scheme
-    Spark can write. An index built with positional
-    postings (descriptor ``positions: true``) maintains ``positions/``
-    in the same batch: identical touched-shard set (a doc's positions
-    live in exactly the shards its terms hash to), identical merge
-    algebra, committed in the data phase before docmeta — pinned by the
+    O(index) (a (shard, doc_id) scan of the full postings per 1 s CDC
+    batch would dominate the index's incremental story at 100 TB), and
+    (b) shards of the adds' new terms. The batch then rewrites exactly
+    the touched postings shards and the touched docmeta spans (dl and
+    membership ride the same table). Docmeta commits AFTER the postings
+    — a torn batch leaves its membership a SUPERSET of the postings'
+    real membership, so recovery re-discovers at worst a few
+    already-clean shards, never misses one. The corpus scalars (n, tl)
+    are refreshed by replacing ONLY the touched spans' entries in the
+    descriptor's per-span stats map and summing — O(changed spans) per
+    batch, never O(corpus): at 1e10 docs a full docmeta recount, not
+    the batch, would dominate the apply loop. The refreshed entries
+    come from one bounded aggregate over the staged docmeta — no
+    post-write docmeta read at all (IO-pinned by
+    test_round9_properties) — and they are functions of each span's
+    FINAL state, not deltas, so re-running a crashed batch regenerates
+    the identical merged span state, hence identical entries. All
+    side-files and directory deletes go through the Hadoop FS (fsutil)
+    so the index may live on any scheme Spark can write. An index built
+    with positional postings (descriptor ``positions: true``) maintains
+    ``positions/`` in the same batch: identical touched-shard set (a
+    doc's positions live in exactly the shards its terms hash to),
+    identical merge algebra, committed before docmeta — pinned by the
     upsert==rebuild equivalence test.
 
-    Latency shape (the r9 verdict's named frontier): at a 1 s CDC flush
-    cadence the upsert's cost is its FIXED action count, not data volume
-    — so the batch is budgeted in Spark jobs. The changed-id union skips
-    a redundant distinct (each side arrives distinct; dup ids are
-    harmless to anti-joins and the driver-side shard-set dedup), the df
-    recount reads the merge's checkpointed blocks instead of traversing
-    the touched shards twice through both join branches, and every
-    action with no ordering dependency overlaps on scheduler threads:
-    the adds' new-term discovery runs beside the changed-spans collect,
-    the docmeta merge and its span-stats refresh beside the postings
-    and positions merges, the emptied-shard probe beside the manifest
-    turnaround. CRASH ORDER (the retrain's staged protocol, r13): the
-    merged final content of the touched shards and spans is STAGED
-    (``_upsert_staging/{postings,positions,docmeta}`` — also the
-    materialization barrier the old localCheckpoints provided; the
-    three staging writes overlap), the manifest is written strictly
-    after every staging write returns (manifest ⇒ staging complete),
-    and the destructive phase — postings (+ positions twin) with their
-    emptied-shard sweep first, docmeta strictly after (superset
-    membership on a tear), descriptor last — reads ONLY the snapshot.
-    A torn per-partition dynamic overwrite (Spark commits
-    delete-then-rename per directory in a driver loop) can hole a
-    touched shard or span dir; the old re-run recovery read that hole
-    and made the loss permanent (ADVICE r12's window, closed for the
-    incremental actions in r13). Now any lexical action restores the
-    snapshot at entry (``_resume_lexical_upsert`` — descriptor refresh
-    included, replayed state-based from the staged content), and
-    re-running the same batch stays equally safe (idempotent algebra)."""
-    import json
+    Latency shape: at a 1 s CDC flush cadence the upsert's cost is its
+    FIXED action count, not data volume — so the batch is budgeted in
+    Spark jobs. The changed-id union skips a redundant distinct (each
+    side arrives distinct; dup ids are harmless to anti-joins and the
+    driver-side shard-set dedup), and every action with no ordering
+    dependency overlaps on scheduler threads: the adds' new-term
+    discovery runs beside the changed-spans collect, the docmeta merge
+    and its span-stats refresh beside the postings and positions
+    merges, the per-shard count beside the remaining staging writes.
+
+    Crash contract (``operators/staged.py``, shared by every index
+    action): the merged final content of the touched shards and spans
+    is STAGED partitioned, df included
+    (``_upsert_staging/{postings,positions,docmeta}``; the three staging
+    writes overlap), the new descriptor is computed from the staged
+    finals, and only then is the manifest written; the commit promotes
+    postings (+ positions twin) with their emptied-shard sweep first,
+    docmeta strictly after (superset membership on a tear), descriptor
+    last. A torn commit is finished by the next lexical action's entry,
+    and re-running the same batch stays equally safe (idempotent
+    algebra)."""
     import os
     from functools import reduce
 
     meta = read_lex_meta(path, spark)
-    # a torn staged upsert is restored FIRST: its snapshot is the only
-    # trustworthy image of the shards/spans a torn per-partition
-    # overwrite may have holed, and every read below (postings, docmeta)
-    # would otherwise see the hole
-    if _resume_lexical_upsert(spark, path):
-        meta = read_lex_meta(path, spark)
-    if fsutil.exists(os.path.join(path, _LEX_SPLIT_PENDING), spark=spark):
-        # a torn shard split leaves term placement ambiguous between the
-        # descriptor (old) and the data (partially moved); the resume is
-        # idempotent and O(shard), so finish it here rather than wedge an
-        # unattended CDC pipeline — the same contract as the IVF upsert's
-        # split auto-resume
-        split_lexical_shard(spark, path)
-        meta = read_lex_meta(path, spark)
-    if fsutil.exists(os.path.join(path, _LEX_MERGE_PENDING), spark=spark):
-        # same reasoning for a torn MERGE: the descriptor still routes
-        # the moved terms to the deleted src shard, so a batch applied
-        # now would rewrite (and dynamically resurrect) the wrong
-        # directory. O(2 shards), idempotent.
-        merge_lexical_shards(spark, path)
-        meta = read_lex_meta(path, spark)
-    if fsutil.exists(os.path.join(path, _LEX_COMPACT_PENDING),
-                     spark=spark):
-        # a torn chain COMPACTION left the whole placement ambiguous
-        # (old chain in the descriptor over partially re-homed
-        # directories) — finish it (pure-function placement, idempotent
-        # re-run) before applying anything
-        compact_lexical_index(spark, path)
-        meta = read_lex_meta(path, spark)
+    # a torn action is committed FIRST: its snapshot is the only
+    # trustworthy image of the shards/spans a torn commit may have
+    # holed, and its descriptor fixes the placement every read below
+    # (postings, docmeta) relies on
+    meta = staged.finish_torn(spark, path, _LEX) or meta
     shards = meta["shards"]
     splits = meta.get("splits", [])
     schemas = meta["schemas"]
@@ -919,13 +725,12 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
 
     pool = ThreadPoolExecutor(max_workers=3)
     try:
-        # -- discovery, ONE job (r14): the changed ids' spans and the
-        # adds' new-term shards union into a single bounded
-        # distinct-collect (previously two overlapped jobs — at a 1 s
-        # CDC cadence jobs, not data, are the budget). The job is also
-        # the first consumer of BOTH the changed and tokenize caches,
-        # so it doubles as their materialization barrier before the
-        # merge-phase consumers fork onto scheduler threads (an
+        # -- discovery, ONE job: the changed ids' spans and the adds'
+        # new-term shards union into a single bounded distinct-collect
+        # (at a 1 s CDC cadence jobs, not data, are the budget). The job
+        # is also the first consumer of BOTH the changed and tokenize
+        # caches, so it doubles as their materialization barrier before
+        # the merge-phase consumers fork onto scheduler threads (an
         # unpopulated cache has no stampede protection; with positions
         # this same job populates the new_pos cache too).
         probe = changed.select(
@@ -947,16 +752,13 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
                 docmeta, changed, touched_spans).distinct().collect()}
         touched_shards = sorted(shard_set)
 
-        pending = os.path.join(path, _LEX_PENDING)
         staging = os.path.join(path, _LEX_UPSERT_STAGING)
 
-        # -- merge phase. The WRITE ordering is the crash contract
-        # (docmeta strictly after postings, so a torn batch leaves
-        # membership a SUPERSET); the MERGE computations are independent
-        # of each other and of either write, so the docmeta merge AND its
-        # span-stats refresh materialize on a scheduler thread while the
-        # postings (and positions) merges checkpoint here — same overlap
-        # trick as checkpoint_pair, same commit order as the serial code.
+        # -- merge phase: the merges are independent of each other, so
+        # the docmeta merge AND its span-stats refresh, and the
+        # positions merge, stage on scheduler threads while the
+        # postings merge stages here; the commit order (docmeta after
+        # postings) is the manifest's, not the staging order.
         meta_f = None
         if touched_spans:
             cur_meta = (docmeta.where(F.col("dspan").isin(touched_spans))
@@ -968,13 +770,11 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
             mm = mm.withColumn("dspan", F.expr(f"doc_id div {dspan_w}"))
 
             def _meta_side():
-                # staged DURABLY, PARTITIONED (the old localCheckpoint's
-                # barrier AND the torn-overwrite recovery source, r13;
-                # partitioned so the commit promotes the span dirs by
-                # rename — written once); the O(changed spans) scalar
-                # refresh reads the staged blocks — still no post-write
-                # docmeta read, and state-based, so a crashed batch's
-                # re-run (or restore) writes the identical map
+                # staged partitioned, so the commit promotes the span
+                # dirs by rename — written once; the O(changed spans)
+                # scalar refresh reads the staged blocks — still no
+                # post-write docmeta read, and state-based, so a crashed
+                # batch's re-run writes the identical map
                 (fsutil.cluster_by_dir(mm, "dspan", "doc_id")
                  .write.mode("overwrite").partitionBy("dspan")
                  .parquet(os.path.join(staging, "docmeta")))
@@ -993,7 +793,7 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
             # positional twin of the postings rewrite: same touched
             # shards (a doc's positions live in exactly the shards its
             # terms hash to), same merge algebra; stages beside the
-            # postings merge, commits in the same data phase
+            # postings merge, commits right after it
             pos_tbl = fsutil.read_parquet_or_empty(
                 spark, os.path.join(path, "positions"),
                 schemas.get("positions"))
@@ -1015,7 +815,6 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
                 .partitionBy("shard")
                 .parquet(os.path.join(staging, "positions")))
 
-        counts: dict[int, int] = {}
         counts_f = None
         if touched_shards:
             cur = (postings.where(F.col("shard").isin(touched_shards))
@@ -1027,133 +826,70 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
                     new_per.withColumn(
                         "shard", _shard_expr(F.col("term"), shards, splits))
                     .select("shard", "term", "doc_id", "tf"))
-            # staged WITHOUT the df column: df is a pure function of the
-            # snapshot, derived inside the staged commit — the snapshot
-            # write replaces the old localCheckpoint (the merge still
-            # materializes exactly once; both df branches then read the
-            # staged parquet). NOT a term-keyed window: that would
-            # funnel a hot term's entire posting list through one task,
-            # where the aggregate keeps map-side combine and AQE keeps
-            # the join broadcast/skew-safe.
-            (merged.write.mode("overwrite")
+            # df over the merged shards IS the global df (a term's rows
+            # all live in its one shard): a term-keyed aggregate joined
+            # back, NOT a term-keyed window — that would funnel a hot
+            # term's entire posting list through one task, where the
+            # aggregate keeps map-side combine and AQE keeps the join
+            # broadcast/skew-safe
+            dfreq = merged.groupBy("term").agg(
+                F.count(F.lit(1)).cast("long").alias("df"))
+            (fsutil.cluster_by_dir(
+                merged.join(dfreq, "term")
+                .select("shard", "term", "doc_id", "tf", "df"),
+                "shard", "doc_id", len(touched_shards))
+             .write.mode("overwrite").partitionBy("shard")
              .parquet(os.path.join(staging, "postings")))
-            # the upsert's staged postings are df-LESS (df is derived at
-            # commit, _lex_commit_staged), so pinning the FULL captured
-            # schema would fabricate an all-NULL df column (ADVICE r13);
-            # pin the honest df-less projection of it instead — still
-            # zero inference jobs, and any future consumer of base sees
-            # exactly the staged columns
+            # schema-pinned read-back (staged == live schema by the
+            # promotion contract) — no inference job; counting rows per
+            # shard keeps the descriptor's shard_rows exact without any
+            # postings re-read, and overlaps the remaining staging
             base = fsutil.read_parquet_or_empty(
                 spark, os.path.join(staging, "postings"),
-                _schema_without(schemas.get("postings"), "df"))
-            # the emptied-shard probe reads the staged blocks, so it
-            # overlaps the remaining staging + manifest turnaround;
-            # counting rows per shard instead of a bare distinct costs
-            # the same job and keeps the descriptor's shard_rows map
-            # maintained without any postings re-read
+                schemas.get("postings"))
             counts_f = pool.submit(
                 lambda: {int(r.shard): int(r.n) for r in
                          base.groupBy("shard")
                          .agg(F.count(F.lit(1)).alias("n")).collect()})
-        fresh: dict = {}
-        if meta_f is not None:
-            fresh = meta_f.result()
+        fresh = meta_f.result() if meta_f is not None else {}
         if pos_f is not None:
             pos_f.result()
-        # the manifest is written strictly AFTER every staging write
-        # returns, so manifest ⇒ staging complete (the retrain's
-        # protocol). The destructive phase reads ONLY the snapshot —
-        # postings (+ positions twin) with their emptied-shard sweep
-        # first, docmeta strictly after (a crash between the two leaves
-        # membership a SUPERSET of the postings' real state, so
-        # recovery re-discovers at worst a few already-clean shards) —
-        # and a crash anywhere inside it restores idempotently at the
-        # next action's entry (_resume_lexical_upsert) or this batch's
-        # re-run.
-        live_pos_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "positions"), spark=spark)
-            if n.startswith("shard=")] \
-            if (touched_shards and has_positions) else []
-        live_span_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "docmeta"), spark=spark)
-            if n.startswith("dspan=")] if touched_spans else []
-        fsutil.write_text(
-            pending,
-            json.dumps({"shards": touched_shards,
-                        "dspans": touched_spans, "staging": True,
-                        "live_positions": live_pos_names,
-                        "live_docmeta": live_span_names}),
-            spark=spark)
-        if counts_f is not None:
-            counts = counts_f.result()
-        _lex_commit_staged(spark, path, staging, touched_shards,
-                           touched_spans, has_positions, live_pos_names,
-                           live_span_names, schemas=schemas,
-                           live=set(counts), delete_empty_spans=True)
-        # descriptor bookkeeping from the staged finals: emptied spans
-        # drop out, untouched entries carry verbatim, (n, tl) re-derive
-        # as sums
-        for s in touched_shards:
-            if counts.get(s):
-                shard_rows[s] = counts[s]
-            else:
-                shard_rows.pop(s, None)
-        for s in touched_spans:
-            key = str(int(s))
-            if key in fresh:
-                spans_map[key] = fresh[key]
-            else:
-                spans_map.pop(key, None)
+        counts = counts_f.result() if counts_f is not None else {}
     except BaseException:
         pool.shutdown(wait=True, cancel_futures=True)
         raise
     pool.shutdown(wait=True)
 
-    fsutil.write_text(
-        os.path.join(path, _LEX_META),
-        json.dumps(_lex_meta_doc(spans_map, shards, dspan_w,
-                                 positions=has_positions, splits=splits,
-                                 schemas=schemas,
-                                 shard_rows=shard_rows)),
-        spark=spark)
-    fsutil.delete(pending, spark=spark)
-    fsutil.delete(staging, spark=spark)
+    # descriptor from the staged finals: emptied shards and spans drop
+    # out, untouched entries carry verbatim, (n, tl) re-derive as sums
+    for s in touched_shards:
+        if counts.get(s):
+            shard_rows[s] = counts[s]
+        else:
+            shard_rows.pop(s, None)
+    for s in touched_spans:
+        key = str(int(s))
+        if key in fresh:
+            spans_map[key] = fresh[key]
+        else:
+            spans_map.pop(key, None)
+    promote = []
+    if touched_shards:
+        promote.append(staged.entry(staging, "postings", "shard",
+                                    touched_shards, spark))
+        if has_positions:
+            promote.append(staged.entry(staging, "positions", "shard",
+                                        touched_shards, spark))
+    if touched_spans:
+        promote.append(staged.entry(staging, "docmeta", "dspan",
+                                    touched_spans, spark))
+    staged.run(spark, path, _LEX, _LEX_PENDING, {
+        "promote": promote,
+        "descriptor": _lex_meta_doc(
+            spans_map, shards, dspan_w, positions=has_positions,
+            splits=splits, schemas=schemas, shard_rows=shard_rows),
+        "shards": touched_shards, "dspans": touched_spans})
     return {"shards": touched_shards, "dspans": touched_spans}
-
-
-def pending_lexical_upsert(path: str) -> dict | None:
-    """``{"shards": [...], "dspans": [...]}`` a crashed
-    ``upsert_lexical_index`` batch may have left half-applied (its
-    intent manifest survives the crash), or None when the last upsert
-    committed cleanly — the lexical twin of
-    ``similarity.pending_upsert_cells``. Recovery = re-run the same
-    upsert (idempotent; see the crash contract above)."""
-    import json
-    import os
-
-    pend = os.path.join(path, _LEX_PENDING)
-    if not fsutil.exists(pend):
-        return None
-    doc = json.loads(fsutil.read_text(pend))
-    return {"shards": [int(s) for s in doc["shards"]],
-            "dspans": [int(s) for s in doc["dspans"]]}
-
-
-def pending_lexical_split(path: str) -> dict | None:
-    """``{"src": int, "dst": int, "salt": str}`` of a torn
-    ``split_lexical_shard`` run, or None — the lexical twin of
-    ``similarity.pending_split``. Recovery = ``split_lexical_shard(
-    spark, path)`` with no shard argument; ``upsert_lexical_index``
-    auto-resumes it before applying a batch."""
-    import json
-    import os
-
-    pend = os.path.join(path, _LEX_SPLIT_PENDING)
-    if not fsutil.exists(pend):
-        return None
-    doc = json.loads(fsutil.read_text(pend))
-    return {"src": int(doc["src"]), "dst": int(doc["dst"]),
-            "salt": doc["salt"]}
 
 
 def split_lexical_shard(spark, path: str,
@@ -1186,277 +922,204 @@ def split_lexical_shard(spark, path: str,
     {src, dst} out, the doc's fresh shard set in). Per-span dl stats are
     untouched, so the descriptor's spans map carries over verbatim.
 
-    Crash contract (the IVF split's staged protocol, verbatim): the
-    re-placed rows, the positions twin, and the merged membership
-    spans are STAGED (``_split_staging/{postings,positions,docmeta}``)
-    and only then referenced by the intent manifest (shards, salt,
-    spans, counts, ``staging`` flag — written before any destructive
-    mutation), data dirs first, membership next, descriptor last,
-    manifest then staging deleted after. A torn split leaves moved
-    postings invisible to probes (the descriptor still routes their
-    terms to the src shard) — bounded recall loss, never wrong results
-    — until the idempotent resume, which rewrites FROM the snapshot:
-    never from shard dirs a torn per-partition overwrite may have
-    holed, and never by re-deriving placement over them (ADVICE r12's
-    window, closed for the incremental actions in r13).
-    ``upsert_lexical_index`` auto-resumes a pending split before
-    applying a batch, so CDC traffic cannot apply against ambiguous
-    placement. Salt selection walks a deterministic ladder in ONE
-    bounded aggregate and takes the first salt that actually separates
-    the shard's terms; a shard no salt can separate (a single hot term)
-    raises before the manifest exists instead of committing a useless
-    descriptor entry the load-factor policy would then stack forever.
-    Returns ``(src_shard, new_shard)``."""
-    import json
+    Crash contract (``operators/staged.py``): the re-placed rows, the
+    positions twin, and the merged membership spans are STAGED
+    (``_split_staging/{postings,positions,docmeta}``) with the new
+    descriptor computed, and only then does the intent manifest exist;
+    data dirs commit first, membership next, descriptor last. A torn
+    split leaves moved postings invisible to probes (the descriptor
+    still routes their terms to the src shard) — bounded recall loss,
+    never wrong results — until the next lexical action (or this call
+    with no shard) commits the manifest; ``upsert_lexical_index`` does so
+    before applying a batch, so CDC traffic cannot apply against
+    ambiguous placement. Salt selection walks a deterministic ladder in
+    ONE bounded aggregate and takes the first salt that actually
+    separates the shard's terms; a shard no salt can separate (a single
+    hot term) raises before the manifest exists instead of committing a
+    useless descriptor entry the load-factor policy would then stack
+    forever. Returns ``(src_shard, new_shard)``."""
     import os
 
     meta = read_lex_meta(path, spark)
-    # restore a torn STAGED upsert before reading any shard/span
-    # directory a torn per-partition overwrite may have holed (r13)
-    if _resume_lexical_upsert(spark, path):
-        meta = read_lex_meta(path, spark)
+    pending = staged.pending(path, _LEX_SPLIT_PENDING, spark)
+    if pending is not None and shard is not None \
+            and shard != int(pending["src"]):
+        raise ValueError(
+            f"split_lexical_shard: unfinished split of shard "
+            f"{pending['src']} pending at {path} — resume it "
+            f"(shard=None) before splitting another")
+    # a torn action (this split's own included) commits before any
+    # shard/span directory is read
+    meta = staged.finish_torn(spark, path, _LEX) or meta
+    if pending is not None:
+        return int(pending["src"]), int(pending["dst"])
     shards = int(meta["shards"])
     splits = list(meta.get("splits", []))
     has_positions = bool(meta.get("positions", False))
     dspan_w = int(meta.get("dspan", _LEX_DSPAN))
-    postings_path = os.path.join(path, "postings")
-    docmeta_path = os.path.join(path, "docmeta")
-    pend_path = os.path.join(path, _LEX_SPLIT_PENDING)
-
-    pending = None
-    if fsutil.exists(pend_path, spark=spark):
-        pending = json.loads(fsutil.read_text(pend_path, spark=spark))
-    if pending is None and fsutil.exists(
-            os.path.join(path, _LEX_MERGE_PENDING), spark=spark):
-        # finish a torn merge before splitting (only one manifest can
-        # exist at a time — each action resumes the other before writing
-        # its own — so this cannot recurse back here)
-        merge_lexical_shards(spark, path)
-        meta = read_lex_meta(path, spark)
-        shards = int(meta["shards"])
-        splits = list(meta.get("splits", []))
-        has_positions = bool(meta.get("positions", False))
-        dspan_w = int(meta.get("dspan", _LEX_DSPAN))
-    if pending is None and fsutil.exists(
-            os.path.join(path, _LEX_COMPACT_PENDING), spark=spark):
-        # a torn chain compaction leaves the whole placement ambiguous —
-        # finish it (pure-function placement, idempotent) before
-        # splitting anything
-        compact_lexical_index(spark, path)
-        meta = read_lex_meta(path, spark)
-        shards = int(meta["shards"])
-        splits = list(meta.get("splits", []))
-        has_positions = bool(meta.get("positions", False))
-        dspan_w = int(meta.get("dspan", _LEX_DSPAN))
     schemas = meta["schemas"]
+    postings_path = os.path.join(path, "postings")
     postings = fsutil.read_parquet_or_empty(
         spark, postings_path, schemas.get("postings"))
-    if pending is not None:
-        if shard is not None and shard != int(pending["src"]):
+    if shard is None:
+        top = (postings.groupBy("shard")
+               .agg(F.count(F.lit(1)).alias("n"))
+               .orderBy(F.col("n").desc(), F.col("shard")).first())
+        if top is None:
             raise ValueError(
-                f"split_lexical_shard: unfinished split of shard "
-                f"{pending['src']} pending at {path} — resume it "
-                f"(shard=None) before splitting another")
-        src, dst, salt = (int(pending["src"]), int(pending["dst"]),
-                          pending["salt"])
+                f"split_lexical_shard: postings at {postings_path} "
+                f"have no rows — an empty index has nothing to split")
+        src = int(top.shard)
     else:
-        if shard is None:
-            top = (postings.groupBy("shard")
-                   .agg(F.count(F.lit(1)).alias("n"))
-                   .orderBy(F.col("n").desc(), F.col("shard")).first())
-            if top is None:
-                raise ValueError(
-                    f"split_lexical_shard: postings at {postings_path} "
-                    f"have no rows — an empty index has nothing to split")
-            src = int(top.shard)
-        else:
-            live_ids = _live_shards(shards, splits)
-            if shard not in live_ids:
-                # validated BEFORE the manifest exists — a bogus id must
-                # not wedge the split machinery (the IVF split's rule)
-                raise ValueError(
-                    f"split_lexical_shard: shard {shard} is not a live "
-                    f"placement target of this index (base shards "
-                    f"0..{shards - 1} plus split destinations, minus "
-                    f"merged-away sources)")
-            src = int(shard)
-        dst = shards + len(splits)    # next free id, never reused
-        salt = None                   # chosen below, before the manifest
+        if shard not in _live_shards(shards, splits):
+            # validated BEFORE the manifest exists — a bogus id must
+            # not wedge the split machinery (the IVF split's rule)
+            raise ValueError(
+                f"split_lexical_shard: shard {shard} is not a live "
+                f"placement target of this index (base shards "
+                f"0..{shards - 1} plus split destinations, minus "
+                f"merged-away sources)")
+        src = int(shard)
+    dst = shards + len(splits)    # next free id, never reused
 
     staging = os.path.join(path, _LEX_SPLIT_STAGING)
-    if pending is not None:
-        # the manifest references a COMPLETE staged snapshot: resume by
-        # rewriting from it — never from shard dirs a torn
-        # per-partition overwrite may have holed, and never by
-        # re-deriving the re-placement over them
-        counts = {int(k): int(v) for k, v in pending["counts"].items()}
-        touched_spans = [int(s) for s in pending["spans"]]
-        live_post_names = pending["live_postings"]
-        live_pos_names = pending["live_positions"]
-        live_span_names = pending["live_docmeta"]
-    else:
-        # no manifest ⇒ every prior action fully committed ⇒ one row per
-        # (term, doc_id) by the placement invariant, so the split input
-        # needs no dedup. df rides along unchanged: terms move
-        # wholesale, so every term's posting count is
-        # placement-independent.
-        rows = postings.where(F.col("shard").isin([src, dst]))
-        # salt selection, ONE bounded aggregate: a shard holding
-        # few terms can land them all on one side of a given salted
-        # hash — a committed no-op split the load-factor policy
-        # would then stack forever. Try a deterministic salt ladder
-        # and take the first that actually separates; only a shard
-        # whose terms NEVER separate (single hot term) raises —
-        # before the manifest exists, so nothing is committed.
-        candidates = [f"lexsplit{dst}"] + [f"lexsplit{dst}#{i}"
-                                           for i in range(1, 8)]
-        movers = [F.sum((h60(F.concat(F.lit(c + "|"), F.col("term")))
-                         % 2).cast("long")).alias(f"m{i}")
-                  for i, c in enumerate(candidates)]
-        stat = (rows.select("term").distinct()
-                .agg(F.count(F.lit(1)).alias("nt"), *movers).first())
-        if int(stat.nt) == 0:
-            raise UnsplittablePartition(
-                f"split_lexical_shard: shard {src} holds no "
-                f"postings — nothing to split")
-        for i, c in enumerate(candidates):
-            if 0 < int(stat[f"m{i}"]) < int(stat.nt):
-                salt = c
-                break
-        if salt is None:
-            raise UnsplittablePartition(
-                f"split_lexical_shard: no salt separates the terms "
-                f"of shard {src} — every candidate moved them all "
-                f"to one side (a single hot term cannot be "
-                f"rebalanced by term movement; posting mass per "
-                f"TERM cannot be split without breaking the "
-                f"one-shard-per-term df invariant)")
-        moved = h60(F.concat(F.lit(salt + "|"), F.col("term"))) % 2 == 1
-        reassigned = fsutil.cluster_by_dir(
-            rows.withColumn(
-                "shard", F.when(moved, F.lit(dst)).otherwise(F.lit(src))
+    # no manifest ⇒ every prior action fully committed ⇒ one row per
+    # (term, doc_id) by the placement invariant, so the split input
+    # needs no dedup. df rides along unchanged: terms move wholesale, so
+    # every term's posting count is placement-independent.
+    rows = postings.where(F.col("shard").isin([src, dst]))
+    # salt selection, ONE bounded aggregate: a shard holding few terms
+    # can land them all on one side of a given salted hash — a
+    # committed no-op split the load-factor policy would then stack
+    # forever. Try a deterministic salt ladder and take the first that
+    # actually separates; only a shard whose terms NEVER separate
+    # (single hot term) raises — before the manifest exists, so nothing
+    # is committed.
+    candidates = [f"lexsplit{dst}"] + [f"lexsplit{dst}#{i}"
+                                       for i in range(1, 8)]
+    movers = [F.sum((h60(F.concat(F.lit(c + "|"), F.col("term")))
+                     % 2).cast("long")).alias(f"m{i}")
+              for i, c in enumerate(candidates)]
+    stat = (rows.select("term").distinct()
+            .agg(F.count(F.lit(1)).alias("nt"), *movers).first())
+    if int(stat.nt) == 0:
+        raise UnsplittablePartition(
+            f"split_lexical_shard: shard {src} holds no "
+            f"postings — nothing to split")
+    salt = next((c for i, c in enumerate(candidates)
+                 if 0 < int(stat[f"m{i}"]) < int(stat.nt)), None)
+    if salt is None:
+        raise UnsplittablePartition(
+            f"split_lexical_shard: no salt separates the terms "
+            f"of shard {src} — every candidate moved them all "
+            f"to one side (a single hot term cannot be "
+            f"rebalanced by term movement; posting mass per "
+            f"TERM cannot be split without breaking the "
+            f"one-shard-per-term df invariant)")
+    moved = h60(F.concat(F.lit(salt + "|"), F.col("term"))) % 2 == 1
+    reassigned = fsutil.cluster_by_dir(
+        rows.withColumn(
+            "shard", F.when(moved, F.lit(dst)).otherwise(F.lit(src))
+            .cast("int")),
+        "shard", "doc_id", 2)
+    # staged PARTITIONED so the commit promotes the directories by
+    # rename (the split's data is written exactly once — df rides in
+    # the staged rows, terms move wholesale)
+    (reassigned.write.mode("overwrite").partitionBy("shard")
+     .parquet(os.path.join(staging, "postings")))
+    # schema-pinned read-back (staged == live schema by the rename
+    # promotion contract) — no inference job
+    reassigned = fsutil.read_parquet_or_empty(
+        spark, os.path.join(staging, "postings"), schemas.get("postings"))
+    # ONE bounded aggregate feeds BOTH descriptor inputs: per-shard
+    # posting counts (keeps shard_rows exact for the two rewritten
+    # shards) AND the touched doc-span set — fewer jobs on the protocol
+    # path. Cardinality is 2 shards x O(spans) rows — driver-trivial.
+    shard_span_rows = (reassigned.groupBy(
+        "shard", F.expr(f"doc_id div {dspan_w}").alias("v"))
+        .agg(F.count(F.lit(1)).alias("n")).collect())
+    counts: dict[int, int] = {}
+    for r in shard_span_rows:
+        counts[int(r.shard)] = counts.get(int(r.shard), 0) + int(r.n)
+    if has_positions:
+        pos_in = (fsutil.read_parquet_or_empty(
+            spark, os.path.join(path, "positions"),
+            schemas.get("positions"))
+            .where(F.col("shard").isin([src, dst])))
+        (fsutil.cluster_by_dir(
+            pos_in.withColumn(
+                "shard",
+                F.when(moved, F.lit(dst)).otherwise(F.lit(src))
                 .cast("int")),
             "shard", "doc_id", 2)
-        # stage the snapshot (postings + positions twin + merged
-        # membership spans) BEFORE the manifest, the manifest BEFORE
-        # any destructive mutation — the retrain's protocol (ADVICE
-        # r12, extended to the incremental actions in r13); staged
-        # PARTITIONED so the commit promotes the directories by rename
-        # (the split's data is written exactly once — df rides in the
-        # staged rows, terms move wholesale), and the staged writes
-        # double as the old localCheckpoints' materialization barriers.
-        (reassigned.write.mode("overwrite").partitionBy("shard")
-         .parquet(os.path.join(staging, "postings")))
-        # schema-pinned read-back (staged == live schema by the rename
-        # promotion contract) — no inference job
-        reassigned = fsutil.read_parquet_or_empty(
-            spark, os.path.join(staging, "postings"),
-            schemas.get("postings"))
-        # ONE bounded aggregate feeds BOTH descriptor inputs: per-shard
-        # posting counts (keeps shard_rows exact for the two rewritten
-        # shards, ADVICE r10) AND the touched doc-span set — previously
-        # two jobs scanning the same staged table (r14, guide §1/§2:
-        # fewer jobs on the protocol path). Cardinality is 2 shards x
-        # O(spans) rows — driver-trivial.
-        shard_span_rows = (reassigned.groupBy(
-            "shard", F.expr(f"doc_id div {dspan_w}").alias("v"))
-            .agg(F.count(F.lit(1)).alias("n")).collect())
-        counts: dict[int, int] = {}
-        for r in shard_span_rows:
-            counts[int(r.shard)] = counts.get(int(r.shard), 0) + int(r.n)
-        if has_positions:
-            pos_in = (fsutil.read_parquet_or_empty(
-                spark, os.path.join(path, "positions"),
-                schemas.get("positions"))
-                .where(F.col("shard").isin([src, dst])))
-            (fsutil.cluster_by_dir(
-                pos_in.withColumn(
-                    "shard",
-                    F.when(moved, F.lit(dst)).otherwise(F.lit(src))
-                    .cast("int")),
-                "shard", "doc_id", 2)
-             .write.mode("overwrite").partitionBy("shard")
-             .parquet(os.path.join(staging, "positions")))
-        # membership recompute, state-based from the staged
-        # reassignment: only the spans holding the shard's documents;
-        # each touched doc's shards array drops {src, dst} and gains
-        # its fresh shard set
-        doc_sets = (reassigned.groupBy("doc_id")
-                    .agg(F.collect_set("shard").alias("fresh")))
-        touched_spans = sorted({int(r.v) for r in shard_span_rows})
-        if touched_spans:
-            docmeta = fsutil.read_parquet_or_empty(
-                spark, docmeta_path, schemas.get("docmeta"))
-            (fsutil.cluster_by_dir(
-                docmeta.where(F.col("dspan").isin(touched_spans))
-                .join(doc_sets, "doc_id", "left")
-                .select(
-                    "doc_id", "dl",
-                    F.when(
-                        F.col("fresh").isNotNull(),
-                        F.array_union(
-                            F.array_except(
-                                F.col("shards"),
-                                F.array(F.lit(src), F.lit(dst))
-                                .cast("array<int>")),
-                            F.col("fresh")))
-                    .otherwise(F.col("shards")).alias("shards"),
-                    "dspan"),
-                "dspan", "doc_id")
-             .write.mode("overwrite").partitionBy("dspan")
-             .parquet(os.path.join(staging, "docmeta")))
-        live_post_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "postings"), spark=spark)
-            if n.startswith("shard=")]
-        live_pos_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "positions"), spark=spark)
-            if n.startswith("shard=")] if has_positions else []
-        live_span_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "docmeta"), spark=spark)
-            if n.startswith("dspan=")] if touched_spans else []
-        fsutil.write_text(
-            pend_path,
-            json.dumps({"src": src, "dst": dst, "salt": salt,
-                        "spans": touched_spans,
-                        "counts": {str(k): int(v)
-                                   for k, v in counts.items()},
-                        "staging": True,
-                        "live_postings": live_post_names,
-                        "live_positions": live_pos_names,
-                        "live_docmeta": live_span_names}),
-            spark=spark)
-
-    # destructive phase, entirely from the staged snapshot: data (+
-    # positions twin) promotion with the emptied-dir sweep first,
-    # membership strictly after — the split never empties a span, so
-    # no span sweep
-    _lex_commit_staged(spark, path, staging, [src, dst], touched_spans,
-                       has_positions, live_pos_names, live_span_names,
-                       live_post_names=live_post_names)
-
-    # descriptor last; dl/span stats are untouched by design, so the
-    # whole meta carries over with just the split appended (idempotent:
-    # a resume after the descriptor committed must not append twice)
-    sp = {"src": src, "dst": dst, "salt": salt}
-    if sp not in splits:
-        splits.append(sp)
-    meta["splits"] = splits
-    # state-based refresh of the two rewritten shards' counts
+         .write.mode("overwrite").partitionBy("shard")
+         .parquet(os.path.join(staging, "positions")))
+    # membership recompute, state-based from the staged reassignment:
+    # only the spans holding the shard's documents; each touched doc's
+    # shards array drops {src, dst} and gains its fresh shard set
+    touched_spans = sorted({int(r.v) for r in shard_span_rows})
+    if touched_spans:
+        _stage_membership(spark, path, schemas, staging, reassigned,
+                          touched_spans, src, dst)
+    promote = [staged.entry(staging, "postings", "shard", [src, dst],
+                            spark)]
+    if has_positions:
+        promote.append(staged.entry(staging, "positions", "shard",
+                                    [src, dst], spark))
+    if touched_spans:
+        # the split never empties a span, so no span sweep
+        promote.append(staged.entry(staging, "docmeta", "dspan", (),
+                                    spark))
+    # descriptor: dl/span stats are untouched by design, so the meta
+    # carries over with the split appended and the two rewritten shards'
+    # counts refreshed
+    shard_rows = dict(meta["shard_rows"])
     for s in (src, dst):
         if counts.get(s):
-            meta["shard_rows"][str(s)] = counts[s]
+            shard_rows[str(s)] = counts[s]
         else:
-            meta["shard_rows"].pop(str(s), None)
-    fsutil.write_text(os.path.join(path, _LEX_META), json.dumps(meta),
-                      spark=spark)
-    fsutil.delete(pend_path, spark=spark)
-    fsutil.delete(staging, spark=spark)
+            shard_rows.pop(str(s), None)
+    staged.run(spark, path, _LEX, _LEX_SPLIT_PENDING, {
+        "promote": promote,
+        "descriptor": dict(
+            meta, splits=splits + [{"src": src, "dst": dst, "salt": salt}],
+            shard_rows=shard_rows),
+        "src": src, "dst": dst, "salt": salt,
+        "counts": {str(k): v for k, v in counts.items()}})
     return src, dst
 
 
-_LEX_MERGE_PENDING = "_lex_merge_pending.json"   # shard-merge intent
-_LEX_COMPACT_PENDING = "_lex_compact_pending.json"   # chain-compaction intent
-_LEX_COMPACT_STAGING = "_compact_staging"   # staged re-homed snapshots
+def _stage_membership(spark, path: str, schemas: dict, staging: str,
+                      moved_rows: DataFrame, spans: list[int], src: int,
+                      dst: int) -> None:
+    """Stage the docmeta spans holding ``moved_rows``' documents with
+    their membership recomputed state-based (split and merge): each
+    moved doc's shards array drops {src, dst} and gains the shards its
+    rows now live in."""
+    import os
+
+    doc_sets = (moved_rows.groupBy("doc_id")
+                .agg(F.collect_set("shard").alias("fresh")))
+    docmeta = fsutil.read_parquet_or_empty(
+        spark, os.path.join(path, "docmeta"), schemas.get("docmeta"))
+    (fsutil.cluster_by_dir(
+        docmeta.where(F.col("dspan").isin(spans))
+        .join(doc_sets, "doc_id", "left")
+        .select(
+            "doc_id", "dl",
+            F.when(
+                F.col("fresh").isNotNull(),
+                F.array_union(
+                    F.array_except(
+                        F.col("shards"),
+                        F.array(F.lit(src), F.lit(dst))
+                        .cast("array<int>")),
+                    F.col("fresh")))
+            .otherwise(F.col("shards")).alias("shards"),
+            "dspan"),
+        "dspan", "doc_id")
+     .write.mode("overwrite").partitionBy("dspan")
+     .parquet(os.path.join(staging, "docmeta")))
 
 
 def compact_lexical_index(spark, path: str,
@@ -1492,78 +1155,45 @@ def compact_lexical_index(spark, path: str,
     No-op guard: with no explicit target, an empty chain IS base
     placement — returns None without touching the index.
 
-    Crash contract: the re-homed rows are STAGED
-    (``_compact_staging/{postings,positions,docmeta}`` parquet,
-    complete re-placed snapshots — the recomputed membership included,
-    r13: the docmeta overwrite has the same per-partition tear as the
-    data dirs, and a resume recomputing membership from a holed live
-    span would lose its docs' dl forever) and only then referenced by
-    the intent manifest (shard count + staging flag), BEFORE any
-    destructive mutation. The dynamic shard overwrite commits per-partition
-    (delete old dir, then rename staged dir, in a driver loop) — a
-    crash between one shard's delete and rename would otherwise drop
-    its postings permanently and the union-of-dirs resume would re-home
-    WITHOUT them (ADVICE r12); the staged snapshot is what the resume
-    promotes from instead. Data first (postings, then positions),
-    membership next, descriptor last, manifest then staging deleted
-    after. A resume of a run torn AFTER the descriptor commit redoes the
-    promotions but does NOT re-bump the ``compactions`` counter
-    (descriptor already reflects the target). An orphaned staging dir is
-    inert (overwritten by the next compaction).
-    ``upsert_lexical_index`` / ``split_lexical_shard`` /
-    ``merge_lexical_shards`` auto-resume a pending compaction before
-    mutating (the descriptor still routes terms through the old chain
-    while the data has partially moved).
-    Returns the new shard count, or None for the no-op."""
-    import json
+    Crash contract (``operators/staged.py``): the re-homed rows are
+    STAGED (``_compact_staging/{postings,positions,docmeta}``, complete
+    re-placed snapshots — the recomputed membership included, so a
+    commit torn inside the docmeta promotion can never lose a span's dl)
+    with the new descriptor computed, and only then does the intent
+    manifest exist. Data first (postings, then positions), membership
+    next, descriptor last; every pre-compaction shard dir not promoted
+    disappears. A torn compaction is committed by the next lexical
+    action (or this call with no target) from the manifest, so it
+    writes the same descriptor — ``compactions`` counts the compaction
+    once. An orphaned staging dir is inert (overwritten by the next
+    compaction, reaped by the no-op). Returns the new shard count, or
+    None for the no-op."""
     import os
 
     meta = read_lex_meta(path, spark)
-    pend_path = os.path.join(path, _LEX_COMPACT_PENDING)
-    pending = None
-    if fsutil.exists(pend_path, spark=spark):
-        pending = json.loads(fsutil.read_text(pend_path, spark=spark))
-    if pending is None:
-        # finish any torn incremental action first (each O(shards
-        # touched), idempotent); only one manifest can exist at a time —
-        # every action resumes the others before writing its own. The
-        # staged upsert restore runs FIRST: the compaction reads every
-        # shard directory, and a torn upsert overwrite may have holed
-        # one (r13).
-        if _resume_lexical_upsert(spark, path):
-            meta = read_lex_meta(path, spark)
-        if fsutil.exists(os.path.join(path, _LEX_SPLIT_PENDING),
-                         spark=spark):
-            split_lexical_shard(spark, path)
-            meta = read_lex_meta(path, spark)
-        if fsutil.exists(os.path.join(path, _LEX_MERGE_PENDING),
-                         spark=spark):
-            merge_lexical_shards(spark, path)
-            meta = read_lex_meta(path, spark)
+    pending = staged.pending(path, _LEX_COMPACT_PENDING, spark)
+    if pending is not None and shards is not None \
+            and int(shards) != int(pending["shards"]):
+        raise ValueError(
+            f"compact_lexical_index: unfinished compaction to "
+            f"{pending['shards']} shards pending at {path} — resume "
+            f"it (shards=None) before compacting to another target")
+    # a torn action commits first: the compaction reads every shard
+    # directory, which a torn commit may have holed
+    meta = staged.finish_torn(spark, path, _LEX) or meta
+    if pending is not None:
+        return int(pending["shards"])
     cur_shards = int(meta["shards"])
     splits = list(meta.get("splits", []))
-    if pending is None and not splits and shards is None:
+    if not splits and shards is None:
         # base placement already: no-op — but reap orphaned staging
         # snapshots (crash between manifest delete and staging delete;
-        # the incremental actions' orphans are bounded and also
-        # overwritten by their next run — the rebuild is the natural GC
-        # point, and every pending manifest was restored/resumed at
-        # entry so nothing references these dirs here)
-        for p in (os.path.join(path, _LEX_COMPACT_STAGING),
-                  os.path.join(path, _LEX_UPSERT_STAGING),
-                  os.path.join(path, _LEX_SPLIT_STAGING),
-                  os.path.join(path, _LEX_MERGE_STAGING)):
-            if fsutil.exists(p, spark=spark):
-                fsutil.delete(p, spark=spark)
+        # the rebuild is the natural GC point, and the torn manifest, if
+        # any, was committed above, so nothing references these dirs)
+        for d in _LEX.actions.values():
+            fsutil.delete(os.path.join(path, d), spark=spark)
         return None
-    if pending is not None:
-        if shards is not None and int(shards) != int(pending["shards"]):
-            raise ValueError(
-                f"compact_lexical_index: unfinished compaction to "
-                f"{pending['shards']} shards pending at {path} — resume "
-                f"it (shards=None) before compacting to another target")
-        k = int(pending["shards"])
-    elif shards is not None:
+    if shards is not None:
         if int(shards) < 1:
             raise ValueError("compact_lexical_index: shards must be >= 1")
         k = int(shards)
@@ -1571,174 +1201,93 @@ def compact_lexical_index(spark, path: str,
         k = len(_live_shards(cur_shards, splits))
     has_positions = bool(meta.get("positions", False))
     schemas = meta["schemas"]
-    postings_path = os.path.join(path, "postings")
-    docmeta_path = os.path.join(path, "docmeta")
 
-    old_live = _live_shards(cur_shards, splits) | set(range(k))
     staging = os.path.join(path, _LEX_COMPACT_STAGING)
-    if pending is not None:
-        # the manifest references COMPLETE staged snapshots: resume by
-        # promoting them — never from shard dirs a torn commit may have
-        # holed (ADVICE r12) — with the manifest's counts
-        live_shards = pending["live_shards"]
-        live_pos_shards = pending["live_pos_shards"]
-        live_spans = pending["live_spans"]
-        counts = {int(kk): int(v) for kk, v in pending["counts"].items()}
-    else:
-        # no manifest ⇒ every action fully committed ⇒ one row per
-        # (term, doc_id) by the placement invariant — no dedup shuffle
-        rows = fsutil.read_parquet_or_empty(spark, postings_path,
-                                            schemas.get("postings"))
-        # stage the re-homed snapshots BEFORE any destructive mutation
-        # (also the materialization barrier the old localCheckpoint
-        # provided); the manifest is written strictly AFTER every
-        # staging write returns, so manifest ⇒ staging complete. The
-        # positions re-home is independent of the postings staging, and
-        # the counts + membership stages only need the STAGED postings
-        # — so positions overlaps the postings write, and counts +
-        # docmeta overlap each other after it (three scheduler threads,
-        # same commit order as the serial code).
-        from concurrent.futures import ThreadPoolExecutor
+    # no manifest ⇒ every action fully committed ⇒ one row per (term,
+    # doc_id) by the placement invariant — no dedup shuffle
+    rows = fsutil.read_parquet_or_empty(
+        spark, os.path.join(path, "postings"), schemas.get("postings"))
+    # the positions re-home is independent of the postings staging, and
+    # the counts + membership stages only need the STAGED postings — so
+    # positions overlaps the postings write, and counts + docmeta
+    # overlap each other after it (three scheduler threads)
+    from concurrent.futures import ThreadPoolExecutor
 
-        def _stage_positions():
-            if not has_positions:
-                return
-            (fsutil.cluster_by_dir(
-                fsutil.read_parquet_or_empty(
-                    spark, os.path.join(path, "positions"),
-                    schemas.get("positions"))
-                .withColumn("shard", (h60(F.col("term")) % k).cast("int")),
-                "shard", "doc_id", k)
-             .write.mode("overwrite").partitionBy("shard")
-             .parquet(os.path.join(staging, "positions")))
+    def _stage_positions():
+        if not has_positions:
+            return
+        (fsutil.cluster_by_dir(
+            fsutil.read_parquet_or_empty(
+                spark, os.path.join(path, "positions"),
+                schemas.get("positions"))
+            .withColumn("shard", (h60(F.col("term")) % k).cast("int")),
+            "shard", "doc_id", k)
+         .write.mode("overwrite").partitionBy("shard")
+         .parquet(os.path.join(staging, "positions")))
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            pos_fut = pool.submit(_stage_positions)
-            (fsutil.cluster_by_dir(
-                rows.withColumn("shard", (h60(F.col("term")) % k)
-                                .cast("int")),
-                "shard", "doc_id", k)
-             .write.mode("overwrite").partitionBy("shard")
-             .parquet(os.path.join(staging, "postings")))
-            reassigned = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "postings"),
-                schemas.get("postings"))
-            # per-shard counts for the descriptor's shard_rows reseed —
-            # carried in the manifest so a promote-resume (whose
-            # renames consume the staged dirs) never needs to re-read
-            counts_fut = pool.submit(
-                lambda: {int(r.shard): int(r.n) for r in
-                         reassigned.groupBy("shard")
-                         .agg(F.count(F.lit(1)).alias("n")).collect()})
-            # membership recompute staged too (r13): the docmeta
-            # dynamic overwrite has the same per-partition tear as the
-            # data dirs — this recompute reads the LIVE docmeta, so a
-            # resume after a torn docmeta overwrite would read a holed
-            # span and lose its docs' dl/membership forever; from the
-            # snapshot it cannot
-            (fsutil.cluster_by_dir(
-                fsutil.read_parquet_or_empty(spark, docmeta_path,
-                                             schemas.get("docmeta"))
-                .join(reassigned.groupBy("doc_id")
-                      .agg(F.collect_set("shard").alias("fresh")),
-                      "doc_id", "left")
-                .select("doc_id", "dl",
-                        F.coalesce("fresh",
-                                   F.array().cast("array<int>"))
-                         .alias("shards"),
-                        "dspan"),
-                "dspan", "doc_id")
-             .write.mode("overwrite").partitionBy("dspan")
-             .parquet(os.path.join(staging, "docmeta")))
-            pos_fut.result()
-            counts = counts_fut.result()
-        live_shards = [n for n in fsutil.list_names(
-            os.path.join(staging, "postings"), spark=spark)
-            if n.startswith("shard=")]
-        live_pos_shards = [n for n in fsutil.list_names(
-            os.path.join(staging, "positions"), spark=spark)
-            if n.startswith("shard=")] if has_positions else []
-        live_spans = [n for n in fsutil.list_names(
-            os.path.join(staging, "docmeta"), spark=spark)
-            if n.startswith("dspan=")]
-        fsutil.write_text(
-            pend_path,
-            json.dumps({"shards": k, "staging": True,
-                        "counts": {str(kk): v
-                                   for kk, v in counts.items()},
-                        "live_shards": live_shards,
-                        "live_pos_shards": live_pos_shards,
-                        "live_spans": live_spans}),
-            spark=spark)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        pos_fut = pool.submit(_stage_positions)
+        (fsutil.cluster_by_dir(
+            rows.withColumn("shard", (h60(F.col("term")) % k)
+                            .cast("int")),
+            "shard", "doc_id", k)
+         .write.mode("overwrite").partitionBy("shard")
+         .parquet(os.path.join(staging, "postings")))
+        reassigned = fsutil.read_parquet_or_empty(
+            spark, os.path.join(staging, "postings"),
+            schemas.get("postings"))
+        # per-shard counts reseed the descriptor's shard_rows
+        counts_fut = pool.submit(
+            lambda: {int(r.shard): int(r.n) for r in
+                     reassigned.groupBy("shard")
+                     .agg(F.count(F.lit(1)).alias("n")).collect()})
+        # membership recompute staged too: it reads the LIVE docmeta,
+        # so recomputing it after a torn docmeta promotion would read a
+        # holed span and lose its docs' dl/membership forever
+        (fsutil.cluster_by_dir(
+            fsutil.read_parquet_or_empty(
+                spark, os.path.join(path, "docmeta"),
+                schemas.get("docmeta"))
+            .join(reassigned.groupBy("doc_id")
+                  .agg(F.collect_set("shard").alias("fresh")),
+                  "doc_id", "left")
+            .select("doc_id", "dl",
+                    F.coalesce("fresh",
+                               F.array().cast("array<int>"))
+                     .alias("shards"),
+                    "dspan"),
+            "dspan", "doc_id")
+         .write.mode("overwrite").partitionBy("dspan")
+         .parquet(os.path.join(staging, "docmeta")))
+        pos_fut.result()
+        counts = counts_fut.result()
 
-    # destructive phase by pure directory promotion: the re-homed index
-    # is written exactly once; every pre-compaction shard dir not
-    # promoted disappears. The docmeta snapshot covers every doc, so
-    # all its spans promote with no deletes.
-    fsutil.promote_dirs(os.path.join(staging, "postings"), postings_path,
-                        "shard", old_live, live_shards, spark=spark)
+    # pure directory promotion: the re-homed index is written exactly
+    # once; every pre-compaction shard dir not promoted disappears. The
+    # docmeta snapshot covers every doc, so all its spans promote with
+    # no deletes.
+    old_live = _live_shards(cur_shards, splits) | set(range(k))
+    promote = [staged.entry(staging, "postings", "shard", old_live, spark)]
     if has_positions:
-        fsutil.promote_dirs(os.path.join(staging, "positions"),
-                            os.path.join(path, "positions"), "shard",
-                            old_live, live_pos_shards, spark=spark)
-    fsutil.promote_dirs(os.path.join(staging, "docmeta"), docmeta_path,
-                        "dspan", [], live_spans, spark=spark)
-
-    # descriptor last: fresh geometry, empty chain, reseeded shard_rows.
-    # A resume of a run torn AFTER the descriptor commit must not
-    # re-bump the counter (ADVICE r12): the descriptor already at the
-    # target geometry with an empty chain is exactly that case.
-    already_committed = (pending is not None
-                         and int(meta.get("shards", -1)) == k
-                         and not splits)
-    meta2 = dict(meta)
-    meta2.update({"shards": k, "splits": [],
-                  "shard_rows": {str(s): n for s, n in counts.items()
-                                 if n > 0},
-                  "compactions": int(meta.get("compactions", 0))
-                  + (0 if already_committed else 1)})
-    fsutil.write_text(os.path.join(path, _LEX_META), json.dumps(meta2),
-                      spark=spark)
-    fsutil.delete(pend_path, spark=spark)
-    fsutil.delete(staging, spark=spark)
+        promote.append(staged.entry(staging, "positions", "shard",
+                                    old_live, spark))
+    promote.append(staged.entry(staging, "docmeta", "dspan", (), spark))
+    staged.run(spark, path, _LEX, _LEX_COMPACT_PENDING, {
+        "promote": promote,
+        "descriptor": dict(
+            meta, shards=k, splits=[],
+            shard_rows={str(s): n for s, n in counts.items() if n > 0},
+            compactions=int(meta.get("compactions", 0)) + 1),
+        "shards": k, "counts": {str(s): n for s, n in counts.items()}})
     return k
-
-
-def pending_lexical_compact(path: str) -> dict | None:
-    """``{"shards": int}`` of a torn ``compact_lexical_index`` run, or
-    None. Recovery = ``compact_lexical_index(spark, path)`` (placement
-    is a pure function, so the resume just re-runs); upsert/split/merge
-    auto-resume it before mutating."""
-    import json
-    import os
-
-    pend = os.path.join(path, _LEX_COMPACT_PENDING)
-    if not fsutil.exists(pend):
-        return None
-    doc = json.loads(fsutil.read_text(pend))
-    return {"shards": int(doc["shards"])}
-
-
-def pending_lexical_merge(path: str) -> dict | None:
-    """``{"src": int, "dst": int}`` of a torn ``merge_lexical_shards``
-    run, or None. Recovery = ``merge_lexical_shards(spark, path)`` with
-    no arguments; the upsert and the split auto-resume it."""
-    import json
-    import os
-
-    pend = os.path.join(path, _LEX_MERGE_PENDING)
-    if not fsutil.exists(pend):
-        return None
-    doc = json.loads(fsutil.read_text(pend))
-    return {"src": int(doc["src"]), "dst": int(doc["dst"])}
 
 
 def merge_lexical_shards(spark, path: str, src: int | None = None,
                          dst: int | None = None) -> tuple[int, int]:
     """Merge one sparse term shard into another IN PLACE — the inverse
-    of ``split_lexical_shard`` and the lexical half of the merge policy
-    (r10 verdict #3): after a delete-heavy window the load-factor
-    machinery could only fragment; sparse shards accumulated until a
+    of ``split_lexical_shard`` and the lexical half of the merge policy:
+    without it, after a delete-heavy window the load-factor machinery
+    could only fragment, and sparse shards would accumulate until a
     full rebuild. The merge moves BOTH shards' terms wholesale to
     ``dst`` and records the move as a chain entry with ``salt`` None —
     the degenerate split — so term placement stays a pure function of
@@ -1755,209 +1304,123 @@ def merge_lexical_shards(spark, path: str, src: int | None = None,
     Cost: O(two shard directories) — rewrite + positions twin + a
     membership rewrite of only the spans holding the merged docs.
 
-    Crash contract (the split's staged protocol, verbatim): the merged
+    Crash contract (``operators/staged.py``, as the split): the merged
     dst content, the positions twin, and the merged membership spans
-    are STAGED (``_merge_staging/{postings,positions,docmeta}``) and
-    only then referenced by the intent manifest (src/dst, spans, the
-    authoritative row total, ``staging`` flag — before any destructive
-    mutation), data dirs first (dst rewrite from the snapshot, then the
-    src delete), membership next, descriptor last, manifest then
-    staging deleted after. The resume rewrites FROM the snapshot —
-    never from shard dirs a torn per-partition overwrite may have
-    holed (ADVICE r12's window, closed for the incremental actions in
-    r13); ``upsert_lexical_index`` auto-resumes a pending merge before
-    applying a batch. Returns ``(src, dst)``."""
-    import json
+    are STAGED (``_merge_staging/{postings,positions,docmeta}``) with
+    the new descriptor computed, and only then does the intent manifest
+    exist; data dirs first (dst promoted, src deleted), membership
+    next, descriptor last. ``upsert_lexical_index`` commits a torn merge
+    before applying a batch. Returns ``(src, dst)``."""
     import os
 
     meta = read_lex_meta(path, spark)
-    # restore a torn STAGED upsert before reading any shard/span
-    # directory a torn per-partition overwrite may have holed (r13)
-    if _resume_lexical_upsert(spark, path):
-        meta = read_lex_meta(path, spark)
-    if fsutil.exists(os.path.join(path, _LEX_SPLIT_PENDING), spark=spark):
-        # ambiguous placement: finish the torn split first (idempotent,
-        # O(shard)); only one manifest can exist at a time, so this
-        # cannot recurse
-        split_lexical_shard(spark, path)
-        meta = read_lex_meta(path, spark)
-    if fsutil.exists(os.path.join(path, _LEX_COMPACT_PENDING),
-                     spark=spark):
-        # a torn chain compaction leaves the whole placement ambiguous —
-        # finish it (pure-function placement, idempotent) before merging
-        compact_lexical_index(spark, path)
-        meta = read_lex_meta(path, spark)
+    pending = staged.pending(path, _LEX_MERGE_PENDING, spark)
+    if pending is not None and src is not None \
+            and src != int(pending["src"]):
+        raise ValueError(
+            f"merge_lexical_shards: unfinished merge of shard "
+            f"{pending['src']} pending at {path} — resume it "
+            f"(src=None) before merging another")
+    # a torn action (this merge's own included) commits before any
+    # shard/span directory is read
+    meta = staged.finish_torn(spark, path, _LEX) or meta
+    if pending is not None:
+        return int(pending["src"]), int(pending["dst"])
     shards = int(meta["shards"])
     splits = list(meta.get("splits", []))
     has_positions = bool(meta.get("positions", False))
     dspan_w = int(meta.get("dspan", _LEX_DSPAN))
-    postings_path = os.path.join(path, "postings")
-    docmeta_path = os.path.join(path, "docmeta")
-    pend_path = os.path.join(path, _LEX_MERGE_PENDING)
-
     schemas = meta["schemas"]
-    pending = None
-    if fsutil.exists(pend_path, spark=spark):
-        pending = json.loads(fsutil.read_text(pend_path, spark=spark))
-    if pending is not None:
-        if src is not None and src != int(pending["src"]):
-            raise ValueError(
-                f"merge_lexical_shards: unfinished merge of shard "
-                f"{pending['src']} pending at {path} — resume it "
-                f"(src=None) before merging another")
-        src, dst = int(pending["src"]), int(pending["dst"])
-    else:
-        live = _live_shards(shards, splits)
-        if len(live) <= 2:
-            raise UnsplittablePartition(
-                f"merge_lexical_shards: index at {path} has {len(live)} "
-                f"live shards — merging would leave fewer than 2")
-        if src is None:
-            counts = {c: 0 for c in live}
-            counts.update({int(k): int(v)
-                           for k, v in meta["shard_rows"].items()
-                           if int(k) in live})
-            a, b = sorted(live, key=lambda c: (counts[c], c))[:2]
-            if (counts[a], -a) >= (counts[b], -b):
-                src, dst = b, a
-            else:
-                src, dst = a, b
+    live = _live_shards(shards, splits)
+    if len(live) <= 2:
+        raise UnsplittablePartition(
+            f"merge_lexical_shards: index at {path} has {len(live)} "
+            f"live shards — merging would leave fewer than 2")
+    if src is None:
+        counts = {c: 0 for c in live}
+        counts.update({int(k): int(v)
+                       for k, v in meta["shard_rows"].items()
+                       if int(k) in live})
+        a, b = sorted(live, key=lambda c: (counts[c], c))[:2]
+        if (counts[a], -a) >= (counts[b], -b):
+            src, dst = b, a
         else:
-            if dst is None:
+            src, dst = a, b
+    else:
+        if dst is None:
+            raise ValueError("merge_lexical_shards: src given without dst")
+        for name, c in (("src", src), ("dst", dst)):
+            if c not in live:
                 raise ValueError(
-                    "merge_lexical_shards: src given without dst")
-            for name, c in (("src", src), ("dst", dst)):
-                if c not in live:
-                    raise ValueError(
-                        f"merge_lexical_shards: {name} shard {c} is not "
-                        f"a live placement target of the index at {path}")
-            if src == dst:
-                raise ValueError("merge_lexical_shards: src == dst")
+                    f"merge_lexical_shards: {name} shard {c} is not "
+                    f"a live placement target of the index at {path}")
+        if src == dst:
+            raise ValueError("merge_lexical_shards: src == dst")
 
     staging = os.path.join(path, _LEX_MERGE_STAGING)
-    if pending is not None:
-        # the manifest references a COMPLETE staged snapshot: resume by
-        # rewriting from it — never from shard dirs a torn
-        # per-partition overwrite may have holed
-        touched_spans = [int(s) for s in pending["spans"]]
-        total = int(pending.get("total", 0))
-        live_post_names = pending["live_postings"]
-        live_pos_names = pending["live_positions"]
-        live_span_names = pending["live_docmeta"]
-    else:
-        # fresh merge: src/dst are distinct shards of a fully committed
-        # index, so (term, doc_id) is already unique across their union
-        rows = (fsutil.read_parquet_or_empty(
-                    spark, postings_path, schemas.get("postings"))
-                .where(F.col("shard").isin([src, dst]))
-                .withColumn("shard", F.lit(int(dst)).cast("int")))
-        # stage the snapshot (postings + positions twin + merged
-        # membership spans) BEFORE the manifest, the manifest BEFORE
-        # any destructive mutation — the retrain's protocol (ADVICE
-        # r12, extended to the incremental actions in r13); staged
-        # PARTITIONED so the commit promotes by rename (ONE evaluation
-        # of the union plan, one write — no isEmpty pre-pass), doubling
-        # as the old localCheckpoints' barriers. Both shards empty (a
-        # delete wave swept them) falls out of the staged listing: no
-        # shard dir written ⇒ descriptor-only merge.
-        (fsutil.cluster_by_dir(rows, "shard", "doc_id", 2)
-         .write.mode("overwrite").partitionBy("shard")
-         .parquet(os.path.join(staging, "postings")))
-        live_post_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "postings"), spark=spark)
-            if n.startswith("shard=")]
-        total = 0
-        touched_spans: list[int] = []
-        live_pos_names: list = []
-        live_span_names: list = []
-        if live_post_names:
-            rows = fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "postings"),
+    # src/dst are distinct shards of a fully committed index, so (term,
+    # doc_id) is already unique across their union
+    rows = (fsutil.read_parquet_or_empty(
+                spark, os.path.join(path, "postings"),
                 schemas.get("postings"))
-            # ONE bounded aggregate over the staged blocks feeds BOTH
-            # descriptor inputs: the authoritative union total for
-            # shard_rows (resume-proof, unlike summing pre-merge
-            # descriptor counts) AND the touched doc-span set — the two
-            # separate jobs (count + distinct-spans collect) scanned the
-            # same staged table twice (r14, guide §1/§2: fewer jobs on
-            # the protocol path)
-            span_rows = (rows.groupBy(
-                F.expr(f"doc_id div {dspan_w}").alias("v"))
-                .agg(F.count(F.lit(1)).alias("n")).collect())
-            total = sum(int(r.n) for r in span_rows)
-            if has_positions:
-                pos_in = (fsutil.read_parquet_or_empty(
-                    spark, os.path.join(path, "positions"),
-                    schemas.get("positions"))
-                    .where(F.col("shard").isin([src, dst])))
-                (fsutil.cluster_by_dir(
-                    pos_in.withColumn("shard",
-                                      F.lit(int(dst)).cast("int")),
-                    "shard", "doc_id", 2)
-                 .write.mode("overwrite").partitionBy("shard")
-                 .parquet(os.path.join(staging, "positions")))
-                live_pos_names = [n for n in fsutil.list_names(
-                    os.path.join(staging, "positions"), spark=spark)
-                    if n.startswith("shard=")]
-            # membership recompute, state-based from the staged rows —
-            # each merged doc's shards array drops {src, dst} and gains
-            # {dst} (the split's recompute verbatim)
-            doc_sets = (rows.groupBy("doc_id")
-                        .agg(F.collect_set("shard").alias("fresh")))
-            touched_spans = sorted({int(r.v) for r in span_rows})
-            if touched_spans:
-                docmeta = fsutil.read_parquet_or_empty(
-                    spark, docmeta_path, schemas.get("docmeta"))
-                (fsutil.cluster_by_dir(
-                    docmeta.where(F.col("dspan").isin(touched_spans))
-                    .join(doc_sets, "doc_id", "left")
-                    .select(
-                        "doc_id", "dl",
-                        F.when(
-                            F.col("fresh").isNotNull(),
-                            F.array_union(
-                                F.array_except(
-                                    F.col("shards"),
-                                    F.array(F.lit(src), F.lit(dst))
-                                    .cast("array<int>")),
-                                F.col("fresh")))
-                        .otherwise(F.col("shards")).alias("shards"),
-                        "dspan"),
-                    "dspan", "doc_id")
-                 .write.mode("overwrite").partitionBy("dspan")
-                 .parquet(os.path.join(staging, "docmeta")))
-                live_span_names = [n for n in fsutil.list_names(
-                    os.path.join(staging, "docmeta"), spark=spark)
-                    if n.startswith("dspan=")]
-        fsutil.write_text(
-            pend_path,
-            json.dumps({"src": src, "dst": dst, "spans": touched_spans,
-                        "total": total, "staging": True,
-                        "live_postings": live_post_names,
-                        "live_positions": live_pos_names,
-                        "live_docmeta": live_span_names}),
-            spark=spark)
-
-    # destructive phase, entirely from the staged snapshot: the
-    # touched-minus-live sweep deletes src always and dst when the
-    # merge was empty; membership strictly after the data
-    _lex_commit_staged(spark, path, staging, [src, dst], touched_spans,
-                       has_positions, live_pos_names, live_span_names,
-                       live_post_names=live_post_names)
-
-    # descriptor last (idempotent on resume: set/chain semantics)
-    entry = {"src": int(src), "dst": int(dst), "salt": None}
-    if entry not in splits:
-        splits.append(entry)
-    meta["splits"] = splits
-    meta["shard_rows"].pop(str(src), None)
-    meta["shard_rows"].pop(str(dst), None)
+            .where(F.col("shard").isin([src, dst]))
+            .withColumn("shard", F.lit(int(dst)).cast("int")))
+    # staged PARTITIONED so the commit promotes by rename (ONE
+    # evaluation of the union plan, one write — no isEmpty pre-pass).
+    # Both shards empty (a delete wave swept them) falls out of the
+    # staged listing: no shard dir written ⇒ descriptor-only merge.
+    (fsutil.cluster_by_dir(rows, "shard", "doc_id", 2)
+     .write.mode("overwrite").partitionBy("shard")
+     .parquet(os.path.join(staging, "postings")))
+    promote = [staged.entry(staging, "postings", "shard", [src, dst],
+                            spark)]
+    total = 0
+    if promote[0]["live"]:
+        rows = fsutil.read_parquet_or_empty(
+            spark, os.path.join(staging, "postings"),
+            schemas.get("postings"))
+        # ONE bounded aggregate over the staged blocks feeds BOTH
+        # descriptor inputs: the union's row total for shard_rows and
+        # the touched doc-span set
+        span_rows = (rows.groupBy(
+            F.expr(f"doc_id div {dspan_w}").alias("v"))
+            .agg(F.count(F.lit(1)).alias("n")).collect())
+        total = sum(int(r.n) for r in span_rows)
+        if has_positions:
+            pos_in = (fsutil.read_parquet_or_empty(
+                spark, os.path.join(path, "positions"),
+                schemas.get("positions"))
+                .where(F.col("shard").isin([src, dst])))
+            (fsutil.cluster_by_dir(
+                pos_in.withColumn("shard", F.lit(int(dst)).cast("int")),
+                "shard", "doc_id", 2)
+             .write.mode("overwrite").partitionBy("shard")
+             .parquet(os.path.join(staging, "positions")))
+            promote.append(staged.entry(staging, "positions", "shard",
+                                        [src, dst], spark))
+        touched_spans = sorted({int(r.v) for r in span_rows})
+        if touched_spans:
+            _stage_membership(spark, path, schemas, staging, rows,
+                              touched_spans, src, dst)
+            # the merge never empties a span, so no span sweep
+            promote.append(staged.entry(staging, "docmeta", "dspan", (),
+                                        spark))
+    elif has_positions:
+        # both shards empty: their positions dirs go too
+        promote.append({"dir": "positions", "key": "shard",
+                        "touched": [src, dst], "live": []})
+    shard_rows = dict(meta["shard_rows"])
+    shard_rows.pop(str(src), None)
+    shard_rows.pop(str(dst), None)
     if total:
-        meta["shard_rows"][str(dst)] = int(total)
-    fsutil.write_text(os.path.join(path, _LEX_META), json.dumps(meta),
-                      spark=spark)
-    fsutil.delete(pend_path, spark=spark)
-    fsutil.delete(staging, spark=spark)
+        shard_rows[str(dst)] = int(total)
+    staged.run(spark, path, _LEX, _LEX_MERGE_PENDING, {
+        "promote": promote,
+        "descriptor": dict(
+            meta, splits=splits + [{"src": int(src), "dst": int(dst),
+                                    "salt": None}],
+            shard_rows=shard_rows),
+        "src": int(src), "dst": int(dst)})
     return int(src), int(dst)
 
 
@@ -2023,8 +1486,8 @@ def phrase_match_indexed(spark, path: str, phrase: list[str],
     expected-position) equi-joins) — so indexed and corpus-scan phrase
     retrieval are bit-identical, which the equivalence test pins.
 
-    This closes the r9 verdict's last O(corpus)-per-query retrieval
-    shape: ``phrase_match_topk`` posexplodes every document per phrase
+    This avoids an O(corpus)-per-query retrieval shape:
+    ``phrase_match_topk`` posexplodes every document per phrase
     (fine for ad-hoc frames, a corpus scan per quoted query at 100 TB);
     here a phrase costs the phrase terms' postings only — the same
     reason reference users push ``position``/``hasSubsequence`` to the

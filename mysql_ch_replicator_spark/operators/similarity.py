@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import fsutil
-from . import UnsplittablePartition
+from . import UnsplittablePartition, staged
 from ..cache import transient_persist
 from ..functions.hashing import h60
 from ..sources.snapshot import spread
@@ -99,7 +99,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int,
     # rank on the ROUNDED score (the value the oracle ranks on and the
     # caller receives): ranking on the raw float while emitting the
     # rounded one leaves a latent cross-engine rank flip whenever two
-    # cosines differ only past 6 dp and id order disagrees (review r5)
+    # cosines differ only past 6 dp and id order disagrees
     w = Window.partitionBy("query_id") \
         .orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -310,11 +310,11 @@ def ivf_assign(df: DataFrame, vec_col: str, n_cells: int, dims: int,
     the same total order either way; ``array_sort`` on structs compares
     fields left-to-right, so the order is engine-independent —
     deterministic, unlike an argsort over distances alone). The sort
-    form is what makes wide probes LINEAR: the old per-probe masking
-    chain re-embedded every previously-chosen-cell expression, so the
-    expression tree grew exponentially in ``probes`` — invisible at the
+    form is what makes wide probes LINEAR: a per-probe masking chain
+    re-embeds every previously-chosen-cell expression, so its
+    expression tree grows exponentially in ``probes`` — invisible at the
     standard probes=2, a planner hang when the filtered-search
-    auto-widen walks probes up to the live-cell count (r12).
+    auto-widen walks probes up to the live-cell count.
 
     The distance array is STAGED as a persisted column first: the probe
     expression references it and two downstream actions (the probed-cell
@@ -326,7 +326,7 @@ def ivf_assign(df: DataFrame, vec_col: str, n_cells: int, dims: int,
     ``probes`` is clamped to the LIVE cell count (cells minus
     ``dead_cells``): once every live cell is chosen, the next-nearest
     slot is a dead/+inf cell — a duplicate or dead probe slot that
-    would double-score neighbors downstream (ADVICE r11). Unreachable
+    would double-score neighbors downstream. Unreachable
     before merges existed (probes ≤ n_cells always found a fresh finite
     cell); reachable now on an index that organically merged down to
     few live cells, exactly when the filtered-search docstring advises
@@ -384,7 +384,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int,
         .where(F.col("neighbor_id") != F.col("query_id")) \
         .withColumn("cos", F.round(cosine_expr("qv", "cv"), 6))
     # rank on the rounded score — the value the oracle ranks on (same
-    # latent cross-engine flip as brute_force_topk, review r5)
+    # latent cross-engine flip as brute_force_topk)
     w = Window.partitionBy("query_id") \
         .orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -773,7 +773,7 @@ def embedding_outlier_scores(embeddings: DataFrame,
     — exact integer arithmetic both engines compute identically.  The
     squared terms are accumulated in decimal(38,0), not int64: the
     worst-case per-dim term is (2*n*scale)^2, which at 64 dims silently
-    wraps int64 around n ~ 2e5 group members (ADVICE r5); decimal(38,0)
+    wraps int64 around n ~ 2e5 group members; decimal(38,0)
     holds the sum exactly up to n ~ 6e14 per group, far past any real
     label cohort.  Comparable WITHIN a group (same n^2 factor), which is
     how outlier ranks are consumed; decimal ordering is exact.
@@ -1043,64 +1043,23 @@ def semi_hard_triplets(corpus: DataFrame, anchors: DataFrame,
 
 
 _IVF_META = "_ivf_meta.json"   # underscore prefix: invisible to parquet scans
-_IVF_PENDING = "_ivf_upsert_pending.json"   # upsert intent manifest
+_IVF_PENDING = "_ivf_upsert_pending.json"
+_IVF_SPLIT_PENDING = "_ivf_split_pending.json"
+_IVF_MERGE_PENDING = "_ivf_merge_pending.json"
+_IVF_RETRAIN_PENDING = "_ivf_retrain_pending.json"
 _IVF_MEMBERS = "_vecmeta"      # id-span-partitioned vec_id→cell membership
 _IVF_VSPAN = 4096              # membership partition width (vec ids per dir)
-_IVF_UPSERT_STAGING = "_upsert_staging"   # staged batch snapshot (data+members)
-_IVF_SPLIT_STAGING = "_split_staging"     # staged split snapshot
-_IVF_MERGE_STAGING = "_merge_staging"     # staged merge snapshot
-
-
-def _ivf_commit_staged(spark, path: str, staging: str, cells, spans,
-                       live_names, live_span_names,
-                       delete_empty_spans: bool = False) -> None:
-    """The destructive phase every staged IVF action shares (upsert /
-    split / merge — the retrain promotes its own snapshot): commit the
-    touched cell directories and membership spans FROM the staged
-    snapshot, never from live directories a torn commit may have holed
-    (ADVICE r12 — Spark's dynamic overwrite commits per-partition as
-    delete-then-rename in a driver loop, so a crash between one
-    directory's delete and rename drops its rows; the staged snapshot is
-    the recovery source a tear can never touch). The snapshot was staged
-    PARTITIONED, so the commit is pure-metadata directory promotion
-    (``fsutil.promote_dirs`` with the manifest's ``live_names`` /
-    ``live_span_names`` — no second write, no parquet decode, no probe
-    jobs) and a crash ANYWHERE in it re-runs idempotently. Touched dirs
-    absent from the staged content (an emptied cell, a merge's src) are
-    deleted."""
-    import os
-
-    fsutil.promote_dirs(os.path.join(staging, "data"), path, "cell",
-                        cells, live_names, spark=spark)
-    if spans:
-        fsutil.promote_dirs(os.path.join(staging, "members"),
-                            os.path.join(path, _IVF_MEMBERS), "vspan",
-                            spans if delete_empty_spans else [],
-                            live_span_names, spark=spark)
-
-
-def _resume_ivf_upsert(spark, path: str) -> bool:
-    """Finish the destructive phase of a torn staged upsert batch from
-    its snapshot — called at entry by every IVF action (upsert itself,
-    split, merge, retrain) before reading or mutating cell directories a
-    torn commit may have holed, after its ``read_ivf_meta`` checked the
-    manifest. Returns True when a restore ran."""
-    import json
-    import os
-
-    pend = os.path.join(path, _IVF_PENDING)
-    if not fsutil.exists(pend, spark=spark):
-        return False
-    doc = json.loads(fsutil.read_text(pend, spark=spark))
-    staging = os.path.join(path, _IVF_UPSERT_STAGING)
-    _ivf_commit_staged(spark, path, staging,
-                       [int(c) for c in doc.get("cells", [])],
-                       [int(s) for s in doc.get("vspans", [])],
-                       doc["live_cells"], doc["live_spans"],
-                       delete_empty_spans=True)
-    fsutil.delete(pend, spark=spark)
-    fsutil.delete(staging, spark=spark)
-    return True
+_IVF_UPSERT_STAGING = "_upsert_staging"
+_IVF_SPLIT_STAGING = "_split_staging"
+_IVF_MERGE_STAGING = "_merge_staging"
+_IVF_RETRAIN_STAGING = "_retrain_staging"
+# each staged action's intent manifest and snapshot directory
+# (operators/staged.py — the protocol the lexical index shares)
+_IVF = staged.Family(_IVF_META, {
+    _IVF_PENDING: _IVF_UPSERT_STAGING,
+    _IVF_SPLIT_PENDING: _IVF_SPLIT_STAGING,
+    _IVF_MERGE_PENDING: _IVF_MERGE_STAGING,
+    _IVF_RETRAIN_PENDING: _IVF_RETRAIN_STAGING})
 
 
 def write_ivf_index(corpus: DataFrame, path: str, n_cells: int = 8,
@@ -1119,8 +1078,8 @@ def write_ivf_index(corpus: DataFrame, path: str, n_cells: int = 8,
     index (``_ivf_meta.json`` beside the partitions — the underscore
     prefix keeps it out of parquet file listings, the _SUCCESS
     convention): an index probed with different centroids silently
-    searches the wrong cells, so the index must be self-describing
-    (r5 verdict #4). k-means-trained and default hyperplane indexes
+    searches the wrong cells, so the index must be self-describing.
+    k-means-trained and default hyperplane indexes
     round-trip identically.
 
     ``meta_cols``: metadata columns carried INTO the index rows beside
@@ -1133,8 +1092,8 @@ def write_ivf_index(corpus: DataFrame, path: str, n_cells: int = 8,
     into the replica read, clickhouse_api.py:417-430 — index probes
     must compose with predicates the same way).
 
-    ``pq`` — persist PQ codes beside the raw vectors (r12 verdict #3:
-    the FAISS IndexIVFPQ layout, previously only the in-memory
+    ``pq`` — persist PQ codes beside the raw vectors (the FAISS
+    IndexIVFPQ layout, the persisted form of the in-memory
     ``ivf_pq_topk`` composition): ``{"m": 16, "n_codes": 16}`` writes a
     ``codes`` column (array<int>, length m) into every cell partition
     and a ``pq`` block (m, n_codes, and the full codebooks) into the
@@ -1216,7 +1175,7 @@ def write_ivf_index(corpus: DataFrame, path: str, n_cells: int = 8,
      .write.mode("overwrite").partitionBy("vspan")
      .parquet(os.path.join(path, _IVF_MEMBERS)))
     # meta rides the Hadoop FS like the parquet it describes — open()
-    # would break on any non-local index path (ADVICE r7)
+    # would break on any non-local index path
     # read-back schemas (one footer read per table): what keeps the
     # index READABLE after a remove-everything CDC window sweeps every
     # cell/vspan directory — see fsutil.read_parquet_or_empty
@@ -1266,99 +1225,57 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
     union of (a) the adds' new cells, (b) the cells currently holding the
     add ids — re-adding an id whose updated embedding assigns to a
     DIFFERENT cell must rewrite the OLD cell too, else the stale row
-    survives there as a duplicate vec_id (ADVICE r6) — and (c) the cells
-    currently holding removed ids — ALWAYS by probe, never by assigning
-    a carried vector, which would miss the stored row whenever the
-    carried image is stale (out-of-order CDC). (b) and (c) share ONE
-    probe of the id-span-partitioned ``_vecmeta`` membership table
-    (vec_id→cell, maintained in the same batch), directory-pruned to the
-    changed ids' spans — O(batch) IO, never a scan of the index itself
-    (the same O(changed)-discovery protocol as the lexical index's
-    docmeta, r8; previously this probed the full index per batch).
+    survives there as a duplicate vec_id — and (c) the cells currently
+    holding removed ids — ALWAYS by probe, never by assigning a carried
+    vector, which would miss the stored row whenever the carried image
+    is stale (out-of-order CDC). (b) and (c) share ONE probe of the
+    id-span-partitioned ``_vecmeta`` membership table (vec_id→cell,
+    maintained in the same batch), directory-pruned to the changed ids'
+    spans — O(batch) IO, never a scan of the index itself (the same
+    O(changed)-discovery protocol as the lexical index's docmeta).
     Discovery stays two bounded collects — the batch ids' spans, then
     the membership cells — with the adds' new-cell collect overlapped on
     a scheduler thread (it needs neither), the same jobs-not-data budget
-    as the lexical upsert (r10): at a 1 s CDC cadence the upsert's cost
-    is its fixed action count, so independent actions overlap and the
-    emptied-cell/live-span probes read checkpointed blocks beside the
-    writes, while the CRASH ORDER is unchanged. The membership
-    spans rewrite AFTER the cells commit, so a torn batch leaves
-    membership a SUPERSET of the real state and recovery re-discovers
-    at worst a few already-clean cells. Only the affected cells'
-    directories are replaced, leaving every untouched cell directory
-    byte-identical. Returns the affected cell ids.
+    as the lexical upsert: at a 1 s CDC cadence the upsert's cost is its
+    fixed action count, so independent actions overlap. The membership
+    spans commit AFTER the cells, so a torn batch leaves membership a
+    SUPERSET of the real state and recovery re-discovers at worst a few
+    already-clean cells. Only the affected cells' directories are
+    replaced, leaving every untouched cell directory byte-identical.
+    Returns the affected cell ids.
 
-    Crash contract (the retrain's staged protocol, r13): the merged
-    final content of the affected cells AND their membership spans is
-    STAGED (``_upsert_staging/{data,members}`` — also the
-    materialization barrier the old localCheckpoint provided) and only
-    then referenced by the intent manifest
-    (``_ivf_upsert_pending.json`` — affected cells + vspans +
-    ``staging`` flag, removed after the commit), BEFORE any destructive
-    mutation. The dynamic overwrite commits per-partition (delete old
-    dir, then rename staged dir, in a driver loop) — a crash between
-    one cell's delete and rename would otherwise drop its pre-batch
-    rows permanently, and a re-run reading the holed directory would
-    make the loss silent and final (ADVICE r12's window, closed for the
-    incremental actions in r13). With the snapshot, a torn batch is
-    restored FROM STAGING — by ``_resume_ivf_upsert`` at the next
-    action's entry (upsert/split/merge/retrain all call it first) or by
-    this batch's re-run — and the operation stays IDEMPOTENT by
-    construction: every term of ``(current ∖ add_ids ∖ removes) ∪
-    (adds ∖ removes)`` is insensitive to whether a cell already
-    absorbed the batch (pinned by the partial-failure test in
-    tests/test_ann_recall.py).
-    ``pending_upsert_cells`` still returns the cell ids a crashed batch
-    may have half-applied. Replica tables, which need readers isolated
-    during rewrite, use the generation-manifest protocol instead
-    (engine._overwrite_data). A pending SPLIT manifest found at
-    entry is auto-resumed before the batch applies: a torn split's
-    membership maps moved vectors to their pre-split cell, and an upsert
-    trusting it could leave live rows a later split resume resurrects
-    (ADVICE r9)."""
-    import json
+    Crash contract (``operators/staged.py``, shared by every index
+    action): the merged final content of the affected cells AND their
+    membership spans is STAGED (``_upsert_staging/{data,_vecmeta}``) and
+    only then referenced by the intent manifest
+    (``_ivf_upsert_pending.json`` — affected cells + vspans, removed
+    after the commit), BEFORE any destructive mutation. A commit torn
+    between one cell's delete and rename would otherwise drop its
+    pre-batch rows, and a re-run reading the holed directory would make
+    the loss silent and final; with the snapshot, the next IVF action's
+    entry (upsert/split/merge/retrain) commits the torn batch from
+    staging, and the operation stays IDEMPOTENT by construction: every
+    term of ``(current ∖ add_ids ∖ removes) ∪ (adds ∖ removes)`` is
+    insensitive to whether a cell already absorbed the batch (pinned by
+    the partial-failure test in tests/test_ann_recall.py). Replica
+    tables, which need readers isolated during rewrite, use the
+    generation-manifest protocol instead (engine._overwrite_data). A
+    torn SPLIT or MERGE is committed at entry too, before the batch
+    applies: its membership maps moved vectors to their old cell, and
+    an upsert trusting it could leave live rows the resumed geometry
+    action would resurrect."""
     import os
     from functools import reduce
 
     from ..cache import transient_persist
 
     meta = read_ivf_meta(path)
+    # a torn action is committed FIRST: its snapshot is the only
+    # trustworthy image of the cells a torn commit may have holed, and
+    # its descriptor fixes the geometry every read below relies on
+    meta = staged.finish_torn(spark, path, _IVF) or meta
     cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
                             meta["dims"])
-    # a torn STAGED upsert is restored FIRST: its snapshot is the only
-    # trustworthy image of the cells a torn per-partition overwrite may
-    # have holed, and every read below (index, membership) would
-    # otherwise see the hole (ADVICE r12's window, closed for the
-    # incremental actions in r13)
-    _resume_ivf_upsert(spark, path)
-    if fsutil.exists(os.path.join(path, _IVF_RETRAIN_PENDING), spark=spark):
-        # a torn RETRAIN left the whole geometry ambiguous (old
-        # descriptor over partially re-assigned directories): finish it
-        # with the manifest's trained codebook before touching anything
-        retrain_ivf_index(spark, path)
-        meta = read_ivf_meta(path)
-        cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
-                                meta["dims"])
-    if fsutil.exists(os.path.join(path, _IVF_SPLIT_PENDING), spark=spark):
-        # A torn split leaves ``_vecmeta`` mapping moved vectors to their
-        # PRE-split cell: an upsert removing such a vector would rewrite
-        # only the old cell and a later split resume (which unions both
-        # split dirs) would resurrect the deleted row (ADVICE r9). The
-        # split resume is idempotent and O(cell), so finish it here
-        # rather than wedging an unattended CDC pipeline behind a raise.
-        split_ivf_cell(spark, path)
-        meta = read_ivf_meta(path)   # the descriptor grew by one cell
-        cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
-                                meta["dims"])
-    if fsutil.exists(os.path.join(path, _IVF_MERGE_PENDING), spark=spark):
-        # same reasoning for a torn MERGE: its membership still maps
-        # moved ids to the deleted src directory, so an upsert trusting
-        # it would rewrite the wrong cell (and dynamic overwrite would
-        # resurrect src). O(2 cells), idempotent.
-        merge_ivf_cells(spark, path)
-        meta = read_ivf_meta(path)   # the descriptor gained a dead cell
-        cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
-                                meta["dims"])
     schemas = meta["schemas"]
     idx = fsutil.read_parquet_or_empty(spark, path, schemas.get("index"))
     members = fsutil.read_parquet_or_empty(
@@ -1409,9 +1326,9 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
         probe_ids.append(removes.select(F.col(id_col).alias("vec_id")))
     from concurrent.futures import ThreadPoolExecutor
 
-    # -- discovery, overlapped (the lexical upsert's job-budget rule,
-    # r10): the adds' new-cell collect depends on neither the changed
-    # spans nor the membership table, so it runs on a scheduler thread
+    # -- discovery, overlapped (the lexical upsert's job-budget rule):
+    # the adds' new-cell collect depends on neither the changed spans
+    # nor the membership table, so it runs on a scheduler thread
     # (materializing the assignment cache once) beside the spans +
     # membership collects here. The id union skips a redundant distinct —
     # dup ids are harmless to anti-joins and the driver-side cell-set
@@ -1454,14 +1371,12 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
         pool.shutdown(wait=True)
         return []
     # The membership MERGE is independent of the cell rewrite (it reads
-    # the OLD spans + the batch's own persisted frames), so it — and the
-    # live-span probe over its checkpointed blocks — materializes on a
-    # scheduler thread while the cells commit, same overlap as the
-    # lexical upsert; only the membership WRITE must wait for the cells
-    # + emptied-cell deletes (superset-on-crash contract in the
-    # docstring). Plan CONSTRUCTION sits inside the try too: an analysis
-    # error (an adds frame whose schema drifted) must release the pool
-    # like any other failure.
+    # the OLD spans + the batch's own persisted frames), so it stages on
+    # a scheduler thread beside the cells; the commit order (membership
+    # after cells, the superset-on-crash contract in the docstring) is
+    # the manifest's. Plan CONSTRUCTION sits inside the try too: an
+    # analysis error (an adds frame whose schema drifted) must release
+    # the pool like any other failure.
     try:
         cur = idx.where(F.col("cell").isin(cells))
         if assigned is not None:
@@ -1492,59 +1407,37 @@ def upsert_ivf_index(spark, path: str, adds: DataFrame | None = None,
                 merged_m = merged_m.unionByName(new_m)
             mm = merged_m.withColumn("vspan",
                                      F.expr(f"vec_id div {_IVF_VSPAN}"))
-            # staged DURABLY, PARTITIONED (replacing the old
-            # localCheckpoint): the snapshot is the torn-overwrite
+            # staged PARTITIONED: the snapshot is the torn-commit
             # recovery source AND the final bytes — the commit promotes
             # these directories by rename, so the batch's data is
-            # written exactly once — overlapped with the data staging
-            # below
+            # written exactly once
             memb_f = pool.submit(
                 lambda: fsutil.cluster_by_dir(mm, "vspan", "vec_id")
                 .write.mode("overwrite").partitionBy("vspan")
-                .parquet(os.path.join(staging, "members")))
+                .parquet(os.path.join(staging, _IVF_MEMBERS)))
 
         (fsutil.cluster_by_dir(merged, "cell", "vec_id", len(cells))
          .write.mode("overwrite").partitionBy("cell")
          .parquet(os.path.join(staging, "data")))
         if memb_f is not None:
             memb_f.result()
-        # the live dir lists come from a driver-side listing of the
-        # staged dirs — no probe jobs on the CDC hot path (jobs, not
-        # data, are the 1 s cadence budget)
-        live_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "data"), spark=spark)
-            if n.startswith("cell=")]
-        live_span_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "members"), spark=spark)
-            if n.startswith("vspan=")] if spans else []
-        # the manifest is written strictly AFTER both staging writes
-        # return, so manifest ⇒ staging complete — the retrain's
-        # protocol. Destructive phase (cell promotion, then membership,
-        # each with its emptied-dir sweep) touches ONLY filesystem
-        # metadata; a crash anywhere inside it restores idempotently at
-        # the next action's entry (_resume_ivf_upsert) or this batch's
-        # re-run.
-        pending = os.path.join(path, _IVF_PENDING)
-        fsutil.write_text(pending,
-                          json.dumps({"cells": cells, "vspans": spans,
-                                      "staging": True,
-                                      "live_cells": live_names,
-                                      "live_spans": live_span_names}),
-                          spark=spark)
-        _ivf_commit_staged(spark, path, staging, cells, spans,
-                           live_names, live_span_names,
-                           delete_empty_spans=True)
     except BaseException:
         pool.shutdown(wait=True, cancel_futures=True)
         raise
     pool.shutdown(wait=True)
 
-    fsutil.delete(pending, spark=spark)
-    fsutil.delete(staging, spark=spark)
+    # the live dir lists come from a driver-side listing of the staged
+    # dirs — no probe jobs on the CDC hot path (jobs, not data, are the
+    # 1 s cadence budget); cells, then membership, each with its
+    # emptied-dir sweep; the descriptor is unchanged
+    promote = [staged.entry(staging, "", "cell", cells, spark)]
+    if spans:
+        promote.append(staged.entry(staging, _IVF_MEMBERS, "vspan", spans,
+                                    spark))
+    staged.run(spark, path, _IVF, _IVF_PENDING, {
+        "promote": promote, "descriptor": meta,
+        "cells": cells, "vspans": spans})
     return cells
-
-
-_IVF_SPLIT_PENDING = "_ivf_split_pending.json"   # split intent manifest
 
 
 def _split_seed_centroids(cellrows: DataFrame, vec_col: str,
@@ -1594,220 +1487,157 @@ def split_ivf_cell(spark, path: str, cell: int | None = None,
     vspans. Everything is O(cell), never O(index) — at 100 TB you
     ``sample_fraction`` the training scan and the rest is unchanged.
 
-    Crash contract (the retrain's staged protocol, r13): the re-split
-    rows AND their merged membership spans are STAGED
-    (``_split_staging/{data,members}``) and only then referenced by the
-    intent manifest (``_ivf_split_pending.json`` — cell ids, the
-    TRAINED sub-codebook, spans, ``staging`` flag; written before any
-    destructive mutation, removed after the descriptor commits).
-    Re-running ``split_ivf_cell`` with no arguments RESUMES it — from
-    the snapshot, with the manifest's sub-codebook, never by
-    re-training over cell directories a torn per-partition overwrite
-    may have holed (ADVICE r12's window, closed for the incremental
-    actions in r13). Data commits before the
-    descriptor: a crash in between leaves moved vectors invisible to
-    probes (bounded recall loss, never wrong results) until the resume.
-    Returns ``(split_cell, new_cell)``."""
-    import json
+    Crash contract (``operators/staged.py``): the re-split rows AND
+    their merged membership spans are STAGED
+    (``_split_staging/{data,_vecmeta}``) with the new descriptor (the
+    TRAINED sub-codebook in its centroid list) computed, and only then
+    does the intent manifest (``_ivf_split_pending.json``) exist.
+    Re-running ``split_ivf_cell`` with no arguments, or any other IVF
+    action, commits a torn split from the manifest — never by
+    re-training over cell directories a torn commit may have holed.
+    Data commits before the descriptor: a crash in between leaves moved
+    vectors invisible to probes (bounded recall loss, never wrong
+    results) until that commit. Returns ``(split_cell, new_cell)``."""
     import os
 
     meta = read_ivf_meta(path)
-    # restore a torn STAGED upsert before reading any cell directory a
-    # torn per-partition overwrite may have holed (r13)
-    _resume_ivf_upsert(spark, path)
+    pending = staged.pending(path, _IVF_SPLIT_PENDING, spark)
+    if pending is not None and cell is not None \
+            and cell != int(pending["cell"]):
+        raise ValueError(
+            f"split_ivf_cell: unfinished split of cell "
+            f"{pending['cell']} pending at {path} — resume it "
+            f"(cell=None) before splitting another")
+    # a torn action (this split's own included) commits before any cell
+    # directory is read
+    meta = staged.finish_torn(spark, path, _IVF) or meta
+    if pending is not None:
+        return int(pending["cell"]), int(pending["new_cell"])
     cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
                             meta["dims"])
     members_path = os.path.join(path, _IVF_MEMBERS)
-    pend_path = os.path.join(path, _IVF_SPLIT_PENDING)
-    pending = None
-    if fsutil.exists(pend_path, spark=spark):
-        pending = json.loads(fsutil.read_text(pend_path, spark=spark))
-    if pending is None and fsutil.exists(
-            os.path.join(path, _IVF_MERGE_PENDING), spark=spark):
-        # a torn merge leaves ambiguous membership (the upsert's
-        # rationale) — finish it before splitting. Only one manifest can
-        # exist at a time (each action resumes the other before writing
-        # its own), so this cannot recurse back here.
-        merge_ivf_cells(spark, path)
-        meta = read_ivf_meta(path)
-        cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
-                                meta["dims"])
-    if pending is None and fsutil.exists(
-            os.path.join(path, _IVF_RETRAIN_PENDING), spark=spark):
-        # a torn retrain leaves the whole geometry ambiguous — finish it
-        # (manifest codebook, idempotent) before splitting anything
-        retrain_ivf_index(spark, path)
-        meta = read_ivf_meta(path)
-        cents, n_cells, dims = (meta["centroids"], meta["n_cells"],
-                                meta["dims"])
-    staging = os.path.join(path, _IVF_SPLIT_STAGING)
     schemas = meta["schemas"]
-    if pending is not None:
-        if cell is not None and cell != pending["cell"]:
-            raise ValueError(
-                f"split_ivf_cell: unfinished split of cell "
-                f"{pending['cell']} pending at {path} — resume it "
-                f"(cell=None) before splitting another")
-        cell, new_cell = int(pending["cell"]), int(pending["new_cell"])
-    else:
-        if cell is None:
-            members = fsutil.read_parquet_or_empty(
-                spark, members_path, schemas.get("members"))
-            top = (members.groupBy("cell")
-                   .agg(F.count(F.lit(1)).alias("n"))
-                   .orderBy(F.col("n").desc(), F.col("cell")).first())
-            if top is None:
-                # an empty index has no hottest cell — a clean error, not
-                # an AttributeError off the None row (ADVICE r9)
-                raise ValueError(
-                    f"split_ivf_cell: membership table at {members_path} "
-                    f"has no rows — an empty index has nothing to split")
-            cell = int(top.cell)
-        elif not 1 <= cell <= n_cells:
-            # validated BEFORE the pending manifest exists — a bogus id
-            # must not wedge the split machinery behind a manifest whose
-            # resume crashes at the same bad id forever
-            raise ValueError(
-                f"split_ivf_cell: cell {cell} not in [1, {n_cells}]")
-        elif cell in {int(c) for c in meta.get("dead", [])}:
-            raise ValueError(
-                f"split_ivf_cell: cell {cell} was merged away and is "
-                f"not a live cell of the index at {path}")
-        new_cell = n_cells + 1
-
-    if pending is not None:
-        # the manifest references a COMPLETE staged snapshot: resume by
-        # promoting it — never from cell dirs a torn commit may have
-        # holed, and never by re-training over them (the manifest
-        # carries the sub-codebook the torn run trained)
-        sub = [[float(x) for x in c] for c in pending["sub"]]
-        spans = [int(s) for s in pending["spans"]]
-        live_names = pending["live_cells"]
-        live_span_names = pending["live_spans"]
-    else:
-        idx = fsutil.read_parquet_or_empty(spark, path,
-                                           schemas.get("index"))
-        # no manifest ⇒ every prior action fully committed ⇒ vec_id
-        # unique across cells, so the split input needs no dedup
-        cellrows = idx.where(F.col("cell").isin([cell, new_cell]))
-        if cellrows.isEmpty():
-            raise UnsplittablePartition(
-                f"split_ivf_cell: cell {cell} holds no vectors — "
-                f"splitting it would replace its centroid with the "
-                f"untrained init")
-        # Farthest-point seeding FROM THE CELL'S OWN MEMBERS (r10): the
-        # old fixed pseudo-random init sat near the origin, so a hot
-        # cell whose mass lies far out assigned every member to one
-        # sub-centroid and the "split" degenerated into a cell rename —
-        # no rebalance, and a load-factor policy would re-split the same
-        # mass every poll. Seeds: the min-id member, then the member
-        # farthest from it (exact quantized distances, ties to the lower
-        # id) — deterministic, and still two SQL rows, so the split
-        # oracle follows. O(cell) like the trainer itself.
-        seeds, max_d = _split_seed_centroids(cellrows, "embedding")
-        if max_d == 0.0:
-            raise UnsplittablePartition(
-                f"split_ivf_cell: every member of cell {cell} is "
-                f"identical — a split cannot rebalance it")
-        sub = train_ivf_centroids(
-            cellrows, "embedding", 2, dims, iters=iters,
-            sample_fraction=sample_fraction,
-            id_col="vec_id" if sample_fraction is not None else None,
-            salt="ivf-split", init_centroids=seeds)
-
-        d = _sq_dists(_as_double(F.col("embedding")), sub)
-        reassigned = cellrows.withColumn(
-            "cell",
-            F.when(F.array_position(d, F.array_min(d)) == 1, F.lit(cell))
-             .otherwise(F.lit(new_cell)))
-        # stage the snapshot (data + merged membership spans) BEFORE the
-        # manifest, the manifest BEFORE any destructive mutation — the
-        # retrain's protocol (ADVICE r12, extended to the incremental
-        # actions in r13). Staged PARTITIONED: the commit promotes the
-        # directories by rename, so the split's data is written exactly
-        # once (the staged write also doubles as the materialization
-        # barrier the old localCheckpoint provided).
-        (fsutil.cluster_by_dir(reassigned, "cell", "vec_id", 2)
-         .write.mode("overwrite").partitionBy("cell")
-         .parquet(os.path.join(staging, "data")))
-        # schema-pinned read-back (staged == live schema by the rename
-        # promotion contract) — no inference job
-        reassigned = fsutil.read_parquet_or_empty(
-            spark, os.path.join(staging, "data"), schemas.get("index"))
+    if cell is None:
         members = fsutil.read_parquet_or_empty(
             spark, members_path, schemas.get("members"))
-        final_m = reassigned.select(
-            "vec_id", F.col("cell").cast("int").alias("cell"))
-        spans = sorted({int(r.v) for r in reassigned.select(
-            F.expr(f"vec_id div {_IVF_VSPAN}").alias("v"))
-            .distinct().collect()})
-        if spans:
-            merged_m = (members.where(F.col("vspan").isin(spans))
-                        .join(final_m.select("vec_id"), "vec_id",
-                              "left_anti")
-                        .select("vec_id",
-                                F.col("cell").cast("int").alias("cell"))
-                        .unionByName(final_m)
-                        .withColumn("vspan",
-                                    F.expr(f"vec_id div {_IVF_VSPAN}")))
-            (fsutil.cluster_by_dir(merged_m, "vspan", "vec_id")
-             .write.mode("overwrite").partitionBy("vspan")
-             .parquet(os.path.join(staging, "members")))
-        live_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "data"), spark=spark)
-            if n.startswith("cell=")]
-        live_span_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "members"), spark=spark)
-            if n.startswith("vspan=")] if spans else []
-        fsutil.write_text(
-            pend_path,
-            json.dumps({"cell": cell, "new_cell": new_cell,
-                        "sub": [[float(x) for x in c] for c in sub],
-                        "spans": spans, "staging": True,
-                        "live_cells": live_names,
-                        "live_spans": live_span_names}),
-            spark=spark)
+        top = (members.groupBy("cell")
+               .agg(F.count(F.lit(1)).alias("n"))
+               .orderBy(F.col("n").desc(), F.col("cell")).first())
+        if top is None:
+            # an empty index has no hottest cell — a clean error, not an
+            # AttributeError off the None row
+            raise ValueError(
+                f"split_ivf_cell: membership table at {members_path} "
+                f"has no rows — an empty index has nothing to split")
+        cell = int(top.cell)
+    elif not 1 <= cell <= n_cells:
+        # validated BEFORE the pending manifest exists — a bogus id must
+        # not wedge the split machinery behind a manifest whose resume
+        # crashes at the same bad id forever
+        raise ValueError(
+            f"split_ivf_cell: cell {cell} not in [1, {n_cells}]")
+    elif cell in {int(c) for c in meta.get("dead", [])}:
+        raise ValueError(
+            f"split_ivf_cell: cell {cell} was merged away and is "
+            f"not a live cell of the index at {path}")
+    new_cell = n_cells + 1
 
-    # destructive phase, entirely from the staged snapshot: cell
-    # promotion + emptied-dir sweep first, membership next — the split
-    # never empties a span, so no span sweep
-    _ivf_commit_staged(spark, path, staging, [cell, new_cell], spans,
-                       live_names, live_span_names)
+    staging = os.path.join(path, _IVF_SPLIT_STAGING)
+    idx = fsutil.read_parquet_or_empty(spark, path, schemas.get("index"))
+    # no manifest ⇒ every prior action fully committed ⇒ vec_id unique
+    # across cells, so the split input needs no dedup
+    cellrows = idx.where(F.col("cell").isin([cell, new_cell]))
+    if cellrows.isEmpty():
+        raise UnsplittablePartition(
+            f"split_ivf_cell: cell {cell} holds no vectors — "
+            f"splitting it would replace its centroid with the "
+            f"untrained init")
+    # Farthest-point seeding FROM THE CELL'S OWN MEMBERS: a fixed
+    # pseudo-random init near the origin assigns every member of a hot
+    # cell whose mass lies far out to one sub-centroid, and the "split"
+    # degenerates into a cell rename — no rebalance, and a load-factor
+    # policy would re-split the same mass every poll. Seeds: the min-id
+    # member, then the member farthest from it (exact quantized
+    # distances, ties to the lower id) — deterministic, and still two
+    # SQL rows, so the split oracle follows. O(cell) like the trainer.
+    seeds, max_d = _split_seed_centroids(cellrows, "embedding")
+    if max_d == 0.0:
+        raise UnsplittablePartition(
+            f"split_ivf_cell: every member of cell {cell} is "
+            f"identical — a split cannot rebalance it")
+    sub = train_ivf_centroids(
+        cellrows, "embedding", 2, dims, iters=iters,
+        sample_fraction=sample_fraction,
+        id_col="vec_id" if sample_fraction is not None else None,
+        salt="ivf-split", init_centroids=seeds)
 
+    d = _sq_dists(_as_double(F.col("embedding")), sub)
+    reassigned = cellrows.withColumn(
+        "cell",
+        F.when(F.array_position(d, F.array_min(d)) == 1, F.lit(cell))
+         .otherwise(F.lit(new_cell)))
+    # staged PARTITIONED: the commit promotes the directories by rename,
+    # so the split's data is written exactly once
+    (fsutil.cluster_by_dir(reassigned, "cell", "vec_id", 2)
+     .write.mode("overwrite").partitionBy("cell")
+     .parquet(os.path.join(staging, "data")))
+    # schema-pinned read-back (staged == live schema by the rename
+    # promotion contract) — no inference job
+    reassigned = fsutil.read_parquet_or_empty(
+        spark, os.path.join(staging, "data"), schemas.get("index"))
     cents2 = [list(c) for c in cents]
     cents2[cell - 1] = [float(x) for x in sub[0]]
-    if len(cents2) >= new_cell:        # torn run already grew the list
-        cents2[new_cell - 1] = [float(x) for x in sub[1]]
-    else:
-        cents2.append([float(x) for x in sub[1]])
-    # carry every other descriptor field (schemas, future keys) through
-    # the rewrite — dropping them here would undo the r10 empty-table
-    # readability on the first split
-    meta2 = dict(meta)
-    meta2.update({"n_cells": len(cents2), "dims": dims,
-                  "centroids": cents2})
-    if len(cents) < new_cell:
-        # chain accounting for the retrain escalation (r12): every
-        # geometry action drifts the codebook a little. Not re-bumped on
-        # a resume whose first run already committed the descriptor
-        # (centroid list already grown).
-        meta2["geometry_actions"] = int(meta.get("geometry_actions", 0)) + 1
-    fsutil.write_text(os.path.join(path, _IVF_META), json.dumps(meta2),
-                      spark=spark)
-    fsutil.delete(pend_path, spark=spark)
-    fsutil.delete(staging, spark=spark)
+    cents2.append([float(x) for x in sub[1]])
+    # every other descriptor field (schemas, future keys) carries over;
+    # geometry_actions is the chain accounting the retrain escalation
+    # reads — every geometry action drifts the codebook a little
+    staged.run(spark, path, _IVF, _IVF_SPLIT_PENDING, {
+        "promote": _stage_moved_members(spark, path, schemas, staging,
+                                        reassigned, [cell, new_cell]),
+        "descriptor": dict(
+            meta, n_cells=len(cents2), centroids=cents2,
+            geometry_actions=int(meta.get("geometry_actions", 0)) + 1),
+        "cell": cell, "new_cell": new_cell,
+        "sub": [[float(x) for x in c] for c in sub]})
     return cell, new_cell
 
 
-_IVF_MERGE_PENDING = "_ivf_merge_pending.json"   # merge intent manifest
+def _stage_moved_members(spark, path: str, schemas: dict, staging: str,
+                         moved: DataFrame, cells: list[int]) -> list[dict]:
+    """Stage the membership spans holding the ``moved`` (staged) rows of
+    a split or merge, with those ids mapped to their new cells, and
+    return the action's ``promote`` list: the two cells (either may have
+    emptied), then the spans — never emptied, so no span sweep."""
+    import os
+
+    spans = sorted({int(r.v) for r in moved.select(
+        F.expr(f"vec_id div {_IVF_VSPAN}").alias("v"))
+        .distinct().collect()})
+    promote = [staged.entry(staging, "", "cell", cells, spark)]
+    if not spans:
+        return promote
+    final_m = moved.select("vec_id", F.col("cell").cast("int").alias("cell"))
+    members = fsutil.read_parquet_or_empty(
+        spark, os.path.join(path, _IVF_MEMBERS), schemas.get("members"))
+    (fsutil.cluster_by_dir(
+        members.where(F.col("vspan").isin(spans))
+        .join(final_m.select("vec_id"), "vec_id", "left_anti")
+        .select("vec_id", F.col("cell").cast("int").alias("cell"))
+        .unionByName(final_m)
+        .withColumn("vspan", F.expr(f"vec_id div {_IVF_VSPAN}")),
+        "vspan", "vec_id")
+     .write.mode("overwrite").partitionBy("vspan")
+     .parquet(os.path.join(staging, _IVF_MEMBERS)))
+    return promote + [staged.entry(staging, _IVF_MEMBERS, "vspan", (),
+                                   spark)]
 
 
 def merge_ivf_cells(spark, path: str, src: int | None = None,
                     dst: int | None = None) -> tuple[int, int]:
     """Merge one sparse IVF cell into another IN PLACE — the inverse of
-    ``split_ivf_cell`` and the missing half of the load-factor policy
-    (r10 verdict #3): after a delete-heavy CDC window the splits can
-    only fragment further — emptied cells drop out, but half-empty ones
+    ``split_ivf_cell`` and the shrink half of the load-factor policy:
+    without it, after a delete-heavy CDC window the splits can only
+    fragment further — emptied cells drop out, but half-empty ones
     accumulate, wasting probe slots and directory listings until a full
     rebuild. The merge moves ``src``'s rows wholesale into ``dst`` and
     marks ``src`` DEAD in the descriptor; dead cells keep their
@@ -1828,176 +1658,98 @@ def merge_ivf_cells(spark, path: str, src: int | None = None,
     move). Refuses to drop the live-cell count below 2 — a 1-cell index
     degenerates every probe into a full scan.
 
-    Crash contract (the split's staged protocol, mirrored): the merged
+    Crash contract (``operators/staged.py``, as the split): the merged
     dst content AND its membership spans are STAGED
-    (``_merge_staging/{data,members}``) and only then referenced by the
-    intent manifest (``_ivf_merge_pending.json`` — src/dst, spans,
-    ``staging`` flag; before any destructive mutation), data first
-    (dst rewrite from the snapshot, then the src directory delete),
-    membership next, descriptor last, manifest then staging deleted
-    after. A torn merge can leave a moved vector visible in BOTH
-    directories (the rows are identical — only the cell changes), a
-    bounded probe anomaly until the idempotent resume — which promotes
-    the snapshot, never reading directories a torn commit may have
-    holed.
-    ``upsert_ivf_index`` and ``split_ivf_cell`` auto-resume a pending
-    merge before mutating — a torn merge's membership still maps moved
-    ids to the deleted src directory, and an upsert trusting it would
+    (``_merge_staging/{data,_vecmeta}``) with the new descriptor
+    computed, and only then does the intent manifest
+    (``_ivf_merge_pending.json``) exist; data first (dst promoted, src
+    deleted), membership next, descriptor last. A torn merge can leave a
+    moved vector visible in BOTH directories (the rows are identical —
+    only the cell changes), a bounded probe anomaly until the next IVF
+    action commits the manifest; ``upsert_ivf_index`` does so before
+    applying a batch — a torn merge's membership still maps moved ids
+    to the deleted src directory, and an upsert trusting it would
     rewrite the wrong cell. Returns ``(src, dst)``."""
-    import json
     import os
 
     meta = read_ivf_meta(path)
-    # restore a torn STAGED upsert before reading any cell directory a
-    # torn per-partition overwrite may have holed (r13)
-    _resume_ivf_upsert(spark, path)
-    if fsutil.exists(os.path.join(path, _IVF_SPLIT_PENDING), spark=spark):
-        # ambiguous geometry: finish the torn split first (idempotent,
-        # O(cell) — same contract as the upsert's auto-resume)
-        split_ivf_cell(spark, path)
-        meta = read_ivf_meta(path)
-    if fsutil.exists(os.path.join(path, _IVF_RETRAIN_PENDING),
-                     spark=spark):
-        # a torn retrain leaves the whole geometry ambiguous — finish it
-        # (manifest codebook, idempotent) before merging anything
-        retrain_ivf_index(spark, path)
-        meta = read_ivf_meta(path)
+    pending = staged.pending(path, _IVF_MERGE_PENDING, spark)
+    if pending is not None and src is not None \
+            and src != int(pending["src"]):
+        raise ValueError(
+            f"merge_ivf_cells: unfinished merge of cell "
+            f"{pending['src']} pending at {path} — resume it "
+            f"(src=None) before merging another")
+    # a torn action (this merge's own included) commits before any cell
+    # directory is read
+    meta = staged.finish_torn(spark, path, _IVF) or meta
+    if pending is not None:
+        return int(pending["src"]), int(pending["dst"])
     n_cells = int(meta["n_cells"])
     dead = {int(c) for c in meta.get("dead", [])}
-    members_path = os.path.join(path, _IVF_MEMBERS)
-    pend_path = os.path.join(path, _IVF_MERGE_PENDING)
-    pending = None
-    if fsutil.exists(pend_path, spark=spark):
-        pending = json.loads(fsutil.read_text(pend_path, spark=spark))
-    if pending is not None:
-        if src is not None and src != int(pending["src"]):
-            raise ValueError(
-                f"merge_ivf_cells: unfinished merge of cell "
-                f"{pending['src']} pending at {path} — resume it "
-                f"(src=None) before merging another")
-        src, dst = int(pending["src"]), int(pending["dst"])
-    else:
-        live = sorted(set(range(1, n_cells + 1)) - dead)
-        if len(live) <= 2:
-            raise UnsplittablePartition(
-                f"merge_ivf_cells: index at {path} has {len(live)} live "
-                f"cells — merging would leave fewer than 2")
-        if src is None:
-            counts = {c: 0 for c in live}
-            for r in (fsutil.read_parquet_or_empty(
-                    spark, members_path, meta["schemas"].get("members"))
-                    .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-                    .collect()):         # bounded: one row per cell
-                if int(r.cell) in counts:
-                    counts[int(r.cell)] = int(r.n)
-            a, b = sorted(live, key=lambda c: (counts[c], c))[:2]
-            # the fuller of the two keeps its directory; ties → the
-            # lower id survives
-            if (counts[a], -a) >= (counts[b], -b):
-                src, dst = b, a
-            else:
-                src, dst = a, b
+    schemas = meta["schemas"]
+    live = sorted(set(range(1, n_cells + 1)) - dead)
+    if len(live) <= 2:
+        raise UnsplittablePartition(
+            f"merge_ivf_cells: index at {path} has {len(live)} live "
+            f"cells — merging would leave fewer than 2")
+    if src is None:
+        counts = {c: 0 for c in live}
+        for r in (fsutil.read_parquet_or_empty(
+                spark, os.path.join(path, _IVF_MEMBERS),
+                schemas.get("members"))
+                .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
+                .collect()):         # bounded: one row per cell
+            if int(r.cell) in counts:
+                counts[int(r.cell)] = int(r.n)
+        a, b = sorted(live, key=lambda c: (counts[c], c))[:2]
+        # the fuller of the two keeps its directory; ties → the lower id
+        # survives
+        if (counts[a], -a) >= (counts[b], -b):
+            src, dst = b, a
         else:
-            if dst is None:
-                raise ValueError("merge_ivf_cells: src given without dst")
-            for name, c in (("src", src), ("dst", dst)):
-                if not 1 <= c <= n_cells or c in dead:
-                    raise ValueError(
-                        f"merge_ivf_cells: {name} cell {c} is not a "
-                        f"live cell of the index at {path}")
-            if src == dst:
-                raise ValueError("merge_ivf_cells: src == dst")
+            src, dst = a, b
+    else:
+        if dst is None:
+            raise ValueError("merge_ivf_cells: src given without dst")
+        for name, c in (("src", src), ("dst", dst)):
+            if not 1 <= c <= n_cells or c in dead:
+                raise ValueError(
+                    f"merge_ivf_cells: {name} cell {c} is not a "
+                    f"live cell of the index at {path}")
+        if src == dst:
+            raise ValueError("merge_ivf_cells: src == dst")
 
     staging = os.path.join(path, _IVF_MERGE_STAGING)
-    schemas = meta["schemas"]
-    if pending is not None:
-        # the manifest references a COMPLETE staged snapshot: resume by
-        # promoting it — never from cell dirs a torn commit may have
-        # holed
-        spans = [int(s) for s in pending["spans"]]
-        live_names = pending["live_cells"]
-        live_span_names = pending["live_spans"]
-    else:
-        # union of both directories: no manifest ⇒ every prior action
-        # fully committed ⇒ vec_id unique across cells, no dedup
-        merged = (fsutil.read_parquet_or_empty(
-                      spark, path, schemas.get("index"))
-                  .where(F.col("cell").isin([src, dst]))
-                  .withColumn("cell", F.lit(dst)))
-        # stage the snapshot BEFORE the manifest, the manifest BEFORE
-        # any destructive mutation — the retrain's protocol (ADVICE
-        # r12, extended to the incremental actions in r13); staged
-        # PARTITIONED so the commit promotes by rename (ONE evaluation
-        # of the union plan and one write of the merged data, total —
-        # the staged write doubles as the materialization barrier the
-        # old localCheckpoint provided). Both cells empty (a delete wave
-        # swept them) falls out of the staged listing: no cell
-        # directory written ⇒ descriptor-only merge.
-        (fsutil.cluster_by_dir(merged, "cell", "vec_id", 2)
-         .write.mode("overwrite").partitionBy("cell")
-         .parquet(os.path.join(staging, "data")))
-        data_empty = not any(
-            n.startswith("cell=") for n in fsutil.list_names(
-                os.path.join(staging, "data"), spark=spark))
-        if not data_empty:
-            merged = fsutil.read_parquet_or_empty(
+    # union of both directories: no manifest ⇒ every prior action fully
+    # committed ⇒ vec_id unique across cells, no dedup
+    merged = (fsutil.read_parquet_or_empty(
+                  spark, path, schemas.get("index"))
+              .where(F.col("cell").isin([src, dst]))
+              .withColumn("cell", F.lit(dst)))
+    # staged PARTITIONED so the commit promotes by rename (ONE
+    # evaluation of the union plan and one write of the merged data,
+    # total). Both cells empty (a delete wave swept them) falls out of
+    # the staged listing: no cell directory written ⇒ descriptor-only
+    # merge.
+    (fsutil.cluster_by_dir(merged, "cell", "vec_id", 2)
+     .write.mode("overwrite").partitionBy("cell")
+     .parquet(os.path.join(staging, "data")))
+    promote = [staged.entry(staging, "", "cell", [src, dst], spark)]
+    if promote[0]["live"]:
+        promote = _stage_moved_members(
+            spark, path, schemas, staging,
+            fsutil.read_parquet_or_empty(
                 spark, os.path.join(staging, "data"),
-                schemas.get("index"))
-        spans = sorted({int(r.v) for r in merged.select(
-            F.expr(f"vec_id div {_IVF_VSPAN}").alias("v"))
-            .distinct().collect()}) if not data_empty else []
-        if spans:
-            members = fsutil.read_parquet_or_empty(
-                spark, members_path, schemas.get("members"))
-            final_m = merged.select(
-                "vec_id", F.col("cell").cast("int").alias("cell"))
-            merged_m = (members.where(F.col("vspan").isin(spans))
-                        .join(final_m.select("vec_id"), "vec_id",
-                              "left_anti")
-                        .select("vec_id",
-                                F.col("cell").cast("int").alias("cell"))
-                        .unionByName(final_m)
-                        .withColumn("vspan",
-                                    F.expr(f"vec_id div {_IVF_VSPAN}")))
-            (fsutil.cluster_by_dir(merged_m, "vspan", "vec_id")
-             .write.mode("overwrite").partitionBy("vspan")
-             .parquet(os.path.join(staging, "members")))
-        live_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "data"), spark=spark)
-            if n.startswith("cell=")] if not data_empty else []
-        live_span_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "members"), spark=spark)
-            if n.startswith("vspan=")] if spans else []
-        fsutil.write_text(
-            pend_path,
-            json.dumps({"src": src, "dst": dst, "spans": spans,
-                        "staging": True,
-                        "live_cells": live_names,
-                        "live_spans": live_span_names}),
-            spark=spark)
-
-    # destructive phase, entirely from the staged snapshot: the
-    # touched-minus-live sweep deletes src always and dst when the
-    # merge was empty — the merge never empties a span, so no span sweep
-    _ivf_commit_staged(spark, path, staging, [src, dst], spans,
-                       live_names, live_span_names)
-
-    # descriptor last; idempotent on resume (set semantics; the chain
-    # counter is NOT re-bumped when the dead set already contains src)
-    meta2 = dict(meta)
-    already = src in {int(c) for c in meta.get("dead", [])}
-    meta2["dead"] = sorted({int(c) for c in meta.get("dead", [])} | {src})
-    if not already:
-        meta2["geometry_actions"] = int(meta.get("geometry_actions", 0)) + 1
-    fsutil.write_text(os.path.join(path, _IVF_META), json.dumps(meta2),
-                      spark=spark)
-    fsutil.delete(pend_path, spark=spark)
-    fsutil.delete(staging, spark=spark)
+                schemas.get("index")),
+            [src, dst])
+    staged.run(spark, path, _IVF, _IVF_MERGE_PENDING, {
+        "promote": promote,
+        "descriptor": dict(
+            meta, dead=sorted(dead | {src}),
+            geometry_actions=int(meta.get("geometry_actions", 0)) + 1),
+        "src": src, "dst": dst})
     return src, dst
-
-
-_IVF_RETRAIN_PENDING = "_ivf_retrain_pending.json"  # retrain intent manifest
-_IVF_RETRAIN_STAGING = "_retrain_staging"  # staged re-assigned snapshot
 
 
 def retrain_ivf_index(spark, path: str, iters: int = 2,
@@ -2055,290 +1807,146 @@ def retrain_ivf_index(spark, path: str, iters: int = 2,
     without a ``pq`` block; like ``n_cells``, an explicit
     ``train_pq=True`` implies intent and overrides the no-op guard.
 
-    Crash contract (the split's, escalated): the re-assigned snapshot is
-    STAGED (``_retrain_staging/{data,members}``, complete re-assigned
-    rows and their membership, partitioned) and only then referenced by
-    the intent manifest (``_ivf_retrain_pending.json`` — trained
-    centroids, staging flag, staged dir names) BEFORE any destructive
-    mutation. A commit that rewrote cells in place would drop a cell's
-    rows if it crashed between the cell's delete and rename, and a
-    union-of-dirs resume would retrain/re-home WITHOUT them (ADVICE
-    r12); the resume instead promotes the manifest-referenced staging
-    dirs, which a torn commit can never have touched. Data first (cell
-    promotion + stale-directory deletes), membership next, descriptor
-    last, manifest then staging deleted after. A crash between data
-    and descriptor leaves probes on the OLD geometry over partially
-    moved rows — bounded recall loss, never wrong results (membership,
-    not global consistency, defines candidates — ``ivf_index_topk``'s
-    standing contract) — until the idempotent resume. A resume of a run
-    torn AFTER the descriptor commit redoes the promotions but does NOT
-    re-bump the ``retrains`` counter (the descriptor already reflects
-    the target — the split's 'already grown' guard). An orphaned
-    staging dir (crash between manifest delete and staging delete) is
-    inert — the next retrain overwrites it. ``upsert_ivf_index`` /
-    ``split_ivf_cell`` / ``merge_ivf_cells`` auto-resume a pending
-    retrain before mutating. Returns the new live-cell count, or None
-    for the no-op."""
-    import json
+    Crash contract (``operators/staged.py``): the re-assigned snapshot
+    is STAGED (``_retrain_staging/{data,_vecmeta}``, complete
+    re-assigned rows and their membership, partitioned) with the new
+    descriptor computed, and only then does the intent manifest
+    (``_ivf_retrain_pending.json`` — trained centroids and books)
+    exist. Data first (cell promotion + stale-directory deletes),
+    membership next, descriptor last. A crash between data and
+    descriptor leaves probes on the OLD geometry over partially moved
+    rows — bounded recall loss, never wrong results (membership, not
+    global consistency, defines candidates — ``ivf_index_topk``'s
+    standing contract) — until the next IVF action (or this call with
+    no target) commits the manifest, which writes the same descriptor:
+    ``retrains`` counts the retrain once. An orphaned staging dir
+    (crash between manifest delete and staging delete) is inert — the
+    next retrain overwrites it, the no-op reaps it. Returns the new
+    live-cell count, or None for the no-op."""
     import os
 
     meta = read_ivf_meta(path)
-    pend_path = os.path.join(path, _IVF_RETRAIN_PENDING)
-    pending = None
-    if fsutil.exists(pend_path, spark=spark):
-        pending = json.loads(fsutil.read_text(pend_path, spark=spark))
-    if pending is None:
-        # finish any torn incremental action first (each is O(cells
-        # touched) and idempotent); only one manifest can exist at a
-        # time — every action resumes the others before writing its own.
-        # The staged upsert restore runs FIRST: the retrain's training
-        # scan reads every cell directory, and a torn upsert overwrite
-        # may have holed one (r13).
-        _resume_ivf_upsert(spark, path)
-        if fsutil.exists(os.path.join(path, _IVF_SPLIT_PENDING),
-                         spark=spark):
-            split_ivf_cell(spark, path)
-            meta = read_ivf_meta(path)
-        if fsutil.exists(os.path.join(path, _IVF_MERGE_PENDING),
-                         spark=spark):
-            merge_ivf_cells(spark, path)
-            meta = read_ivf_meta(path)
+    pending = staged.pending(path, _IVF_RETRAIN_PENDING, spark)
+    if pending is not None and n_cells is not None \
+            and int(n_cells) != len(pending["centroids"]):
+        raise ValueError(
+            f"retrain_ivf_index: unfinished retrain to "
+            f"{len(pending['centroids'])} cells pending at {path} — "
+            f"resume it (n_cells=None) before retraining to another "
+            f"target")
+    # a torn action commits first: the training scan reads every cell
+    # directory, which a torn commit may have holed
+    meta = staged.finish_torn(spark, path, _IVF) or meta
+    if pending is not None:
+        return len(pending["centroids"])
     cur_cells, dims = int(meta["n_cells"]), int(meta["dims"])
     dead = {int(c) for c in meta.get("dead", [])}
     chain = int(meta.get("geometry_actions", 0))
     pqm = meta.get("pq")
     train_pq = bool(train_pq and pqm is not None)
     staging = os.path.join(path, _IVF_RETRAIN_STAGING)
-    if pending is None and not force and not dead and chain == 0 \
-            and n_cells is None and not train_pq:
+    if not force and not dead and chain == 0 and n_cells is None \
+            and not train_pq:
         # geometry never drifted: no-op — but reap orphaned staging
         # snapshots first (a crash between the manifest delete and the
         # staging delete leaves a dir no healthy index would otherwise
-        # ever revisit — full-index-size for the retrain's own, bounded
-        # by one batch/two cells for the incremental actions, each also
-        # overwritten by that action's next run; the rebuild is the
-        # natural GC point because it is already a full pass)
-        # (safe: every pending manifest was restored/resumed at entry,
-        # so nothing references these dirs here)
-        for p in (staging,
-                  os.path.join(path, _IVF_UPSERT_STAGING),
-                  os.path.join(path, _IVF_SPLIT_STAGING),
-                  os.path.join(path, _IVF_MERGE_STAGING)):
-            if fsutil.exists(p, spark=spark):
-                fsutil.delete(p, spark=spark)
+        # ever revisit — full-index-size for the retrain's own; the
+        # rebuild is the natural GC point because it is already a full
+        # pass, and the torn manifest, if any, was committed above, so
+        # nothing references these dirs)
+        for d in _IVF.actions.values():
+            fsutil.delete(os.path.join(path, d), spark=spark)
         return None
-    books_new: list | None = None
-    if pending is not None:
-        cents_new = [[float(x) for x in c] for c in pending["centroids"]]
-        k = len(cents_new)
-        if n_cells is not None and int(n_cells) != k:
-            raise ValueError(
-                f"retrain_ivf_index: unfinished retrain to {k} cells "
-                f"pending at {path} — resume it (n_cells=None) before "
-                f"retraining to another target")
-        if pending.get("pq_books") is not None:
-            books_new = [[[float(x) for x in cent] for cent in book]
-                         for book in pending["pq_books"]]
-        # the manifest references a COMPLETE staged snapshot: resume by
-        # promoting it — never from cell dirs a torn commit may have
-        # holed (ADVICE r12); codes in the snapshot were already encoded
-        # with the manifest's books
-        live_names = pending["live_cells"]
-        live_span_names = pending["live_spans"]
+    # every cell directory: no manifest ⇒ every prior action fully
+    # committed ⇒ vec_id unique across cells, so no dedup
+    rows = fsutil.read_parquet_or_empty(
+        spark, path, meta["schemas"].get("index"))
+    if n_cells is not None:
+        if int(n_cells) < 1:
+            raise ValueError("retrain_ivf_index: n_cells must be >= 1")
+        k = int(n_cells)
     else:
-        # every cell directory: no manifest ⇒ every prior action fully
-        # committed ⇒ vec_id unique across cells, so no dedup
-        rows = fsutil.read_parquet_or_empty(
-            spark, path, meta["schemas"].get("index"))
-        if n_cells is not None:
-            if int(n_cells) < 1:
-                raise ValueError(
-                    "retrain_ivf_index: n_cells must be >= 1")
-            k = int(n_cells)
-        else:
-            k = cur_cells - len(dead)
-        if k < 1:
-            raise ValueError(
-                f"retrain_ivf_index: index at {path} has no live "
-                f"cells")
-        if rows.isEmpty():
-            raise ValueError(
-                f"retrain_ivf_index: index at {path} holds no "
-                f"vectors — nothing to train on")
-        cents_new = train_ivf_centroids(
-            rows, "embedding", k, dims, iters=iters,
+        k = cur_cells - len(dead)
+    if k < 1:
+        raise ValueError(
+            f"retrain_ivf_index: index at {path} has no live cells")
+    if rows.isEmpty():
+        raise ValueError(
+            f"retrain_ivf_index: index at {path} holds no "
+            f"vectors — nothing to train on")
+    cents_new = train_ivf_centroids(
+        rows, "embedding", k, dims, iters=iters,
+        sample_fraction=sample_fraction,
+        id_col="vec_id" if sample_fraction is not None else None,
+        salt=salt)
+    books_new = None
+    if train_pq:
+        books_new = train_pq_codebooks(
+            rows, m=int(pqm["m"]), n_codes=int(pqm["n_codes"]),
+            vec_col="embedding", dims=dims, iters=iters,
             sample_fraction=sample_fraction,
-            id_col="vec_id" if sample_fraction is not None else None,
-            salt=salt)
-        if train_pq:
-            books_new = train_pq_codebooks(
-                rows, m=int(pqm["m"]), n_codes=int(pqm["n_codes"]),
-                vec_col="embedding", dims=dims, iters=iters,
-                sample_fraction=sample_fraction,
-                salt=f"{salt}|pq")
-        # snapshot the re-assigned rows BEFORE any destructive
-        # mutation; the manifest is written strictly AFTER the staging
-        # write returns, so manifest ⇒ staging complete
-        reassigned = (ivf_assign(rows.drop("cell"), "embedding", k, dims,
-                                 probes=1, centroids=cents_new)
-                      .withColumn("cell", F.element_at("cells", 1))
-                      .drop("cells"))
-        if books_new is not None:
-            # re-encode the fine layer with the freshly trained books in
-            # the same pass (normalization staged through a persisted
-            # column — the pq_encode clone hazard)
-            reassigned = transient_persist(
-                reassigned.drop("codes")
-                .withColumn("__v", normalize_expr("embedding")))
-            reassigned = reassigned.withColumn(
-                "codes", pq_encode("__v", int(pqm["m"]),
-                                   int(pqm["n_codes"]), dims,
-                                   normalized=True,
-                                   books=books_new)).drop("__v")
-        (fsutil.cluster_by_dir(
-            reassigned.select(*rows.columns),  # keep stored column order
-            "cell", "vec_id", k)
-         .write.mode("overwrite").partitionBy("cell")
-         .parquet(os.path.join(staging, "data")))
-        # the membership table is staged beside the data (2-int rows,
-        # derived from the staged files) so the commit is pure
-        # directory promotion for BOTH tables — at 100 TB the
-        # re-assignment pass writes the index exactly once and the
-        # destructive phase touches only filesystem metadata
-        (fsutil.cluster_by_dir(
-            fsutil.read_parquet_or_empty(
-                spark, os.path.join(staging, "data"),
-                meta["schemas"].get("index"))
-            .select("vec_id", F.col("cell").cast("int").alias("cell"))
-            .withColumn("vspan", F.expr(f"vec_id div {_IVF_VSPAN}")),
-            "vspan", "vec_id")
-         .write.mode("overwrite").partitionBy("vspan")
-         .parquet(os.path.join(staging, "members")))
-        live_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "data"), spark=spark)
-            if n.startswith("cell=")]
-        live_span_names = [n for n in fsutil.list_names(
-            os.path.join(staging, "members"), spark=spark)
-            if n.startswith("vspan=")]
-        manifest = {"centroids": cents_new, "staging": True,
-                    "live_cells": live_names,
-                    "live_spans": live_span_names}
-        if books_new is not None:
-            manifest["pq_books"] = books_new
-        fsutil.write_text(pend_path, json.dumps(manifest), spark=spark)
+            salt=f"{salt}|pq")
+    reassigned = (ivf_assign(rows.drop("cell"), "embedding", k, dims,
+                             probes=1, centroids=cents_new)
+                  .withColumn("cell", F.element_at("cells", 1))
+                  .drop("cells"))
+    if books_new is not None:
+        # re-encode the fine layer with the freshly trained books in the
+        # same pass (normalization staged through a persisted column —
+        # the pq_encode clone hazard)
+        reassigned = transient_persist(
+            reassigned.drop("codes")
+            .withColumn("__v", normalize_expr("embedding")))
+        reassigned = reassigned.withColumn(
+            "codes", pq_encode("__v", int(pqm["m"]),
+                               int(pqm["n_codes"]), dims,
+                               normalized=True,
+                               books=books_new)).drop("__v")
+    (fsutil.cluster_by_dir(
+        reassigned.select(*rows.columns),  # keep stored column order
+        "cell", "vec_id", k)
+     .write.mode("overwrite").partitionBy("cell")
+     .parquet(os.path.join(staging, "data")))
+    # the membership table is staged beside the data (2-int rows,
+    # derived from the staged files) so the commit is pure directory
+    # promotion for BOTH tables — at 100 TB the re-assignment pass
+    # writes the index exactly once and the destructive phase touches
+    # only filesystem metadata
+    (fsutil.cluster_by_dir(
+        fsutil.read_parquet_or_empty(
+            spark, os.path.join(staging, "data"),
+            meta["schemas"].get("index"))
+        .select("vec_id", F.col("cell").cast("int").alias("cell"))
+        .withColumn("vspan", F.expr(f"vec_id div {_IVF_VSPAN}")),
+        "vspan", "vec_id")
+     .write.mode("overwrite").partitionBy("vspan")
+     .parquet(os.path.join(staging, _IVF_MEMBERS)))
     # compact: every pre-retrain directory not promoted disappears —
     # dead slots' dirs (already gone), renumbered tails, emptied cells;
     # ids unchanged → same span set, no span deletes
-    fsutil.promote_dirs(os.path.join(staging, "data"), path, "cell",
-                        range(1, max(cur_cells, k) + 1), live_names,
-                        spark=spark)
-    fsutil.promote_dirs(os.path.join(staging, "members"),
-                        os.path.join(path, _IVF_MEMBERS), "vspan", [],
-                        live_span_names, spark=spark)
-
-    # descriptor last: compacted geometry, chain reset. A resume of a
-    # run torn AFTER the descriptor commit must not re-bump the
-    # counter (ADVICE r12 — the split's 'descriptor already grown'
-    # guard): the descriptor already reflecting the pending target is
-    # exactly that case.
-    already_committed = (
-        pending is not None
-        and int(meta.get("n_cells", -1)) == k
-        and meta.get("centroids") == cents_new
-        and not meta.get("dead")
-        and int(meta.get("geometry_actions", 0)) == 0
-        and (books_new is None
-             or (meta.get("pq") or {}).get("books") == books_new))
-    meta2 = dict(meta)
-    meta2.update({"n_cells": k, "centroids": cents_new, "dead": [],
-                  "geometry_actions": 0,
-                  "retrains": int(meta.get("retrains", 0))
-                  + (0 if already_committed else 1)})
+    descriptor = dict(meta, n_cells=k, centroids=cents_new, dead=[],
+                      geometry_actions=0,
+                      retrains=int(meta.get("retrains", 0)) + 1)
+    doc = {"centroids": cents_new}
     if books_new is not None:
-        meta2["pq"] = dict(pqm or meta.get("pq") or {})
-        meta2["pq"]["books"] = books_new
-    fsutil.write_text(os.path.join(path, _IVF_META), json.dumps(meta2),
-                      spark=spark)
-    fsutil.delete(pend_path, spark=spark)
-    fsutil.delete(staging, spark=spark)
+        descriptor["pq"] = dict(pqm, books=books_new)
+        doc["pq_books"] = books_new
+    staged.run(spark, path, _IVF, _IVF_RETRAIN_PENDING, dict(doc, promote=[
+        staged.entry(staging, "", "cell", range(1, max(cur_cells, k) + 1),
+                     spark),
+        staged.entry(staging, _IVF_MEMBERS, "vspan", (), spark)],
+        descriptor=descriptor))
     return k
-
-
-def pending_retrain(path: str) -> dict | None:
-    """``{"centroids": [...]}`` of a torn ``retrain_ivf_index`` run, or
-    None — the retrain twin of ``pending_split``. Recovery =
-    ``retrain_ivf_index(spark, path)`` (resumes with the manifest's
-    trained codebook); upsert/split/merge auto-resume it before
-    mutating."""
-    import json
-    import os
-
-    pend = os.path.join(path, _IVF_RETRAIN_PENDING)
-    if not fsutil.exists(pend):
-        return None
-    doc = json.loads(fsutil.read_text(pend))
-    return {"centroids": doc["centroids"]}
-
-
-def pending_merge(path: str) -> dict | None:
-    """``{"src": int, "dst": int}`` of a torn ``merge_ivf_cells`` run,
-    or None — the merge twin of ``pending_split``. Recovery =
-    ``merge_ivf_cells(spark, path)`` with no arguments; the upsert and
-    the split auto-resume it before mutating."""
-    import json
-    import os
-
-    pend = os.path.join(path, _IVF_MERGE_PENDING)
-    if not fsutil.exists(pend):
-        return None
-    doc = json.loads(fsutil.read_text(pend))
-    return {"src": int(doc["src"]), "dst": int(doc["dst"])}
-
-
-def pending_split(path: str) -> dict | None:
-    """``{"cell": int, "new_cell": int}`` of a torn ``split_ivf_cell``
-    run (its intent manifest survives the crash), or None when no split
-    is pending — the split twin of ``pending_upsert_cells``. Recovery =
-    ``split_ivf_cell(spark, path)`` with no cell argument (resumes), and
-    ``upsert_ivf_index`` auto-resumes it before applying a batch."""
-    import json
-    import os
-
-    pend = os.path.join(path, _IVF_SPLIT_PENDING)
-    if not fsutil.exists(pend):
-        return None
-    doc = json.loads(fsutil.read_text(pend))
-    return {"cell": int(doc["cell"]), "new_cell": int(doc["new_cell"])}
-
-
-def pending_upsert_cells(path: str) -> list[int] | None:
-    """Cell ids a crashed ``upsert_ivf_index`` batch may have left half-
-    applied (its intent manifest survives the crash), or None when the
-    last upsert committed cleanly. Recovery: any IVF action restores the
-    staged snapshot at entry (``_resume_ivf_upsert``), and re-running
-    the same upsert is also always safe (idempotent; see the crash
-    contract above)."""
-    import json
-    import os
-
-    pending = os.path.join(path, _IVF_PENDING)
-    if not fsutil.exists(pending):
-        return None
-    return json.loads(fsutil.read_text(pending))["cells"]
 
 
 def read_ivf_meta(path: str) -> dict:
     """The persisted IVF index descriptor, after
-    ``fsutil.read_index_descriptor`` checked the index against the one
-    layout today's writers produce (descriptor with ``schemas``, a
+    ``staged.read_descriptor`` checked the index against the one layout
+    today's writers produce (descriptor with ``schemas``, a
     ``_vecmeta/`` membership table, staged pending manifests). Any
     other index raises a ValueError naming the rebuild call."""
-    live = ("live_cells", "live_spans")
-    return fsutil.read_index_descriptor(
-        path, _IVF_META, ("schemas",), _IVF_MEMBERS,
-        {_IVF_PENDING: live, _IVF_SPLIT_PENDING: live,
-         _IVF_MERGE_PENDING: live, _IVF_RETRAIN_PENDING: live},
-        "write_ivf_index")
+    return staged.read_descriptor(path, _IVF, ("schemas",), _IVF_MEMBERS,
+                                  "write_ivf_index")
 
 
 def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
@@ -2361,7 +1969,7 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
     ``centroids`` is None — a probe can never silently use centroids
     other than the ones that built the assignment; passing centroids
     (or n_cells/dims) that contradict the persisted descriptor raises
-    instead of returning wrong-cell results (r5 verdict #4). Cells the
+    instead of returning wrong-cell results. Cells the
     descriptor lists as ``dead`` (merged away) are masked to +inf in
     the query assignment, so probe slots are never spent on empty
     directories.
@@ -2380,7 +1988,7 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
     filters (the standard IVF dial — exactly how FAISS/Qdrant document
     filtered search). Exactness WITHIN the probed cells is unchanged.
 
-    ``min_results`` — AUTO-widening (r11 verdict #4): without it a
+    ``min_results`` — AUTO-widening: without it a
     too-narrow probe under-returns SILENTLY and the caller cannot tell
     "corpus has < k matches" from "probe too narrow". With it, queries
     that return fewer than ``min_results`` rows are re-probed with the
@@ -2396,7 +2004,7 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
     contract).
 
     ``pq_shortlist`` — the ADC probe over a PQ-carrying index
-    (``write_ivf_index(pq=...)``; r12 verdict #3): the candidate stage
+    (``write_ivf_index(pq=...)``): the candidate stage
     scans the probed cells' ``codes`` column ONLY (m small ints — 16×
     narrower than raw floats at the defaults, which at 100 TB is the
     candidate-stage IO), scores each candidate against the query's
@@ -2471,7 +2079,7 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
         q = ivf_assign(qf, "qv", n_cells, dims, probes=p,
                        centroids=centroids, dead_cells=dead)
         # array_distinct is defense in depth behind ivf_assign's
-        # live-count probe clamp (ADVICE r11): a duplicated probe cell
+        # live-count probe clamp: a duplicated probe cell
         # would score the same neighbor twice and hand it two of the k
         # ranks
         qcells = q.select(
@@ -2530,7 +2138,7 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
         # shortlist); a degenerate oversized shortlist falls back to a
         # min/max RANGE pushdown instead of a megaliteral IN: a 100k-
         # element IN literal has real analyzer/codegen cost before the
-        # scan even starts (r13 verdict #3), while the range predicate
+        # scan even starts, while the range predicate
         # is two comparisons that still prune row groups whose id
         # min/max miss the shortlist span entirely.
         emb_scan = index.select("vec_id", "embedding")
@@ -2565,7 +2173,7 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int,
     # each round's counts collect (and the caller's final action) runs
     # against the persisted round result, not the whole widening
     # lineage — without this every round re-executes every PRIOR probe
-    # pass's partition scan + broadcast join + window (ADVICE r12)
+    # pass's partition scan + broadcast join + window
     res = transient_persist(res)
     while p < live_count:
         counts = {r.query_id: r.n for r in

@@ -430,22 +430,23 @@ def test_ivf_index_upsert_pending_manifest(spark, tmp_path, corpus):
     """Torn-batch detectability: the upsert writes an intent manifest
     with the affected cells before the destructive commit and removes it
     after — a crash in between leaves the manifest for
-    pending_upsert_cells to report, and re-running the same upsert
+    staged.pending to report, and re-running the same upsert
     clears it and converges to the rebuild."""
     import pytest as _pytest
 
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.similarity import (
-        pending_upsert_cells, upsert_ivf_index, write_ivf_index,
+        _IVF_PENDING, upsert_ivf_index, write_ivf_index,
     )
 
     path = str(tmp_path / "idx")
     write_ivf_index(corpus.where(F.col("vec_id") % 4 == 0), path, n_cells=8)
-    assert pending_upsert_cells(path) is None
+    assert staged.pending(path, _IVF_PENDING) is None
     touched = upsert_ivf_index(
         spark, path, adds=corpus.where(F.col("vec_id") % 4 == 1))
     assert touched
-    assert pending_upsert_cells(path) is None   # committed → manifest gone
+    assert staged.pending(path, _IVF_PENDING) is None   # manifest gone
 
     # tear the next batch strictly after its manifest is durable
     adds = corpus.where(F.col("vec_id") % 4 >= 2)
@@ -462,12 +463,12 @@ def test_ivf_index_upsert_pending_manifest(spark, tmp_path, corpus):
             upsert_ivf_index(spark, path, adds=adds)
     finally:
         fsutil.write_text = real_write
-    pend = pending_upsert_cells(path)
-    assert pend and set(pend) <= set(range(1, 9))
+    pend = staged.pending(path, _IVF_PENDING)
+    assert pend and set(pend["cells"]) <= set(range(1, 9))
     # recovery is re-running the same upsert; it restores the staged
     # batch, rewrites the manifest and clears it on commit
     upsert_ivf_index(spark, path, adds=adds)
-    assert pending_upsert_cells(path) is None
+    assert staged.pending(path, _IVF_PENDING) is None
     full = str(tmp_path / "full")
     write_ivf_index(corpus, full, n_cells=8)
     assert sorted((r.vec_id, r.cell) for r in
@@ -622,8 +623,9 @@ def test_split_ivf_cell_resume_after_torn_data_commit(spark, tmp_path,
     import pytest as _pytest
 
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.similarity import (
-        pending_split, split_ivf_cell, write_ivf_index,
+        _IVF_SPLIT_PENDING, split_ivf_cell, write_ivf_index,
     )
 
     want_path = str(tmp_path / "want")
@@ -635,7 +637,7 @@ def test_split_ivf_cell_resume_after_torn_data_commit(spark, tmp_path,
     write_ivf_index(corpus, torn, n_cells=8)
     with _pytest.raises(ValueError, match="not in"):
         split_ivf_cell(spark, torn, cell=99)
-    assert pending_split(torn) is None
+    assert staged.pending(torn, _IVF_SPLIT_PENDING) is None
     real_write = fsutil.write_text
 
     def crashing(p, text, spark=None):
@@ -649,7 +651,9 @@ def test_split_ivf_cell_resume_after_torn_data_commit(spark, tmp_path,
             split_ivf_cell(spark, torn, cell=hot, iters=2)
     finally:
         fsutil.write_text = real_write
-    assert pending_split(torn) == {"cell": hot, "new_cell": new}
+    pend = staged.pending(torn, _IVF_SPLIT_PENDING)
+    assert {k: pend[k] for k in ("cell", "new_cell")} == \
+        {"cell": hot, "new_cell": new}
     # the duplicate torn state: the hot cell dir copied to the new cell
     # id wholesale, so both dirs hold every member
     shutil.copytree(os.path.join(torn, f"cell={hot}"),

@@ -2,7 +2,8 @@
 supported layout — the one ``write_ivf_index`` / ``write_lexical_index``
 and the staged actions produce. An index in any other shape (no
 descriptor, a descriptor missing a key the readers need, no membership
-table, a pending manifest without a staged snapshot) is rejected with a
+table, a pending manifest without ``staging: true``, its ``promote``
+list or its ``descriptor``) is rejected with a
 ValueError naming the path and the rebuild call; it is never migrated
 in place."""
 
@@ -111,14 +112,25 @@ def test_ivf_without_membership_table_rejected(spark, vecs, ivf_template,
         upsert_ivf_index(spark, path, adds=vecs.limit(2))
 
 
+_IVF_PROMOTE = [{"dir": "", "key": "cell", "touched": [1],
+                 "live": ["cell=1"]}]
+
+
 @pytest.mark.parametrize("name,doc", [
-    ("_ivf_upsert_pending.json", {"cells": [1], "vspans": [0]}),
     ("_ivf_upsert_pending.json",
-     {"cells": [1], "vspans": [0], "staging": True}),
+     {"promote": _IVF_PROMOTE, "descriptor": {}, "cells": [1],
+      "vspans": [0]}),
+    ("_ivf_upsert_pending.json",
+     {"staging": True, "descriptor": {}, "cells": [1], "vspans": [0]}),
+    # the previous release's layout: live_* lists, no promote/descriptor
     ("_ivf_split_pending.json",
      {"cell": 1, "new_cell": 5, "sub": [[0.0] * 3] * 2, "spans": [0],
-      "staging": True, "live_cells": ["cell=1"]}),
-    ("_ivf_retrain_pending.json", {"centroids": [[0.0] * 3] * 4}),
+      "staging": True, "live_cells": ["cell=1"], "live_spans": []}),
+    ("_ivf_retrain_pending.json",
+     {"staging": False, "promote": _IVF_PROMOTE, "descriptor": {},
+      "centroids": [[0.0] * 3] * 4}),
+    ("_ivf_merge_pending.json",
+     {"staging": True, "promote": _IVF_PROMOTE, "src": 1, "dst": 2}),
 ])
 def test_ivf_manifest_without_staged_snapshot_rejected(
         spark, vecs, ivf_template, tmp_path, name, doc):
@@ -157,14 +169,27 @@ def test_lex_without_docmeta_rejected(spark, lex_template, tmp_path):
         bm25_indexed_topk(spark, path, ["alpha"], k=3)
 
 
+_LEX_PROMOTE = [{"dir": "postings", "key": "shard", "touched": [0],
+                 "live": ["shard=0"]}]
+
+
 @pytest.mark.parametrize("name,doc", [
-    ("_lex_upsert_pending.json", {"shards": [0], "dspans": [0]}),
     ("_lex_upsert_pending.json",
-     {"shards": [0], "dspans": [0], "staging": True}),
+     {"promote": _LEX_PROMOTE, "descriptor": {}, "shards": [0],
+      "dspans": [0]}),
+    ("_lex_upsert_pending.json",
+     {"staging": True, "descriptor": {}, "shards": [0], "dspans": [0]}),
+    # the previous release's layout: live_* lists, no promote/descriptor
     ("_lex_merge_pending.json",
      {"src": 0, "dst": 1, "spans": [0], "total": 3, "staging": True,
-      "live_postings": ["shard=1"], "live_positions": []}),
-    ("_lex_compact_pending.json", {"shards": 4, "staging": True}),
+      "live_postings": ["shard=1"], "live_positions": [],
+      "live_docmeta": []}),
+    ("_lex_compact_pending.json",
+     {"staging": False, "promote": _LEX_PROMOTE, "descriptor": {},
+      "shards": 4}),
+    ("_lex_split_pending.json",
+     {"staging": True, "promote": _LEX_PROMOTE, "src": 0, "dst": 4,
+      "salt": "lexsplit4"}),
 ])
 def test_lex_manifest_without_staged_snapshot_rejected(
         spark, docs, lex_template, tmp_path, name, doc):

@@ -227,8 +227,9 @@ def test_optimizer_drives_hot_cell_split_once_per_poll(spark, tmp_path):
     second poll is a no-op (load factor back under threshold), and probe
     results are unchanged across the split. A torn split is resumed by
     the next poll (idempotent under a mid-split crash)."""
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.similarity import (
-        ivf_index_topk, pending_split, read_ivf_meta)
+        _IVF_SPLIT_PENDING, ivf_index_topk, read_ivf_meta)
 
     rig = _Rig(spark, tmp_path, VECS_DDL, "vecs")
     engine = rig.engine
@@ -302,10 +303,10 @@ def test_optimizer_drives_hot_cell_split_once_per_poll(spark, tmp_path):
             ix.maybe_split()
     finally:
         fsutil.write_text = real_write
-    assert pending_split(path) is not None
+    assert staged.pending(path, _IVF_SPLIT_PENDING) is not None
     acts = opt.maybe_maintain_indexes()
     assert any(a[1].startswith("split:") for a in acts)
-    assert pending_split(path) is None
+    assert staged.pending(path, _IVF_SPLIT_PENDING) is None
     assert read_ivf_meta(path)["n_cells"] == 6
 
 

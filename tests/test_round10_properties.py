@@ -98,16 +98,17 @@ def test_upsert_auto_resumes_pending_split(spark, tmp_path, corpus):
     """A torn split (data committed, descriptor not) must not let a
     subsequent upsert resurrect deleted vectors: the upsert auto-resumes
     the split first, then applies the batch against the POST-split
-    geometry (ADVICE r9 medium). Also covers the pending_split helper."""
+    geometry (ADVICE r9 medium). Also covers staged.pending."""
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.similarity import (
-        _IVF_MEMBERS, pending_split, split_ivf_cell, upsert_ivf_index,
-        write_ivf_index,
+        _IVF_MEMBERS, _IVF_SPLIT_PENDING, split_ivf_cell,
+        upsert_ivf_index, write_ivf_index,
     )
 
     path = str(tmp_path / "idx")
     write_ivf_index(corpus, path, n_cells=8)
-    assert pending_split(path) is None
+    assert staged.pending(path, _IVF_SPLIT_PENDING) is None
 
     # tear a split exactly like the r9 crash test: everything commits
     # except the descriptor, so _vecmeta/descriptor lag the moved rows
@@ -124,7 +125,7 @@ def test_upsert_auto_resumes_pending_split(spark, tmp_path, corpus):
             split_ivf_cell(spark, path, iters=2)
     finally:
         fsutil.write_text = real_write
-    pend = pending_split(path)
+    pend = staged.pending(path, _IVF_SPLIT_PENDING)
     assert pend is not None and pend["new_cell"] == 9
 
     # remove a vector that the torn split MOVED to the new cell — the
@@ -137,7 +138,7 @@ def test_upsert_auto_resumes_pending_split(spark, tmp_path, corpus):
     removes = spark.createDataFrame([(victim,)], "vec_id long")
     upsert_ivf_index(spark, path, removes=removes)
 
-    assert pending_split(path) is None                 # split completed
+    assert staged.pending(path, _IVF_SPLIT_PENDING) is None  # completed
     meta = json.loads(fsutil.read_text(
         os.path.join(path, "_ivf_meta.json"), spark=spark))
     assert meta["n_cells"] == 9                        # descriptor grew
@@ -519,8 +520,9 @@ def test_lexical_split_crash_resume_and_upsert_autoresume(spark, tmp_path):
     pending manifest survives, a direct resume OR the next upsert
     finishes it, and the result equals the untorn split."""
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.retrieval import (
-        pending_lexical_split, split_lexical_shard, upsert_lexical_index,
+        _LEX_SPLIT_PENDING, split_lexical_shard, upsert_lexical_index,
         write_lexical_index)
 
     docs = _split_docs(spark)
@@ -545,14 +547,14 @@ def test_lexical_split_crash_resume_and_upsert_autoresume(spark, tmp_path):
             split_lexical_shard(spark, path)
     finally:
         fsutil.write_text = real_write
-    pend = pending_lexical_split(path)
+    pend = staged.pending(path, _LEX_SPLIT_PENDING)
     assert pend is not None and pend["dst"] == 4
 
     # the next CDC batch auto-resumes the split, then applies
     adds = spark.createDataFrame([(200, "alpha beta resumed")],
                                  "doc_id long, text string")
     upsert_lexical_index(spark, path, adds=adds)
-    assert pending_lexical_split(path) is None
+    assert staged.pending(path, _LEX_SPLIT_PENDING) is None
     meta = json.load(open(os.path.join(path, "_lex_meta.json")))
     assert len(meta["splits"]) == 1
     # every original posting survived the torn split + resume (plus the
@@ -569,8 +571,9 @@ def test_lexical_split_degenerate_raises_before_manifest(spark, tmp_path):
     a single hot term) must raise BEFORE the intent manifest exists —
     committing the split would add a useless descriptor entry the
     load-factor policy would stack forever."""
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.retrieval import (
-        pending_lexical_split, split_lexical_shard, write_lexical_index)
+        _LEX_SPLIT_PENDING, split_lexical_shard, write_lexical_index)
 
     docs = spark.createDataFrame(
         [(i, "sameword " * 5) for i in range(30)],
@@ -579,7 +582,7 @@ def test_lexical_split_degenerate_raises_before_manifest(spark, tmp_path):
     write_lexical_index(docs, path, shards=4, span_width=8)
     with pytest.raises(ValueError, match="one side"):
         split_lexical_shard(spark, path)
-    assert pending_lexical_split(path) is None
+    assert staged.pending(path, _LEX_SPLIT_PENDING) is None
 
 
 def test_shard_placement_python_spark_parity(spark):
@@ -619,18 +622,19 @@ def test_write_ivf_index_empty_corpus_raises(spark, tmp_path):
 
 
 def test_pending_lexical_upsert_helper(spark, tmp_path):
-    """pending_lexical_upsert mirrors pending_upsert_cells: None after a
-    clean batch, the touched shard/span manifest after a torn one."""
+    """staged.pending on the lexical upsert manifest: None after a clean
+    batch, the touched shard/span manifest after a torn one."""
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.retrieval import (
-        pending_lexical_upsert, upsert_lexical_index, write_lexical_index)
+        _LEX_PENDING, upsert_lexical_index, write_lexical_index)
 
     path = str(tmp_path / "lex")
     write_lexical_index(_split_docs(spark), path, shards=4, span_width=8)
     adds = spark.createDataFrame([(100, "alpha zeta")],
                                  "doc_id long, text string")
     upsert_lexical_index(spark, path, adds=adds)
-    assert pending_lexical_upsert(path) is None
+    assert staged.pending(path, _LEX_PENDING) is None
 
     real = fsutil.delete
 
@@ -647,12 +651,12 @@ def test_pending_lexical_upsert_helper(spark, tmp_path):
                 adds=adds.withColumn("doc_id", F.col("doc_id") + 1))
     finally:
         fsutil.delete = real
-    pend = pending_lexical_upsert(path)
+    pend = staged.pending(path, _LEX_PENDING)
     assert pend is not None and pend["shards"]
     # recovery = re-run; the manifest clears
     upsert_lexical_index(
         spark, path, adds=adds.withColumn("doc_id", F.col("doc_id") + 1))
-    assert pending_lexical_upsert(path) is None
+    assert staged.pending(path, _LEX_PENDING) is None
 
 
 # ---------------------------------------------------------------------------

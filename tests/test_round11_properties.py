@@ -286,15 +286,16 @@ def test_ivf_merge_coldest_and_upsert_avoids_dead(spark, emb, tmp_path):
 def test_ivf_merge_crash_resume_via_upsert(spark, emb, tmp_path):
     """A merge torn before the descriptor commit (data moved, src dir
     deleted, membership rewritten) must be detectable
-    (pending_merge) and auto-resumed by the next upsert, converging to
+    (staged.pending) and auto-resumed by the next upsert, converging to
     the clean-merge state."""
     import json
     import os
 
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.similarity import (
-        merge_ivf_cells, pending_merge, read_ivf_meta, upsert_ivf_index,
-        write_ivf_index,
+        _IVF_MERGE_PENDING, merge_ivf_cells, read_ivf_meta,
+        upsert_ivf_index, write_ivf_index,
     )
 
     path = str(tmp_path / "crash")
@@ -312,12 +313,12 @@ def test_ivf_merge_crash_resume_via_upsert(spark, emb, tmp_path):
             merge_ivf_cells(spark, path)
     finally:
         fsutil.write_text = real_write
-    pend = pending_merge(path)
+    pend = staged.pending(path, _IVF_MERGE_PENDING)
     assert pend is not None
 
     upsert_ivf_index(spark, path,
                      adds=emb.where(F.col("vec_id") % 5 == 0))
-    assert pending_merge(path) is None
+    assert staged.pending(path, _IVF_MERGE_PENDING) is None
     meta = read_ivf_meta(path)
     assert meta["dead"] == [pend["src"]]
     idx = spark.read.parquet(path)
@@ -404,9 +405,10 @@ def test_lexical_merge_crash_resume_via_upsert(spark, tmp_path):
     import os
 
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.retrieval import (
-        bm25_indexed_topk, bm25_topk, merge_lexical_shards,
-        pending_lexical_merge, upsert_lexical_index, write_lexical_index,
+        _LEX_MERGE_PENDING, bm25_indexed_topk, bm25_topk,
+        merge_lexical_shards, upsert_lexical_index, write_lexical_index,
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -426,12 +428,12 @@ def test_lexical_merge_crash_resume_via_upsert(spark, tmp_path):
             merge_lexical_shards(spark, path)
     finally:
         fsutil.write_text = real_write
-    pend = pending_lexical_merge(path)
+    pend = staged.pending(path, _LEX_MERGE_PENDING)
     assert pend is not None
 
     upsert_lexical_index(spark, path,
                          adds=docs.where(F.col("doc_id") % 5 == 0))
-    assert pending_lexical_merge(path) is None
+    assert staged.pending(path, _LEX_MERGE_PENDING) is None
     meta = json.loads(open(os.path.join(path, "_lex_meta.json")).read())
     assert {"src": pend["src"], "dst": pend["dst"], "salt": None} \
         in meta["splits"]
@@ -548,8 +550,9 @@ def test_split_of_merged_away_shard_raises(spark, tmp_path):
     """A merged-away shard is retired forever: asking the split to
     target it must raise BEFORE any manifest exists (same rule as a
     bogus id — a wedged manifest would crash every resume)."""
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.retrieval import (
-        merge_lexical_shards, pending_lexical_split, split_lexical_shard,
+        _LEX_SPLIT_PENDING, merge_lexical_shards, split_lexical_shard,
         write_lexical_index,
     )
 
@@ -559,7 +562,7 @@ def test_split_of_merged_away_shard_raises(spark, tmp_path):
     src, dst = merge_lexical_shards(spark, path)
     with pytest.raises(ValueError, match="not a live placement target"):
         split_lexical_shard(spark, path, shard=src)
-    assert pending_lexical_split(path) is None    # nothing committed
+    assert staged.pending(path, _LEX_SPLIT_PENDING) is None  # nothing committed
 
 
 def test_optimizer_isolates_broken_index(spark, tmp_path):
@@ -623,8 +626,9 @@ def test_optimizer_isolates_broken_index(spark, tmp_path):
 def test_split_of_dead_ivf_cell_raises(spark, emb, tmp_path):
     """The IVF twin of the retired-shard rule: splitting a merged-away
     cell raises a named error before any manifest exists."""
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.similarity import (
-        merge_ivf_cells, pending_split, write_ivf_index,
+        _IVF_SPLIT_PENDING, merge_ivf_cells, write_ivf_index,
     )
 
     path = str(tmp_path / "idx")
@@ -632,4 +636,4 @@ def test_split_of_dead_ivf_cell_raises(spark, emb, tmp_path):
     src, dst = merge_ivf_cells(spark, path)
     with pytest.raises(ValueError, match="merged away"):
         split_ivf_cell(spark, path, cell=src)
-    assert pending_split(path) is None
+    assert staged.pending(path, _IVF_SPLIT_PENDING) is None

@@ -300,12 +300,13 @@ def test_compact_to_explicit_shard_target(spark, docs, tmp_path):
 def test_retrain_crash_resume_via_upsert(spark, corpus, tmp_path):
     """A retrain torn before the descriptor commit (codebook trained and
     manifested, data partially re-assigned) must be detectable
-    (pending_retrain) and auto-resumed by the next upsert — with the
+    (staged.pending) and auto-resumed by the next upsert — with the
     MANIFEST's codebook, never a re-train over torn data — converging
     to the clean-retrain state."""
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.similarity import (
-        pending_retrain, retrain_ivf_index, upsert_ivf_index,
+        _IVF_RETRAIN_PENDING, retrain_ivf_index, upsert_ivf_index,
     )
 
     path = str(tmp_path / "crash")
@@ -333,13 +334,13 @@ def test_retrain_crash_resume_via_upsert(spark, corpus, tmp_path):
             retrain_ivf_index(spark, path, iters=2)
     finally:
         fsutil.write_text = real_write
-    assert pending_retrain(path) is not None
+    assert staged.pending(path, _IVF_RETRAIN_PENDING) is not None
 
     # next upsert resumes the retrain before applying its batch
     extra = spark.createDataFrame([(1000, _vec(17))],
                                   "vec_id long, embedding array<float>")
     upsert_ivf_index(spark, path, adds=extra)
-    assert pending_retrain(path) is None
+    assert staged.pending(path, _IVF_RETRAIN_PENDING) is None
     meta = read_ivf_meta(path)
     clean_meta = read_ivf_meta(clean)
     assert meta["centroids"] == clean_meta["centroids"]
@@ -537,13 +538,14 @@ def test_compact_moves_positions_twin(spark, docs, tmp_path):
 
 def test_compact_crash_resume_via_upsert(spark, docs, tmp_path):
     """A compaction torn before the descriptor commit is detectable
-    (pending_lexical_compact) and auto-resumed by the next upsert,
+    (staged.pending) and auto-resumed by the next upsert,
     converging to the clean-compaction state with the batch applied
     against the compacted placement."""
     from mysql_ch_replicator_spark import fsutil
+    from mysql_ch_replicator_spark.operators import staged
     from mysql_ch_replicator_spark.operators.retrieval import (
-        bm25_indexed_topk, bm25_topk, compact_lexical_index,
-        pending_lexical_compact, upsert_lexical_index,
+        _LEX_COMPACT_PENDING, bm25_indexed_topk, bm25_topk,
+        compact_lexical_index, upsert_lexical_index,
     )
 
     path = str(tmp_path / "crash")
@@ -561,13 +563,13 @@ def test_compact_crash_resume_via_upsert(spark, docs, tmp_path):
             compact_lexical_index(spark, path)
     finally:
         fsutil.write_text = real_write
-    assert pending_lexical_compact(path) is not None
+    assert staged.pending(path, _LEX_COMPACT_PENDING) is not None
 
     upsert_lexical_index(
         spark, path,
         adds=docs.where(F.col("doc_id") % 5 == 0),
         removes=docs.where(F.col("doc_id") % 7 == 0).select("doc_id"))
-    assert pending_lexical_compact(path) is None
+    assert staged.pending(path, _LEX_COMPACT_PENDING) is None
 
     final = docs.where(F.col("doc_id") % 7 != 0)
     got = sorted(map(tuple, bm25_indexed_topk(

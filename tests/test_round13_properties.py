@@ -1516,6 +1516,89 @@ def test_compact_torn_docmeta_overwrite_keeps_dl(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# Cross-action resume: a torn geometry action is finished at the entry of
+# a DIFFERENT geometry action (not only the upsert), from its manifest,
+# with a live directory holed — no row is lost and the torn action's
+# descriptor lands before the second action runs.
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("family,torn,then", [
+    ("lex", "split", "merge"), ("lex", "merge", "compact"),
+    ("lex", "compact", "split"),
+    ("ivf", "split", "merge"), ("ivf", "merge", "retrain"),
+    ("ivf", "retrain", "split"),
+])
+def test_torn_action_finished_by_other_action_resume(
+        spark, tmp_path, lex_s4_template, ivf4_template, family, torn,
+        then):
+    from mysql_ch_replicator_spark.operators.retrieval import (
+        compact_lexical_index, merge_lexical_shards, split_lexical_shard,
+    )
+
+    path = str(tmp_path / "idx")
+    if family == "lex":
+        _link_copy(lex_s4_template, path)
+        actions = {"split": (split_lexical_shard, {}),
+                   "merge": (merge_lexical_shards, {}),
+                   "compact": (compact_lexical_index, {"shards": 3})}
+        tables, live_root = ("postings", "docmeta"), f"{path}/postings"
+    else:
+        _link_copy(ivf4_template, path)
+        # merge two POPULATED cells (the no-arg coldest pick can select
+        # an empty pair on this tiny corpus, where no hole is possible)
+        pop = sorted(int(r.cell) for r in spark.read.parquet(path)
+                     .groupBy("cell").count().select("cell").collect())
+        actions = {"split": (split_ivf_cell, {}),
+                   "merge": (merge_ivf_cells, {"src": pop[0],
+                                               "dst": pop[1]}),
+                   "retrain": (retrain_ivf_index, {"force": True})}
+        tables, live_root = ("", "_vecmeta"), path
+    manifest = f"_{family}_{torn}_pending.json"
+
+    def counts():
+        return [spark.read.parquet(os.path.join(path, t)).count()
+                for t in tables]
+
+    before = counts()
+    fn, kw = actions[torn]
+    real_write, crashing = _crash_after_write(manifest)
+    fsutil.write_text = crashing
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            fn(spark, path, **kw)
+    finally:
+        fsutil.write_text = real_write
+    pend = json.loads(fsutil.read_text(os.path.join(path, manifest)))
+    hole = next(n for n in pend["promote"][0]["live"]
+                if fsutil.exists(os.path.join(live_root, n)))
+    fsutil.delete(os.path.join(live_root, hole))
+    assert counts()[0] < before[0], "precondition: the hole drops rows"
+
+    fn, kw = actions[then]
+    fn(spark, path, **kw)
+    assert not any(n.endswith(("_staging", "_pending.json"))
+                   for n in fsutil.list_names(path))
+    assert counts() == before, "rows lost across the cross-action resume"
+    # the torn action's descriptor landed BEFORE the second action ran
+    meta = json.loads(fsutil.read_text(os.path.join(
+        path, f"_{family}_meta.json")))
+    if torn == "split" and family == "lex":
+        assert pend["descriptor"]["splits"][-1] in meta["splits"]
+    elif family == "lex":
+        # the merge retired a shard (4 live -> 3) before the compaction
+        # counted live shards; the compaction to 3 counts once
+        assert (meta["shards"], meta["compactions"]) == (3, 1)
+    elif torn == "split":
+        assert len(meta["centroids"]) == pend["new_cell"]
+    elif torn == "merge":
+        # the merge's dead cell was compacted away: 4 - 1 live cells
+        assert (meta["n_cells"], meta["retrains"]) == (3, 1)
+    else:
+        assert meta["retrains"] == 1
+
+
+# ---------------------------------------------------------------------------
 # Promotion-commit idempotence (r13b): staged PARTITIONED snapshots
 # commit by per-directory delete+rename. The resume matrix: a
 # manifest-listed dir absent from staging was already promoted; one
@@ -1579,7 +1662,7 @@ def test_upsert_torn_mid_promotion_restored(spark, corpus, tmp_path,
         fsutil.write_text = real_write
     pend = json.loads(fsutil.read_text(
         os.path.join(path, "_ivf_upsert_pending.json")))
-    names = list(pend["live_cells"])
+    names = list(pend["promote"][0]["live"])
     assert len(names) >= 2, "need two staged cells for the tear"
     # cell A: promotion completed (staged dir consumed by the rename)
     a = names[0]

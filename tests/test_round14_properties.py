@@ -1,14 +1,10 @@
 """Round-14 (optimization round 2) focused pins: descriptor-carried
-engine read schemas, the df-less staged-postings pin, and pagerank's
-iteration-local cache lifecycle — each guards an optimization that
-changed operator internals this round (round rules: add a focused test
-when an optimization changes an operator's internals)."""
+engine read schemas and pagerank's iteration-local cache lifecycle —
+each guards an optimization that changed operator internals this round
+(round rules: add a focused test when an optimization changes an
+operator's internals)."""
 
 from __future__ import annotations
-
-import pytest
-
-from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
 
@@ -83,49 +79,6 @@ def test_engine_read_schema_blob_invalidated_by_ddl(spark, tmp_path):
     assert [r.age for r in df.collect()] == [None] * 32
     tok1 = eng2.load_meta("db", "users")["read_schema"]["token"]
     assert tok1 != tok0, "DDL must rotate the read-schema token"
-
-
-def test_schema_without_drops_named_fields():
-    """_schema_without: the honest pinned schema for the upsert's
-    df-less staged postings — drops exactly the named fields, keeps
-    the rest (types included), passes None through."""
-    from pyspark.sql.types import LongType, StringType, StructType
-
-    from mysql_ch_replicator_spark.operators.retrieval import \
-        _schema_without
-
-    s = (StructType().add("term", StringType()).add("doc_id", LongType())
-         .add("tf", LongType()).add("df", LongType()))
-    out = StructType.fromJson(
-        __import__("json").loads(_schema_without(s.json(), "df")))
-    assert [f.name for f in out.fields] == ["term", "doc_id", "tf"]
-    assert _schema_without(None, "df") is None
-
-
-def test_upsert_staged_read_pins_dfless_schema(spark, tmp_path):
-    """The upsert's staged-postings read-back exposes exactly the staged
-    columns (no fabricated NULL df) AND launches no inference job — the
-    ADVICE r13 trap closed without re-paying the footer sweep."""
-    from mysql_ch_replicator_spark import fsutil
-    from pyspark.sql.types import LongType, StructType
-    from mysql_ch_replicator_spark.operators.retrieval import \
-        _schema_without
-
-    path = str(tmp_path / "staged")
-    (spark.range(16)
-     .select(F.col("id").alias("doc_id"),
-             (F.col("id") % 2).cast("int").alias("shard"))
-     .write.parquet(path))
-    wider = StructType.fromJson(
-        spark.read.parquet(path).schema.jsonValue())
-    wider = wider.add("df", LongType(), True)   # column no file carries
-
-    j0 = _job_count(spark)
-    pinned = fsutil.read_parquet_or_empty(
-        spark, path, _schema_without(wider.json(), "df"))
-    assert _job_count(spark) == j0, "df-less pin must not infer"
-    assert "df" not in pinned.columns
-    assert pinned.count() == 16
 
 
 def test_pagerank_bounded_transient_registrations(spark):

@@ -113,13 +113,13 @@ def test_write_text_atomic_no_tmp_residue(spark, tmp_path):
 
 
 def test_ivf_recovery_helpers_sessionless(spark, tmp_path):
-    """read_ivf_meta / pending_upsert_cells are recovery/monitoring
+    """read_ivf_meta / staged.pending are recovery/monitoring
     probes — they must work on a local index path from code that has NO
     SparkSession (r8 ADVICE: routing through fsutil made them raise).
     getActiveSession is thread-local, so a fresh thread IS sessionless."""
     import threading
 
-    from mysql_ch_replicator_spark.operators import similarity
+    from mysql_ch_replicator_spark.operators import similarity, staged
 
     path = str(tmp_path / "ivf")
     os.makedirs(os.path.join(path, "_vecmeta"))
@@ -133,7 +133,7 @@ def test_ivf_recovery_helpers_sessionless(spark, tmp_path):
             from pyspark.sql import SparkSession
             out["active"] = SparkSession.getActiveSession()
             out["meta"] = similarity.read_ivf_meta(path)
-            out["pending"] = similarity.pending_upsert_cells(path)
+            out["pending"] = staged.pending(path, similarity._IVF_PENDING)
         except Exception as e:          # pragma: no cover
             out["err"] = e
 
