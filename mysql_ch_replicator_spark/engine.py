@@ -64,10 +64,11 @@ OP_COL = "_op"
 # A CDC micro-batch whose input is at most this many bytes is applied in
 # one task with no shuffle; a larger one collapses through a PK shuffle,
 # which parses on every core. The bound is the measured crossover of the
-# two plans under streaming, which runs without adaptive execution
-# (README, "CDC apply: jobs per micro-batch"). Each input file also costs
-# the one-task plan time, but a streaming batch reaches apply_batch
-# without its file list, so the bound counts bytes only.
+# two plans under streaming (README, "CDC apply: jobs per micro-batch");
+# a foreachBatch batch runs with adaptive execution on, so the shuffle's
+# partitions are coalesced. Each input file also costs the one-task plan
+# time, but a streaming batch reaches apply_batch without its file list,
+# so the bound counts bytes only.
 _ONE_TASK_MAX_BYTES = 12 * 1024 * 1024
 
 
@@ -188,7 +189,7 @@ class _ApplyPlan:
     stats: list[Column]      # n, n_add, mx (newest seq) over __w
     fields_out: list[Column]  # __w's fields, tombstone-nulled, physical names
     op_out: Column
-    options: dict[str, str]  # writer options (bloom filters)
+    options: dict[str, str]  # writer options (codec, bloom filters)
     parts: list[str]         # physical partition columns
 
 
@@ -622,6 +623,20 @@ class ReplicaEngine:
             return []
         return self.settings.partition_by_for(table)
 
+    def _writer_options(self, table: str, st: TableStructure,
+                        df_cols) -> dict[str, str]:
+        """The parquet writer options of every write of replica data: the
+        CDC append, each rewrite (snapshot, compaction, MODIFY/CHANGE),
+        each shard of a sharded snapshot and each maintained-aggregate
+        generation. ZSTD at Spark's default level for every column (the
+        reference's MergeTree parts store each column compressed; against
+        snappy it cuts replica bytes per row by about a third), plus the
+        bloom filters of ``_index_options`` for the columns ``df_cols``
+        carries. Set per writer, so index files and user writes keep the
+        session codec."""
+        return {"compression": "zstd",
+                **self._index_options(table, st, df_cols)}
+
     def _index_options(self, table: str, st: TableStructure,
                       df_cols) -> dict[str, str]:
         """S8 — skip-index analog (reference ``indexes`` override +
@@ -669,11 +684,8 @@ class ReplicaEngine:
                                df: DataFrame) -> None:
         new_name = self._next_gen_name(db, table)
         new_dir = os.path.join(self._table_dir(db, table), new_name)
-        writer = df.write.mode("overwrite")
-        if self.table_exists(db, table):
-            for k, v in self._index_options(
-                    table, self.structure(db, table), df.columns).items():
-                writer = writer.option(k, v)
+        writer = df.write.mode("overwrite").options(**self._writer_options(
+            table, self.structure(db, table), df.columns))
         parts = [c for c in self._partition_cols(table) if c in df.columns]
         if parts:
             writer = writer.partitionBy(*parts)
@@ -836,7 +848,7 @@ class ReplicaEngine:
         ``recover_version`` reconciles the version watermark from
         MAX(_version) exactly like the reference's post-worker
         consolidation (db_replicator_initial.py:450–470). Shard writers
-        carry the same partitionBy/bloom-index options as
+        carry the same partitionBy and writer options as
         ``snapshot_table`` (S8 parity)."""
         from concurrent.futures import ThreadPoolExecutor
 
@@ -853,7 +865,7 @@ class ReplicaEngine:
         data = self._data_dir(db, table)
         snap_v = int(self.load_meta(db, table).get("last_version", 0)) + 1
         col_names = [f.name for f in st.fields if f.name in df.columns]
-        idx_opts = self._index_options(table, st, col_names)
+        opts = self._writer_options(table, st, col_names)
         parts = [c for c in self._partition_cols(table) if c in col_names]
 
         def write_shard(w: int) -> str:
@@ -863,9 +875,7 @@ class ReplicaEngine:
                    .select(*cols)
                    .withColumn(VERSION_COL, F.lit(snap_v).cast("long"))
                    .withColumn(OP_COL, F.lit(OP_ADD)))
-            writer = out.write.mode("overwrite")
-            for k, v in idx_opts.items():
-                writer = writer.option(k, v)
+            writer = out.write.mode("overwrite").options(**opts)
             if parts:
                 writer = writer.partitionBy(*parts)
             writer.parquet(shard_dir)
@@ -1167,7 +1177,9 @@ class ReplicaEngine:
         root = self._agg_dir(db, table, name)
         os.makedirs(root, exist_ok=True)
         new_name = next_gen_name(root)
-        df.write.mode("overwrite").parquet(os.path.join(root, new_name))
+        df.write.mode("overwrite").options(**self._writer_options(
+            table, self.structure(db, table), df.columns)) \
+            .parquet(os.path.join(root, new_name))
         publish_generation(root, new_name,
                            retention_s=self.generation_retention_s)
         tmp = self._agg_state_path(db, table, name) + ".tmp"
@@ -1362,7 +1374,7 @@ class ReplicaEngine:
             token=token, pks=pks, typed=typed, winner=winner,
             final_ops=final_ops, stats=stats, fields_out=fields_out,
             op_out=op.cast("int").alias(OP_COL),
-            options=self._index_options(
+            options=self._writer_options(
                 table, st, [*phys_of.values(), VERSION_COL, OP_COL]),
             parts=[phys_of[c] for c in self._partition_cols(table)
                    if c in phys_of])

@@ -238,8 +238,7 @@ def list_names(path: str, spark: SparkSession | None = None) -> list[str]:
 
 
 def read_parquet_or_empty(spark: SparkSession, root: str,
-                          schema_json: str | None,
-                          pin: bool = True):
+                          schema_json: str | None):
     """Read a partition-directory parquet table that may have had EVERY
     partition deleted: a remove-everything CDC window legitimately
     sweeps all ``key=value`` subdirs, and parquet schema inference then
@@ -255,7 +254,7 @@ def read_parquet_or_empty(spark: SparkSession, root: str,
     # side-files (_SUCCESS, _vecmeta, .crc) don't count
     if any(not n.startswith(("_", "."))
            for n in list_names(root, spark=spark)):
-        if schema_json and pin:
+        if schema_json:
             # schema-pinned read: the descriptor's captured schema is
             # maintained at every schema-changing event (build, the
             # positions twin appearing), so
@@ -267,12 +266,7 @@ def read_parquet_or_empty(spark: SparkSession, root: str,
             # schema, so file-internal column order is irrelevant, and
             # partition columns (declared at the end, exactly as the
             # build's read-back captured them) still resolve from the
-            # directory names. ``pin=False`` is for tables whose FILES
-            # are a column subset of the captured schema: pinning there
-            # would fabricate the missing column as NULL — bare
-            # inference is the only honest schema for those, and the
-            # captured schema still serves the all-partitions-deleted
-            # empty case below.
+            # directory names.
             from pyspark.sql.types import StructType
             return spark.read.schema(
                 StructType.fromJson(_json.loads(schema_json))) \

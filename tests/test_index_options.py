@@ -25,28 +25,35 @@ def test_index_option_mapping(spark, tmp_path):
     settings = Settings.load({"indexes": {"users": ["name"]}})
     engine = ReplicaEngine(spark, str(tmp_path / "r"), settings=settings)
     st = engine.create_table("db", DDL)
-    opts = engine._index_options("users", st, ["id", "name", "_version"])
-    # single PK → bloom on id by default (reference idx_id), plus override;
-    # any bloom column sizes its filter to the file (adaptive)
-    assert opts == {"parquet.bloom.filter.enabled#id": "true",
+    opts = engine._writer_options("users", st, ["id", "name", "_version"])
+    # zstd on every column; single PK → bloom on id by default (reference
+    # idx_id), plus override; any bloom column sizes its filter to the
+    # file (adaptive)
+    assert opts == {"compression": "zstd",
+                    "parquet.bloom.filter.enabled#id": "true",
                     "parquet.bloom.filter.enabled#name": "true",
                     "parquet.bloom.filter.adaptive.enabled": "true"}
     # columns absent from the frame are dropped (e.g. mid-rename rewrite)
-    assert engine._index_options("users", st, ["name"]) == \
-        {"parquet.bloom.filter.enabled#name": "true",
+    assert engine._writer_options("users", st, ["name"]) == \
+        {"compression": "zstd",
+         "parquet.bloom.filter.enabled#name": "true",
          "parquet.bloom.filter.adaptive.enabled": "true"}
 
 
 def test_composite_pk_gets_no_default_bloom(spark, tmp_path):
     engine = ReplicaEngine(spark, str(tmp_path / "r"))
     st = engine.create_table("db", COMPOSITE_DDL)
-    assert engine._index_options("pairs", st, ["a", "b", "name"]) == {}
+    assert engine._writer_options("pairs", st, ["a", "b", "name"]) == \
+        {"compression": "zstd"}
+
+
+def _parquet_files(d):
+    return {os.path.join(r, f) for r, _, fs in os.walk(d) for f in fs
+            if f.endswith(".parquet")}
 
 
 def _dir_bytes(d):
-    return sum(os.path.getsize(os.path.join(r, f))
-               for r, _, fs in os.walk(d) for f in fs
-               if f.endswith(".parquet"))
+    return sum(os.path.getsize(f) for f in _parquet_files(d))
 
 
 def test_bloom_filter_actually_written(spark, tmp_path):
@@ -97,3 +104,76 @@ def test_bloom_filter_sized_to_its_file(spark, tmp_path):
     assert [r.name for r in final.where(F.col("id") == 1234).collect()] \
         == ["name1234"]
     assert final.where(F.col("id") == 5000).count() == 0
+
+
+AGE_DDL = """CREATE TABLE users (
+  id int NOT NULL, name varchar(255), age int, PRIMARY KEY (id))"""
+
+
+def _bloom_columns(spark, path):
+    """Columns of ``path`` that carry a bloom filter in every row group
+    (pyarrow does not expose the filter offsets; parquet-mr does)."""
+    jvm = spark._jvm
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(path),
+            spark._jsc.hadoopConfiguration()))
+    try:
+        blocks = list(reader.getFooter().getBlocks())
+        return set.intersection(*(
+            {c.getPath().toDotString() for c in b.getColumns()
+             if c.getBloomFilterOffset() >= 0} for b in blocks))
+    finally:
+        reader.close()
+
+
+def test_every_replica_write_is_zstd(spark, tmp_path):
+    """Every path that writes replica data compresses every column chunk
+    with ZSTD, and the single-PK bloom filter stays where it was: the CDC
+    append, snapshot_table, a 2-worker sharded snapshot, optimize, an
+    ALTER … MODIFY rewrite and a maintained-aggregate view (no PK
+    column in the view, so no bloom)."""
+    import pyarrow.parquet as pq
+
+    engine = ReplicaEngine(spark, str(tmp_path / "r"))
+    engine.create_table("db", AGE_DDL)
+    src = spark.createDataFrame([(i, f"u{i}", i % 7) for i in range(500)],
+                                "id int, name string, age int")
+    written = {}
+
+    def step(name, do, d=lambda: engine._data_dir("db", "users")):
+        before = _parquet_files(d()) if os.path.isdir(d()) else set()
+        do()
+        written[name] = _parquet_files(d()) - before
+        assert written[name], name
+
+    step("snapshot", lambda: engine.snapshot_table("db", "users", src))
+    log = EventLogWriter(str(tmp_path / "log"))
+    log.add("db", "users", [(i, f"v{i}", 1) for i in range(480, 520)])
+    step("cdc_append", lambda: engine.apply_batch(
+        read_event_log(spark, str(tmp_path / "log"))))
+    step("optimize", lambda: engine.optimize("db", "users"))
+    step("modify", lambda: engine.execute_ddl(
+        "db", "ALTER TABLE users MODIFY age bigint"))
+    step("aggregate", lambda: engine.register_aggregate(
+        "db", "users", "by_age", "age", "id"),
+        d=lambda: engine._agg_dir("db", "users", "by_age"))
+    engine.create_table("sh", AGE_DDL)
+    step("sharded", lambda: engine.snapshot_table_sharded(
+        "sh", "users", src, workers=2),
+        d=lambda: engine._data_dir("sh", "users"))
+
+    for name, files in written.items():
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            codecs = {md.row_group(g).column(c).compression
+                      for g in range(md.num_row_groups)
+                      for c in range(md.num_columns)}
+            assert codecs == {"ZSTD"}, (name, f, codecs)
+            blooms = _bloom_columns(spark, f)
+            if name == "aggregate":
+                assert "id" not in blooms, f
+            else:
+                assert "id" in blooms, (name, f, blooms)
+    assert engine.read_final("db", "users").count() == 520
+    assert engine.read_final("sh", "users").count() == 500

@@ -1742,32 +1742,3 @@ def test_read_parquet_or_empty_pins_schema_no_inference_job(spark, tmp_path):
     j2 = _job_count(spark)
     fsutil.read_parquet_or_empty(spark, path, None)
     assert _job_count(spark) == j2 + 1
-
-
-def test_read_parquet_or_empty_pin_false_keeps_inferred_schema(spark,
-                                                               tmp_path):
-    """pin=False is the contract for tables whose FILES are a column
-    subset of the captured schema (the upsert's df-less staged
-    postings): the read must expose the files' true columns, never
-    fabricate the captured schema's extra column as NULLs."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructType
-
-    from mysql_ch_replicator_spark import fsutil
-
-    path = str(tmp_path / "staged")
-    (spark.range(16)
-     .select(F.col("id").alias("doc_id"),
-             (F.col("id") % 2).cast("int").alias("shard"))
-     .write.parquet(path))
-    wider = StructType.fromJson(
-        spark.read.parquet(path).schema.jsonValue())
-    wider = wider.add("df", LongType(), True)   # column no file carries
-
-    unpinned = fsutil.read_parquet_or_empty(
-        spark, path, wider.json(), pin=False)
-    assert "df" not in unpinned.columns
-    # pinned read of the same files WOULD declare it (documented hazard
-    # the pin=False sites exist to avoid)
-    pinned = fsutil.read_parquet_or_empty(spark, path, wider.json())
-    assert "df" in pinned.columns
