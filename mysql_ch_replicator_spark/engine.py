@@ -26,13 +26,16 @@ Spark-first storage design (NOT a port of the ClickHouse sink):
 Scale notes: appends parallelize per partition; the read-time collapse
 shuffles once on the PK (map-side partial agg); compaction bounds read
 amplification the same way ClickHouse merges do. Schema evolution is
-metadata-first: ADD/DROP COLUMN touch no data files (mergeSchema on read);
-only MODIFY/CHANGE (type change) and RENAME COLUMN rewrite, which parquet
-fundamentally requires (SURVEY.md §7 'hard parts').
+metadata-first: ADD/DROP COLUMN touch no data files (reads use the file
+schema the writes record in ``_meta.json``); only MODIFY/CHANGE (type
+change) rewrite, which parquet fundamentally requires (SURVEY.md §7 'hard
+parts').
 """
 
 from __future__ import annotations
 
+import contextlib
+import copy
 import dataclasses
 import json
 import os
@@ -40,6 +43,7 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from .functions.conversions import default_for, payload_exprs
 from .operators.replica import (
@@ -88,6 +92,31 @@ def _structure_from_dict(d: dict) -> TableStructure:
         table_name=d["table_name"],
         charset=d.get("charset"),
     )
+
+
+def _write_json(path: str, obj, **dump_kw) -> None:
+    """Atomic JSON publish (temp file, then ``os.replace``): a reader sees
+    the old file or the new one, never none (``fsutil.write_text`` deletes,
+    then renames, once a session is live)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        json.dump(obj, fh, **dump_kw)
+    os.replace(tmp, path)
+
+
+def _file_schema(fields) -> dict:
+    """A ``file_schema`` meta entry: the Spark schema JSON of ``fields``,
+    every field nullable."""
+    return StructType([StructField(f.name, f.dataType, True)
+                       for f in fields]).jsonValue()
+
+
+def _record_rewrite(meta: dict, df: DataFrame) -> None:
+    """A rewrite's generation holds ``df``'s columns under their logical
+    names: record that schema and drop the column mapping."""
+    meta["file_schema"] = _file_schema(df.schema.fields)
+    for f in meta["structure"]["fields"]:
+        f["physical"] = None
 
 
 def _gen_manifest_path_of(root: str) -> str:
@@ -167,10 +196,8 @@ def publish_generation(root: str, new_name: str,
     if (g["current"] != new_name
             and os.path.exists(os.path.join(root, g["current"]))):
         kept.append({"name": g["current"], "ts": now})
-    tmp = _gen_manifest_path_of(root) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump({"current": new_name, "retired": kept}, fh)
-    os.replace(tmp, _gen_manifest_path_of(root))
+    _write_json(_gen_manifest_path_of(root),
+                {"current": new_name, "retired": kept})
 
 
 @dataclasses.dataclass(frozen=True)
@@ -240,9 +267,7 @@ class ReplicaEngine:
         #: assert immediate reclamation set it to 0
         self.generation_retention_s = GENERATION_RETENTION_S
         self._gen_cache: dict[str, tuple] = {}  # manifest cache (mtime key)
-        # live-read schema cache: (db, table) -> (validity token, schema).
-        # See _live_read_frame for the invalidation contract.
-        self._read_schema_cache: dict[tuple, tuple] = {}
+        self._meta_updates: set[tuple[str, str]] = set()  # open updates
         # (db, table) -> _ApplyPlan; replaced when the structure changes
         self._apply_plans: dict[tuple[str, str], _ApplyPlan] = {}
         self._stats_guard = threading.Lock()
@@ -252,8 +277,8 @@ class ReplicaEngine:
     def table_lock(self, db: str, table: str):
         """The (db, table) mutex serializing data-dir mutations: CDC
         appends, compaction rewrites, truncates, and structure rewrites.
-        Re-entrant, so rewrite paths that already hold it can call
-        _overwrite_data."""
+        Re-entrant, so ``update_meta`` can run inside a section that
+        already holds it."""
         import threading
         with self._table_locks_guard:
             return self._table_locks.setdefault((db, table),
@@ -349,10 +374,42 @@ class ReplicaEngine:
 
     def save_meta(self, db: str, table: str, meta: dict) -> None:
         os.makedirs(self._table_dir(db, table), exist_ok=True)
-        tmp = self._meta_path(db, table) + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh, ensure_ascii=False, indent=1)
-        os.replace(tmp, self._meta_path(db, table))  # atomic publish
+        _write_json(self._meta_path(db, table), meta,
+                    ensure_ascii=False, indent=1)
+
+    @contextlib.contextmanager
+    def update_meta(self, db: str, table: str):
+        """The one way to change a table's ``_meta.json``: takes the table
+        lock, loads the meta (``{}`` before the table exists), yields it to
+        be changed in place, and saves it only if it changed. A meta with
+        no ``structure`` is not a table and is never saved (an optimizer
+        stamp that lost a race with DROP TABLE). Updates must not nest:
+        the outer save would overwrite the inner one, so code running
+        inside an update changes the dict it was handed."""
+        key = (db, table)
+        with self.table_lock(db, table):
+            if key in self._meta_updates:
+                raise RuntimeError(f"nested update_meta of {db}.{table}")
+            meta = (self.load_meta(db, table)
+                    if self.table_exists(db, table) else {})
+            before = copy.deepcopy(meta)
+            self._meta_updates.add(key)
+            try:
+                yield meta
+            finally:
+                self._meta_updates.discard(key)
+            if meta != before and "structure" in meta:
+                self.save_meta(db, table, meta)
+
+    def _declared_file_schema(self, st: TableStructure) -> dict:
+        """``file_schema`` of files not written yet: the declared columns
+        as the CDC apply writes them, then ``_version`` and ``_op``."""
+        return _file_schema(
+            [StructField(f.physical or f.name,
+                         spark_type_for(f, self.types_mapping))
+             for f in st.fields]
+            + [StructField(VERSION_COL, LongType()),
+               StructField(OP_COL, IntegerType())])
 
     def structure(self, db: str, table: str) -> TableStructure:
         return _structure_from_dict(self.load_meta(db, table)["structure"])
@@ -371,10 +428,7 @@ class ReplicaEngine:
 
     def _set_last_ddl_seq(self, db: str, seq: int) -> None:
         os.makedirs(os.path.join(self.root, db), exist_ok=True)
-        tmp = self._db_meta_path(db) + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"last_ddl_seq": int(seq)}, fh)
-        os.replace(tmp, self._db_meta_path(db))  # atomic publish
+        _write_json(self._db_meta_path(db), {"last_ddl_seq": int(seq)})
 
     # -- DDL ----------------------------------------------------------------
 
@@ -396,19 +450,26 @@ class ReplicaEngine:
         # (reference version_initial_value, clickhouse_api.py:205)
         v0 = (self.settings.version_initial_value
               if self.settings is not None else 0)
-        meta = {"structure": _structure_to_dict(st),
-                "last_version": v0, "last_seq": -1}
-        if self.table_exists(db, st.table_name):
-            if "if not exists" in create_sql.lower():
-                return self.structure(db, st.table_name)
-            # re-CREATE over an existing table (at-least-once DDL replay,
-            # or CREATE after an unseen DROP): never reset the version/seq
-            # watermarks — doing so would break per-key version
-            # monotonicity for latest-wins reads over existing data
-            old = self.load_meta(db, st.table_name)
-            meta["last_version"] = old.get("last_version", 0)
-            meta["last_seq"] = old.get("last_seq", -1)
-        self.save_meta(db, st.table_name, meta)
+        new = {"structure": _structure_to_dict(st),
+               "last_version": v0, "last_seq": -1,
+               "file_schema": self._declared_file_schema(st)}
+        with self.update_meta(db, st.table_name) as meta:
+            if meta:
+                if "if not exists" in create_sql.lower():
+                    return _structure_from_dict(meta["structure"])
+                # re-CREATE over an existing table (at-least-once DDL
+                # replay, or CREATE after an unseen DROP): resetting the
+                # watermarks would break per-key version monotonicity over
+                # the existing data, whose files keep their columns
+                new["last_version"] = meta["last_version"]
+                new["last_seq"] = meta["last_seq"]
+                have = {f["name"] for f in meta["file_schema"]["fields"]}
+                new["file_schema"]["fields"] = (
+                    meta["file_schema"]["fields"]
+                    + [f for f in new["file_schema"]["fields"]
+                       if f["name"] not in have])
+            meta.clear()
+            meta.update(new)
         return st
 
     def execute_ddl(self, db: str, query: str, seq: int | None = None) -> None:
@@ -445,10 +506,11 @@ class ReplicaEngine:
         elif q.startswith("rename table"):
             for old, new in parse_rename_table(query):
                 old, new = self._target(db, old)[1], self._target(db, new)[1]
-                os.rename(self._table_dir(tdb, old), self._table_dir(tdb, new))
-                meta = self.load_meta(tdb, new)
-                meta["structure"]["table_name"] = new
-                self.save_meta(tdb, new, meta)
+                with self.table_lock(tdb, old):
+                    with self.update_meta(tdb, old) as meta:
+                        meta["structure"]["table_name"] = new
+                    os.rename(self._table_dir(tdb, old),
+                              self._table_dir(tdb, new))
         elif q.startswith("truncate"):
             name = self._target(db, parse_truncate_table(query))[1]
             if not self.table_exists(tdb, name):
@@ -460,21 +522,23 @@ class ReplicaEngine:
                     self._set_last_ddl_seq(tdb, seq)
                 return
             with self.table_lock(tdb, name):
-                if os.path.exists(self._data_dir(tdb, name)):
-                    # truncate = publish an empty generation; in-flight
-                    # readers of the old one keep their files for a cycle
-                    new_name = self._next_gen_name(tdb, name)
-                    os.makedirs(os.path.join(self._table_dir(tdb, name),
-                                             new_name))
-                    self._publish_generation(tdb, name, new_name)
+                with self.update_meta(tdb, name) as meta:
+                    if os.path.exists(self._data_dir(tdb, name)):
+                        # truncate = publish an empty generation; in-flight
+                        # readers of the old one keep their files a cycle
+                        new_name = self._next_gen_name(tdb, name)
+                        os.makedirs(os.path.join(self._table_dir(tdb, name),
+                                                 new_name))
+                        self._publish_generation(tdb, name, new_name)
+                    meta["file_schema"] = self._declared_file_schema(
+                        _structure_from_dict(meta["structure"]))
                 # maintained aggregates must reset with the table: their
                 # seq watermark still equals the table's last_seq, so the
                 # watermark-mismatch repair in apply_batch would never
                 # fire and later deltas would merge onto the stale
                 # pre-truncate view. Rebuild from the (now empty) table
                 # immediately.
-                for nm in (self.load_meta(tdb, name).get("aggregates")
-                           or {}):
+                for nm in meta.get("aggregates") or {}:
                     self._rebuild_aggregate(tdb, name, nm)
         # anything else (CREATE INDEX, SET, BEGIN...): ignored, like the
         # reference's pattern-matched dispatch
@@ -486,30 +550,41 @@ class ReplicaEngine:
         table = self._target(db, table)[1]
         if not self.table_exists(db, table):
             return
-        # the whole load-structure -> mutate -> save-meta sequence holds
-        # the table lock: a concurrent compaction normalizes the column
+        # the whole load-structure -> mutate -> save-meta sequence is one
+        # meta update: a concurrent compaction normalizes the column
         # mapping (files rewritten to logical names + meta cleared), and
         # re-saving a stale in-memory mapping over that would make the
-        # renamed column read NULL forever (review r5). RLock, so the
-        # rewrite paths this dispatches into re-enter fine.
+        # renamed column read NULL forever (review r5). A RENAME TO moves
+        # the directory after the update has saved the new name.
+        renamed = [op["new_name"] for op in ops if op["op"] == "rename_table"]
         with self.table_lock(db, table):
-            self._apply_alter_locked(db, table, ops)
+            with self.update_meta(db, table) as meta:
+                rebuilt = self._apply_alter_locked(db, table, ops, meta)
+            if renamed:
+                os.rename(self._table_dir(db, table),
+                          self._table_dir(db, renamed[-1]))
+                table = renamed[-1]
+            for nm in rebuilt:
+                self._rebuild_aggregate(db, table, nm)
 
-    def _apply_alter_locked(self, db: str, table: str, ops) -> None:
-        st = self.structure(db, table)
+    def _apply_alter_locked(self, db: str, table: str, ops,
+                            meta: dict) -> list[str]:
+        """Apply ``ops`` to ``meta`` (the ALTER's update); returns the
+        maintained aggregates to rebuild once it is saved."""
+        st = _structure_from_dict(meta["structure"])
         for op in ops:
             kind = op["op"]
             if kind == "add_column":
                 st.add_field(op["field"], first=op["first"], after=op["after"])
-                self._guard_physical_collision(db, table, st,
-                                               op["field"].name)
+                self._add_file_column(st, op["field"].name, meta)
             elif kind == "drop_column":
+                # its file_schema entry stays: old files still carry it
                 st.remove_field(op["name"])
             elif kind == "modify_column":
                 new_field = dataclasses.replace(
                     op["field"], physical=st.field(op["field"].name).physical)
                 st.update_field(new_field)
-                self._rewrite_with_structure(db, table, st)
+                self._rewrite_with_structure(db, table, st, meta)
             elif kind == "change_column":
                 old = op["old_name"]
                 # the rewrite must read the OLD physical column; the new
@@ -520,7 +595,7 @@ class ReplicaEngine:
                 if old != new_field.name:
                     st.rename_field(old, new_field.name)
                 st.update_field(new_field)
-                self._rewrite_with_structure(db, table, st)
+                self._rewrite_with_structure(db, table, st, meta)
             elif kind == "rename_column":
                 # METADATA-ONLY (Delta-style column mapping): the data
                 # keeps its physical column; only the logical name and the
@@ -531,11 +606,7 @@ class ReplicaEngine:
                 st.rename_field(op["old_name"], op["new_name"])
                 st.field(op["new_name"]).physical = phys
             elif kind == "rename_table":
-                os.rename(self._table_dir(db, table),
-                          self._table_dir(db, op["new_name"]))
                 st.table_name = op["new_name"]
-                table = op["new_name"]
-        meta = self.load_meta(db, table)
         meta["structure"] = _structure_to_dict(st)
         # maintained aggregates must track schema evolution: follow column
         # renames; drop the view if a referenced column was dropped (its
@@ -562,9 +633,7 @@ class ReplicaEngine:
                     shutil.rmtree(self._agg_dir(db, table, nm),
                                   ignore_errors=True)
             meta["aggregates"] = kept
-        self.save_meta(db, table, meta)
-        for nm in rebuilt:
-            self._rebuild_aggregate(db, table, nm)
+        return rebuilt
 
     def _has_data(self, db: str, table: str) -> bool:
         d = self._data_dir(db, table)
@@ -574,34 +643,37 @@ class ReplicaEngine:
         return any(f.endswith(".parquet")
                    for _, _, files in os.walk(d) for f in files)
 
-    def _guard_physical_collision(self, db: str, table: str,
-                                  st: TableStructure, name: str) -> None:
-        """ADD COLUMN whose name matches a stale PHYSICAL column (a column
-        renamed away from this name, or dropped with its bytes still in
-        old files) must get a fresh physical name — otherwise reads would
-        resurrect the old column's values into the new one. One footer
-        read; no data moves."""
+    def _add_file_column(self, st: TableStructure, name: str,
+                         meta: dict) -> None:
+        """ADD COLUMN: give the column its file name and its ``file_schema``
+        entry. A name matching a stale PHYSICAL column (a column renamed
+        away from this name, or dropped with its bytes still in old files,
+        whose entry stays) gets a fresh physical name — otherwise reads
+        would resurrect the old column's values into the new one."""
         taken = {f.physical or f.name for f in st.fields if f.name != name}
-        if self._has_data(db, table):
-            taken |= set(self.spark.read.option("mergeSchema", "true")
-                         .parquet(self._data_dir(db, table)).columns)
+        taken |= {f["name"] for f in meta["file_schema"]["fields"]}
+        fld = st.field(name)
         if name in taken:
             i = 1
             while f"{name}__p{i}" in taken:
                 i += 1
-            st.field(name).physical = f"{name}__p{i}"
+            fld.physical = f"{name}__p{i}"
+        meta["file_schema"]["fields"].append(StructField(
+            fld.physical or name,
+            spark_type_for(fld, self.types_mapping)).jsonValue())
 
     def _rewrite_with_structure(self, db: str, table: str,
-                                st: TableStructure) -> None:
+                                st: TableStructure, meta: dict) -> None:
         """MODIFY/CHANGE type change: cast-rewrite (SURVEY.md §2.5 D8).
         Reads through the column mapping and writes logical names, so it
-        doubles as the mapping-normalization point."""
+        doubles as the mapping-normalization point. Records the rewrite in
+        ``meta``, the ALTER's own update."""
         if not self._has_data(db, table):
             for f in st.fields:
                 f.physical = None
+            meta["file_schema"] = self._declared_file_schema(st)
             return
-        df = self.spark.read.option("mergeSchema", "true") \
-            .parquet(self._data_dir(db, table))
+        df = self._live_frame(db, table, meta)
         exprs = []
         for f in st.fields:
             target = spark_type_for(f, self.types_mapping).simpleString()
@@ -611,7 +683,7 @@ class ReplicaEngine:
             else:
                 exprs.append(F.lit(None).cast(target).alias(f.name))
         exprs += [F.col(VERSION_COL), F.col(OP_COL)]
-        self._overwrite_data(db, table, df.select(*exprs))
+        self._overwrite_data(db, table, df.select(*exprs), meta)
         for f in st.fields:   # files are logical-named again
             f.physical = None
 
@@ -669,23 +741,20 @@ class ReplicaEngine:
             opts["parquet.bloom.filter.adaptive.enabled"] = "true"
         return opts
 
-    def _overwrite_data(self, db: str, table: str, df: DataFrame) -> None:
+    def _overwrite_data(self, db: str, table: str, df: DataFrame,
+                               meta: dict) -> None:
         """Rewrite by publishing a NEW data generation (D14 — readers never
         see partial data; reference's db-swap,
         db_replicator_initial.py:149–163, upgraded to the commit-log
         manifest so in-flight readers of the old generation keep their
-        files). Holds the table lock: concurrent CDC appends must not land
-        between the rewrite's read and its publish (they would be stranded
-        in the retired generation)."""
-        with self.table_lock(db, table):
-            self._overwrite_data_locked(db, table, df)
-
-    def _overwrite_data_locked(self, db: str, table: str,
-                               df: DataFrame) -> None:
+        files), recorded in ``meta``. The caller's update holds the table
+        lock: concurrent CDC appends must not land between the rewrite's
+        read and its publish (they would be stranded in the retired
+        generation)."""
         new_name = self._next_gen_name(db, table)
         new_dir = os.path.join(self._table_dir(db, table), new_name)
         writer = df.write.mode("overwrite").options(**self._writer_options(
-            table, self.structure(db, table), df.columns))
+            table, _structure_from_dict(meta["structure"]), df.columns))
         parts = [c for c in self._partition_cols(table) if c in df.columns]
         if parts:
             writer = writer.partitionBy(*parts)
@@ -693,11 +762,7 @@ class ReplicaEngine:
         # df's plan reads the OLD generation and the write above is its
         # only action — publish strictly after it completes
         self._publish_generation(db, table, new_name)
-        # every rewrite writes LOGICAL column names, so any column mapping
-        # in the stored meta is now stale — normalize it (optimize and
-        # re-snapshot route here; ALTER rewrites also clear their in-memory
-        # structure before re-saving)
-        self._normalize_column_mapping(db, table)
+        _record_rewrite(meta, df)
 
     def vacuum(self, db: str, table: str,
                retention_s: float | None = None,
@@ -716,15 +781,6 @@ class ReplicaEngine:
                 retention_s=self.generation_retention_s
                 if retention_s is None else retention_s,
                 now=now)
-
-    def _normalize_column_mapping(self, db: str, table: str) -> None:
-        if not self.table_exists(db, table):
-            return
-        meta = self.load_meta(db, table)
-        if any(f.get("physical") for f in meta["structure"]["fields"]):
-            for f in meta["structure"]["fields"]:
-                f["physical"] = None
-            self.save_meta(db, table, meta)
 
     # -- database-level atomic publish (D14 full analog) --------------------
 
@@ -757,10 +813,7 @@ class ReplicaEngine:
         if not os.path.isdir(staging):
             raise ValueError(f"staging database {staging_db!r} not found")
         marker = self._publish_marker(db)
-        tmp = marker + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"staging": staging_db}, fh)
-        os.replace(tmp, marker)
+        _write_json(marker, {"staging": staging_db})
         old = target + ".old"
         shutil.rmtree(old, ignore_errors=True)
         try:
@@ -813,17 +866,15 @@ class ReplicaEngine:
         """Initial replication of an already-typed DataFrame (JDBC/parquet
         snapshot). All snapshot rows are version-peers at version 1
         (operators/replica.py stamp_version_snapshot rationale)."""
-        st = self.structure(db, table)
-        meta = self.load_meta(db, table)
-        snap_v = int(meta.get("last_version", 0)) + 1  # v0+1 on a fresh table
-        cols = [F.col(f.name) for f in st.fields if f.name in df.columns]
-        out = df.select(*cols) \
-            .withColumn(VERSION_COL, F.lit(snap_v).cast("long")) \
-            .withColumn(OP_COL, F.lit(OP_ADD))
-        self._overwrite_data(db, table, out)
-        meta = self.load_meta(db, table)
-        meta["last_version"] = snap_v
-        self.save_meta(db, table, meta)
+        with self.update_meta(db, table) as meta:
+            st = _structure_from_dict(meta["structure"])
+            snap_v = int(meta["last_version"]) + 1  # v0+1 on a fresh table
+            cols = [F.col(f.name) for f in st.fields if f.name in df.columns]
+            out = df.select(*cols) \
+                .withColumn(VERSION_COL, F.lit(snap_v).cast("long")) \
+                .withColumn(OP_COL, F.lit(OP_ADD))
+            self._overwrite_data(db, table, out, meta)
+            meta["last_version"] = snap_v
         # post_initial_replication_commands — arbitrary SQL after the
         # snapshot publishes (reference config.py:330–337,
         # db_replicator_initial.py:472–494)
@@ -844,12 +895,13 @@ class ReplicaEngine:
         with the SAME manifest protocol as ``_overwrite_data`` — so a
         re-snapshot replaces stale rows instead of merging with them, and
         a crash or concurrent reader mid-consolidation never observes a
-        partial snapshot (an unpublished generation is invisible). Then
-        ``recover_version`` reconciles the version watermark from
-        MAX(_version) exactly like the reference's post-worker
-        consolidation (db_replicator_initial.py:450–470). Shard writers
-        carry the same partitionBy and writer options as
-        ``snapshot_table`` (S8 parity)."""
+        partial snapshot (an unpublished generation is invisible). Every
+        shard stamps ``snap_v``, so the publish's one meta update sets the
+        version watermark to it directly, as ``snapshot_table`` does (the
+        reference reconciles it from MAX(_version) after its workers,
+        db_replicator_initial.py:450–470). Shard writers carry the same
+        partitionBy and writer options as ``snapshot_table`` (S8
+        parity)."""
         from concurrent.futures import ThreadPoolExecutor
 
         from .sources.snapshot import sharded_snapshot
@@ -860,22 +912,20 @@ class ReplicaEngine:
         if workers <= 1:
             return self.snapshot_table(db, table, df)
         st = self.structure(db, table)
-        pks = st.primary_keys
-        cols = [F.col(f.name) for f in st.fields if f.name in df.columns]
         data = self._data_dir(db, table)
-        snap_v = int(self.load_meta(db, table).get("last_version", 0)) + 1
+        snap_v = int(self.load_meta(db, table)["last_version"]) + 1
         col_names = [f.name for f in st.fields if f.name in df.columns]
+        out = (df.select(*col_names)
+               .withColumn(VERSION_COL, F.lit(snap_v).cast("long"))
+               .withColumn(OP_COL, F.lit(OP_ADD)))
         opts = self._writer_options(table, st, col_names)
         parts = [c for c in self._partition_cols(table) if c in col_names]
 
         def write_shard(w: int) -> str:
             shard_dir = f"{data}.shard{w}"
             shutil.rmtree(shard_dir, ignore_errors=True)
-            out = (sharded_snapshot(df, pks, w, workers)
-                   .select(*cols)
-                   .withColumn(VERSION_COL, F.lit(snap_v).cast("long"))
-                   .withColumn(OP_COL, F.lit(OP_ADD)))
-            writer = out.write.mode("overwrite").options(**opts)
+            writer = (sharded_snapshot(out, st.primary_keys, w, workers)
+                      .write.mode("overwrite").options(**opts))
             if parts:
                 writer = writer.partitionBy(*parts)
             writer.parquet(shard_dir)
@@ -885,11 +935,11 @@ class ReplicaEngine:
             shard_dirs = list(ex.map(write_shard, range(workers)))
         # Consolidate into a fresh generation dir (rename-only, preserving
         # any partition subdirs), then the same manifest publish as
-        # _overwrite_data — UNDER the table lock, so a concurrent CDC
-        # append cannot land in the old generation between consolidation
-        # and the flip and be silently lost (review r5; _overwrite_data
-        # holds the lock for exactly this window).
-        with self.table_lock(db, table):
+        # _overwrite_data — inside the meta update, which holds the
+        # table lock, so a concurrent CDC append cannot land in the old
+        # generation between consolidation and the flip and be silently
+        # lost (review r5).
+        with self.update_meta(db, table) as meta:
             new_name = self._next_gen_name(db, table)
             new_dir = os.path.join(self._table_dir(db, table), new_name)
             os.makedirs(new_dir)
@@ -906,8 +956,8 @@ class ReplicaEngine:
                                   os.path.join(dest, f"shard{w}-{fn}"))
                 shutil.rmtree(shard_dir)
             self._publish_generation(db, table, new_name)
-            self._normalize_column_mapping(db, table)  # shards wrote logical
-            self.recover_version(db, table)
+            _record_rewrite(meta, out)  # every shard wrote out's columns
+            meta["last_version"] = max(snap_v, int(meta["last_version"]))
 
     # -- reads (S7) ---------------------------------------------------------
 
@@ -929,60 +979,14 @@ class ReplicaEngine:
                             "retired_ts": r["ts"]})
         return out
 
-    def _live_read_frame(self, db: str, table: str, meta: dict,
-                         st) -> DataFrame:
-        """Schema-pinned read of the live generation (caller holds the
-        table lock). A ``mergeSchema`` read costs one footer-sweep Spark
-        job per call and O(files) driver work — at replica scale that
-        sweep grows with the table while the answer almost never
-        changes: the union schema can only move through DDL (which
-        rewrites ``meta['structure']``) or a generation flip (type
-        rewrites publish a NEW generation dir). So the inferred schema
-        is cached keyed on exactly those two tokens; CDC appends between
-        DDLs read with the pinned schema and pay zero inference.
-        Columns the structure declares that no file carries yet (ADD
-        COLUMN before its first append) are united in with their
-        declared types so a post-cache append that starts writing them
-        can never be read back as missing.
-
-        r14: the inferred schema is ALSO persisted into the table meta
-        (``read_schema``, keyed by the same token), so the cache
-        survives engine restarts — a maintenance daemon constructing
-        many short-lived engines pays the footer sweep once per
-        schema-changing event, not once per process. This also closes
-        the stale-hit hazard of a (db, table) recreated into an
-        identically-named generation dir: create_table writes fresh
-        meta without the blob."""
-        from pyspark.sql.types import StructType
-
-        data_dir = self._data_dir(db, table)
-        token = (os.path.basename(data_dir),
-                 json.dumps(meta["structure"], sort_keys=True))
-        cached = self._read_schema_cache.get((db, table))
-        if cached is not None and cached[0] == token:
-            return self.spark.read.schema(cached[1]).parquet(data_dir)
-        blob = meta.get("read_schema")
-        if blob and tuple(blob.get("token", ())) == token:
-            schema = StructType.fromJson(json.loads(blob["schema"]))
-            self._read_schema_cache[(db, table)] = (token, schema)
-            return self.spark.read.schema(schema).parquet(data_dir)
-        inferred = self.spark.read.option("mergeSchema", "true") \
-            .parquet(data_dir).schema
-        have = {f.name for f in inferred.fields}
-        schema = inferred
-        for f in st.fields:
-            phys = f.physical or f.name
-            if phys not in have:
-                schema = schema.add(
-                    phys, spark_type_for(f, self.types_mapping), True)
-        self._read_schema_cache[(db, table)] = (token, schema)
-        # persist under the held table lock (atomic replace): every
-        # later engine instance reads with zero inference jobs
-        meta2 = dict(meta)
-        meta2["read_schema"] = {"token": list(token),
-                                "schema": schema.json()}
-        self.save_meta(db, table, meta2)
-        return self.spark.read.schema(schema).parquet(data_dir)
+    def _live_frame(self, db: str, table: str, meta: dict) -> DataFrame:
+        """The live generation, read with the schema its writers recorded
+        (``meta["file_schema"]``): no inference job, and a partition
+        column keeps its written type instead of one guessed from its
+        directory names."""
+        return self.spark.read.schema(
+            StructType.fromJson(meta["file_schema"])).parquet(
+                self._data_dir(db, table))
 
     def read_raw(self, db: str, table: str,
                  generation: str | None = None) -> DataFrame:
@@ -1022,7 +1026,7 @@ class ReplicaEngine:
                 schema = schema.add(OP_COL, "integer", False)
                 return self.spark.createDataFrame([], schema)
             else:
-                df = self._live_read_frame(db, table, meta, st)
+                df = self._live_frame(db, table, meta)
         exprs = []
         for f in st.fields:
             target = spark_type_for(f, self.types_mapping).simpleString()
@@ -1148,10 +1152,9 @@ class ReplicaEngine:
         names = {f.name for f in st.fields}
         if group_col not in names or value_col not in names:
             raise ValueError(f"unknown column for aggregate {name}")
-        meta = self.load_meta(db, table)
-        meta.setdefault("aggregates", {})[name] = {
-            "group": group_col, "value": value_col}
-        self.save_meta(db, table, meta)
+        with self.update_meta(db, table) as meta:
+            meta.setdefault("aggregates", {})[name] = {
+                "group": group_col, "value": value_col}
         self._rebuild_aggregate(db, table, name)
 
     def read_aggregate(self, db: str, table: str, name: str) -> DataFrame:
@@ -1182,10 +1185,8 @@ class ReplicaEngine:
             .parquet(os.path.join(root, new_name))
         publish_generation(root, new_name,
                            retention_s=self.generation_retention_s)
-        tmp = self._agg_state_path(db, table, name) + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"last_seq": last_seq}, fh)
-        os.replace(tmp, self._agg_state_path(db, table, name))
+        _write_json(self._agg_state_path(db, table, name),
+                    {"last_seq": last_seq})
 
     def _rebuild_aggregate(self, db: str, table: str, name: str) -> None:
         from .operators.incremental_agg import agg_of
@@ -1329,7 +1330,18 @@ class ReplicaEngine:
         # under the table lock: the append (and its meta watermark update)
         # must not interleave with a compaction's read→swap window
         with self.table_lock(db, table):
-            self._apply_table_rows_locked(db, table, rows)
+            with self.update_meta(db, table) as meta:
+                deltas = self._apply_table_rows_locked(db, table, rows, meta)
+            # maintained views advance after the table's watermark is
+            # saved: a crash in between leaves a view whose seq watermark
+            # disagrees with the table's, which the next batch rebuilds
+            if deltas:
+                from .operators.incremental_agg import merge_agg
+                for nm, spec in meta["aggregates"].items():
+                    merged = merge_agg(self.read_aggregate(db, table, nm),
+                                       deltas[nm], spec["group"])
+                    self._write_aggregate(db, table, nm, merged,
+                                          int(meta["last_seq"]))
 
     def _apply_plan(self, db: str, table: str, meta: dict) -> _ApplyPlan:
         """The table's cached ``_ApplyPlan``, rebuilt when
@@ -1381,9 +1393,10 @@ class ReplicaEngine:
         self._apply_plans[(db, table)] = plan
         return plan
 
-    def _apply_table_rows_locked(self, db: str, table: str,
-                                 rows: DataFrame) -> None:
-        meta = self.load_meta(db, table)
+    def _apply_table_rows_locked(self, db: str, table: str, rows: DataFrame,
+                                 meta: dict) -> dict[str, DataFrame]:
+        """Append ``rows`` and advance the watermarks in ``meta``; returns
+        each maintained aggregate's delta (none when nothing applied)."""
         plan = self._apply_plan(db, table, meta)
 
         if self.ignore_deletes:
@@ -1480,10 +1493,10 @@ class ReplicaEngine:
             stats = obs.get
         else:  # aggs path: collapsed is cached; one tiny extra job
             stats = collapsed.agg(*plan.stats).collect()[0].asDict()
+        if aggs:
+            collapsed.unpersist()  # the deltas are checkpointed
         if int(stats["n"]) == 0:
-            if aggs:
-                collapsed.unpersist()
-            return  # nothing applied; keep watermarks unchanged
+            return {}  # nothing applied; keep watermarks unchanged
         with self._stats_guard:  # parallel table writers share the counters
             self._batch_inserts = getattr(self, "_batch_inserts", 0) \
                 + int(stats["n_add"])
@@ -1491,16 +1504,7 @@ class ReplicaEngine:
                 + int(stats["n"] - stats["n_add"])
         meta["last_version"] = new_version
         meta["last_seq"] = int(stats["mx"])
-        self.save_meta(db, table, meta)
-
-        if aggs:
-            from .operators.incremental_agg import merge_agg
-            for nm, spec in aggs.items():
-                merged = merge_agg(self.read_aggregate(db, table, nm),
-                                   agg_deltas[nm], spec["group"])
-                self._write_aggregate(db, table, nm, merged,
-                                      int(meta["last_seq"]))
-            collapsed.unpersist()
+        return agg_deltas
 
     # -- recovery / verification --------------------------------------------
 
@@ -1510,16 +1514,11 @@ class ReplicaEngine:
         snapshot workers and crash-recovers the same way,
         clickhouse_api.py:444–467, db_replicator_initial.py:450–470).
         Returns the recovered watermark and persists it to the metadata."""
-        meta = self.load_meta(db, table)
-        if self._has_data(db, table):
-            row = self.spark.read.option("mergeSchema", "true") \
-                .parquet(self._data_dir(db, table)) \
-                .agg(F.max(VERSION_COL).alias("v")).collect()[0]
-            recovered = int(row.v) if row.v is not None else 0
-        else:
-            recovered = 0
-        meta["last_version"] = max(recovered, int(meta.get("last_version", 0)))
-        self.save_meta(db, table, meta)
+        with self.update_meta(db, table) as meta:
+            if self._has_data(db, table):
+                v = self._live_frame(db, table, meta) \
+                    .agg(F.max(VERSION_COL)).first()[0]
+                meta["last_version"] = max(int(v or 0), meta["last_version"])
         return meta["last_version"]
 
     def verify_structure(self, db: str, table: str,
@@ -1550,33 +1549,30 @@ class ReplicaEngine:
         micro-batch appended between the listing and the swap would
         vanish with the old directory (the optimizer runs on the
         supervisor thread, applies on the streaming thread)."""
-        with self.table_lock(db, table):
-            self._optimize_locked(db, table)
-
-    def _optimize_locked(self, db: str, table: str) -> None:
-        if not self._has_data(db, table):
-            return
-        st = self.structure(db, table)
-        collapsed = dedup_final_ops(self.read_raw(db, table),
-                                    st.primary_keys, op_col=OP_COL) \
-            .withColumn(OP_COL, F.lit(OP_ADD))
-        # S8 — per-table sort-order override (reference ``order_bys``,
-        # clickhouse_api.py:260–273): clustering at compaction time gives
-        # parquet min/max stats real selectivity on those columns. With
-        # 2–3 numeric/temporal keys the rewrite Z-orders instead of
-        # sorting lexicographically (functions/zorder.py): every file
-        # then covers a tight range on EVERY key, so at 100 TB a scan
-        # filtered on the second or third column still prunes row groups
-        # — lexicographic clustering only helps the leading one.
-        if self.settings is not None:
-            order = self.settings.order_by_for(table)
-            if order:
-                from .functions.zorder import zorder_cluster
-                z = zorder_cluster(collapsed, order) \
-                    if len(order) >= 2 else None
-                collapsed = z if z is not None \
-                    else collapsed.sortWithinPartitions(*order)
-        self._overwrite_data(db, table, collapsed)
+        with self.update_meta(db, table) as meta:
+            if not self._has_data(db, table):
+                return
+            st = _structure_from_dict(meta["structure"])
+            collapsed = dedup_final_ops(self.read_raw(db, table),
+                                        st.primary_keys, op_col=OP_COL) \
+                .withColumn(OP_COL, F.lit(OP_ADD))
+            # S8 — per-table sort-order override (reference ``order_bys``,
+            # clickhouse_api.py:260–273): clustering at compaction time gives
+            # parquet min/max stats real selectivity on those columns. With
+            # 2–3 numeric/temporal keys the rewrite Z-orders instead of
+            # sorting lexicographically (functions/zorder.py): every file
+            # then covers a tight range on EVERY key, so at 100 TB a scan
+            # filtered on the second or third column still prunes row groups
+            # — lexicographic clustering only helps the leading one.
+            if self.settings is not None:
+                order = self.settings.order_by_for(table)
+                if order:
+                    from .functions.zorder import zorder_cluster
+                    z = zorder_cluster(collapsed, order) \
+                        if len(order) >= 2 else None
+                    collapsed = z if z is not None \
+                        else collapsed.sortWithinPartitions(*order)
+            self._overwrite_data(db, table, collapsed, meta)
 
     # -- streaming ----------------------------------------------------------
 

@@ -7,9 +7,12 @@ cadence per database, persisting last-run times in ``db_optimizer.bin``.
 Here ``engine.optimize`` materializes the latest-wins collapse (drops
 superseded versions + tombstones); without a cadence the append-only
 replica's read amplification grows unboundedly under sustained CDC. The
-scheduler tracks ``last_optimize_ts`` per table inside the table's own
-``_meta.json`` (atomic save via engine.save_meta) and compacts any table
-whose interval has elapsed.
+scheduler compacts any table whose interval has elapsed and stamps
+``last_optimize_ts`` in the table's own ``_meta.json`` through
+``engine.update_meta``, which reloads the meta under the table lock: a CDC
+apply committed between the compaction and the stamp keeps its
+``last_seq``/``last_version`` (a stale copy would roll them back, and the
+next batch would reuse a version number).
 
 Scale note: each compaction is one table rewrite (read_final → staged
 overwrite) — the scheduler only decides WHEN; cost scales with live rows
@@ -78,9 +81,8 @@ class ReplicaOptimizer:
         done = []
         for db, table in self.due_tables():
             self.engine.optimize(db, table)
-            meta = self.engine.load_meta(db, table)
-            meta["last_optimize_ts"] = self.clock()
-            self.engine.save_meta(db, table, meta)
+            with self.engine.update_meta(db, table) as meta:
+                meta["last_optimize_ts"] = self.clock()
             done.append((db, table))
         return done
 

@@ -4,8 +4,6 @@ last-run time, and do nothing again until the interval elapses."""
 
 import os
 
-import pytest
-
 from mysql_ch_replicator_spark.config import Settings
 from mysql_ch_replicator_spark.engine import ReplicaEngine
 from mysql_ch_replicator_spark.optimizer import ReplicaOptimizer
@@ -149,13 +147,14 @@ def test_scheduler_vacuums_expired_generations(spark, tmp_path):
     assert got == {(1, "a2")}
 
 
-@pytest.mark.heavy
 def test_concurrent_apply_optimize_and_read(spark, tmp_path):
-    """True thread interleaving over one table: a CDC writer applies 6
-    sequential batches while a compactor loops optimize() and a reader
+    """True thread interleaving over one table: a CDC writer applies 4
+    sequential batches while a compactor loops the scheduler's
+    maybe_optimize() (compaction, then the last-run stamp) and a reader
     loops read_final().count() — the streaming-thread vs supervisor-thread
-    race the table lock + generation manifest exist for. No batch may be
-    lost to a rewrite window, and no read may crash on vanished files."""
+    race the table lock, the generation manifest and update_meta exist
+    for. No batch may be lost to a rewrite window, no read may crash on
+    vanished files, and no stamp may roll the watermarks back."""
     import threading
 
     from mysql_ch_replicator_spark.engine import ReplicaEngine
@@ -169,22 +168,24 @@ def test_concurrent_apply_optimize_and_read(spark, tmp_path):
 
     logs = []
     seq = 0
-    for b in range(6):
+    for b in range(4):
         log = EventLogWriter(str(tmp_path / f"log{b}"))
         log._seq = seq
-        log.add("db", "t", [(b * 100 + i, b) for i in range(100)])
+        log.add("db", "t", [(b * 40 + i, b) for i in range(40)])
         if b:  # update half of the previous batch's keys
-            log.add("db", "t", [((b - 1) * 100 + i, 99) for i in range(50)])
+            log.add("db", "t", [((b - 1) * 40 + i, 99) for i in range(20)])
+        last_seq = log._seq - 1
         seq = log._seq + 1000
         logs.append(str(tmp_path / f"log{b}"))
 
     stop = threading.Event()
     errors: list[BaseException] = []
+    optimizer = ReplicaOptimizer(engine, interval=0)
 
     def compactor():
         while not stop.is_set():
             try:
-                engine.optimize("db", "t")
+                optimizer.maybe_optimize()
             except BaseException as e:  # noqa: BLE001 - recorded for assert
                 errors.append(e)
                 return
@@ -210,12 +211,14 @@ def test_concurrent_apply_optimize_and_read(spark, tmp_path):
             t.join(timeout=60)
     assert not errors, errors
 
+    meta = engine.load_meta("db", "t")
+    assert (meta["last_seq"], meta["last_version"]) == (last_seq, 4)
     rows = {r.id: r.v for r in engine.read_final("db", "t").collect()}
-    assert len(rows) == 600
-    for b in range(6):
-        for i in range(100):
-            expect = 99 if (b < 5 and i < 50) else b
-            assert rows[b * 100 + i] == expect, (b, i, rows[b * 100 + i])
+    assert len(rows) == 160
+    for b in range(4):
+        for i in range(40):
+            expect = 99 if (b < 3 and i < 20) else b
+            assert rows[b * 40 + i] == expect, (b, i, rows[b * 40 + i])
 
 
 def test_generation_time_travel_across_optimize(spark, tmp_path):
