@@ -674,18 +674,28 @@ class ReplicaEngine:
             meta["file_schema"] = self._declared_file_schema(st)
             return
         df = self._live_frame(db, table, meta)
+        self._overwrite_data(
+            db, table, df.select(*self._declared_exprs(st, df.columns)), meta)
+        for f in st.fields:   # files are logical-named again
+            f.physical = None
+
+    def _declared_exprs(self, st: TableStructure, file_cols,
+                        defaults: bool = False) -> list[Column]:
+        """The declared columns under their logical names, each read from
+        its file column through the column mapping and cast to its
+        declared type, NULL where ``file_cols`` lacks it (added after the
+        files were written); with ``defaults`` a NOT NULL column's NULLs
+        read as its default. Then ``_version`` and ``_op``."""
         exprs = []
         for f in st.fields:
             target = spark_type_for(f, self.types_mapping).simpleString()
             phys = f.physical or f.name
-            if phys in df.columns:
-                exprs.append(F.col(phys).try_cast(target).alias(f.name))
-            else:
-                exprs.append(F.lit(None).cast(target).alias(f.name))
-        exprs += [F.col(VERSION_COL), F.col(OP_COL)]
-        self._overwrite_data(db, table, df.select(*exprs), meta)
-        for f in st.fields:   # files are logical-named again
-            f.physical = None
+            c = (F.col(phys).try_cast(target) if phys in file_cols
+                 else F.lit(None).cast(target))
+            if defaults and not f.nullable:
+                c = F.coalesce(c, default_for(f))
+            exprs.append(c.alias(f.name))
+        return exprs + [F.col(VERSION_COL), F.col(OP_COL)]
 
     def _partition_cols(self, table: str) -> list[str]:
         """S8 — per-table physical partitioning override (reference
@@ -742,7 +752,7 @@ class ReplicaEngine:
         return opts
 
     def _overwrite_data(self, db: str, table: str, df: DataFrame,
-                               meta: dict) -> None:
+                        meta: dict) -> None:
         """Rewrite by publishing a NEW data generation (D14 — readers never
         see partial data; reference's db-swap,
         db_replicator_initial.py:149–163, upgraded to the commit-log
@@ -862,6 +872,17 @@ class ReplicaEngine:
 
     # -- snapshot (S1 → F4 → K4 → S5) ---------------------------------------
 
+    def _snapshot_frame(self, st: TableStructure, df: DataFrame,
+                        snap_v: int) -> DataFrame:
+        """A snapshot's rows as version peers at ``snap_v`` with every
+        declared column, NULL where ``df`` lacks it: its ``file_schema``
+        entry stays, so later CDC values of it read back."""
+        return df.select(*[
+            F.col(f.name) if f.name in df.columns else F.lit(None).cast(
+                spark_type_for(f, self.types_mapping)).alias(f.name)
+            for f in st.fields], F.lit(snap_v).cast("long").alias(
+                VERSION_COL), F.lit(OP_ADD).alias(OP_COL))
+
     def snapshot_table(self, db: str, table: str, df: DataFrame) -> None:
         """Initial replication of an already-typed DataFrame (JDBC/parquet
         snapshot). All snapshot rows are version-peers at version 1
@@ -869,11 +890,8 @@ class ReplicaEngine:
         with self.update_meta(db, table) as meta:
             st = _structure_from_dict(meta["structure"])
             snap_v = int(meta["last_version"]) + 1  # v0+1 on a fresh table
-            cols = [F.col(f.name) for f in st.fields if f.name in df.columns]
-            out = df.select(*cols) \
-                .withColumn(VERSION_COL, F.lit(snap_v).cast("long")) \
-                .withColumn(OP_COL, F.lit(OP_ADD))
-            self._overwrite_data(db, table, out, meta)
+            self._overwrite_data(db, table,
+                                 self._snapshot_frame(st, df, snap_v), meta)
             meta["last_version"] = snap_v
         # post_initial_replication_commands — arbitrary SQL after the
         # snapshot publishes (reference config.py:330–337,
@@ -914,12 +932,9 @@ class ReplicaEngine:
         st = self.structure(db, table)
         data = self._data_dir(db, table)
         snap_v = int(self.load_meta(db, table)["last_version"]) + 1
-        col_names = [f.name for f in st.fields if f.name in df.columns]
-        out = (df.select(*col_names)
-               .withColumn(VERSION_COL, F.lit(snap_v).cast("long"))
-               .withColumn(OP_COL, F.lit(OP_ADD)))
-        opts = self._writer_options(table, st, col_names)
-        parts = [c for c in self._partition_cols(table) if c in col_names]
+        out = self._snapshot_frame(st, df, snap_v)
+        opts = self._writer_options(table, st, out.columns)
+        parts = [c for c in self._partition_cols(table) if c in out.columns]
 
         def write_shard(w: int) -> str:
             shard_dir = f"{data}.shard{w}"
@@ -1021,25 +1036,11 @@ class ReplicaEngine:
                 df = self.spark.read.option("mergeSchema", "true") \
                     .parquet(gdir)
             elif not self._has_data(db, table):
-                from .schema.type_mapping import to_struct_type
-                schema = to_struct_type(st, self.types_mapping)
-                schema = schema.add(OP_COL, "integer", False)
-                return self.spark.createDataFrame([], schema)
+                df = self.spark.createDataFrame(
+                    [], StructType.fromJson(meta["file_schema"]))
             else:
                 df = self._live_frame(db, table, meta)
-        exprs = []
-        for f in st.fields:
-            target = spark_type_for(f, self.types_mapping).simpleString()
-            phys = f.physical or f.name  # column-mapping indirection
-            if phys in df.columns:
-                c = F.col(phys).try_cast(target)
-            else:  # column added after these rows were written
-                c = F.lit(None).cast(target)
-            if not f.nullable:
-                c = F.coalesce(c, default_for(f))
-            exprs.append(c.alias(f.name))
-        exprs += [F.col(VERSION_COL), F.col(OP_COL)]
-        return df.select(*exprs)
+        return df.select(*self._declared_exprs(st, df.columns, True))
 
     def read_final(self, db: str, table: str,
                    generation: str | None = None) -> DataFrame:

@@ -335,12 +335,9 @@ class MaintainedIndex:
 
         if self.kind == "lexical":
             from .operators.retrieval import upsert_lexical_index
-            # without a reconcile, adds and removes split one frame
-            # deduplicated by id: each id once, in one side only
             upsert_lexical_index(spark, self.index_path, adds=adds,
                                  removes=removes, id_col=self.id_col,
-                                 text_col=self.payload_col,
-                                 distinct_ids=not reconciled)
+                                 text_col=self.payload_col)
         else:
             from .operators.similarity import upsert_ivf_index
             upsert_ivf_index(spark, self.index_path, adds=adds,

@@ -235,22 +235,19 @@ def _tokenized_tf(docs: DataFrame, id_col: str,
 
 
 def _doc_meta(docs: DataFrame, per: DataFrame, id_col: str,
-              shards: int, splits: list[dict] | None = None,
-              distinct_ids: bool = False) -> DataFrame:
+              shards: int, splits: list[dict] | None = None) -> DataFrame:
     """(doc_id, dl, shards) for EVERY doc — doc length and the SET of
     term shards holding the doc's postings, from ONE aggregate over the
     shared tf frame. Zero-token docs get dl=0 / empty shards, so
     ``count(docmeta)`` is the corpus document count n everywhere (the
     invariant the idempotent upsert meta recomputation relies on).
     Fusing length and membership into one table means the incremental
-    upsert pays ONE span-partitioned rewrite per batch for both.
-    ``distinct_ids``: ``docs`` holds each id once (no dedup shuffle)."""
+    upsert pays ONE span-partitioned rewrite per batch for both."""
     sums = per.groupBy("doc_id").agg(
         F.sum("tf").cast("long").alias("dl"),
         F.collect_set(_shard_expr(F.col("term"), shards, splits or []))
          .alias("shards"))
-    ids = docs.select(F.col(id_col).alias("doc_id"))
-    return ((ids if distinct_ids else ids.distinct())
+    return (docs.select(F.col(id_col).alias("doc_id")).distinct()
             .join(sums, "doc_id", "left")
             .select("doc_id",
                     F.coalesce("dl", F.lit(0)).cast("long").alias("dl"),
@@ -601,8 +598,7 @@ def _membership_shard_frame(docmeta: DataFrame, changed: DataFrame,
 def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
                          removes: DataFrame | None = None,
                          id_col: str = "doc_id",
-                         text_col: str = "text",
-                         distinct_ids: bool = False) -> dict:
+                         text_col: str = "text") -> dict:
     """Incremental maintenance of a ``write_lexical_index`` table — the
     lexical twin of ``similarity.upsert_ivf_index``: a CDC batch of new
     and deleted documents rewrites ONLY the term shards and docmeta spans
@@ -612,11 +608,7 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
     its postings entirely. Because a term's rows all live in its ONE
     hash shard, recomputing df over a rewritten shard's merged rows IS
     the global df — so df stays exact without delta bookkeeping, and a
-    term whose last posting disappears leaves the index. A caller whose
-    ``adds`` and ``removes`` each hold an id at most once, and share no
-    id (one deduplicated CDC window), passes ``distinct_ids=True``: the
-    id dedups and the removes-win anti-join are then skipped, 9 of the
-    34 Spark jobs of a 48k-doc upsert.
+    term whose last posting disappears leaves the index.
 
     Affected-set discovery is ONE collect over the union of (a) shards
     of the changed docs' CURRENT terms, answered by the span-partitioned
@@ -689,11 +681,13 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
                  for k, v in meta["spans"].items()}
     shard_rows = {int(k): int(v) for k, v in meta["shard_rows"].items()}
 
-    def _ids(df):
-        ids = df.select(F.col(id_col).alias("doc_id"))
-        return ids if distinct_ids else ids.distinct()
-
-    id_frames = [_ids(df) for df in (adds, removes) if df is not None]
+    id_frames = []
+    if adds is not None:
+        id_frames.append(adds.select(F.col(id_col).alias("doc_id"))
+                         .distinct())
+    if removes is not None:
+        id_frames.append(removes.select(F.col(id_col).alias("doc_id"))
+                         .distinct())
     if not id_frames:
         return {"shards": [], "dspans": []}
     # each side is distinct already; a union-level distinct would buy
@@ -708,7 +702,7 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
     new_meta = None
     new_pos = None
     if adds is not None:
-        kept = adds if removes is None or distinct_ids else adds.join(
+        kept = adds if removes is None else adds.join(
             removes.select(F.col(id_col).alias(id_col)).distinct(),
             id_col, "left_anti")
         if has_positions:
@@ -725,7 +719,7 @@ def upsert_lexical_index(spark, path: str, adds: DataFrame | None = None,
             # same frame)
             new_per = _tokenized_tf(kept, id_col, text_col)
         new_meta = _doc_meta(kept, new_per, id_col, shards,
-                             splits=splits, distinct_ids=distinct_ids)
+                             splits=splits)
 
     from concurrent.futures import ThreadPoolExecutor
 

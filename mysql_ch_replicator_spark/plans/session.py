@@ -30,14 +30,6 @@ _DEFAULTS = {
     # Local testing default; AQE coalesces down when partitions are tiny.
     # On a real cluster this is set per-deploy (rule of thumb: 2–3× cores).
     "spark.sql.shuffle.partitions": "32",
-    # Let AQE coalesce the partitions of a persisted frame too. Off (the
-    # Spark default), a cache keeps all 32 post-shuffle partitions so its
-    # layout stays planable, and every consumer runs a task per partition,
-    # most of them empty at CDC-batch sizes: a 48k-doc lexical index
-    # upsert ran stages of 32-64 tasks with it off and 1-6 with it on
-    # (same postings and meta), and perfbench serve_under_write's peak
-    # RSS fell 14% (4-core host).
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     # Parquet pushdown/pruning is on by default; pin it explicitly — the
     # engine depends on it (SURVEY.md §4 predicate-pushdown row).

@@ -521,38 +521,3 @@ def test_delta_version_filter_reaches_parquet_scan(spark, tmp_path):
     plan = buf.getvalue()
     pushed = [ln for ln in plan.split("\n") if "PushedFilters" in ln]
     assert pushed and "GreaterThan(_version,1)" in pushed[0]
-
-
-def test_lexical_upsert_distinct_ids_matches_dedup_path(spark, tmp_path):
-    """``distinct_ids=True`` (the maintainer's deduplicated window) skips
-    the id dedups and the removes-win anti-join; on adds and removes
-    that hold each id once and share none it must write the same
-    postings, docmeta and descriptor as the default path."""
-    from mysql_ch_replicator_spark.operators.retrieval import (
-        upsert_lexical_index, write_lexical_index)
-
-    base = spark.createDataFrame(
-        [(i, f"alpha w{i % 7} beta{i % 3}") for i in range(40)],
-        "doc_id long, text string")
-    adds = spark.createDataFrame(
-        [(3, "gamma gamma new"), (41, "kappa alpha"), (42, "")],
-        "doc_id long, text string")
-    removes = spark.createDataFrame([(5,), (17,)], "doc_id long")
-
-    def dump(path):
-        rows = {t: sorted(tuple(r) for r in spark.read.parquet(
-                    os.path.join(path, t)).collect())
-                for t in ("postings", "docmeta")}
-        return rows, json.loads(fsutil.read_text(
-            os.path.join(path, "_lex_meta.json")))
-
-    out = {}
-    for flag in (False, True):
-        path = str(tmp_path / f"ix_{flag}")
-        write_lexical_index(base, path, shards=4, span_width=8)
-        upsert_lexical_index(spark, path, adds=adds, removes=removes,
-                             distinct_ids=flag)
-        out[flag] = dump(path)
-    assert out[True] == out[False]
-    docs = {r[0] for r in out[True][0]["docmeta"]}
-    assert 5 not in docs and 17 not in docs and {3, 41, 42} <= docs

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from mysql_ch_replicator_spark.config import Settings
 from mysql_ch_replicator_spark.engine import ReplicaEngine
 from mysql_ch_replicator_spark.sources.event_log import (
@@ -59,6 +61,26 @@ def test_partition_column_keeps_declared_string_type(spark, tmp_path):
            lambda log: log.add(DB, "t", [(3, "042")]))
     got = {r.id: r.code for r in engine.read_final(DB, "t").collect()}
     assert got == {1: "007", 2: "010", 3: "042"}
+
+
+@pytest.mark.parametrize("workers", [1, 2])
+def test_snapshot_without_a_declared_column_keeps_it_readable(
+        spark, tmp_path, workers):
+    """A snapshot frame that lacks a declared column still records it in
+    ``file_schema``: a later CDC value of that column reads back, before
+    and after a compaction rewrites the table from its reads."""
+    engine = ReplicaEngine(spark, str(tmp_path / "replica"))
+    engine.create_table(DB, DDL)
+    engine.snapshot_table_sharded(DB, "users", spark.createDataFrame(
+        [(1,), (2,)], "id int"), workers=workers)
+    _apply(spark, engine, tmp_path, "log", 100,
+           lambda log: log.add(DB, "users", [(3, "c")]))
+    want = {1: None, 2: None, 3: "c"}
+    assert {r.id: r.name for r in engine.read_final(DB, "users").collect()} \
+        == want
+    engine.optimize(DB, "users")
+    assert {r.id: r.name for r in engine.read_final(DB, "users").collect()} \
+        == want
 
 
 def test_second_engine_reads_never_write(spark, tmp_path):
