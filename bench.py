@@ -4,6 +4,11 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
+``--only NAME[,NAME...]`` times just the named registry queries (after
+the same warm-up) and prints their line only: no streaming, maintained
+or snapshot probe, and no result file is written. An unknown name exits
+with status 1 and lists the valid ones.
+
 Timing includes full execution (count-style action that materializes every
 row) but not session startup. A warmup pass primes the JVM + parquet footer
 cache so numbers reflect steady-state execution, not first-run JIT.
@@ -11,6 +16,7 @@ cache so numbers reflect steady-state execution, not first-run JIT.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -48,6 +54,21 @@ def snapshot_decision(load1: float, requested: bool,
     return False, (f"snapshot REFUSED: loadavg_at_start {load1} > "
                    f"{SNAPSHOT_LOAD_LIMIT} — degraded window; rerun when "
                    f"idle or set SPARK_GRAFT_BENCH_SNAPSHOT_FORCE=1")
+
+
+def select_queries(qs: dict, only: str | None) -> dict:
+    """``qs`` restricted to the comma-separated names in ``only`` (all of
+    ``qs`` when it is None). An unknown name exits with status 1 and the
+    list of valid names."""
+    if only is None:
+        return qs
+    names = [n.strip() for n in only.split(",") if n.strip()]
+    unknown = [n for n in names if n not in qs]
+    if unknown or not names:
+        sys.exit(f"bench.py --only: unknown query name(s) "
+                 f"{', '.join(unknown) or repr(only)}; valid names:\n"
+                 + "\n".join(sorted(qs)))
+    return {n: qs[n] for n in names}
 
 
 def bench_streaming(spark) -> dict:
@@ -361,6 +382,12 @@ def bench_snapshot(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--only", metavar="NAME[,NAME...]",
+                    help="time just these registry queries")
+    args = ap.parse_args()
+    registry = spark_queries()
+    qs = select_queries(registry, args.only)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     # host regime at run START (r11 verdict #8): cross-round comparisons
@@ -377,11 +404,10 @@ def main() -> None:
     spark = get_spark("mysql_ch_replicator_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = spark_queries()
     # warmup: materialize one tiny query to JIT the session, and run one
     # trivial pandas UDF across the cluster to pre-fork the Python worker
     # pool (first Arrow batch otherwise pays ~5 s of worker startup)
-    next(iter(qs.values()))(spark, sf_dir).count()
+    next(iter(registry.values()))(spark, sf_dir).count()
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.functions import pandas_udf
 
@@ -424,6 +450,17 @@ def main() -> None:
         from mysql_ch_replicator_spark.cache import release_transient_caches
         release_transient_caches()
         spark.catalog.clearCache()
+
+    if args.only is not None:
+        print(json.dumps({
+            "queries": timings, "sf": sf,
+            "notes": {"host_regime": {
+                "loadavg_at_start": load_start,
+                "loadavg_at_end": [round(x, 2) for x in os.getloadavg()]}},
+            "metric": "total_query_time",
+            "value": round(sum(timings.values()), 4), "unit": "sec"}))
+        spark.stop()
+        return
 
     streaming = bench_streaming(spark)
     maintained = bench_maintained_streaming(spark)

@@ -5,7 +5,7 @@ internal jobs and the returned lazy plan reference (staged shingles,
 scored projections, normalized vectors...). The operator cannot eagerly
 unpersist — the caller's action still needs the blocks — but a bare
 ``persist()`` leaks one cache entry per call, and a long-lived driver
-session running the whole 122-query registry accumulates them without
+session running the whole 221-query registry accumulates them without
 bound (ADVICE r4).
 
 ``transient_persist`` is the middle ground: persist and register in a

@@ -160,21 +160,25 @@ GENERATION_RETENTION_S = 60.0
 
 
 def _retired_entries(g: dict) -> list[dict]:
-    """The manifest's retired generations as ``{name, ts}`` entries."""
-    return [{"name": r["name"], "ts": float(r.get("ts", 0.0))}
+    """The manifest's retired generations as ``{name, ts}`` entries, with
+    the ``file_schema`` of their files where the rewrite recorded it."""
+    return [dict(r, ts=float(r.get("ts", 0.0)))
             for r in g["retired"] if isinstance(r, dict) and "name" in r]
 
 
 def publish_generation(root: str, new_name: str,
                        retention_s: float = GENERATION_RETENTION_S,
-                       now: float | None = None) -> None:
+                       now: float | None = None,
+                       retired_schema: dict | None = None) -> None:
     """Flip the manifest to ``new_name`` (atomic os.replace), retire the
     previous current generation, and delete retired generations older than
     ``retention_s`` — readers of a retired generation get at least that
     long to finish, however fast rewrites churn. Orphan gen dirs (crashed
     rewrites that never published) are swept too; callers hold the owning
     lock. ``now`` is injectable so a scheduler's clock drives retention
-    decisions consistently (ReplicaOptimizer.maybe_vacuum)."""
+    decisions consistently (ReplicaOptimizer.maybe_vacuum).
+    ``retired_schema``, the ``file_schema`` of the generation being
+    retired, is kept in its entry for time-travel reads."""
     import time as _time
 
     if now is None:
@@ -195,7 +199,9 @@ def publish_generation(root: str, new_name: str,
             shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
     if (g["current"] != new_name
             and os.path.exists(os.path.join(root, g["current"]))):
-        kept.append({"name": g["current"], "ts": now})
+        kept.append({"name": g["current"], "ts": now}
+                    | ({"file_schema": retired_schema}
+                       if retired_schema else {}))
     _write_json(_gen_manifest_path_of(root),
                 {"current": new_name, "retired": kept})
 
@@ -342,9 +348,13 @@ class ReplicaEngine:
     def _next_gen_name(self, db: str, table: str) -> str:
         return next_gen_name(self._table_dir(db, table))
 
-    def _publish_generation(self, db: str, table: str, new_name: str) -> None:
+    def _publish_generation(self, db: str, table: str, new_name: str,
+                            meta: dict) -> None:
+        """Publish ``new_name``; the retired generation keeps the
+        ``file_schema`` that ``meta`` still records for it."""
         publish_generation(self._table_dir(db, table), new_name,
-                           retention_s=self.generation_retention_s)
+                           retention_s=self.generation_retention_s,
+                           retired_schema=meta["file_schema"])
 
     def _data_dir(self, db: str, table: str) -> str:
         return os.path.join(self._table_dir(db, table),
@@ -529,7 +539,7 @@ class ReplicaEngine:
                         new_name = self._next_gen_name(tdb, name)
                         os.makedirs(os.path.join(self._table_dir(tdb, name),
                                                  new_name))
-                        self._publish_generation(tdb, name, new_name)
+                        self._publish_generation(tdb, name, new_name, meta)
                     meta["file_schema"] = self._declared_file_schema(
                         _structure_from_dict(meta["structure"]))
                 # maintained aggregates must reset with the table: their
@@ -771,7 +781,7 @@ class ReplicaEngine:
         writer.parquet(new_dir)
         # df's plan reads the OLD generation and the write above is its
         # only action — publish strictly after it completes
-        self._publish_generation(db, table, new_name)
+        self._publish_generation(db, table, new_name, meta)
         _record_rewrite(meta, df)
 
     def vacuum(self, db: str, table: str,
@@ -875,13 +885,22 @@ class ReplicaEngine:
     def _snapshot_frame(self, st: TableStructure, df: DataFrame,
                         snap_v: int) -> DataFrame:
         """A snapshot's rows as version peers at ``snap_v`` with every
-        declared column, NULL where ``df`` lacks it: its ``file_schema``
-        entry stays, so later CDC values of it read back."""
-        return df.select(*[
-            F.col(f.name) if f.name in df.columns else F.lit(None).cast(
-                spark_type_for(f, self.types_mapping)).alias(f.name)
-            for f in st.fields], F.lit(snap_v).cast("long").alias(
-                VERSION_COL), F.lit(OP_ADD).alias(OP_COL))
+        declared column in its declared type, NULL where ``df`` lacks it:
+        its ``file_schema`` entry stays, so later CDC values of it read
+        back, and the files match the CDC appends' types (an ``int``
+        frame column of a declared ``bigint`` would leave INT32 and INT64
+        files in one generation, which no read can merge)."""
+        have = {c.name: c.dataType for c in df.schema.fields}
+
+        def column(f):
+            t = spark_type_for(f, self.types_mapping)
+            if have.get(f.name) == t:
+                return F.col(f.name)
+            src = F.col(f.name) if f.name in have else F.lit(None)
+            return src.cast(t).alias(f.name)
+
+        return df.select(*map(column, st.fields), F.lit(snap_v).cast(
+            "long").alias(VERSION_COL), F.lit(OP_ADD).alias(OP_COL))
 
     def snapshot_table(self, db: str, table: str, df: DataFrame) -> None:
         """Initial replication of an already-typed DataFrame (JDBC/parquet
@@ -970,7 +989,7 @@ class ReplicaEngine:
                         os.rename(os.path.join(sub, fn),
                                   os.path.join(dest, f"shard{w}-{fn}"))
                 shutil.rmtree(shard_dir)
-            self._publish_generation(db, table, new_name)
+            self._publish_generation(db, table, new_name, meta)
             _record_rewrite(meta, out)  # every shard wrote out's columns
             meta["last_version"] = max(snap_v, int(meta["last_version"]))
 
@@ -1003,6 +1022,22 @@ class ReplicaEngine:
             StructType.fromJson(meta["file_schema"])).parquet(
                 self._data_dir(db, table))
 
+    def _generation_frame(self, db: str, table: str, meta: dict,
+                          generation: str, gdir: str) -> DataFrame:
+        """Generation ``generation`` (files in ``gdir``), read with the
+        ``file_schema`` recorded for it: the meta's for the current one,
+        its manifest entry's for a retired one. An entry retired before
+        entries recorded it is inferred (``mergeSchema``); retention
+        reclaims such entries."""
+        g = self._load_generations(db, table)
+        schema = meta["file_schema"] if generation == g["current"] else next(
+            (r.get("file_schema") for r in _retired_entries(g)
+             if r["name"] == generation), None)
+        reader = self.spark.read
+        reader = (reader.schema(StructType.fromJson(schema)) if schema
+                  else reader.option("mergeSchema", "true"))
+        return reader.parquet(gdir)
+
     def read_raw(self, db: str, table: str,
                  generation: str | None = None) -> DataFrame:
         # Structure AND file listing are taken atomically under the table
@@ -1033,8 +1068,8 @@ class ReplicaEngine:
                         f"on disk (never published, or reclaimed by "
                         f"retention) — list_generations() shows what is "
                         f"readable")
-                df = self.spark.read.option("mergeSchema", "true") \
-                    .parquet(gdir)
+                df = self._generation_frame(db, table, meta, generation,
+                                            gdir)
             elif not self._has_data(db, table):
                 df = self.spark.createDataFrame(
                     [], StructType.fromJson(meta["file_schema"]))

@@ -119,6 +119,39 @@ def test_lexical_coalesced_apply_and_freshness(spark, tmp_path):
     assert _lex_probe(spark, path) == _lex_probe(spark, full)
 
 
+def _new_jobs_work(spark, before: set[int]) -> tuple[int, int]:
+    """(jobs, completed tasks) of the jobs started since ``before``, the
+    job ids the status tracker held then. Jobs from the index's worker
+    threads carry no job group, so every new job is counted."""
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    tasks = 0
+    for jid in jobs:
+        for sid in tracker.getJobInfo(jid).stageIds:
+            si = tracker.getStageInfo(sid)
+            tasks += si.numCompletedTasks if si is not None else 0
+    return len(jobs), tasks
+
+
+def test_lexical_apply_tasks_follow_the_data(spark, tmp_path):
+    """A small lexical apply reads the frames it cached (tokenized tf,
+    positions, docmeta, changed terms) in stages that adaptive execution
+    sizes by their data: a handful of tasks per job, not one per
+    ``spark.sql.shuffle.partitions`` slot (32) of each cached shuffle."""
+    rig = _docs_rig(spark, tmp_path)
+    ix = MaintainedIndex(rig.engine, "db1", "docs", str(tmp_path / "lexidx"),
+                         "lexical", payload_col="body", max_lag_seconds=0.0,
+                         clock=FakeClock(), shards=4, span_width=8)
+    ix.build()
+    rig.apply(adds=[(100, "delta epsilon"), (5, "alpha rewritten w1")],
+              removes=[7])
+    before = set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+    assert ix.apply()["applied"]
+    jobs, tasks = _new_jobs_work(spark, before)
+    assert jobs > 0
+    assert tasks <= 3 * jobs, (jobs, tasks)
+
+
 def test_crash_between_upsert_and_watermark_is_idempotent(spark, tmp_path):
     """The watermark commits strictly after the upsert; a crash between
     the two re-runs the SAME window from the old watermark and converges

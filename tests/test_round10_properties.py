@@ -4,6 +4,7 @@ window, session-fixture build race) plus the r9 verdict's quick asks."""
 
 import json
 import os
+import shutil
 import threading
 import time
 
@@ -440,7 +441,26 @@ def _split_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_lexical_shard_split_probe_invariant(spark, tmp_path, documents):
+@pytest.fixture(scope="module")
+def split_index(spark, tmp_path_factory):
+    """The positional index of ``_split_docs``, built once; a test works
+    on its own copy (``_copy_index``)."""
+    from mysql_ch_replicator_spark.operators.retrieval import \
+        write_lexical_index
+
+    path = str(tmp_path_factory.mktemp("split_index") / "lex")
+    write_lexical_index(_split_docs(spark), path, shards=4, span_width=8,
+                        positions=True)
+    return path
+
+
+def _copy_index(template: str, tmp_path) -> str:
+    path = str(tmp_path / "lex")
+    shutil.copytree(template, path)
+    return path
+
+
+def test_lexical_shard_split_probe_invariant(spark, tmp_path, split_index):
     """Splitting the hottest shard must leave every probe bit-identical
     (placement is not semantics), rewrite ONLY the two shard dirs, keep
     descriptor scalars/span stats untouched, and update the docmeta
@@ -448,11 +468,9 @@ def test_lexical_shard_split_probe_invariant(spark, tmp_path, documents):
     import glob
 
     from mysql_ch_replicator_spark.operators.retrieval import (
-        _term_shard_py, split_lexical_shard, write_lexical_index)
+        _term_shard_py, split_lexical_shard)
 
-    path = str(tmp_path / "lex")
-    write_lexical_index(_split_docs(spark), path, shards=4, span_width=8,
-                        positions=True)
+    path = _copy_index(split_index, tmp_path)
     before = _probe_all(spark, path)
     meta0 = json.load(open(os.path.join(path, "_lex_meta.json")))
     mtimes = {d: os.path.getmtime(d)
@@ -484,8 +502,8 @@ def test_lexical_shard_split_probe_invariant(spark, tmp_path, documents):
     assert {(int(r.doc_id), int(r.s)) for r in memb.collect()} == want
 
 
-@pytest.mark.heavy
-def test_lexical_split_then_upsert_equals_rebuild(spark, tmp_path):
+def test_lexical_split_then_upsert_equals_rebuild(spark, tmp_path,
+                                                 split_index):
     """The critical composition: an upsert AFTER a split must place new
     postings with the split-aware hash and discover moved terms through
     the rewritten membership — final index equals a rebuild probe-for-
@@ -494,8 +512,7 @@ def test_lexical_split_then_upsert_equals_rebuild(spark, tmp_path):
         split_lexical_shard, upsert_lexical_index, write_lexical_index)
 
     docs = _split_docs(spark)
-    path = str(tmp_path / "lex")
-    write_lexical_index(docs, path, shards=4, span_width=8, positions=True)
+    path = _copy_index(split_index, tmp_path)
     split_lexical_shard(spark, path)
 
     adds = spark.createDataFrame(
@@ -663,7 +680,8 @@ def test_pending_lexical_upsert_helper(spark, tmp_path):
 # Remove-everything windows must not wedge the indexes (r10 review #2)
 # ---------------------------------------------------------------------------
 
-def test_lexical_index_survives_remove_everything(spark, tmp_path):
+def test_lexical_index_survives_remove_everything(spark, tmp_path,
+                                                  split_index):
     """A CDC window that deletes EVERY doc sweeps all shard and span
     directories; the next probe must read empty (schema from the
     descriptor, not parquet inference over a bare root) and the next
@@ -672,8 +690,7 @@ def test_lexical_index_survives_remove_everything(spark, tmp_path):
         bm25_indexed_topk, upsert_lexical_index, write_lexical_index)
 
     docs = _split_docs(spark)
-    path = str(tmp_path / "lex")
-    write_lexical_index(docs, path, shards=4, span_width=8, positions=True)
+    path = _copy_index(split_index, tmp_path)
     upsert_lexical_index(spark, path, removes=docs.select("doc_id"))
 
     assert bm25_indexed_topk(spark, path, ["alpha"], k=5).count() == 0

@@ -377,6 +377,20 @@ def test_bench_snapshot_guard():
     assert ok and "FORCED" in note
 
 
+def test_bench_only_selects_named_queries():
+    """``bench.py --only`` keeps the named queries in the order given;
+    an unknown name exits non-zero and lists the valid names."""
+    import bench
+
+    qs = {"a": 1, "b": 2, "c": 3}
+    assert bench.select_queries(qs, None) is qs
+    assert list(bench.select_queries(qs, "c, a")) == ["c", "a"]
+    with pytest.raises(SystemExit) as exc:
+        bench.select_queries(qs, "a,nope")
+    assert "nope" in str(exc.value.code)
+    assert str(exc.value.code).endswith("a\nb\nc")
+
+
 # -- persisted PQ codes in the IVF index (r12 verdict #3) -------------------
 
 

@@ -45,7 +45,8 @@ def _apply(spark, engine, tmp_path, tag, seq, fill):
 def test_partition_column_keeps_declared_string_type(spark, tmp_path):
     """A varchar partition column reads back as written: its type comes
     from the written frame, not from the partition directory names, so
-    '007' and '010' do not come back as '7' and '10'."""
+    '007' and '010' do not come back as '7' and '10' — in a time-travel
+    read of the generation a compaction retired too."""
     engine = ReplicaEngine(spark, str(tmp_path / "replica"),
                            settings=Settings.load(
                                {"partition_bys": {"t": ["code"]}}))
@@ -59,8 +60,16 @@ def test_partition_column_keeps_declared_string_type(spark, tmp_path):
         [(1, "007"), (2, "010")], "id int, code string"))
     _apply(spark, engine, tmp_path, "log", 100,
            lambda log: log.add(DB, "t", [(3, "042")]))
+    want = {1: "007", 2: "010", 3: "042"}
     got = {r.id: r.code for r in engine.read_final(DB, "t").collect()}
-    assert got == {1: "007", 2: "010", 3: "042"}
+    assert got == want
+    engine.optimize(DB, "t")
+    current, retired = engine.list_generations(DB, "t")[:2]
+    assert current["current"] and not retired["current"]
+    for gen in (current["name"], retired["name"]):
+        got = {r.id: r.code
+               for r in engine.read_final(DB, "t", generation=gen).collect()}
+        assert got == want, gen
 
 
 @pytest.mark.parametrize("workers", [1, 2])
@@ -81,6 +90,28 @@ def test_snapshot_without_a_declared_column_keeps_it_readable(
     engine.optimize(DB, "users")
     assert {r.id: r.name for r in engine.read_final(DB, "users").collect()} \
         == want
+
+
+@pytest.mark.parametrize("workers", [1, 2])
+def test_snapshot_writes_the_declared_types(spark, tmp_path, workers):
+    """A snapshot frame whose column type differs from the declared one
+    (``int`` for a declared ``bigint``) is written in the declared type,
+    as the CDC apply writes it: ``file_schema`` equals the declared
+    schema, and the snapshot's and the CDC's files read back together,
+    before and after a compaction."""
+    engine = ReplicaEngine(spark, str(tmp_path / "replica"))
+    engine.create_table(DB, """CREATE TABLE t (
+      id int NOT NULL, v bigint, PRIMARY KEY (id))""")
+    declared = engine.load_meta(DB, "t")["file_schema"]
+    engine.snapshot_table_sharded(DB, "t", spark.createDataFrame(
+        [(1, 10), (2, 20)], "id int, v int"), workers=workers)
+    assert engine.load_meta(DB, "t")["file_schema"] == declared
+    _apply(spark, engine, tmp_path, "log", 100,
+           lambda log: log.add(DB, "t", [(3, 30)]))
+    want = {1: 10, 2: 20, 3: 30}
+    assert {r.id: r.v for r in engine.read_final(DB, "t").collect()} == want
+    engine.optimize(DB, "t")
+    assert {r.id: r.v for r in engine.read_final(DB, "t").collect()} == want
 
 
 def test_second_engine_reads_never_write(spark, tmp_path):
